@@ -65,9 +65,9 @@ object KgMain {
       .as[KgPipeline.RepoFile]
 
     val result = KgPipeline.run(spark, snap, model)
-    // skew handling lives INSIDE writeResumable (salted repartition on
-    // (_bucket, content-hash)); a separate pre-shuffle here would be
-    // discarded by the writer's own repartition — pure waste at scale
+    // skew handling lives INSIDE writeResumable (AQE rebalance on
+    // _bucket); a separate pre-shuffle here would be discarded by the
+    // writer's own exchange — pure waste at scale
     val commits = TableIO.writeResumable(result.triples, s"$outDir/triples",
       buckets = 16, bucketCols = Seq("src_repo", "src_path"),
       lineage = Map("snapshot" -> s"synth-$nFiles-seed42", "model" -> "sgd-seed42"))

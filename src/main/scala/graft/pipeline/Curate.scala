@@ -59,10 +59,12 @@ import org.apache.spark.sql.functions._
   *                             (`mixtureCol` + `mixtureTargetRows`);
   *                             checkpoint id 7
   *   5. hot-key detection    — CMS heavy hitters over the write key
-  *                             ([[Sketches.heavyHitters]], q54), sizing
-  *                             the salt fan-out of the final write
-  *   6. salted resumable write — [[TableIO.writeResumable]] (q28's
-  *                             salting + the manifest/resume contract)
+  *                             ([[Sketches.heavyHitters]], q54); the
+  *                             report's `salts` is only an estimate of
+  *                             the hot-key fan-out, derived from them
+  *   6. resumable write      — [[TableIO.writeResumable]] (adaptive
+  *                             rebalance, which splits a hot bucket by
+  *                             itself, + the manifest/resume contract)
   *
   * NULL-text rows are set aside BEFORE stage 1 and counted in the
   * report: `md5(NULL)` is NULL, so the exact-dedup groupBy would
@@ -123,7 +125,8 @@ object Curate {
   /** One curation run's accounting: row counts after each stage (the
     * numbers a data-quality report is built from), the NULL-text rows
     * set aside before stage 1, the detected hot keys (key rendered as
-    * string, exact count), the salt fan-out the write used, the rows
+    * string, exact count), `salts` (only an estimate of the hot-key
+    * fan-out: the writer's rebalance sizes itself), the rows
     * the write committed this run, and which stages were restored from
     * a `stageDir` checkpoint instead of computed.
     */
@@ -520,10 +523,10 @@ object Curate {
           case None => (afterEmb, nAfterEmbedding)
         }
 
-      // 5. hot keys over the WRITE key: the detection a salting
-      // pipeline runs before choosing its fan-out. The salt count is
-      // sized so the hottest key's rows spread over enough tasks that
-      // no task holds more than ~1/parallelism of the data.
+      // 5. hot keys over the WRITE key. The reported salt count
+      // estimates how many tasks the hottest key's rows need so that no
+      // task holds more than ~1/parallelism of the data; the writer's
+      // adaptive rebalance splits a hot bucket without it.
       val hot = Sketches.heavyHitters(afterMix, hotKeyCol, hotDenom)
         .collect()
         .map(r => (String.valueOf(r.get(0)), r.getLong(1)))
@@ -534,9 +537,9 @@ object Curate {
         else hot.head._2.toDouble / nAfterMixture
       val salts = math.min(64, math.max(8, math.ceil(maxShare * par).toInt))
 
-      // 6. salted resumable write, bucketed by the hot-key column
+      // 6. resumable write, bucketed by the hot-key column
       val commits = TableIO.writeResumable(afterMix, outDir, buckets,
-        Seq(hotKeyCol), lineage = Map("recipe" -> "curate"), salts = salts)
+        Seq(hotKeyCol), lineage = Map("recipe" -> "curate"))
       val report = Report(nInput, nNullText, nRedacted, nAfterExact,
         nAfterDecon, nAfterBoiler, nAfterRep, nAfterQual, nAfterLm,
         nAfterMinhash, nAfterEmbedding, nAfterMixture, hot, salts,

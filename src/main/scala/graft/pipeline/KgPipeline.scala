@@ -459,10 +459,10 @@ object KgPipeline {
     mentionTriples.unionByName(typeTriples)
   }
 
-  // NOTE: skew salting for the triple write lives inside
-  // TableIO.writeResumable (repartition on (_bucket, content-hash)); a
-  // standalone pre-shuffle here was removed — the writer's own
-  // repartition discarded it, doubling the biggest shuffle in the job.
+  // NOTE: skew handling for the triple write lives inside
+  // TableIO.writeResumable (an AQE rebalance on _bucket, which splits a
+  // hot bucket); a standalone pre-shuffle here was removed — the
+  // writer's own exchange discarded it, doubling the biggest shuffle.
 
   /** KG integrity audit — the QA pass a construction pipeline runs over
     * its OWN output before publishing a table (and the first thing a

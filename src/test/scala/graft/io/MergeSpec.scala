@@ -85,6 +85,52 @@ class MergeSpec extends AnyFunSuite {
     assert(readBack(dir) == want)
   }
 
+  test("merge job count does not grow with the number of affected buckets") {
+    val base = baseRows(200)
+    // keys 0..199 over 8 buckets: every bucket is non-empty, so both
+    // merges read old data through the same plan
+    val byBucket = base.map(_._1).groupBy(bucketOf)
+    assume(byBucket.size == Buckets)
+    val oneBucket = byBucket.values.head.take(4)
+    val fourBuckets = byBucket.values.take(4).map(_.head).toSeq
+    val sc = spark.sparkContext
+    // task and job events reach listeners asynchronously
+    def drain(): Unit = {
+      val bus = classOf[org.apache.spark.SparkContext]
+        .getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
+        .invoke(bus, java.lang.Long.valueOf(60000L))
+    }
+    def mergeJobs(keys: Seq[Long]): (Int, TableIO.MergeReport) = {
+      val dir = freshTable(base)
+      val upserts = df(keys.map(k => (k, s"tag-new-$k", -k)))
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      drain()
+      sc.addSparkListener(listener)
+      val report =
+        try {
+          val r = TableIO.mergeBuckets(spark, dir, Buckets, Seq("k"),
+            Seq("k"), upserts, None)
+          drain()
+          r
+        } finally sc.removeSparkListener(listener)
+      assert(TableIO.verifyCommits(spark, dir, Buckets).isEmpty)
+      (jobs.get, report)
+    }
+    val (jobs1, r1) = mergeJobs(oneBucket)
+    val (jobs4, r4) = mergeJobs(fourBuckets)
+    assert(r1.affectedBuckets.length == 1 && r4.affectedBuckets.length == 4)
+    // the staged manifests come from the merge write's own counters; a
+    // read-back of each affected bucket would add jobs per bucket
+    assert(jobs4 == jobs1,
+      s"a 4-bucket merge launched $jobs4 jobs, a 1-bucket merge $jobs1")
+  }
+
   test("fail-fasts: ambiguous key, bad key/bucket columns, uncommitted table") {
     import spark.implicits._
     val dir = freshTable(baseRows(50))

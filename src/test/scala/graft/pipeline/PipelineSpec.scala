@@ -441,6 +441,26 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       "observed manifest counters disagree with the written data")
   }
 
+  test("a small write is sized to the data: one parquet file per non-empty bucket") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_io_files").toString
+    // ~10 KB: far under one adaptive partition, so the rebalance must not
+    // fan a bucket out over several tasks
+    val df = (1 to 300).map(i => (s"repo${i % 11}", s"path$i", s"body $i"))
+      .toDF("src_repo", "src_path", "content")
+    val commits = TableIO.writeResumable(df, s"$dir/t", 4, Seq("src_repo"))
+    assert(commits.map(_.rows).sum == 300)
+    commits.foreach { c =>
+      val d = new java.io.File(s"$dir/t/data/_bucket=${c.bucket}")
+      val files =
+        if (d.exists()) d.listFiles().count(_.getName.endsWith(".parquet"))
+        else 0
+      assert(files == (if (c.rows > 0) 1 else 0),
+        s"bucket ${c.bucket} (${c.rows} rows) was written as $files files")
+    }
+    assert(TableIO.verifyCommits(spark, s"$dir/t", 4).isEmpty)
+  }
+
   test("resume refuses a bucket-count mismatch (no mixed partitionings)") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_io_nbuckets").toString
@@ -590,11 +610,20 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = java.nio.file.Files.createTempDirectory("graft_io_compact").toString
     val df = (1 to 400).map(i => (s"repo${i % 7}", s"path$i"))
       .toDF("src_repo", "src_path")
-    TableIO.writeResumable(df, s"$dir/t", 4, Seq("src_repo"))
+    // the rebalanced write gives a small bucket one file; cap the rows
+    // per file for this write so its buckets come out split into several
+    // files — compaction's reason to exist
+    val maxRecords = "spark.sql.files.maxRecordsPerFile"
+    val prevMaxRecords = spark.conf.getOption(maxRecords)
+    spark.conf.set(maxRecords, "20")
+    try TableIO.writeResumable(df, s"$dir/t", 4, Seq("src_repo"))
+    finally prevMaxRecords match {
+      case Some(v) => spark.conf.set(maxRecords, v)
+      case None => spark.conf.unset(maxRecords)
+    }
     val before = TableIO.readCommitted(spark, s"$dir/t", 4)
       .collect().map(_.toString).sorted.toSeq
-    // the salted write fans each bucket to `salts` files — compaction's
-    // reason to exist; pick a bucket that actually has several
+    // pick a bucket that actually has several files
     val conf = spark.sessionState.newHadoopConf()
     val k = (0 until 4).find { b =>
       val p = new org.apache.hadoop.fs.Path(s"$dir/t/data/_bucket=$b")
