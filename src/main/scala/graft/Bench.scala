@@ -233,7 +233,7 @@ object Bench {
     if (nFailed > 0)
       md ++= s"**WARNING: $nFailed queries failed** (recorded as -1.000 below); the total covers only the queries that ran.\n\n"
     md ++= "Why 8→full-width can regress on this host: see `BENCH/SCALING.md` "
-    md ++= "(ListenerProfile per-stage task-time evidence at 8 vs 32 threads).\n\n"
+    md ++= "(per-stage task-time evidence at 8 vs 32 threads).\n\n"
     md ++= "## Per-query seconds (local[" + cpus + "], after untimed warmup)\n\n"
     if (trialTotals.length > 1 && trialTotals.min > 0) {
       val lo = trialTotals.min; val hi = trialTotals.max

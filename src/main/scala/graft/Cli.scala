@@ -74,6 +74,44 @@ object Cli {
     s
   }
 
+  /** Bucket count of a committed table from a CLI argument: an integer
+    * >= 1, else None (0 buckets would read as "nothing committed").
+    */
+  private[graft] def parseBuckets(s: String): Option[Int] =
+    s.toIntOption.filter(_ >= 1)
+
+  /** [[parseBuckets]] for a kg-* verb's optional argument (default 16);
+    * a bad value is a usage error: message on stderr, exit 2.
+    */
+  private def bucketsArg(verb: String, arg: Option[String]): Int =
+    arg.fold(16) { a =>
+      parseBuckets(a).getOrElse {
+        System.err.println(s"usage: $verb: the bucket count must be an " +
+          s"integer >= 1, got '$a'")
+        sys.exit(2)
+      }
+    }
+
+  /** One kg-query TSV cell in the PostgreSQL text-COPY convention: NULL
+    * is `\N`, and backslash, tab, newline and carriage return are
+    * written as `\\`, `\t`, `\n` and `\r`, so a binding is always one
+    * line with one cell per variable, whatever its values hold.
+    */
+  private[graft] def tsvCell(v: Any): String =
+    if (v == null) "\\N"
+    else {
+      val s = v.toString
+      val b = new StringBuilder(s.length)
+      s.foreach {
+        case '\\' => b ++= "\\\\"
+        case '\t' => b ++= "\\t"
+        case '\n' => b ++= "\\n"
+        case '\r' => b ++= "\\r"
+        case c => b += c
+      }
+      b.result()
+    }
+
   def main(args: Array[String]): Unit = {
     // stable number formatting in compare/cv tables and JSON regardless
     // of platform locale (a comma decimal separator breaks consumers)
@@ -245,7 +283,7 @@ object Cli {
       // line on stdout. Exit 3 when any defect metric (dangling /
       // orphan / duplicate / null-key) is nonzero: the publish gate,
       // scriptable.
-      val buckets = rest.headOption.map(_.toInt).getOrElse(16)
+      val buckets = bucketsArg("kg-audit", rest.headOption)
       val spark = localSession("graft-kg-audit")
       val t = graft.io.TableIO.readCommitted(spark, tableDir, buckets)
       val audit = graft.pipeline.KgPipeline.kgAudit(spark, t)
@@ -266,7 +304,7 @@ object Cli {
       // W3C N-Triples export of a committed triples table
       // (KgPipeline.ntriples): outDir gets .text part files a standard
       // RDF toolchain can load. One JSON line: distinct triples written.
-      val buckets = rest.headOption.map(_.toInt).getOrElse(16)
+      val buckets = bucketsArg("kg-export", rest.headOption)
       val spark = localSession("graft-kg-export")
       val t = graft.io.TableIO.readCommitted(spark, tableDir, buckets)
       val lines = graft.pipeline.KgPipeline.ntriples(t)
@@ -284,10 +322,11 @@ object Cli {
       // (KgPipeline.matchPattern): each remaining arg is one pattern,
       // three whitespace-separated terms, '?'-prefixed = variable.
       // Buckets via "buckets=<n>" anywhere in the tail (default 16).
-      // Output: a header line of variable names, then TSV binding rows.
+      // Output: a header line of variable names, then TSV binding rows
+      // (cells escaped by tsvCell, NULL as \N).
       //   graft kg-query out/triples "?m hasEntity ?e" "?e hasType persName"
-      val buckets = rest.find(_.startsWith("buckets="))
-        .map(_.stripPrefix("buckets=").toInt).getOrElse(16)
+      val buckets = bucketsArg("kg-query",
+        rest.find(_.startsWith("buckets=")).map(_.stripPrefix("buckets=")))
       val patterns = rest.filterNot(_.startsWith("buckets=")).map { a =>
         a.trim.split("\\s+") match {
           case Array(s, p, o) => (s, p, o)
@@ -298,12 +337,12 @@ object Cli {
       val spark = localSession("graft-kg-query")
       val t = graft.io.TableIO.readCommitted(spark, tableDir, buckets)
       val bindings = graft.pipeline.KgPipeline.matchPattern(t, patterns)
-      utf8Out.println(bindings.columns.mkString("\t"))
+      utf8Out.println(bindings.columns.map(tsvCell).mkString("\t"))
       // bounded output by contract: an interactive query surface must
       // not stream a corpus-sized result to a terminal — cap and say so
       val rows = bindings.limit(10001).collect()
       rows.take(10000).foreach(r =>
-        utf8Out.println(r.toSeq.map(String.valueOf).mkString("\t")))
+        utf8Out.println(r.toSeq.map(tsvCell).mkString("\t")))
       if (rows.length > 10000)
         System.err.println("[kg-query] output capped at 10000 binding " +
           "rows — refine the pattern or use the library API")

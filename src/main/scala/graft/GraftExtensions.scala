@@ -23,8 +23,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     new ExpressionInfo("graft", null, name, usage, "")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // whole-operator NER: logical NerMentionsNode -> NerMentionsExec
-    ext.injectPlannerStrategy(_ => new graft.plans.NerStrategy)
     // builders shared with ShapeFunctions/VecFunctions.register so both
     // paths raise the same WRONG_NUM_ARGS analysis error
     ext.injectFunction((

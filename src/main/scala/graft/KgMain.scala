@@ -88,7 +88,7 @@ object KgMain {
       val bad = TableIO.verifyCommits(spark, s"$outDir/triples", 16)
       require(bad.isEmpty,
         s"manifest audit FAILED: buckets $bad disagree with written data")
-      // compaction exercise, same opt-in: collapse the salted write's
+      // compaction exercise, same opt-in: collapse the rebalanced write's
       // per-bucket file fan-out and prove (via the split-independent
       // checksum) the table is byte-equivalent after — maintenance a
       // long-lived production table runs on a schedule

@@ -18,9 +18,4 @@ object Digests {
     }
     new String(out)
   }
-
-  /** MD5 content fingerprint as lowercase hex. */
-  def md5Hex(s: String): String =
-    hex(java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")))
 }

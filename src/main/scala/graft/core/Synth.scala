@@ -227,18 +227,4 @@ object Synth {
     }
     RepoRow(repo, path, commit, lang, lines.mkString("\n"))
   }
-
-  /** Driver-side table materialization (tests / small fixtures). */
-  def repoTable(nFiles: Int, sentsPerFile: Int = 8, nRepos: Int = 50,
-                seed: Long = 42L): Vector[RepoRow] =
-    Vector.tabulate(nFiles)(i => repoRow(i.toLong, sentsPerFile, nRepos, seed))
-
-  /** Extract the comment sentences back out of a content blob — the
-    * pipeline's sentence segmentation for synthetic code files.
-    */
-  def contentSentences(content: String): Vector[String] =
-    content.split('\n').iterator
-      .filter(_.startsWith("// "))
-      .map(_.substring(3))
-      .toVector
 }

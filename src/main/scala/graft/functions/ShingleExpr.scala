@@ -27,7 +27,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (split on " " keeping empty tokens, fewer than n tokens → empty
   * array, windows joined with " ") and with the old column composition:
   * NULL text yields an EMPTY ARRAY, not NULL — `size(...) > 0` filters
-  * must keep behaving identically. Pinned in StreamingDedupSpec.
+  * must keep behaving identically. Pinned in DecontamSpec.
   */
 object ShingleKernel {
   def shingles(s: UTF8String, n: Int): ArrayData = {

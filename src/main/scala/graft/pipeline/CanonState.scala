@@ -13,12 +13,12 @@ import graft.io.TableIO
   * edge-set union is associative and idempotent, so
   * `canon(state ∪ delta)` equals `canon(batch₁ ∪ … ∪ batchₙ)` — the
   * same map a full run over every file ever ingested would produce.
-  * This closes the alias-drift caveat documented on
-  * [[KgPipeline.mergeDelta]]: with state, no periodic full
-  * re-canonicalization is needed to reconcile cross-file alias bridges.
+  * This closes the alias-drift caveat of canonicalizing a delta on its
+  * own evidence: with state, no periodic full re-canonicalization is
+  * needed to reconcile cross-file alias bridges.
   *
   * Evidence is APPEND-ONLY by design: deleting a file retracts its
-  * triples ([[KgPipeline.mergeDelta]] `deletedFiles`) but not the
+  * triples ([[KgPipeline.mergeDeltaCanonical]] `deletedFiles`) but not the
   * linguistic evidence its mentions contributed to alias bridging —
   * a conservative choice (canonical merges never flap when files
   * churn). An operator who wants deletion to retract evidence rebuilds

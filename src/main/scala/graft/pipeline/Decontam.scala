@@ -2,7 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Benchmark decontamination — the overlap check every serious
   * pretraining corpus runs before training: flag corpus documents that
@@ -55,8 +54,8 @@ object Decontam {
 
   /** Pure-JVM rendition of [[shingles]] — BIT-PARITY with the column
     * expression (same `split(" ", -1)` tokenization incl. empty
-    * trailing tokens, same space re-join), pinned in StreamingDedupSpec
-    * so the ingest-time filter and the batch operator can never
+    * trailing tokens, same space re-join), pinned in DecontamSpec so
+    * the Dsir/Classifier featurizers and the column operators can never
     * disagree on membership. Empty for NULL/short texts.
     */
   def shinglesOf(text: String, n: Int): Iterator[String] = {
@@ -92,8 +91,8 @@ object Decontam {
     require(nEval <= maxEvalShingles,
       s"eval set has $nEval distinct $n-gram shingles, above the " +
         s"broadcast budget of $maxEvalShingles (Decontam.MaxEvalShingles) " +
-        "— use Decontam.contaminatedLarge (Bloom prefilter + exact " +
-        "verify join) instead of degrading to a corpus-wide shuffle join")
+        "— shard the eval set and union the results instead of " +
+        "degrading to a corpus-wide shuffle join")
     val docGrams = corpus.select(col(idCol).as("doc_id"),
       shingles(col(textCol), n).as("grams"))
       .where(size(col("grams")) > 0)
@@ -105,98 +104,5 @@ object Decontam {
       .agg(count(lit(1)).as("n_hits"))
       .withColumn("share",
         round(col("n_hits").cast("double") / col("n_grams"), 6))
-  }
-
-  /** Broadcast budget for the Bloom prefilter of [[contaminatedLarge]],
-    * in filter bytes (`m/8`, computed closed-form from the standard
-    * optimal-bits formula before any filter is built). 256 MB admits
-    * ~150M distinct shingles at the default fpp — two orders of
-    * magnitude past [[MaxEvalShingles]]. An eval set larger than THAT
-    * is not an eval set, and the caller should shard it.
-    */
-  val MaxBloomBytes: Long = 256L * 1024 * 1024
-
-  /** Optimal Bloom bit count for `n` items at false-positive rate `p`
-    * (Bloom 1970: m = -n ln p / (ln 2)^2) — computed up front so the
-    * broadcast budget is enforced BEFORE building a filter that would
-    * blow it.
-    */
-  private[pipeline] def bloomBits(n: Long, p: Double): Long =
-    math.ceil(-n * math.log(p) / (math.log(2) * math.log(2))).toLong
-
-  /** [[contaminated]] for eval sets past the string-broadcast budget —
-    * same EXACT output, different physical plan. The result is
-    * row-identical to the broadcast path for any `fpp`: the Bloom
-    * filter only PREFILTERS, and every survivor is re-checked by an
-    * exact string-equality join, so the fpp knob trades shuffle volume
-    * against filter size, never correctness.
-    *
-    * Scale shape: the eval shingle set is distinct'd and folded into a
-    * Bloom filter (a Spark `stat.bloomFilter` aggregate — partial
-    * per-partition filters OR-merged, nothing eval-sized on the driver
-    * beyond the filter itself) and broadcast; at fpp 1e-3 the filter
-    * costs ~1.8 bytes/shingle, so eval sets ~100x past
-    * [[MaxEvalShingles]] still broadcast comfortably (a closed-form
-    * byte guard fails fast above [[MaxBloomBytes]]). The corpus pays
-    * the same single scan as the broadcast path; shingles are generated
-    * in the scan stage and die at the broadcast Bloom probe, except the
-    * survivors — true matches (benchmark-bounded) plus an
-    * `fpp`-fraction of corpus shingles — which carry their strings into
-    * ONE exchange for the exact verify join against the (repartitioned,
-    * eval-sized) shingle table. At the default fpp the string shuffle is
-    * 0.1% of corpus shingle bytes; at 100 TB that is ~100 GB spread
-    * over the cluster, the price of exactness at a scale where the
-    * broadcast path refuses.
-    *
-    * The Bloom probe is a Scala UDF over the broadcast filter (one
-    * non-codegen boundary predicate; the shingle generation below it
-    * and the aggregation above it stay codegen'd) — Spark exposes no
-    * public bloom-probe expression, and a 30 MB filter must ride a
-    * broadcast variable, not a plan literal.
-    */
-  def contaminatedLarge(corpus: DataFrame, evalSet: DataFrame,
-                        idCol: String, textCol: String, evalTextCol: String,
-                        n: Int, fpp: Double = 0.001,
-                        maxBloomBytes: Long = MaxBloomBytes): DataFrame = {
-    require(n >= 1, s"shingle width must be >= 1: $n")
-    require(fpp > 0.0 && fpp < 1.0, s"fpp must be in (0, 1): $fpp")
-    val spark = corpus.sparkSession
-    val evalGrams = evalSet
-      .select(explode(shingles(col(evalTextCol), n)).as("gram"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // both jobs below are eval-sized; the corpus scan starts after
-      // the budget is proven, same contract order as `contaminated`
-      val nEval = math.max(1L, evalGrams.count())
-      val bytes = bloomBits(nEval, fpp) / 8
-      require(bytes <= maxBloomBytes,
-        s"Bloom filter for $nEval distinct $n-gram shingles at fpp=$fpp " +
-          s"needs $bytes bytes, above the broadcast budget of " +
-          s"$maxBloomBytes (Decontam.MaxBloomBytes) — shard the eval set " +
-          "and union the results")
-      val bloom = evalGrams.stat.bloomFilter("gram", nEval, fpp)
-      val bBloom = spark.sparkContext.broadcast(bloom)
-      val mightContain =
-        udf((s: String) => s != null && bBloom.value.mightContainString(s))
-      val docGrams = corpus.select(col(idCol).as("doc_id"),
-        shingles(col(textCol), n).as("grams"))
-        .where(size(col("grams")) > 0)
-        .select(col("doc_id"), size(col("grams")).cast("long").as("n_grams"),
-          explode(col("grams")).as("gram"))
-        .where(mightContain(col("gram")))
-      docGrams
-        .join(evalGrams, "gram")
-        .groupBy("doc_id", "n_grams")
-        .agg(count(lit(1)).as("n_hits"))
-        .withColumn("share",
-          round(col("n_hits").cast("double") / col("n_grams"), 6))
-    } finally {
-      // the persist only amortizes the two driver actions above (count +
-      // bloom aggregate); released before return so no cached blocks
-      // leak past this call — the returned plan re-derives the eval
-      // distinct through lineage at action time, an eval-sized cost
-      evalGrams.unpersist(blocking = false)
-    }
   }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.expressions.Window
   * model broadcast to executors, entity linking via a broadcast
   * dictionary hash join + similarity scorer, canonicalization via
   * connected components over alias edges, and (subj, pred, obj) triple
-  * materialization with salted repartitioning.
+  * materialization.
   *
   * Scale notes (designed for 1000-executor / 100 TB inputs, tested on
   * local[32]):
@@ -26,8 +26,9 @@ import org.apache.spark.sql.expressions.Window
   *    *distinct* alias edge set (orders of magnitude smaller than the
   *    corpus), and the type-triple dedup (map-side partial distinct
   *    collapses per-file repeats before the exchange — see `triples`).
-  *  - popular-repo skew is defused by a salted repartition before the
-  *    partitioned triple write.
+  *  - popular-repo skew is defused by the committed write itself:
+  *    `TableIO.writeBuckets` AQE-rebalances rows on `_bucket`, which
+  *    splits a hot bucket over several tasks.
   */
 object KgPipeline {
 
@@ -209,36 +210,20 @@ object KgPipeline {
   //  input_hint — SURVEY.md §2.9)
   // ------------------------------------------------------------------
 
-  /** Lineage truncation for fixpoint rounds — see [[Lineage.chk]]
-    * (shared with the BPE merge loop since round 6).
-    */
-  private def chk(df: DataFrame): DataFrame = Lineage.chk(df)
-
-  private def checkpointFileOf(df: DataFrame): Option[String] =
-    Lineage.checkpointFileOf(df)
-
-  /** Delete a superseded reliable checkpoint's files (ADVICE r3) —
-    * see [[Lineage.dropCheckpointFiles]]. Only call once every consumer
-    * of the checkpointed frame has materialized.
-    */
-  private def dropCheckpoint(spark: org.apache.spark.sql.SparkSession,
-                             file: Option[String]): Unit =
-    Lineage.dropCheckpointFiles(spark, file)
-
   /** Minimum-label propagation (hash-to-min) over an undirected edge
     * set. Returns (node, component) where component = min node id in the
     * component. Edge sets here are alias clusters: tiny diameter, so the
     * fixpoint converges in a handful of rounds; each round's lineage is
-    * truncated via [[chk]].
+    * truncated via [[Lineage.chk]].
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
     val spark = edges.sparkSession
     // undirected, distinct edge set (the only wide dep on the full input)
-    val und = chk(edges.select(col("src"), col("dst"))
+    val und = Lineage.chk(edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct())
 
-    var labels = chk(und.select(col("src").as("node")).distinct()
+    var labels = Lineage.chk(und.select(col("src").as("node")).distinct()
       .withColumn("comp", col("node")))
 
     var iter = 0
@@ -252,21 +237,21 @@ object KgPipeline {
                       .withColumnRenamed("comp", "ncomp"), Seq("dst"))
           .groupBy(col("src").as("node"))
           .agg(min(col("ncomp")).as("ncomp"))
-        val next = chk(labels.join(viaNeighbor, Seq("node"), "left")
+        val next = Lineage.chk(labels.join(viaNeighbor, Seq("node"), "left")
           .select(col("node"),
             least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp")))
         val changed = next.as("n").join(labels.as("o"), Seq("node"))
           .where(col("n.comp") =!= col("o.comp")).limit(1).count()
-        // `next` is eagerly materialized by chk and `changed` has been
-        // computed, so the superseded round's checkpoint files are now
-        // garbage — drop them here instead of leaking one directory per
-        // round into durable storage (ADVICE r3)
-        dropCheckpoint(spark, checkpointFileOf(labels))
+        // `next` is eagerly materialized by Lineage.chk and `changed`
+        // has been computed, so the superseded round's checkpoint files
+        // are now garbage — drop them here instead of leaking one
+        // directory per round into durable storage (ADVICE r3)
+        Lineage.dropCheckpointFiles(spark, Lineage.checkpointFileOf(labels))
         labels = next
         converged = changed == 0
         iter += 1
       }
-    } finally dropCheckpoint(spark, checkpointFileOf(und))
+    } finally Lineage.dropCheckpointFiles(spark, Lineage.checkpointFileOf(und))
     if (!converged) throw new IllegalStateException(
       s"connectedComponents did not converge in $maxIter rounds — " +
         "component diameter exceeds the iteration budget; raise maxIter " +
@@ -375,8 +360,8 @@ object KgPipeline {
     // checkpoint is caller-owned: it backs the returned frame for the
     // rest of the run and is reclaimed with the checkpoint dir (or by
     // spark.cleaner.referenceTracking.cleanCheckpoints=true).
-    val pinned = chk(out0)
-    dropCheckpoint(spark, checkpointFileOf(comps))
+    val pinned = Lineage.chk(out0)
+    Lineage.dropCheckpointFiles(spark, Lineage.checkpointFileOf(comps))
     edges.unpersist()
     if (!callerCached) allEdges.unpersist()
     pinned
@@ -810,39 +795,6 @@ object KgPipeline {
     Result(ments, linked, canon, triples(linked, canon))
   }
 
-  /** Incremental KG maintenance — merge a DELTA of repository files
-    * into a committed triples table ([[graft.KgMain]]'s layout:
-    * buckets on (src_repo, src_path)): changed files REPLACE every
-    * triple they previously contributed (file-level upsert — each
-    * triple row is owned by its provenance file), `deletedFiles`
-    * (src_repo, src_path) retract theirs. Runs the normal pipeline on
-    * the delta only — NER cost ∝ delta, not corpus — then
-    * [[graft.io.TableIO.mergeBuckets]] rewrites exactly the buckets
-    * the touched files route to; all other buckets stay byte-identical.
-    *
-    * Canonicalization scope: canon ids derive from the KB's alias
-    * edges plus the DELTA's observed surface↔entity edges — the same
-    * KB-driven mapping a full run uses, minus alias bridges only other
-    * files' mentions would contribute. The standard 100-TB regime:
-    * incremental merges keep the table fresh; a periodic full
-    * re-canonicalization (it reads `linked`, not raw text — cheap
-    * relative to NER) reconciles any cross-file alias drift.
-    * PipelineSpec pins merge-vs-full-rerun parity on the synthetic
-    * corpus, where KB-driven canonicalization makes the two coincide.
-    */
-  def mergeDelta(spark: SparkSession, triplesDir: String, buckets: Int,
-                 changed: Dataset[RepoFile], model: NerfModel,
-                 deletedFiles: Option[DataFrame] = None)
-      : graft.io.TableIO.MergeReport = {
-    val r = run(spark, changed, model)
-    try graft.io.TableIO.mergeBuckets(spark, triplesDir, buckets,
-      bucketCols = Seq("src_repo", "src_path"),
-      keyCols = Seq("src_repo", "src_path"),
-      upserts = r.triples,
-      deleteKeys = withVacatedFiles(changed, r.triples, deletedFiles))
-    finally release(spark, r)
-  }
-
   /** Changed files whose NEW content yields ZERO triples (an edit that
     * removed every entity mention) contribute no upsert keys — without
     * an explicit delete their STALE triples would survive the merge.
@@ -999,13 +951,20 @@ object KgPipeline {
     } finally mapped.unpersist()
   }
 
-  /** [[mergeDelta]] with persisted canonicalization ([[CanonState]]):
-    * the delta's triples are materialized under the GLOBAL canonical
-    * map (all evidence ever ingested, not just this batch's), and
-    * previously-written triples whose canon ids drifted are reconciled
-    * in place — the committed table always equals a full pipeline
-    * re-run over the union of every batch's files (deletions retract
-    * triples but not alias evidence; see [[CanonState]]).
+  /** Incremental KG maintenance with persisted canonicalization
+    * ([[CanonState]]) — merge a DELTA of repository files into a
+    * committed triples table ([[graft.KgMain]]'s layout: buckets on
+    * (src_repo, src_path)). Changed files REPLACE every triple they
+    * previously contributed (file-level upsert — each triple row is
+    * owned by its provenance file), `deletedFiles` (src_repo, src_path)
+    * retract theirs, and NER cost is ∝ delta, not corpus;
+    * [[graft.io.TableIO.mergeBuckets]] rewrites exactly the buckets the
+    * touched files route to. The delta's triples are materialized under
+    * the GLOBAL canonical map (all evidence ever ingested, not just this
+    * batch's), and previously-written triples whose canon ids drifted
+    * are reconciled in place — the committed table always equals a full
+    * pipeline re-run over the union of every batch's files (deletions
+    * retract triples but not alias evidence; see [[CanonState]]).
     *
     * Crash ordering: delta merge, then reconcile, then state save —
     * each idempotent, so re-running after a crash at any boundary
@@ -1061,7 +1020,7 @@ object KgPipeline {
     canon.queryExecution.logical match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.getCheckpointFile match {
-          case some @ Some(_) => dropCheckpoint(spark, some)
+          case some @ Some(_) => Lineage.dropCheckpointFiles(spark, some)
           case None => Lineage.quietUnpersist(lr.rdd, blocking)
         }
       case _ => ()

@@ -86,135 +86,6 @@ object Ngram {
     Lm(uni, bi, nRow.getLong(0))
   }
 
-  /** An order-n LM: `tables(k-1)` holds the k-gram counts
-    * `(gram, cnt)` with grams space-joined (collision-free — tokens
-    * cannot contain the space they were split on), plus the token
-    * total. [[Lm]] is the committed, q77-oracled n = 2 special case;
-    * this is the published shape (Brants et al. train 5-grams; CCNet's
-    * KenLM filter is order 5).
-    */
-  final case class LmN(n: Int, tables: Seq[DataFrame], nTokens: Long) {
-    require(n >= 2 && tables.length == n,
-      s"order-$n LM needs $n count tables, got ${tables.length}")
-  }
-
-  /** Fit an order-n model: one counting pass per order (each collapses
-    * map-side to distinct k-grams), one total.
-    */
-  def trainN(docs: DataFrame, textCol: String, n: Int): LmN = {
-    require(n >= 2, s"LM order must be >= 2: $n")
-    val t = docs.where(col(textCol).isNotNull)
-    val tables = (1 to n).map { k =>
-      t.select(explode(graft.functions.ShingleFunctions
-          .ner_shingles(col(textCol), k)).as("gram"))
-        .groupBy("gram").agg(count(lit(1)).as("cnt"))
-    }
-    val nRow = t.select(sum(size(words(col(textCol)))).as("n")).head()
-    require(!nRow.isNullAt(0),
-      "Ngram.trainN: training corpus has no non-null texts")
-    LmN(n, tables, nRow.getLong(0))
-  }
-
-  /** Stupid-backoff scoring under an order-n model (Brants et al. 2007
-    * eq. 5): position i (tokens 2..L) scores with its LONGEST available
-    * context, `kmax = min(n, i)` — doc-initial positions truncate, the
-    * KenLM/CCNet convention —
-    *
-    *   S(w_i) = α^(kmax−k) · c(gram_k)/c(ctx_k)   for the largest
-    *            k ≤ kmax with c(gram_k) > 0, else
-    *            α^(kmax−1) · max(c(w_i), 1)/N.
-    *
-    * Output matches [[scoreDocs]]'s shape (`doc_id, n_bigrams, logp,
-    * ppl` — the position count is L−1 for every order, so the column
-    * keeps its name) and at n = 2 the cascade IS the bigram formula:
-    * NgramSpec pins `scoreDocsN(n=2)` row-identical to the q77-oracled
-    * operator.
-    *
-    * Scale shape: the per-position gram/context keys are built from n
-    * PADDED SLICES zipped and exploded — O(L·n) per doc, never the
-    * O(L²) array-retention explode — and hash to xxhash64 in the scan
-    * stage; scoring is 2n−1 left joins against the count tables (the
-    * honest cost of an order-n LM: KenLM pays the same n probes per
-    * position, against an in-memory trie instead of a join).
-    */
-  def scoreDocsN(docs: DataFrame, idCol: String, textCol: String,
-                 lm: LmN, alpha: Double = 0.4): DataFrame = {
-    require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0, 1]: $alpha")
-    require(lm.nTokens > 0, "empty language model")
-    val n = lm.n
-    val ws = words(col(textCol))
-    val L = size(ws)
-    def sh(k: Int) =
-      graft.functions.ShingleFunctions.ner_shingles(col(textCol), k)
-    // aligned arrays of length L-1 (entry j <-> position i = j+1):
-    // gramK[j] = k-gram ending at i (NULL while i < k), ctxK[j] = its
-    // (k-1)-gram context
-    def padded(arr: Column, nulls: Int) =
-      slice(concat(array_repeat(lit(null).cast("string"), nulls), arr),
-        lit(1), L - 1)
-    val gramCols = (1 to n).map { k =>
-      val base = if (k == 1) slice(ws, lit(2), L - 1) else padded(sh(k), k - 2)
-      base.as(s"_g$k")
-    }
-    val ctxCols = (2 to n).map { k =>
-      // ctx of the k-gram ending at i = the (k-1)-gram ending at i-1 =
-      // sh(k-1)[j-k+2]  ->  pad with k-2 NULLs (same offset as gramK:
-      // the context sits one position earlier but is one order shorter,
-      // and the two shifts cancel)
-      val prev = if (k == 2) slice(ws, lit(1), L - 1)
-                 else padded(sh(k - 1), k - 2)
-      prev.as(s"_c$k")
-    }
-    val zipped = docs.where(col(textCol).isNotNull && L >= 2)
-      .select(col(idCol).as("doc_id"),
-        posexplode(arrays_zip(gramCols ++ ctxCols: _*)).as(Seq("_j", "_p")))
-      .select(Seq(col("doc_id"),
-        least(lit(n), col("_j") + lit(2)).as("_kmax")) ++
-        (1 to n).map(k => xxhash64(col(s"_p._g$k")).as(s"_gk$k")) ++
-        (1 to n).map(k =>
-          when(col(s"_p._g$k").isNull, lit(null)).otherwise(lit(1))
-            .as(s"_gdef$k")) ++
-        (2 to n).map(k => xxhash64(col(s"_p._c$k")).as(s"_ck$k")): _*)
-    // join each order's count table twice (gram + context); the gram
-    // strings died at the hash projection above
-    val joined = (1 to n).foldLeft(zipped) { (df, k) =>
-      val tab = lm.tables(k - 1)
-        .select(xxhash64(col("gram")).as(s"_tk$k"), col("cnt").as(s"_cnt$k"))
-      val withGram = df.join(tab, col(s"_gk$k") === col(s"_tk$k"), "left")
-        .drop(s"_tk$k")
-      if (k >= 2) {
-        val ctxTab = lm.tables(k - 2)
-          .select(xxhash64(col("gram")).as(s"_xk$k"),
-            col("cnt").as(s"_cctx$k"))
-        withGram.join(ctxTab, col(s"_ck$k") === col(s"_xk$k"), "left")
-          .drop(s"_xk$k")
-      } else withGram
-    }
-    // backoff cascade: largest k <= kmax with a seen k-gram wins; the
-    // _gdef guard keeps a NULL key's xxhash64 (defined!) from ever
-    // matching a real table row's hash by accident of the join — the
-    // join can't match NULL-derived hashes to strings, but an explicit
-    // definedness guard also documents the truncation rule
-    // fold k = 2 upward so the LARGEST order ends up as the outermost
-    // when() — the highest seen k-gram must win the cascade
-    val cascade = (2 to n).foldLeft(
-      pow(lit(alpha), (col("_kmax") - 1).cast("double")) *
-        coalesce(col("_cnt1"), lit(1L)).cast("double") / lm.nTokens) {
-      (fallback, k) =>
-        when(lit(k) <= col("_kmax") && col(s"_gdef$k").isNotNull &&
-          col(s"_cnt$k").isNotNull && col(s"_cctx$k").isNotNull,
-          pow(lit(alpha), (col("_kmax") - lit(k)).cast("double")) *
-            col(s"_cnt$k").cast("double") / col(s"_cctx$k"))
-          .otherwise(fallback)
-    }
-    joined.select(col("doc_id"), cascade.as("s"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"), avg(log(col("s"))).as("lp"))
-      .select(col("doc_id"), col("n_bigrams"),
-        round(col("lp"), 6).as("logp"),
-        round(exp(-col("lp")), 6).as("ppl"))
-  }
-
   /** Persist a trained LM: the two count tables as parquet plus a
     * meta file with the token total, written LAST (atomic rename) so a
     * half-written model directory is unloadable rather than silently

@@ -67,51 +67,6 @@ object Sessionize {
     * when a hot key is possible, the single-pass form otherwise.
     * Parity with [[sessions]] is suite-gated on a Zipf-hot fixture.
     */
-  /** Declarative rendition over Spark's NATIVE `session_window` —
-    * (userCol, sess_start_ms, n_events), usable unchanged in batch AND
-    * Structured Streaming (where the engine manages session state and
-    * the watermark emits closed windows; no custom state code).
-    *
-    * Boundary alignment: Spark's session-window merge is INCLUSIVE of
-    * the gap boundary — an event at exactly `last + gap` still merges —
-    * so `session_window(ts, gapMs)` already equals [[sessions]]' rule
-    * (break only when the difference EXCEEDS the gap; merge iff
-    * diff ≤ gapMs). The parity gate pins this on a fixture with events
-    * exactly `gap` apart (must not split) and `gap + 1` apart (must
-    * split): a half-open reading of the window would fail the first,
-    * and compensating with `gap + 1` (tried, failed) merges the second.
-    *
-    * No session ordinal: the native operator identifies sessions by
-    * start time, not per-user sequence — join on (user, sess_start_ms)
-    * when composing with the ordinal-bearing forms.
-    */
-  def sessionWindowAgg(df: DataFrame, userCol: String, msCol: String,
-                       gapMs: Long): DataFrame = {
-    require(gapMs >= 1, s"bad gapMs: $gapMs")
-    sessionWindowAggTs(
-      df.select(col(userCol), timestamp_millis(col(msCol)).as("_ts")),
-      userCol, "_ts", gapMs)
-  }
-
-  /** [[sessionWindowAgg]] over an EXISTING timestamp column — the form a
-    * STREAMING caller needs: a watermark binds to a concrete column, so
-    * the caller applies `withWatermark(tsCol, …)` on its frame and
-    * passes that column through untouched (deriving a fresh timestamp
-    * inside the operator would detach the watermark and append-mode
-    * session aggregation would be rejected). Batch parity and the
-    * streaming emission contract are both pinned in
-    * SessionizeStreamSpec.
-    */
-  def sessionWindowAggTs(df: DataFrame, userCol: String, tsCol: String,
-                         gapMs: Long): DataFrame = {
-    require(gapMs >= 1, s"bad gapMs: $gapMs")
-    df.groupBy(col(userCol),
-        session_window(col(tsCol), s"$gapMs milliseconds").as("_sw"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col(userCol),
-        unix_millis(col("_sw.start")).as("sess_start_ms"), col("n_events"))
-  }
-
   def sessionsTwoPass(df: DataFrame, userCol: String, msCol: String,
                       tieCol: String, gapMs: Long,
                       sliceMs: Long = 86400000L): DataFrame = {

@@ -328,40 +328,6 @@ object TextDedup {
         .reduce(_ + _).as("simhash"))
   }
 
-  /** Pure-JVM SimHash of one document — BIT-PARITY with the batch
-    * [[simhash]] pipeline (pinned in StreamingDedupSpec (CoverageSpec.scala)): same
-    * tokenization (`split(text, " ")` keeping empty tokens, as Spark's
-    * `split` does), same per-token hash (Catalyst's XXH64 with Spark's
-    * seed 42 over UTF8 bytes), same majority-vote bit assembly. This is
-    * the kernel the STREAMING near-dup path keys its state on — batch
-    * and streaming must agree on fingerprints or a doc deduped at
-    * ingest reappears in the batch pass (and vice versa).
-    */
-  def simhash64(text: String, bits: Int): Long = {
-    require(bits >= 1 && bits <= 64,
-      s"simhash bits must be in [1, 64]: $bits")
-    val counts = new Array[Int](bits)
-    // -1 limit: Spark's split(text, " ") KEEPS trailing empty tokens;
-    // Java's default split drops them and the fingerprints would drift
-    text.split(" ", -1).foreach { tok =>
-      val h = org.apache.spark.sql.catalyst.expressions.XXH64
-        .hashUTF8String(
-          org.apache.spark.unsafe.types.UTF8String.fromString(tok), 42L)
-      var b = 0
-      while (b < bits) {
-        if (((h >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-        b += 1
-      }
-    }
-    var out = 0L
-    var b = 0
-    while (b < bits) {
-      if (counts(b) > 0) out |= (1L << b)
-      b += 1
-    }
-    out
-  }
-
   /** SimHash collision groups (near/exact dup clusters), scalars only:
     * (simhash, n_docs, min_doc, max_doc, docs_csv) — where `docs_csv` is
     * a roster of the group's `rosterCap` SMALLEST doc ids, not the full

@@ -2,7 +2,6 @@ package graft.pipeline
 
 import graft.core._
 import graft.KgMain
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 class DictBuildSpec extends AnyFunSuite {
@@ -351,50 +350,6 @@ class TrainSpec extends AnyFunSuite {
   }
 }
 
-class StreamingSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-
-  test("stateless mention stream over a memory source") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[String]
-    val out = graft.streaming.StreamingNer
-      .mentionStream(spark, input.toDS(), KgMain.model)
-    val q = out.writeStream.format("memory").queryName("mentions_t")
-      .outputMode("append").start()
-    try {
-      input.addData("coach Kira Novak visited Elbonia .")
-      q.processAllAvailable()
-      input.addData("company Alpha Systems signed in Portvale .")
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT neType, surface FROM mentions_t").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
-      assert(rows.contains(("persName", "Kira Novak")))
-      assert(rows.contains(("orgName", "Alpha Systems")))
-    } finally q.stop()
-  }
-
-  test("watermarked windowed mention counts") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(java.sql.Timestamp, String)]
-    val out = graft.streaming.StreamingNer
-      .windowedMentionCounts(spark, input.toDS().toDF("ts", "line"), KgMain.model)
-    val q = out.writeStream.format("memory").queryName("win_t")
-      .outputMode("update").start()
-    try {
-      val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:05")
-      val t1 = java.sql.Timestamp.valueOf("2024-01-01 00:00:07")
-      input.addData((t0, "coach Kira Novak ."), (t1, "coach Adam Falk ."))
-      q.processAllAvailable()
-      val rows = spark.sql(
-        "SELECT neType, n_mentions FROM win_t WHERE neType = 'persName'")
-        .collect()
-      assert(rows.nonEmpty && rows.head.getLong(1) == 2L)
-    } finally q.stop()
-  }
-}
-
 class ModelSerSpec extends AnyFunSuite {
   test("model save/load roundtrips schema and decodings") {
     val dir = java.nio.file.Files.createTempDirectory("model")
@@ -454,182 +409,5 @@ class DictIoSpec extends AnyFunSuite {
       .map { case (s, p, o) => (s, p) -> cd.getOrElse(o, Nil) }.toMap
     assert(joined == broadcastSide,
       "join path and broadcast path must produce identical dict features")
-  }
-}
-
-class StreamingDedupSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-
-  test("mapGroupsWithState dedup emits only first occurrence across batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Long, String)]
-    val out = graft.streaming.StreamingNer
-      .dedupStream(spark, input.toDS(), stateTtl = None)
-      .toDF("doc_id", "text", "n_in_batch")
-    val q = out.writeStream.format("memory").queryName("dedup_t")
-      .outputMode("update").start()
-    try {
-      input.addData((1L, "alpha"), (2L, "beta"), (3L, "alpha"))
-      q.processAllAvailable()
-      input.addData((4L, "alpha"), (5L, "gamma"))
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT doc_id, text FROM dedup_t ORDER BY doc_id")
-        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-      // first occurrences only: alpha via id 1 (not 3 or 4), beta, gamma
-      assert(rows == Seq((1L, "alpha"), (2L, "beta"), (5L, "gamma")))
-    } finally q.stop()
-  }
-
-  test("streaming decontam drops exactly the batch-flagged docs; kernels bit-parity") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    implicit val sqlCtx = spark.sqlContext
-    val evalSet = Seq("held out eval canary phrase appears here").toDF("text")
-    val docs = Seq(
-      (1L, "clean doc words only nothing shared at all"),
-      (2L, "prefix held out eval canary phrase appears suffix"),
-      (3L, null.asInstanceOf[String]),
-      (4L, "eval canary phrase appears here trailing"),
-      (5L, "phrase appears nothing more"))
-    // batch truth over the same rows
-    val flagged = graft.pipeline.Decontam.contaminated(
-        docs.toDF("doc_id", "text"), evalSet, "doc_id", "text", "text", 3)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(flagged == Set(2L, 4L), s"fixture drifted: $flagged")
-    val input = MemoryStream[(Long, String)]
-    val out = graft.streaming.StreamingNer
-      .decontamStream(spark, input.toDS(), evalSet, "text", n = 3)
-      .toDF("doc_id", "text")
-    val q = out.writeStream.format("memory").queryName("decontam_t")
-      .outputMode("append").start()
-    try {
-      input.addData(docs: _*)
-      q.processAllAvailable()
-      val kept = spark.sql("SELECT doc_id FROM decontam_t")
-        .collect().map(_.getLong(0)).toSet
-      assert(kept == docs.map(_._1).toSet -- flagged,
-        s"stream/batch decontam disagree: kept=$kept flagged=$flagged")
-      assert(kept.contains(3L), "NULL text must pass the stream filter")
-    } finally q.stop()
-    // the JVM shingle kernel must be BIT-PARITY with the column
-    // expression on adversarial tokenizations (empties, lead/trail and
-    // double spaces, NULL)
-    Seq("a b c", "", " lead", "trail ", "a  b", "one", null).foreach { t =>
-      val viaCol = Seq(Tuple1(t)).toDF("t")
-        .select(graft.pipeline.Decontam.shingles(col("t"), 2).as("g"))
-        .head.getSeq[String](0)
-      assert(graft.pipeline.Decontam.shinglesOf(t, 2).toSeq == viaCol,
-        s"shingle kernel diverges on ${Option(t).map("'" + _ + "'")}")
-    }
-  }
-
-  test("TTL-bounded dedup still dedups within the TTL horizon") {
-    import spark.implicits._
-    import scala.concurrent.duration._
-    implicit val sqlCtx = spark.sqlContext
-    // ProcessingTimeTimeout makes the engine self-trigger no-data
-    // microbatches to fire timeouts; processAllAvailable would never
-    // drain. Timeouts then fire only on data batches — fine here.
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val input = MemoryStream[(Long, String)]
-    val out = graft.streaming.StreamingNer
-      .dedupStream(spark, input.toDS(), stateTtl = Some(1.hour))
-      .toDF("doc_id", "text", "n_in_batch")
-    val q = out.writeStream.format("memory").queryName("dedup_ttl")
-      .outputMode("update").start()
-    try {
-      input.addData((1L, "alpha"), (2L, "alpha"), (3L, "beta"))
-      q.processAllAvailable()
-      input.addData((4L, "alpha"))
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT doc_id FROM dedup_ttl ORDER BY doc_id")
-        .collect().map(_.getLong(0)).toSeq
-      assert(rows == Seq(1L, 3L), "within TTL, duplicates stay suppressed")
-    } finally {
-      q.stop()
-      spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
-    }
-  }
-
-  test("TTL eviction: an expired fingerprint is evicted and RE-EMITTED") {
-    import spark.implicits._
-    import scala.concurrent.duration._
-    implicit val sqlCtx = spark.sqlContext
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val input = MemoryStream[(Long, String)]
-    val out = graft.streaming.StreamingNer
-      .dedupStream(spark, input.toDS(), stateTtl = Some(100.millis))
-      .toDF("doc_id", "text", "n_in_batch")
-    val q = out.writeStream.format("memory").queryName("dedup_evict")
-      .outputMode("update").start()
-    try {
-      input.addData((1L, "alpha"))
-      q.processAllAvailable()
-      Thread.sleep(600) // let alpha's TTL lapse
-      // timeouts fire while processing a DATA batch (no-data batches
-      // disabled above): this unrelated row triggers alpha's eviction
-      input.addData((2L, "beta"))
-      q.processAllAvailable()
-      Thread.sleep(600)
-      input.addData((3L, "alpha")) // state evicted → re-emitted
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT doc_id, text FROM dedup_evict ORDER BY doc_id")
-        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-      assert(rows == Seq((1L, "alpha"), (2L, "beta"), (3L, "alpha")),
-        "post-TTL re-occurrence must re-emit (windowed-dedup contract)")
-    } finally {
-      q.stop()
-      spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
-    }
-  }
-
-  test("streaming near-dup suppresses SimHash colliders, first-wins") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = "the quick brown fox jumps over the lazy dog again today"
-    // SimHash is a bag-of-words fingerprint (bit votes are
-    // order-independent), so a token PERMUTATION — the classic
-    // scrambled-boilerplate near-dup — collides by construction
-    val near = base.split(" ").reverse.mkString(" ")
-    val far = "completely different content with no overlap whatsoever here"
-    val fp = (s: String) => TextDedup.simhash64(s, 32)
-    assert(fp(base) == fp(near), "permutation must collide (bag of words)")
-    assume(fp(base) != fp(far),
-      "fixture drifted: unrelated doc collides at 32 bits")
-    val input = MemoryStream[(Long, String)]
-    val out = graft.streaming.StreamingNer
-      .nearDupStream(spark, input.toDS(), bits = 32, stateTtl = None)
-      .toDF("doc_id", "text", "simhash", "n_seen")
-    val q = out.writeStream.format("memory").queryName("neardup_t")
-      .outputMode("update").start()
-    try {
-      input.addData((1L, base), (2L, far))
-      q.processAllAvailable()
-      input.addData((3L, near)) // collides with base -> suppressed
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT doc_id, simhash FROM neardup_t ORDER BY doc_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      assert(rows == Seq((1L, fp(base)), (2L, fp(far))),
-        s"expected exemplars 1 and 2 only, got $rows")
-    } finally q.stop()
-  }
-
-  test("simhash64 kernel is bit-parity with the batch SimHash pipeline") {
-    import spark.implicits._
-    // adversarial token shapes: empty doc, double spaces (empty tokens),
-    // trailing space, unicode, single token
-    val texts = Seq("", "a  b", "trailing space ", "żółć jaźń", "one",
-      "the quick brown fox jumps over the lazy dog")
-    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      .toDF("doc_id", "text")
-    val batch = TextDedup.simhash(df, "doc_id", "text", bits = 32)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    texts.zipWithIndex.foreach { case (t, i) =>
-      val kernel = TextDedup.simhash64(t, 32)
-      assert(batch(i.toLong) == kernel,
-        s"doc $i (${t.take(20)}...): batch ${batch(i.toLong)} != " +
-          s"kernel $kernel — streaming and batch fingerprints diverged")
-    }
   }
 }

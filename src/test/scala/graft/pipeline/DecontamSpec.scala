@@ -1,102 +1,39 @@
 package graft.pipeline
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Gates on the large-eval decontamination path (Decontam
-  * .contaminatedLarge): it must be ROW-IDENTICAL to the broadcast path
-  * for any fpp (the Bloom filter only prefilters; the exact string
-  * verify join decides), the closed-form byte guard must fire before
-  * any filter is built, and the Bloom probe must sit in the corpus
-  * scan stage (no exchange between shingle generation and the probe).
+/** Gates on the decontamination kernels (q67): the pure-JVM shingle
+  * kernel that Dsir and Classifier featurize with must agree bit for
+  * bit with the column expression, and an over-budget eval set must
+  * fail before the corpus is scanned.
   */
 class DecontamSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
-  val dir = "/root/testdata/sf0.01"
-  def available: Boolean =
-    new java.io.File(s"$dir/documents.parquet").exists()
 
-  private def fixture() = {
+  test("shinglesOf kernel is bit-parity with the shingles column expression") {
     import spark.implicits._
-    val canary = " held out eval canary phrase"
-    val docs0 = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val aug = docs0.withColumn("text",
-      when(col("doc_id") % 7 === 3, concat(col("text"), lit(canary)))
-        .otherwise(col("text")))
-    val evalSet = docs0.where(col("doc_id") % 50 === 0)
-      .withColumn("text", concat(col("text"), lit(canary)))
-    (aug.where(col("doc_id") % 50 =!= 0), evalSet)
+    // adversarial tokenizations: empties, lead/trail and double spaces,
+    // too-short text, NULL
+    Seq("a b c", "", " lead", "trail ", "a  b", "one", null).foreach { t =>
+      val viaCol = Seq(Tuple1(t)).toDF("t")
+        .select(Decontam.shingles(col("t"), 2).as("g"))
+        .head.getSeq[String](0)
+      assert(Decontam.shinglesOf(t, 2).toSeq == viaCol,
+        s"shingle kernel diverges on ${Option(t).map("'" + _ + "'")}")
+    }
   }
 
-  private def rows(df: org.apache.spark.sql.DataFrame) =
-    df.collect()
-      .map(r => (r.getLong(r.fieldIndex("doc_id")),
-        r.getLong(r.fieldIndex("n_grams")),
-        r.getLong(r.fieldIndex("n_hits")),
-        r.getDouble(r.fieldIndex("share")))).toSet
-
-  test("contaminatedLarge is row-identical to the broadcast path") {
-    assume(available)
-    val (corpus, evalSet) = fixture()
-    val want = rows(Decontam.contaminated(
-      corpus, evalSet, "doc_id", "text", "text", n = 5))
-    val got = rows(Decontam.contaminatedLarge(
-      corpus, evalSet, "doc_id", "text", "text", n = 5))
-    assert(want.nonEmpty, "fixture produced no contamination — vacuous")
-    assert(got == want,
-      s"bloom path diverged: extra=${got.diff(want).take(5)} " +
-        s"missing=${want.diff(got).take(5)}")
-  }
-
-  test("exactness is independent of fpp — a near-useless filter still verifies") {
-    assume(available)
-    val (corpus, evalSet) = fixture()
-    val want = rows(Decontam.contaminated(
-      corpus, evalSet, "doc_id", "text", "text", n = 5))
-    // fpp 0.5: roughly half the corpus shingles survive the prefilter;
-    // the verify join must still produce the exact row set
-    val got = rows(Decontam.contaminatedLarge(
-      corpus, evalSet, "doc_id", "text", "text", n = 5, fpp = 0.5))
-    assert(got == want, "high-fpp bloom path diverged — verify join leaks")
-  }
-
-  test("closed-form byte guard fires before any filter is built") {
-    assume(available)
-    val (corpus, evalSet) = fixture()
+  test("an over-budget eval set fails fast and names the budget") {
+    import spark.implicits._
+    val corpus = Seq((1L, "a b c d")).toDF("doc_id", "text")
+    val evalSet = Seq("a b c d").toDF("text")
     val ex = intercept[IllegalArgumentException] {
-      Decontam.contaminatedLarge(corpus, evalSet,
-        "doc_id", "text", "text", n = 5, maxBloomBytes = 8)
+      Decontam.contaminated(corpus, evalSet, "doc_id", "text", "text", 2,
+        maxEvalShingles = 2L)
     }
-    assert(ex.getMessage.contains("MaxBloomBytes"))
-    // the closed form matches the standard optimal-bits formula
-    assert(Decontam.bloomBits(1000000L, 0.001) / 8 == 1797198L,
-      "bloomBits drifted from -n ln p / (ln 2)^2")
-  }
-
-  test("bloom probe sits in the corpus scan stage; verify join sees only survivors") {
-    assume(available)
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    val (corpus, evalSet) = fixture()
-    val df = Decontam.contaminatedLarge(
-      corpus, evalSet, "doc_id", "text", "text", n = 5)
-    df.collect() // gate the FINAL adaptive plan
-    val plan = df.queryExecution.executedPlan
-    val nodes = graft.plans.PlanInspector.allNodes(plan)
-    // the probe filter must reference the bloom UDF...
-    val probeFilters = nodes.filter(n =>
-      n.getClass.getSimpleName.startsWith("Filter") &&
-        n.expressions.exists(_.toString.contains("UDF")))
-    assert(probeFilters.nonEmpty, "no bloom-probe filter in the plan")
-    // ...and no exchange may sit between the corpus scan and the probe:
-    // every probe filter's subtree must be exchange-free (the shingle
-    // generation and the probe share one stage)
-    probeFilters.foreach { f =>
-      val below = graft.plans.PlanInspector.allNodes(f)
-        .collect { case s: ShuffleExchangeLike => s }
-      assert(below.isEmpty,
-        s"exchange below the bloom probe — corpus shingles shuffled " +
-          s"before prefiltering:\n$f")
-    }
+    assert(ex.getMessage.contains("3 distinct 2-gram shingles"), ex.getMessage)
+    assert(ex.getMessage.contains("Decontam.MaxEvalShingles"), ex.getMessage)
+    assert(ex.getMessage.contains("shard the eval set"), ex.getMessage)
   }
 }

@@ -75,76 +75,6 @@ class NgramSpec extends AnyFunSuite {
         s"missing=${text.diff(hash).take(3)}")
   }
 
-  test("scoreDocsN(n=2) is row-identical to the oracled bigram operator") {
-    assume(available)
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val lm2 = Ngram.train(docs.where(col("doc_id") % 3 === 0), "text")
-    val lmN = Ngram.trainN(docs.where(col("doc_id") % 3 === 0), "text", 2)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-        r.getDouble(3))).toSet
-    val a = rows(Ngram.scoreDocs(docs, "doc_id", "text", lm2))
-    val b = rows(Ngram.scoreDocsN(docs, "doc_id", "text", lmN))
-    assert(a.nonEmpty)
-    assert(b == a, s"order-2 cascade diverged: extra=${(b -- a).take(3)} " +
-      s"missing=${(a -- b).take(3)}")
-  }
-
-  test("order-3 cascade equals a driver recompute (truncation, backoff, OOV)") {
-    assume(available)
-    import spark.implicits._
-    // trained on two docs; scored docs hit: full trigram, bigram
-    // backoff, unigram backoff, OOV floor, and the doc-initial
-    // truncated position
-    val train = Seq((0L, "a b c d"), (1L, "b c d e")).toDF("doc_id", "text")
-    val lm = Ngram.trainN(train, "text", 3)
-    val score = Seq((10L, "a b c"), (11L, "c a b"), (12L, "a z b"),
-      (13L, "b c"))
-      .toDF("doc_id", "text")
-    val got = Ngram.scoreDocsN(score, "doc_id", "text", lm)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2)))
-      .toMap
-    // driver recompute with string-keyed maps
-    val tabs = (1 to 3).map(k => train.collect().flatMap(r =>
-      Decontam.shinglesOf(r.getString(1), k)).groupBy(identity)
-      .map { case (g, o) => g -> o.length.toLong })
-    val N = 8.0
-    def s1(w: String) = 0.4 * math.max(tabs(0).getOrElse(w, 0L), 1L) / N
-    def sc(pos: Seq[String], kmax: Int): Double = {
-      // pos = the up-to-3 tokens ending at the scored position
-      val w = pos.last
-      val avail = math.min(kmax, pos.length)
-      def branch(k: Int): Option[Double] = {
-        val gram = pos.takeRight(k).mkString(" ")
-        val ctx = pos.takeRight(k).dropRight(1).mkString(" ")
-        for {
-          c <- tabs(k - 1).get(gram)
-          cc <- tabs(k - 2).get(ctx)
-        } yield math.pow(0.4, (avail - k).toDouble) * c.toDouble / cc
-      }
-      (avail to 2 by -1).view.flatMap(branch).headOption
-        .getOrElse(math.pow(0.4, (avail - 1).toDouble) *
-          math.max(tabs(0).getOrElse(w, 0L), 1L) / N)
-    }
-    def docScore(text: String): (Long, Double) = {
-      val ws = text.split(" ", -1)
-      val scores = (2 to ws.length).map { i =>
-        sc(ws.slice(math.max(0, i - 3), i).toSeq, math.min(3, i))
-      }
-      val lp = scores.map(math.log).sum / scores.length
-      (scores.length.toLong,
-        BigDecimal(lp).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-    }
-    Seq((10L, "a b c"), (11L, "c a b"), (12L, "a z b"), (13L, "b c"))
-      .foreach { case (id, text) =>
-        val (wantN, wantLp) = docScore(text)
-        val (gotN, gotLp) = got(id)
-        assert(gotN == wantN, s"doc $id positions: $gotN != $wantN")
-        assert(math.abs(gotLp - wantLp) < 1e-9,
-          s"doc $id ('$text'): got $gotLp, want $wantLp")
-      }
-  }
-
   test("saveLm/loadLm roundtrip scores identically; foreign dirs fail loudly") {
     assume(available)
     val docs = spark.read.parquet(s"$dir/documents.parquet")

@@ -78,6 +78,52 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("link merges duplicate input rows; a path at two commits is two sites") {
+    import spark.implicits._
+    def multiset(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString("\u0001")).toSeq.sorted
+    val files = KgPipeline.synthInput(spark, 20, partitions = 2)
+    val once = KgPipeline.run(spark, files, model)
+    val twice = KgPipeline.run(spark, files.union(files), model)
+    try {
+      val linked = multiset(once.linked)
+      assert(linked.nonEmpty)
+      assert(multiset(twice.linked) == linked,
+        "a duplicated input row must link to the same rows as one copy")
+      assert(multiset(twice.triples) == multiset(once.triples),
+        "a duplicated input row must not duplicate any triple")
+    } finally {
+      KgPipeline.release(spark, once); KgPipeline.release(spark, twice)
+    }
+    // the same repo/path at a second commit is a distinct provenance
+    // site: every hasEntity row appears once per commit
+    val f = files.collect().find { f =>
+      KgPipeline.sentencesOf(f.lang, f.content)
+        .exists(s => model.mentions(s)._2.nonEmpty)
+    }.get
+    val other = "c" * 40
+    def hasEntity(r: KgPipeline.Result) = r.triples
+      .where(col("pred") === "hasEntity")
+      .select("subj", "obj", "src_repo", "src_path", "src_commit")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
+        r.getString(3), r.getString(4))).toSeq
+    val one = KgPipeline.run(spark, Seq(f).toDS(), model)
+    val two = KgPipeline.run(spark, Seq(f, f.copy(commit = other)).toDS(),
+      model)
+    try {
+      val base = hasEntity(one)
+      assert(base.nonEmpty)
+      val bySite = hasEntity(two).groupBy(t => (t._1, t._2, t._3, t._4))
+      assert(bySite.keySet == base.map(t => (t._1, t._2, t._3, t._4)).toSet)
+      bySite.foreach { case (k, rows) =>
+        assert(rows.map(_._5).sorted == Seq(f.commit, other).sorted,
+          s"$k: expected one row per commit, differing only in src_commit: $rows")
+      }
+    } finally {
+      KgPipeline.release(spark, one); KgPipeline.release(spark, two)
+    }
+  }
+
   test("connected components: min-label over a known graph") {
     import spark.implicits._
     val edges = Seq(("a", "b"), ("b", "c"), ("x", "y"), ("p", "p"))
@@ -832,87 +878,24 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("mergeDelta: changed files replace their triples, deletions retract; merged == full re-run") {
-    import spark.implicits._
-    val buckets = 8
-    val dir = java.nio.file.Files.createTempDirectory("kgmerge")
-      .toString + "/triples"
-    val n = 60L
-    def ident(i: Long) = Synth.repoRow(i, 8, seed = 42L)
-    val base = (0L until n).map { i =>
-      val r = ident(i)
-      KgPipeline.RepoFile(r.repo, r.path, r.commit, r.lang, r.content)
-    }
-    val r0 = KgPipeline.run(spark, spark.createDataset(base), model)
-    TableIO.writeResumable(r0.triples, dir, buckets,
-      Seq("src_repo", "src_path"))
-    KgPipeline.release(spark, r0)
-    // changed: files 10..19 keep their identity (repo/path) but get new
-    // content + commit; deleted: files 50..59
-    val changed = (10L until 20L).map { i =>
-      val id = ident(i)
-      val alt = Synth.repoRow(i, 8, seed = 43L)
-      KgPipeline.RepoFile(id.repo, id.path, "f" * 40, id.lang, alt.content)
-    }
-    val deletedKeys = (50L until 60L).map { i =>
-      val id = ident(i); (id.repo, id.path)
-    }
-    val report = KgPipeline.mergeDelta(spark, dir, buckets,
-      spark.createDataset(changed), model,
-      Some(deletedKeys.toDF("src_repo", "src_path")))
-    assert(report.nDeletedExisting > 0,
-      "deleted files had no committed triples — fixture broken")
-    // ground truth: a full pipeline run over the post-delta corpus
-    val corpus = base.take(10) ++ changed ++ base.slice(20, 50)
-    val rf = KgPipeline.run(spark, spark.createDataset(corpus), model)
-    val cols = Seq("subj", "pred", "obj", "src_repo", "src_path",
-      "src_commit")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select(cols.map(org.apache.spark.sql.functions.col): _*)
-        .collect().map(r => cols.indices.map(r.getString).mkString(""))
-        .toSet
-    val want = rows(rf.triples)
-    val got = rows(TableIO.readCommitted(spark, dir, buckets))
-    KgPipeline.release(spark, rf)
-    assert(got == want,
-      s"merged table diverges from the full re-run: merged=${got.size} " +
-        s"full=${want.size}, onlyMerged=${(got -- want).take(3)}, " +
-        s"onlyFull=${(want -- got).take(3)}")
-    assert(TableIO.verifyCommits(spark, dir, buckets).isEmpty)
-  }
-
-  test("mergeDelta retracts a changed file whose new content has no mentions") {
-    import spark.implicits._
-    val buckets = 8
-    val dir = java.nio.file.Files.createTempDirectory("kgvacate")
-      .toString + "/triples"
-    def ident(i: Long) = Synth.repoRow(i, 8, seed = 42L)
-    val base = (0L until 20L).map { i =>
-      val r = ident(i)
-      KgPipeline.RepoFile(r.repo, r.path, r.commit, r.lang, r.content)
-    }
-    val r0 = KgPipeline.run(spark, spark.createDataset(base), model)
-    TableIO.writeResumable(r0.triples, dir, buckets,
-      Seq("src_repo", "src_path"))
-    KgPipeline.release(spark, r0)
-    // the edit empties the file — zero sentences under every lang's
-    // segmentation, so the new content yields ZERO triples; without the
-    // vacated-key delete the file's stale triples would survive
-    val id5 = ident(5L)
-    val gutted = KgPipeline.RepoFile(id5.repo, id5.path, "e" * 40,
-      id5.lang, "")
-    val report = KgPipeline.mergeDelta(spark, dir, buckets,
-      spark.createDataset(Seq(gutted)), model)
-    assert(report.nDeleteKeys == 1 && report.nDeletedExisting > 0,
-      s"expected the vacated file's stale triples to be deleted: $report")
-    val left = TableIO.readCommitted(spark, dir, buckets)
-      .where(col("src_repo") === id5.repo && col("src_path") === id5.path)
-      .count()
-    assert(left == 0, s"stale triples survived the vacating edit: $left")
-    assert(TableIO.verifyCommits(spark, dir, buckets).isEmpty)
-  }
-
   // ---- incremental canonicalization (CanonState) ----
+
+  /** Bootstrap for incremental maintenance: a full run over `files`
+    * writes the table, and the canonical state is initialized from the
+    * same linked evidence (the canonical-state onboarding path).
+    */
+  private def bootstrapCanonical(files: Seq[KgPipeline.RepoFile], dir: String,
+                                 buckets: Int, stateDir: String): Unit = {
+    import spark.implicits._
+    val r0 = KgPipeline.run(spark, spark.createDataset(files), model)
+    TableIO.writeResumable(r0.triples, dir, buckets,
+      Seq("src_repo", "src_path"))
+    val kb = KgPipeline.kbAliasDf(spark, Synth.knowledgeBase)
+    val cd0 = KgPipeline.canonicalizeWithState(spark, r0.linked, kb, stateDir)
+    CanonState.save(spark, stateDir, cd0.edges, cd0.canon)
+    KgPipeline.releaseCanon(spark, cd0.canon); cd0.edges.unpersist()
+    KgPipeline.release(spark, r0)
+  }
 
   private def linkedOf(pairs: (String, String)*) = {
     import spark.implicits._
@@ -1114,16 +1097,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     def fileOf(r: Synth.RepoRow) =
       KgPipeline.RepoFile(r.repo, r.path, r.commit, r.lang, r.content)
     val base = (0L until n).map(i => fileOf(ident(i)))
-    // bootstrap: full run writes the table; state initialized from the
-    // same linked evidence (the canonical-state onboarding path)
-    val r0 = KgPipeline.run(spark, spark.createDataset(base), model)
-    TableIO.writeResumable(r0.triples, dir, buckets,
-      Seq("src_repo", "src_path"))
-    val kb = KgPipeline.kbAliasDf(spark, Synth.knowledgeBase)
-    val cd0 = KgPipeline.canonicalizeWithState(spark, r0.linked, kb, stateDir)
-    CanonState.save(spark, stateDir, cd0.edges, cd0.canon)
-    KgPipeline.releaseCanon(spark, cd0.canon); cd0.edges.unpersist()
-    KgPipeline.release(spark, r0)
+    bootstrapCanonical(base, dir, buckets, stateDir)
     // delta 1: files 5..9 change content; delta 2: files 30..34 change
     def altFiles(lo: Long, hi: Long, seed: Long) = (lo until hi).map { i =>
       val id = ident(i)
@@ -1172,5 +1146,36 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
               finally in.close()
     assert(txt.contains("\"version\":5"), txt)
+  }
+
+  test("mergeDeltaCanonical retracts a file whose new content has no mentions") {
+    import spark.implicits._
+    val buckets = 8
+    val base0 = java.nio.file.Files.createTempDirectory("kgvacate").toString
+    val dir = base0 + "/triples"
+    val stateDir = base0 + "/canon_state"
+    def ident(i: Long) = Synth.repoRow(i, 8, seed = 42L)
+    val base = (0L until 20L).map { i =>
+      val r = ident(i)
+      KgPipeline.RepoFile(r.repo, r.path, r.commit, r.lang, r.content)
+    }
+    bootstrapCanonical(base, dir, buckets, stateDir)
+    // the edit empties the file — zero sentences under every lang's
+    // segmentation, so the new content yields ZERO triples; without the
+    // vacated-key delete the file's stale triples would survive
+    val id5 = ident(5L)
+    val gutted = KgPipeline.RepoFile(id5.repo, id5.path, "e" * 40,
+      id5.lang, "")
+    val (report, reconcile) = KgPipeline.mergeDeltaCanonical(spark, dir,
+      buckets, spark.createDataset(Seq(gutted)), model, stateDir)
+    assert(report.nDeleteKeys == 1 && report.nDeletedExisting > 0,
+      s"expected the vacated file's stale triples to be deleted: $report")
+    assert(reconcile.affectedBuckets.isEmpty,
+      s"a retraction adds no alias evidence, so nothing drifts: $reconcile")
+    val left = TableIO.readCommitted(spark, dir, buckets)
+      .where(col("src_repo") === id5.repo && col("src_path") === id5.path)
+      .count()
+    assert(left == 0, s"stale triples survived the vacating edit: $left")
+    assert(TableIO.verifyCommits(spark, dir, buckets).isEmpty)
   }
 }

@@ -26,13 +26,12 @@ object PlanInspector {
   }
 }
 
-/** Plan-hygiene gates, in-suite (VERDICT r3 #2): the dev-tool
-  * `ExplainCheck` asserted parquet filter pushdown, column pruning, and
-  * broadcast joins for the key queries, but as a main it never ran in
-  * CI — a regression that un-broadcast the linker join or un-pruned a
-  * scan would have shipped with green tests. These are the same
-  * assertions as suite tests, plus the q44 shuffle-key type gate (the
-  * r2 text-keyed-shuffle regression is structurally unrepeatable).
+/** Plan-hygiene gates, in-suite (VERDICT r3 #2): parquet filter
+  * pushdown, column pruning and broadcast joins for the key queries, so
+  * a regression that un-broadcasts the linker join or un-prunes a scan
+  * fails the tests instead of shipping green. Plus the q44 shuffle-key
+  * type gate (the r2 text-keyed-shuffle regression is structurally
+  * unrepeatable).
   */
 class PlanHygieneSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
