@@ -330,8 +330,10 @@ object Cli {
       val patterns = rest.filterNot(_.startsWith("buckets=")).map { a =>
         a.trim.split("\\s+") match {
           case Array(s, p, o) => (s, p, o)
-          case other => sys.error(s"pattern '$a' must have exactly 3 " +
-            s"whitespace-separated terms, got ${other.length}")
+          case other =>
+            System.err.println(s"usage: kg-query: pattern '$a' must have " +
+              s"exactly 3 whitespace-separated terms, got ${other.length}")
+            sys.exit(2)
         }
       }
       val spark = localSession("graft-kg-query")

@@ -1187,9 +1187,12 @@ object TableIO {
     fs.mkdirs(dst.getParent)
     val out = fs.create(tmp, true)
     try out.write(content.getBytes("UTF-8")) finally out.close()
-    // FileContext.rename(OVERWRITE) is the atomic-replace rename; the
-    // FileSystem.rename default refuses an existing destination
-    FileContext.getFileContext(dst.toUri, conf)
-      .rename(tmp, dst, Options.Rename.OVERWRITE)
+    // FileSystem.rename publishes into an absent destination; it refuses
+    // an existing one, which FileContext.rename(OVERWRITE) replaces
+    // atomically. The local FileContext forks a `stat` process per
+    // rename, so it is kept for replacement and as the fallback.
+    if (fs.exists(dst) || !fs.rename(tmp, dst))
+      FileContext.getFileContext(dst.toUri, conf)
+        .rename(tmp, dst, Options.Rename.OVERWRITE)
   }
 }

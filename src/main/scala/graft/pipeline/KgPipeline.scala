@@ -2,14 +2,16 @@ package graft.pipeline
 
 import graft.core._
 import graft.NerfModel
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The flagship knowledge-graph construction pipeline (BASELINE.json
   * north_rule): CRF mention detection as a typed Dataset map with the
-  * model broadcast to executors, entity linking via a broadcast
-  * dictionary hash join + similarity scorer, canonicalization via
+  * model broadcast to executors, entity linking against a broadcast
+  * alias index with a similarity scorer, canonicalization via
   * connected components over alias edges, and (subj, pred, obj) triple
   * materialization.
   *
@@ -19,13 +21,15 @@ import org.apache.spark.sql.expressions.Window
   *    IOB-decode fused in one `flatMap` closure over the broadcast model,
   *    mirroring the reference's function-composition pipeline
   *    (/root/reference/src/NLP/Nerf.hs:94-99) — SURVEY.md §4.3.
-  *  - the KB/alias table is tiny vs the corpus → `broadcast()` join, no
-  *    shuffle of the big side for candidate generation.
-  *  - the wide operations are the per-mention argmax (partial-agg
-  *    `max_by`, one shuffle on mentionId), the CC fixpoint over the
-  *    *distinct* alias edge set (orders of magnitude smaller than the
-  *    corpus), and the type-triple dedup (map-side partial distinct
-  *    collapses per-file repeats before the exchange — see `triples`).
+  *  - the KB/alias table is tiny vs the corpus → a broadcast block-key
+  *    index: each mention's argmax runs inside its own partition, so
+  *    candidate generation never shuffles the big side.
+  *  - the wide operations are the link stage's mention-sized distinct
+  *    (duplicate input rows), the distinct alias edge set (orders of
+  *    magnitude smaller than the corpus; canonicalized on the driver
+  *    below `ccCollectThreshold` edges, by the CC fixpoint above it), and
+  *    the type-triple dedup (map-side partial distinct collapses
+  *    per-file repeats before the exchange — see `triples`).
   *  - popular-repo skew is defused by the committed write itself:
   *    `TableIO.writeBuckets` AQE-rebalances rows on `_bucket`, which
   *    splits a hot bucket over several tasks.
@@ -100,28 +104,35 @@ object KgPipeline {
   private def sepEscaped(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     regexp_replace(regexp_replace(c, "%", "%25"), "#", "%23")
 
-  /** Link mentions to KB entities: candidate generation via broadcast
-    * hash join on (blocking key = first alias token) — the standard
-    * Spark entity-resolution blocking pattern (cf. SparkER, EDBT 2019;
-    * PAPERS.md) — then a similarity score:
-    *   score = 8·exact + (4 − levenshtein)·fuzzy + 3·typeMatch
-    *           + contextOverlap
-    * and argmax per mention via partial-aggregating `max_by`.
+  /** Link mentions to KB entities. Candidate generation blocks on the
+    * first alias token — the standard Spark entity-resolution blocking
+    * pattern (cf. SparkER, EDBT 2019; PAPERS.md) — and each candidate
+    * within edit distance 4 scores
+    *   score = 8·exact + (4 − levenshtein) + 3·typeMatch + contextOverlap
+    * The best `(score, entity_id)` wins, ids compared in UTF-8 byte
+    * order. A mention with no candidate within distance 4 still
+    * surfaces: as a NIL entity clustered by surface (`nil:<surface>`,
+    * the standard NIL-clustering convention) with a NULL score.
+    *
+    * The KB is collected once into a block-key index and broadcast, so
+    * every candidate of a mention is already in the mention's own
+    * partition: one `mapPartitions` pass emits one row per mention, and
+    * the corpus side never shuffles for candidate generation. The only
+    * exchange is the mention-sized `distinct()` that merges duplicate
+    * input rows.
     */
   def linkMentions(spark: SparkSession, mentions: Dataset[MentionRow],
                    kbAliases: DataFrame): DataFrame = {
-    // precompute per-MENTION derived columns before the candidate join:
-    // anything computed after it runs once per candidate (~30x) instead
-    // of once per mention. Only OUTERMOST mentions (depth 0) are linked
-    // — nested sub-spans (forename inside a person) are structural NER
-    // output, not graph entities; linking them would mint a nil: entity
-    // per bare forename. mention_id includes the commit: the same path
-    // at two commits is two distinct provenance sites.
+    // Only OUTERMOST mentions (depth 0) are linked — nested sub-spans
+    // (forename inside a person) are structural NER output, not graph
+    // entities; linking them would mint a nil: entity per bare
+    // forename. mention_id includes the commit: the same path at two
+    // commits is two distinct provenance sites.
     val m = mentions.toDF()
       .where(col("depth") === 0)
       // the id components are %-escaped before joining on '#': a '#'
       // inside a real-world path would otherwise let two DIFFERENT
-      // mentions collide into one id and the argmax groupBy would
+      // mentions collide into one id and the duplicate merge would
       // silently drop one of them
       .withColumn("mention_id",
         concat_ws("#", sepEscaped(col("repo")), sepEscaped(col("path")),
@@ -130,78 +141,115 @@ object KgPipeline {
       .withColumn("surface_norm", lower(col("surface")))
       .withColumn("block_key", split(col("surface_norm"), " ").getItem(0))
       // context narrowed to capitalized tokens (the only ones that can
-      // match a canonical name) — the candidate join replicates this
-      // array ~30x per mention, so its width is a shuffle/CPU multiplier.
-      // "Capitalized" is the UNICODE test (first char differs from its
-      // lowercase), not an ASCII 'A'..'Z' range — "Łukasz" and "Örebro"
-      // must survive as disambiguating context
+      // match a canonical name). "Capitalized" is the UNICODE test
+      // (first char differs from its lowercase), not an ASCII 'A'..'Z'
+      // range — "Łukasz" and "Örebro" must survive as disambiguating
+      // context
       .withColumn("ctx_toks",
         transform(filter(split(col("context"), " "),
           t => t.substr(1, 1) =!= lower(t.substr(1, 1))),
           t => lower(t)))
       .withColumn("ne_root", substring_index(col("neType"), ".", 1))
-      .drop("context")
+      .select(LinkInCols.map(col): _*)
 
-    // per-ALIAS derived columns precomputed on the tiny broadcast side
-    val kb = kbAliases
-      .withColumn("block_key", split(col("alias_norm"), " ").getItem(0))
-      .withColumn("canon_toks", split(lower(col("canonical")), " "))
-      .withColumn("type_root", substring_index(col("entity_type"), ".", 1))
+    val index = spark.sparkContext.broadcast(aliasIndex(kbAliases))
+    m.mapPartitions { rows =>
+      val idx = index.value
+      rows.map(linkOne(idx, _))
+    }(Encoders.row(LinkedSchema))
+      .distinct()
+  }
 
-    // LEFT join: a mention with no candidate within edit distance 4
-    // must still surface — it becomes a NIL entity clustered by surface
-    // (`nil:<surface>`), the standard NIL-clustering convention, instead
-    // of silently dropping out of the graph.
-    val scored = m
-      .join(broadcast(kb), Seq("block_key"), "left_outer")
-      // threshold form (r7): only distances <= 4 ever matter (the
-      // `valid` gate), and Spark's 3-arg levenshtein bails out early —
-      // length-diff fast reject + banded DP — returning -1 beyond the
-      // threshold. Values 0..4 are identical to the unbounded form, so
-      // scores are unchanged; this expression runs once per candidate
-      // PAIR (~30x mention count), the hottest scalar in the link stage
-      .withColumn("lev",
-        when(col("alias_norm").isNotNull,
-          levenshtein(col("surface_norm"), col("alias_norm"), 4)))
-      .withColumn("valid", col("lev").isNotNull && col("lev") >= 0)
-      .withColumn("type_match",
-        when(!col("valid"), 0)
-          .when(col("neType") === col("entity_type"), 1)
-          .when(col("ne_root") === col("type_root"), 1)
-          .otherwise(0))
-      .withColumn("ctx_overlap",
+  /** The per-mention columns [[linkOne]] reads, in order. */
+  private val LinkInCols = Seq("mention_id", "repo", "path", "commit",
+    "sentIdx", "begin", "end", "depth", "neType", "surface_norm",
+    "block_key", "ctx_toks", "ne_root")
+
+  /** The `linked` schema: [[linkMentions]]' contract with canon,
+    * triples and the query surface.
+    */
+  private val LinkedSchema = StructType(Seq(
+    StructField("mention_id", StringType, nullable = false),
+    StructField("score", IntegerType),
+    StructField("repo", StringType), StructField("path", StringType),
+    StructField("commit", StringType), StructField("sentIdx", IntegerType),
+    StructField("begin", IntegerType), StructField("end", IntegerType),
+    StructField("depth", IntegerType), StructField("neType", StringType),
+    StructField("surface_norm", StringType),
+    StructField("entity_id", StringType)))
+
+  /** One KB alias as a link candidate; `canonToks` holds the distinct
+    * tokens of the lowercased canonical name.
+    */
+  private final case class LinkCand(alias: UTF8String, entityId: String,
+                                    idBytes: UTF8String, entityType: String,
+                                    typeRoot: String, canonToks: Array[String])
+
+  /** Block key (first alias token) → candidates. The per-alias columns
+    * use the same Column expressions as the mention side; over the KB's
+    * local relation they fold into the plan, so this collect runs no
+    * job. Rows with a NULL alias or entity id never link.
+    */
+  private def aliasIndex(kbAliases: DataFrame): Map[String, Array[LinkCand]] =
+    kbAliases
+      .where(col("alias_norm").isNotNull && col("entity_id").isNotNull)
+      .select(split(col("alias_norm"), " ").getItem(0), col("alias_norm"),
+        col("entity_id"), col("entity_type"),
+        substring_index(col("entity_type"), ".", 1),
+        split(lower(col("canonical")), " "))
+      .collect()
+      .groupBy(_.getString(0))
+      .map { case (key, rows) =>
+        key -> rows.map { r =>
+          val toks = Option(r.getSeq[String](5)).fold(Array.empty[String])(
+            _.distinct.toArray)
+          LinkCand(UTF8String.fromString(r.getString(1)), r.getString(2),
+            UTF8String.fromString(r.getString(2)), r.getString(3),
+            r.getString(4), toks)
+        }
+      }
+
+  /** Argmax over one mention's candidates; one output row. Valid
+    * candidates (bounded Levenshtein within 4) always outscore the
+    * invalid ones, so the winner is the best valid `(score, entity_id)`.
+    */
+  private def linkOne(idx: Map[String, Array[LinkCand]], r: Row): Row = {
+    val neType = r.getString(8)
+    val surface = r.getString(9)
+    val neRoot = r.getString(12)
+    val cands =
+      if (surface == null || r.isNullAt(10)) Array.empty[LinkCand]
+      else idx.getOrElse(r.getString(10), Array.empty[LinkCand])
+    val surf = UTF8String.fromString(surface)
+    val ctx = if (r.isNullAt(11)) Seq.empty[String] else r.getSeq[String](11)
+    var best: LinkCand = null
+    var bestScore = 0
+    cands.foreach { c =>
+      // the kernel of Spark's 3-arg `levenshtein`: a length-difference
+      // reject plus a banded DP, -1 beyond the threshold
+      val lev = surf.levenshteinDistance(c.alias, 4)
+      if (lev >= 0) {
+        val typeMatch =
+          (neType != null && neType == c.entityType) ||
+            (neRoot != null && neRoot == c.typeRoot)
         // context disambiguation against the *canonical* name, not just
         // the matched alias: a surname-only mention in a sentence that
         // spells the full name scores highest for the right entity
-        when(!col("valid"), 0).otherwise(
-          size(array_intersect(col("ctx_toks"), col("canon_toks")))))
-      .withColumn("score",
-        when(!col("valid"), lit(-1000)).otherwise(
-          when(col("lev") === 0, lit(8)).otherwise(lit(0)) +
-            (lit(4) - col("lev")) + col("type_match") * lit(3) +
-            col("ctx_overlap")))
-
-    // argmax per mention: partial-aggregating max_by collapses the
-    // candidate explosion map-side; shuffle volume = #mentions. The
-    // non-key columns are functionally dependent on mention_id and ride
-    // along in the (cheap, single-column) grouping key's payload.
-    scored.groupBy("mention_id")
-      .agg(
-        max_by(when(col("valid"), col("entity_id")),
-          struct(col("score"), col("entity_id"))).as("best_entity"),
-        // NIL mentions (no valid candidate) publish NULL, not the
-        // internal -1000 ordering sentinel — a consumer thresholding on
-        // score must not see the marker as a real value
-        max(when(col("valid"), col("score"))).as("score"),
-        first(col("repo")).as("repo"), first(col("path")).as("path"),
-        first(col("commit")).as("commit"), first(col("sentIdx")).as("sentIdx"),
-        first(col("begin")).as("begin"), first(col("end")).as("end"),
-        first(col("depth")).as("depth"), first(col("neType")).as("neType"),
-        first(col("surface_norm")).as("surface_norm"))
-      .withColumn("entity_id",
-        coalesce(col("best_entity"),
-          concat(lit("nil:"), col("surface_norm"))))
-      .drop("best_entity")
+        val score = (if (lev == 0) 8 else 0) + (4 - lev) +
+          (if (typeMatch) 3 else 0) + c.canonToks.count(ctx.contains)
+        if (best == null || score > bestScore ||
+            (score == bestScore && c.idBytes.binaryCompare(best.idBytes) > 0)) {
+          best = c; bestScore = score
+        }
+      }
+    }
+    val entityId =
+      if (best != null) best.entityId
+      else if (surface == null) null
+      else "nil:" + surface
+    Row(r.get(0), if (best == null) null else Integer.valueOf(bestScore),
+      r.get(1), r.get(2), r.get(3), r.get(4), r.get(5), r.get(6), r.get(7),
+      neType, surface, entityId)
   }
 
   // ------------------------------------------------------------------
@@ -300,10 +348,66 @@ object KgPipeline {
   /** Canonical map from a distinct alias-edge set: bridgeability filter,
     * connected components, min-entity representative. See
     * [[canonicalize]] for the ambiguity-guard semantics.
+    *
+    * The edge set is bounded by the alias vocabulary (KB-scale), not by
+    * the corpus. One action, `limit(collectThreshold + 1)`, both decides
+    * the path and collects the edges: at or below the threshold the
+    * whole map is computed on the driver and returned as a local
+    * relation; above it, the distributed fixpoint runs. A negative
+    * threshold forces the distributed path.
     */
   def canonFromEdges(spark: SparkSession, allEdges0: DataFrame,
                      kbAliases: DataFrame,
                      collectThreshold: Int = ccCollectThreshold): DataFrame = {
+    val fits =
+      if (collectThreshold < 0) None
+      else Some(allEdges0.select("src", "dst")
+          .limit(math.min(collectThreshold, Int.MaxValue - 1) + 1).collect())
+        .filter(_.length <= collectThreshold)
+    fits match {
+      case Some(rows) => canonOnDriver(spark,
+        rows.map(r => (r.getString(0), r.getString(1))).distinct, kbAliases)
+      case None => canonDistributed(spark, allEdges0, kbAliases)
+    }
+  }
+
+  /** [[canonFromEdges]] on the driver: the same bridgeability counts as
+    * the distributed left join on distinct `(entity_id, canonical)`,
+    * union-find, and the min entity id (UTF-8 byte order, as Spark's
+    * `min`) per component. Edges with a NULL end never bridge.
+    */
+  private def canonOnDriver(spark: SparkSession, edges: Array[(String, String)],
+                            kbAliases: DataFrame): DataFrame = {
+    // a projection of the KB's local relation: no job
+    val canonOf = kbAliases.select("entity_id", "canonical").collect()
+      .groupMap(_.getString(0))(_.getString(1))
+    def bridges(srcs: Array[String]): Boolean = {
+      // a source with no KB row (nil:*) joins one NULL canonical
+      val canons = srcs.flatMap(s => canonOf.getOrElse(s, Array[String](null)))
+      val n = srcs.count(_ != null)
+      n == 1 || (n == 2 && !canons.contains(null) && canons.distinct.length == 1)
+    }
+    val bridgeable = edges.groupBy(_._2).collect {
+      case (dst, group) if dst != null && bridges(group.map(_._1)) => dst
+    }.toSet
+    val uf = new UnionFind
+    edges.foreach { case (s, d) => if (s != null && bridgeable(d)) uf.union(s, d) }
+    val entities = uf.components().filterNot(_._1.startsWith("alias:")).toSeq
+    val canonId = entities.groupMapReduce(_._2)(_._1) { (a, b) =>
+      if (UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b)) <= 0) a
+      else b
+    }
+    import spark.implicits._
+    entities.map { case (e, comp) => (e, canonId(comp)) }
+      .toDF("entity_id", "canon_id")
+  }
+
+  /** [[canonFromEdges]] above the collect threshold: a distributed
+    * bridgeability aggregate, the connected-components fixpoint and a
+    * checkpointed representative map.
+    */
+  private def canonDistributed(spark: SparkSession, allEdges0: DataFrame,
+                               kbAliases: DataFrame): DataFrame = {
     // consumed twice (ambiguity stats + the bridgeable join). persist()
     // returns the SAME Dataset, so blindly unpersisting at the end
     // would also drop a cache the CALLER owns (canonicalizeWithState
@@ -328,27 +432,8 @@ object KgPipeline {
       .where(col("n") === 1 ||
         (col("n") === 2 && col("n_nil") === 0 && col("n_canon") === 1))
       .select("dst")
-    val edges = allEdges.join(bridgeable, Seq("dst"))
-      .select("src", "dst")
-      // decided driver-vs-distributed + consumed once more below: one
-      // distributed distinct pass over corpus-sized data, reused
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // The distinct alias-edge set is bounded by the alias vocabulary
-    // (KB-scale), not by the corpus. Decide driver-vs-distributed via a
-    // cheap partial-agg count (never pulls rows); only a sub-threshold
-    // edge set is ever collected. Below the threshold we union-find on
-    // the driver (microseconds, no fixpoint shuffle rounds); above it,
-    // the iterative DataFrame CC.
-    val nEdges = edges.count()
-    val comps =
-      if (nEdges <= collectThreshold) {
-        val uf = new UnionFind
-        edges.collect().foreach(r => uf.union(r.getString(0), r.getString(1)))
-        val spark2 = spark
-        import spark2.implicits._
-        uf.components().toSeq.toDF("node", "comp")
-      } else connectedComponents(edges)
+    val comps = connectedComponents(
+      allEdges.join(bridgeable, Seq("dst")).select("src", "dst"))
 
     // canonical representative: the min *entity* id in the component
     val entities = comps.where(!col("node").startsWith("alias:"))
@@ -362,13 +447,12 @@ object KgPipeline {
     // spark.cleaner.referenceTracking.cleanCheckpoints=true).
     val pinned = Lineage.chk(out0)
     Lineage.dropCheckpointFiles(spark, Lineage.checkpointFileOf(comps))
-    edges.unpersist()
     if (!callerCached) allEdges.unpersist()
     pinned
   }
 
-  /** Above this many distinct alias edges, canonicalization switches
-    * from driver union-find to the distributed fixpoint. 100k two-string
+  /** At most this many distinct alias edges are canonicalized on the
+    * driver; above it, the distributed fixpoint runs. 100k two-string
     * rows is a few MB on the driver — far below any OOM hazard.
     */
   val ccCollectThreshold: Int = 100000
@@ -767,10 +851,11 @@ object KgPipeline {
                           canon: DataFrame, triples: DataFrame)
 
   /** Free everything a [[run]] Result pins: the persisted `linked`, the
-    * cached `canon` AND its backing checkpoint — local blocks when the
-    * fixpoint fell back to `localCheckpoint` (no checkpoint dir), the
-    * reliable checkpoint's files otherwise (Spark never reclaims those
-    * itself unless `cleanCheckpoints` is set). After release the Result's
+    * cached `canon` AND, when the distributed fixpoint produced it, its
+    * backing checkpoint — local blocks when the fixpoint fell back to
+    * `localCheckpoint` (no checkpoint dir), the reliable checkpoint's
+    * files otherwise (Spark never reclaims those itself unless
+    * `cleanCheckpoints` is set). After release the Result's
     * frames are dead: a localCheckpoint truncates lineage, so they are
     * not recomputable — release means "done with this result".
     */
@@ -791,7 +876,9 @@ object KgPipeline {
     // stage boundary to checkpoint)
     val linked = linkMentions(spark, ments, kb)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val canon = canonicalize(spark, linked, kb).cache()
+    // canon is already materialized, as a local relation or a
+    // checkpoint: caching it would only add a job
+    val canon = canonicalize(spark, linked, kb)
     Result(ments, linked, canon, triples(linked, canon))
   }
 
@@ -1009,7 +1096,8 @@ object KgPipeline {
   }
 
   /** Free a canonical map returned by [[canonFromEdges]]: cache blocks
-    * plus the backing checkpoint — reliable-checkpoint files dropped,
+    * plus, for a distributed-path map, the backing checkpoint (a
+    * driver-path map is a local relation) — reliable-checkpoint files dropped,
     * localCheckpoint blocks released on the quiet path (its "can no
     * longer be recomputed" WARN is this method's contract, not an
     * incident — same as [[release]]).

@@ -30,16 +30,18 @@ class CliSpec extends AnyFunSuite {
     }
   }
 
-  test("a bad bucket count is a usage error with exit 2") {
+  /** Run `graft.Cli` in a fresh JVM: (exit code, stderr). */
+  private def runCli(args: String*): (Int, String) = {
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
     val cp = System.getProperty("java.class.path")
-    def runCli(args: String*): (Int, String) = {
-      val p = new ProcessBuilder((Seq(javaBin, "-cp", cp, "graft.Cli") ++ args): _*)
-        .redirectOutput(ProcessBuilder.Redirect.DISCARD)
-        .start()
-      val err = new String(p.getErrorStream.readAllBytes(), "UTF-8")
-      (p.waitFor(), err)
-    }
+    val p = new ProcessBuilder((Seq(javaBin, "-cp", cp, "graft.Cli") ++ args): _*)
+      .redirectOutput(ProcessBuilder.Redirect.DISCARD)
+      .start()
+    val err = new String(p.getErrorStream.readAllBytes(), "UTF-8")
+    (p.waitFor(), err)
+  }
+
+  test("a bad bucket count is a usage error with exit 2") {
     val dir = java.nio.file.Files.createTempDirectory("clibuckets").toString
     Seq(Seq("kg-audit", dir, "0"), Seq("kg-export", dir, s"$dir/out", "x"),
         Seq("kg-query", dir, "?s ?p ?o", "buckets=-1")).foreach { args =>
@@ -47,6 +49,18 @@ class CliSpec extends AnyFunSuite {
       assert(code == 2, s"$args: exit $code, stderr: $err")
       assert(err.contains("bucket count must be an integer >= 1"),
         s"$args: stderr: $err")
+    }
+  }
+
+  test("a kg-query pattern without exactly three terms is a usage error with exit 2") {
+    val dir = java.nio.file.Files.createTempDirectory("clipattern").toString
+    Seq("?s hasType", "?s hasType persName extra", "  ").foreach { pat =>
+      val (code, err) = runCli("kg-query", dir, "?m hasEntity ?e", pat)
+      assert(code == 2, s"'$pat': exit $code, stderr: $err")
+      assert(err.startsWith("usage: kg-query:") &&
+        err.contains("exactly 3 whitespace-separated terms"),
+        s"'$pat': stderr: $err")
+      assert(!err.contains("Exception"), s"'$pat': stderr: $err")
     }
   }
 }

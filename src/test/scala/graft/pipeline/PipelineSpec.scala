@@ -507,6 +507,56 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(TableIO.verifyCommits(spark, s"$dir/t", 4).isEmpty)
   }
 
+  test("one build and its committed write stay within the Spark job budget") {
+    // fixed per-job cost dominates a build at benchmark size, so the
+    // job count of KgPipeline.run + writeResumable is gated; the budget
+    // may only tighten
+    val budget = 8
+    val dir = java.nio.file.Files.createTempDirectory("graft_io_jobs").toString
+    val files = KgPipeline.synthInput(spark, 40, partitions = 2)
+    val sc = spark.sparkContext
+    // job events reach listeners asynchronously
+    def drain(): Unit = {
+      val bus = classOf[org.apache.spark.SparkContext]
+        .getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
+        .invoke(bus, java.lang.Long.valueOf(60000L))
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    drain()
+    sc.addSparkListener(listener)
+    val r =
+      try {
+        val r = KgPipeline.run(spark, files, model)
+        TableIO.writeResumable(r.triples, s"$dir/t", 16,
+          Seq("src_repo", "src_path"))
+        drain()
+        r
+      } finally sc.removeSparkListener(listener)
+    KgPipeline.release(spark, r, blocking = true)
+    assert(TableIO.verifyCommits(spark, s"$dir/t", 16).isEmpty)
+    assert(jobs.get <= budget,
+      s"one build launched ${jobs.get} Spark jobs, budget $budget")
+  }
+
+  test("manifest publish leaves no temp file, fresh or overwriting") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_io_publish").toFile
+    val p = s"$dir/sub/_manifest.json"
+    def leftovers = dir.toPath.resolve("sub").toFile.list().toSeq
+      .filter(_.contains(".tmp"))
+    TableIO.atomicWrite(p, "v1")
+    assert(leftovers.isEmpty, leftovers)
+    TableIO.atomicWrite(p, "v2")
+    assert(leftovers.isEmpty, leftovers)
+    assert(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(p)), "UTF-8") == "v2")
+  }
+
   test("resume refuses a bucket-count mismatch (no mixed partitionings)") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_io_nbuckets").toString

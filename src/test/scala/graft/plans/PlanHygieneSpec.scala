@@ -28,8 +28,8 @@ object PlanInspector {
 
 /** Plan-hygiene gates, in-suite (VERDICT r3 #2): parquet filter
   * pushdown, column pruning and broadcast joins for the key queries, so
-  * a regression that un-broadcasts the linker join or un-prunes a scan
-  * fails the tests instead of shipping green. Plus the q44 shuffle-key
+  * a regression that shuffles the linker's corpus side or un-prunes a
+  * scan fails the tests instead of shipping green. Plus the q44 shuffle-key
   * type gate (the r2 text-keyed-shuffle regression is structurally
   * unrepeatable).
   */
@@ -96,11 +96,24 @@ class PlanHygieneSpec extends AnyFunSuite {
     assertPruned("q10", p, 3)
   }
 
-  test("kg linker join is a broadcast (KB side)") {
+  test("kg linker: the duplicate merge is the only exchange; no sort aggregate") {
+    import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     val files = KgPipeline.synthInput(spark, 50, partitions = 2)
     val ments = KgPipeline.detectMentions(spark, files, KgMain.model)
     val kb = KgPipeline.kbAliasDf(spark, Synth.knowledgeBase)
-    assertBhj("kg_link", planString(KgPipeline.linkMentions(spark, ments, kb)), 1)
+    val df = KgPipeline.linkMentions(spark, ments, kb)
+    df.collect() // gate the FINAL adaptive plan
+    val nodes = PlanInspector.allNodes(df.queryExecution.executedPlan)
+    // candidates are generated inside each mention's partition: the
+    // corpus side never shuffles for them, and the one exchange is the
+    // mention-sized distinct
+    val shuffles = nodes.collect { case s: ShuffleExchangeLike => s }
+    assert(shuffles.size == 1,
+      s"kg_link: ${shuffles.size} shuffles, want 1:\n${df.queryExecution.executedPlan}")
+    val sortAggs = nodes.collect { case s: SortAggregateExec => s }
+    assert(sortAggs.isEmpty,
+      s"kg_link: sort aggregate in the plan:\n${df.queryExecution.executedPlan}")
   }
 
   test("q44 minhash: no shuffle carries a string-typed column") {
