@@ -243,12 +243,12 @@ object Cli {
       val redact = rest.contains("redact")
       val semantic = rest.contains("semantic")
       // "quality=<path>": load a persisted Classifier model and run the
-      // trained-filter stage (checkpoint id 8) at the default threshold
+      // trained-filter stage (checkpoint id 8) at Curate.MinQualityScore
       val qualityModel = rest.find(_.startsWith("quality="))
         .map(f => graft.pipeline.Classifier.load(spark,
           f.stripPrefix("quality=")))
       // "lm=<dir>": load a persisted bigram LM and run the perplexity
-      // ceiling (checkpoint id 9) at the default maxPpl
+      // ceiling (checkpoint id 9) at Curate.MaxPpl
       val lmModel = rest.find(_.startsWith("lm="))
         .map(f => graft.pipeline.Ngram.loadLm(spark, f.stripPrefix("lm=")))
       val rest2 = rest.filterNot(f => f == "redact" || f == "semantic" ||

@@ -10,6 +10,10 @@ object Verify {
     val (sfDir, outDir, only) = args match {
       case Array(s, o) => (s, o, "")
       case Array(s, o, p) => (s, o, p)
+      case _ =>
+        System.err.println(
+          "usage: graft.Verify <sfDir> <outDir> [queryNamePrefix]")
+        sys.exit(2)
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()

@@ -422,19 +422,4 @@ object Features {
     }
     out
   }
-
-  /** Total number of save sites for a config (site ids are < this). */
-  def numSites(conf: SchemaConf): Int = {
-    def len(o: Option[List[Int]]): Int = o.map(_.length).getOrElse(0)
-    len(conf.orthC) +
-      2 * len(conf.splitOrthC) +
-      conf.lowPrefixesC.map { case (r, ns) => r.length * ns.length }.getOrElse(0) +
-      conf.lowSuffixesC.map { case (r, ns) => r.length * ns.length }.getOrElse(0) +
-      conf.lemmaC.map { case (r, n) => r.length * 2 * (n + 1) }.getOrElse(0) +
-      len(conf.shapeC) + len(conf.packedC) +
-      len(conf.shapePairC) + len(conf.packedPairC) +
-      conf.dictC.map { case (r, ds) => r.length * ds.length }.getOrElse(0) +
-      conf.intTrigsC.map(_._1.length).getOrElse(0) +
-      conf.extTrigsC.map(_._1.length).getOrElse(0)
-  }
 }

@@ -99,11 +99,4 @@ object ShingleFunctions {
 
   def ner_shingles(text: Column, n: Int): Column =
     Bridge.column(NerShingles(Bridge.expression(text), n))
-
-  /** Register `ner_shingles` for spark.sql use (GraftExtensions
-    * injects the same builder catalog-level).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ner_shingles", FnBuilders.nerShingles, "built-in")
 }

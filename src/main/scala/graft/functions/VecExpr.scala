@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -96,52 +96,9 @@ case class NerCosine(left: Expression, right: Expression)
   override def prettyName: String = "ner_cosine"
 }
 
-/** Arity-checked expression builders, shared by session-level
-  * registration (`register`) and catalog-level injection
-  * (GraftExtensions) so both paths raise the same analysis error.
-  */
-private[graft] object FnBuilders {
-  import org.apache.spark.sql.catalyst.expressions.Expression
-
-  def checked(name: String, arity: Int)(build: Seq[Expression] => Expression)
-      : Seq[Expression] => Expression = exprs => {
-    if (exprs.length != arity)
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> name,
-          "expectedNum" -> arity.toString,
-          "actualNum" -> exprs.length.toString,
-          "docroot" -> ""))
-    build(exprs)
-  }
-
-  val nerShape = checked("ner_shape", 1)(e => NerShape(e.head))
-  val nerPackedShape = checked("ner_packed_shape", 1)(e => NerPackedShape(e.head))
-  val nerCosine = checked("ner_cosine", 2)(e => NerCosine(e(0), e(1)))
-  val nerShingles = checked("ner_shingles", 2) { e =>
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    e(1) match {
-      case Literal(n: Int, org.apache.spark.sql.types.IntegerType) =>
-        NerShingles(e(0), n)
-      case other =>
-        // surfaces at analysis time with this message (builder
-        // exceptions abort resolution of the call site)
-        throw new IllegalArgumentException(
-          s"ner_shingles: the width argument must be an integer " +
-            s"literal, got $other")
-    }
-  }
-}
-
 object VecFunctions {
   import org.apache.spark.sql.graft.Bridge
 
   def ner_cosine(a: Column, b: Column): Column =
     Bridge.column(NerCosine(Bridge.expression(a), Bridge.expression(b)))
-
-  /** Register `ner_cosine` for spark.sql use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ner_cosine", FnBuilders.nerCosine, "built-in")
 }

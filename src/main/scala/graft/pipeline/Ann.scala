@@ -18,10 +18,13 @@ import org.apache.spark.sql.functions._
   */
 object Ann {
 
-  /** Default quantizer sample size — referenced by the spec-facing
-    * wrapper too, so the two cannot drift.
+  /** Driver-side sample size of every quantizer ([[ivfCentroids]], and
+    * [[pqTrain]]'s default).
     */
   val DefaultSampleN: Int = 1024
+
+  /** Lloyd iterations of every driver-side k-means. */
+  private val LloydIters = 5
 
   /** Budget for the probe-side broadcast (bytes of raw vector payload).
     * The probe join is broadcast BY CONTRACT; a probePred that matches a
@@ -82,27 +85,24 @@ object Ann {
       .select(col("q_id"), col("rank"), col("vec_id"), col("cos"))
   }
 
-  /** Resolve the hashing width: defaults to the actual embedding width
-    * (one tiny probe job) — a too-small explicit dim silently hashes
-    * only a prefix and recall collapses without error.
+  /** The hashing width: the actual embedding width (one tiny probe
+    * job).
     */
-  private def resolveDim(vecs: DataFrame, embCol: String, dim: Int): Int =
-    if (dim > 0) dim
-    else {
-      // null rows are excluded from the index contract-wide; the probe
-      // must skip them too or a leading NULL embedding NPEs right here
-      val first = vecs.where(col(embCol).isNotNull)
-        .select(size(col(embCol))).limit(1).collect()
-      require(first.nonEmpty, "empty vector table (or all embeddings NULL)")
-      first(0).getInt(0)
-    }
+  private def embeddingDim(vecs: DataFrame, embCol: String): Int = {
+    // null rows are excluded from the index contract-wide; the probe
+    // must skip them too or a leading NULL embedding NPEs right here
+    val first = vecs.where(col(embCol).isNotNull)
+      .select(size(col(embCol))).limit(1).collect()
+    require(first.nonEmpty, "empty vector table (or all embeddings NULL)")
+    first(0).getInt(0)
+  }
 
   /** Deterministic random-hyperplane set: `nTables` tables × `nBits`
     * planes × `dim` gaussian coordinates.
     */
-  private def planesFor(nTables: Int, nBits: Int, dim: Int,
-                        seed: Long): Array[Array[Array[Double]]] = {
-    val rnd = new scala.util.Random(seed)
+  private def planesFor(nTables: Int, nBits: Int,
+                        dim: Int): Array[Array[Array[Double]]] = {
+    val rnd = new scala.util.Random(1234L)
     Array.fill(nTables, nBits, dim)(rnd.nextGaussian())
   }
 
@@ -112,12 +112,11 @@ object Ann {
     */
   def lshNeighbors(vecs: DataFrame, idCol: String, embCol: String,
                    probePred: Column, k: Int = 3, nBits: Int = 4,
-                   nTables: Int = 12, dim: Int = -1,
-                   seed: Long = 1234L,
+                   nTables: Int = 12,
                    maxProbeBytes: Long = MaxProbeBroadcastBytes): DataFrame = {
-    val useDim = resolveDim(vecs, embCol, dim)
+    val useDim = embeddingDim(vecs, embCol)
     guardProbeSize(vecs, probePred, embCol, useDim, nTables, maxProbeBytes)
-    val planes = planesFor(nTables, nBits, useDim, seed)
+    val planes = planesFor(nTables, nBits, useDim)
     // hashing is the native codegen `ner_sign_buckets` + posexplode —
     // the corpus side never leaves WholeStageCodegen (the round-3 typed
     // flatMap paid a DeserializeToObject/SerializeFromObject round-trip
@@ -174,10 +173,8 @@ object Ann {
     */
   def lshCosinePairs(vecs: DataFrame, idCol: String, embCol: String,
                      minCos: Double, nBits: Int = 4, nTables: Int = 12,
-                     dim: Int = -1, seed: Long = 1234L,
                      maxBucketSize: Int = 10000): DataFrame = {
-    val useDim = resolveDim(vecs, embCol, dim)
-    val planes = planesFor(nTables, nBits, useDim, seed)
+    val planes = planesFor(nTables, nBits, embeddingDim(vecs, embCol))
     val keys = vecs.where(col(embCol).isNotNull)
       .select(col(idCol).as("vec_id"),
         posexplode(AnnFunctions.ner_sign_buckets(col(embCol), planes))
@@ -235,7 +232,7 @@ object Ann {
     *
     * Scale shape: the quantizer is the IVF machinery ([[ivfCentroids]]:
     * driver sample bounded, kmeans++, broadcast centroids — or pass
-    * `centroids` to reuse a persisted quantizer); cell assignment and
+    * fixed `centroids`, as q72 does); cell assignment and
     * the centroid cosine are codegen scan-side expressions; pair
     * generation is [[lshCosinePairs]]'s shared bucketed
     * candidate-join/exact-verify with `cell` as the bucket (no
@@ -252,8 +249,7 @@ object Ann {
   def semDedup(vecs: DataFrame, idCol: String, embCol: String, tau: Double,
                nCells: Int = -1,
                centroids: Option[Array[Array[Float]]] = None,
-               maxCellSize: Int = 10000, collectThreshold: Int = 100000,
-               seed: Long = 4321L): DataFrame = {
+               maxCellSize: Int = 10000): DataFrame = {
     require(tau > 0.0 && tau <= 1.0, s"tau must be in (0, 1]: $tau")
     val nn = vecs.where(col(embCol).isNotNull)
     val cents = centroids.getOrElse {
@@ -272,7 +268,7 @@ object Ann {
           .where(lit(false))
       }
       val k = if (nCells > 0) nCells else ivfAutoGeometry(n)._1
-      ivfCentroids(vecs, idCol, embCol, k, seed = seed)
+      ivfCentroids(vecs, idCol, embCol, k)
     }
     require(cents.nonEmpty, "semDedup needs >= 1 centroid")
     val centsLit = typedLit(cents.map(_.toSeq).toSeq)
@@ -295,7 +291,8 @@ object Ann {
         tau - 1e-6, maxCellSize)
       .where(col("cos") >= tau)
       .select(col("d1").as("src"), col("d2").as("dst"))
-    val labels = TextDedup.componentLabels(pairs, collectThreshold)
+    val labels = TextDedup
+      .componentLabels(pairs, KgPipeline.ccCollectThreshold)
       .withColumnRenamed("node", "vec_id")
     val withClusters = assigned
       .join(labels, Seq("vec_id"), "left")
@@ -313,29 +310,29 @@ object Ann {
   /** Coarse IVF quantizer: deterministic seeded sample (smallest
     * xxhash64(id) — uniform, partitioning-independent, TakeOrdered so no
     * full sort) + kmeans++ seeding (Arthur & Vassilvitskii 2007) +
-    * `iters` Lloyd iterations on the driver. Sample and centroids stay
+    * Lloyd iterations on the driver. Sample and centroids stay
     * broadcast-sized at any corpus scale. Round 2 seeded with the first
     * `nCells` sample vectors (≈ random seeding), which left unbalanced
     * cells and recall 0.65; kmeans++ spreads the seeds by D² sampling
     * and is still fully deterministic (seeded RNG over a deterministic
-    * sample).
+    * sample). `seed` is what the suite's min-over-seeds recall gate
+    * varies.
     */
   def ivfCentroids(vecs: DataFrame, idCol: String, embCol: String,
-                   nCells: Int, sampleN: Int = DefaultSampleN,
-                   iters: Int = 5, seed: Long = 4321L): Array[Array[Float]] = {
+                   nCells: Int, seed: Long = 4321L): Array[Array[Float]] = {
     val s = vecs.sparkSession
     import s.implicits._
     val sample = vecs
       .where(col(embCol).isNotNull) // match the index's null-row contract
       .select(col(idCol).as("vec_id"), col(embCol).as("embedding"),
         xxhash64(col(idCol), lit(7)).as("hk"))
-      .orderBy(col("hk"), col("vec_id")).limit(sampleN)
+      .orderBy(col("hk"), col("vec_id")).limit(DefaultSampleN)
       .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
       .collect().map(_._2)
     require(sample.nonEmpty, "empty vector table")
     val dim = sample.head.length
     var cent = kppSeeds(sample, math.min(nCells, sample.length), seed)
-    for (_ <- 0 until iters) {
+    for (_ <- 0 until LloydIters) {
       val sums = Array.fill(cent.length)(new Array[Double](dim))
       val cnts = new Array[Int](cent.length)
       sample.foreach { v =>
@@ -456,177 +453,33 @@ object Ann {
   private def probeFor(nCells: Int): Int =
     math.min(nCells, math.max(4, nCells / 8))
 
-  /** Persist a trained quantizer. A production pipeline trains the
-    * coarse quantizer ONCE (a driver-side k-means over a bounded
-    * sample) and reuses it across every indexing/search job — and MUST
-    * reuse it bit-exactly: re-deriving "the same" centroids on another
-    * JVM risks last-ulp drift, and a vector indexed under one quantizer
-    * but probed under another silently loses recall at cell borders.
-    * Floats are therefore serialized as IEEE-754 bit patterns (hex),
-    * not decimal strings; the write is atomic (temp + rename) through
-    * the Hadoop FS API, so any scheme Spark writes to works.
-    */
-  def saveCentroids(spark: SparkSession, cents: Array[Array[Float]],
-                    path: String): Unit = {
-    require(cents.nonEmpty && cents(0).nonEmpty, "empty quantizer")
-    require(cents.forall(_.length == cents(0).length),
-      "ragged centroid matrix")
-    val body = cents.map(_.map(f =>
-        Integer.toHexString(java.lang.Float.floatToIntBits(f)))
-        .mkString("[\"", "\",\"", "\"]"))
-      .mkString(",")
-    val json = s"""{"format":"graft-ivf-centroids","version":1,""" +
-      s""""n_cells":${cents.length},"dim":${cents(0).length},""" +
-      s""""cells_bits":[$body]}"""
-    graft.io.TableIO.atomicWrite(path, json,
-      spark.sessionState.newHadoopConf())
-  }
-
-  /** Load a quantizer written by [[saveCentroids]] — bit-exact, with
-    * loud failures on wrong format or a corrupt matrix (a silently
-    * truncated quantizer would mis-assign every vector, not error).
-    */
-  def loadCentroids(spark: SparkSession, path: String): Array[Array[Float]] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val in = p.getFileSystem(conf).open(p)
-    val json = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    require(json.contains("\"format\":\"graft-ivf-centroids\""),
-      s"$path is not a graft IVF quantizer file")
-    val header = """"n_cells":(\d+),"dim":(\d+)""".r
-    val (nCells, dim) = header.findFirstMatchIn(json) match {
-      case Some(m) => (m.group(1).toInt, m.group(2).toInt)
-      case None => throw new IllegalArgumentException(
-        s"$path: quantizer header missing n_cells/dim")
-    }
-    val cells = """\["[0-9a-f",]+"\]""".r.findAllIn(json).map { cell =>
-      cell.stripPrefix("[\"").stripSuffix("\"]").split("\",\"")
-        .map(h => java.lang.Float.intBitsToFloat(
-          java.lang.Integer.parseUnsignedInt(h, 16)))
-    }.toArray
-    require(cells.length == nCells && cells.forall(_.length == dim),
-      s"$path: corrupt quantizer — header says ${nCells}x$dim, body has " +
-        s"${cells.length} cells of sizes ${cells.map(_.length).distinct.mkString(",")}")
-    cells
-  }
-
-  /** Materialize an IVF INDEX: train (or auto-size) the coarse
-    * quantizer, persist it bit-exactly at `indexDir/centroids.json`,
-    * and write every vector's cell assignment as a parquet table
-    * hive-PARTITIONED BY CELL under `indexDir/data`.
-    *
-    * Why partitioned by cell: the search's probe side is broadcast by
-    * contract, so the corpus side never shuffles — the per-query cost
-    * of the inline path is the full corpus scan that recomputes
-    * assignments. With a cell-partitioned index, a query enumerates its
-    * probes' nProbe cells (driver-side, the probe set is broadcast-
-    * small) and the scan PRUNES to exactly those partitions: repeated
-    * ANN queries read `nProbe/nCells` of the corpus instead of all of
-    * it, and run no assignment compute at all. Plan-gated in AnnSpec
-    * (no `ner_nearest_cell` on the indexed path, partition filters on
-    * the scan).
-    *
-    * Returns the cell count. Rebuild (mode overwrite) after corpus
-    * changes; assignments are deterministic given the persisted
-    * quantizer, so rebuilds are reproducible.
-    */
-  def buildIvfIndex(vecs: DataFrame, idCol: String, embCol: String,
-                    indexDir: String, nCells: Int = -1,
-                    sampleN: Int = DefaultSampleN,
-                    seed: Long = 4321L): Int = {
-    val spark = vecs.sparkSession
-    val cents = {
-      val useCells =
-        if (nCells > 0) nCells
-        else ivfAutoGeometry(vecs.where(col(embCol).isNotNull).count())._1
-      ivfCentroids(vecs, idCol, embCol, useCells, sampleN, seed = seed)
-    }
-    saveCentroids(spark, cents, s"$indexDir/centroids.json")
-    vecs.where(col(embCol).isNotNull)
-      .select(col(idCol).as("vec_id"),
-        AnnFunctions.ner_nearest_cell(col(embCol), cents).as("cell"),
-        col(embCol).as("embedding"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$indexDir/data")
-    cents.length
-  }
-
   /** IVF search: assign every vector to its nearest centroid; probes
     * search their `nProbe` nearest cells (corpus-side cost unchanged,
     * probe-side fans out nProbe-fold). Defaults (`nCells`/`nProbe`
     * ≤ 0) resolve via [[ivfAutoGeometry]] — one partial-agg count job,
-    * paid only in auto mode. Pass `centroids` (e.g. from
-    * [[loadCentroids]]) to reuse a quantizer trained by an earlier
-    * job — then no sample, no k-means, and no corpus count run; the
-    * only extra job is a one-row width probe validating the quantizer
-    * against the data, and `nCells` is ignored in favor of the
-    * quantizer's own size.
-    *
-    * Pass `indexDir` (from [[buildIvfIndex]]) to skip the corpus scan
-    * entirely: the quantizer loads from the index, `vecs` serves ONLY
-    * as the probe source, and the corpus side reads the cell-
-    * partitioned assignment table pruned to the probed cells — no
-    * per-row assignment compute, `nProbe/nCells` of the corpus read.
-    * Row-parity with the inline path is suite-gated (assignments are
-    * deterministic under the bit-exact persisted quantizer).
+    * paid only in auto mode.
     */
   def ivfNeighbors(vecs: DataFrame, idCol: String, embCol: String,
                    probePred: Column, k: Int = 3, nCells: Int = -1,
-                   nProbe: Int = -1, sampleN: Int = DefaultSampleN,
-                   seed: Long = 4321L,
-                   centroids: Option[Array[Array[Float]]] = None,
-                   indexDir: Option[String] = None,
-                   maxProbeBytes: Long = MaxProbeBroadcastBytes): DataFrame = {
-    indexDir match {
-      case Some(d) =>
-        require(centroids.isEmpty,
-          "pass either indexDir or centroids, not both — the index " +
-            "carries its own quantizer")
-        ivfNeighborsIndexed(vecs, idCol, embCol, probePred, d, k,
-          nProbe, maxProbeBytes)
-      case None =>
-        ivfNeighborsInline(vecs, idCol, embCol, probePred, k, nCells,
-          nProbe, sampleN, seed, centroids, maxProbeBytes)
-    }
-  }
-
-  private def ivfNeighborsInline(vecs: DataFrame, idCol: String,
-                                 embCol: String, probePred: Column, k: Int,
-                                 nCells: Int, nProbe: Int, sampleN: Int,
-                                 seed: Long,
-                                 centroids: Option[Array[Array[Float]]],
-                                 maxProbeBytes: Long): DataFrame = {
+                   nProbe: Int = -1): DataFrame = {
     // centroids first: their sample collect already pins the embedding
     // width, so the budget guard needs no extra dim-probe job — and it
     // still fires before any corpus-side work
-    val cents = centroids.getOrElse {
-      val useCells =
-        if (nCells > 0) nCells
-        else ivfAutoGeometry(vecs.where(col(embCol).isNotNull).count())._1
-      ivfCentroids(vecs, idCol, embCol, useCells, sampleN, seed = seed)
-    }
-    // a PRELOADED quantizer must match the data's embedding width: the
-    // distance kernels loop over min(len, len), so a wrong-model
-    // quantizer would silently score truncated prefixes and bleed
-    // recall instead of erroring — the exact failure save/load exists
-    // to prevent. One-row width probe; an empty / all-NULL corpus has
-    // no width to mismatch and legitimately yields an empty result
-    // (scheduled jobs search empty partitions routinely).
-    centroids.foreach { cs =>
-      require(cs.nonEmpty && cs(0).nonEmpty, "empty preloaded quantizer")
-      vecs.where(col(embCol).isNotNull)
-        .select(size(col(embCol))).limit(1).collect().headOption
-        .foreach { row =>
-          require(cs(0).length == row.getInt(0),
-            s"preloaded quantizer dimension ${cs(0).length} != data " +
-              s"embedding dimension ${row.getInt(0)} — wrong quantizer " +
-              "for this table")
-        }
-    }
+    val useCells =
+      if (nCells > 0) nCells
+      else ivfAutoGeometry(vecs.where(col(embCol).isNotNull).count())._1
+    ivfSearch(vecs, idCol, embCol, probePred, k,
+      ivfCentroids(vecs, idCol, embCol, useCells), nProbe)
+  }
+
+  /** [[ivfNeighbors]] under the quantizer `cents`. */
+  private[graft] def ivfSearch(vecs: DataFrame, idCol: String,
+                               embCol: String, probePred: Column, k: Int,
+                               cents: Array[Array[Float]],
+                               nProbe: Int): DataFrame = {
     val useProbe = if (nProbe > 0) nProbe else probeFor(cents.length)
     guardProbeSize(vecs, probePred, embCol, cents(0).length, useProbe,
-      maxProbeBytes)
+      MaxProbeBroadcastBytes)
     // corpus-side cell assignment is the native codegen
     // `ner_nearest_cell` — no object round-trip per corpus row (the
     // centroid matrix rides as a codegen reference object, not a
@@ -682,58 +535,6 @@ object Ann {
             x => round(x.cast("double") / col("_s")).cast("tinyint")))
           .as("q"))
 
-  /** Dequantize [[quantizeInt8]] output back to float vectors:
-    * (idCol, embedding array<float>). Lossy by construction — each
-    * element is within scale/2 of the original.
-    */
-  def dequantizeInt8(qdf: DataFrame, idCol: String): DataFrame =
-    qdf.select(col(idCol),
-      transform(col("q"), b => (b.cast("double") * col("scale"))
-        .cast("float")).as("embedding"))
-
-  /** The [[ivfNeighbors]] `indexDir` branch: probes from `vecs`, corpus
-    * from the persisted assignment table, scan pruned to the probed
-    * cells (see [[buildIvfIndex]]).
-    */
-  private def ivfNeighborsIndexed(vecs: DataFrame, idCol: String,
-                                  embCol: String, probePred: Column,
-                                  indexDir: String, k: Int, nProbe: Int,
-                                  maxProbeBytes: Long): DataFrame = {
-    val spark = vecs.sparkSession
-    val cents = loadCentroids(spark, s"$indexDir/centroids.json")
-    // same wrong-quantizer width check as the preloaded-centroids path
-    vecs.where(col(embCol).isNotNull)
-      .select(size(col(embCol))).limit(1).collect().headOption
-      .foreach { row =>
-        require(cents(0).length == row.getInt(0),
-          s"index quantizer dimension ${cents(0).length} != probe " +
-            s"embedding dimension ${row.getInt(0)} — wrong index for " +
-            "this table")
-      }
-    val useProbe = if (nProbe > 0) nProbe else probeFor(cents.length)
-    guardProbeSize(vecs, probePred, embCol, cents(0).length, useProbe,
-      maxProbeBytes)
-    val probes = vecs.where(probePred && col(embCol).isNotNull)
-      .select(col(idCol).as("q_id"),
-        explode(AnnFunctions.ner_top_cells(col(embCol), cents, useProbe))
-          .as("cell"),
-        col(embCol).as("q_emb"))
-    // the probed cells, enumerated driver-side: the probe set is
-    // broadcast-small by contract (guard above), so this collect is the
-    // same size class as the broadcast itself — and it is what turns
-    // the corpus read into STATIC partition pruning below, the whole
-    // point of the index
-    val probeCells = probes.select(col("cell")).distinct()
-      .collect().map(_.getInt(0))
-    if (probeCells.isEmpty) return probes.select(col("q_id"),
-      lit(0).as("rank"), col("q_id").as("vec_id"), lit(0.0).as("cos"))
-      .limit(0)
-    val index = spark.read.parquet(s"$indexDir/data")
-      .where(col("cell").isin(probeCells.map(Int.box): _*))
-      .select(col("vec_id"), col("cell"), col("embedding"))
-    topK(index, probes, Seq("cell"), k, dedupe = false)
-  }
-
   // ===================================================================
   // Product quantization (Jégou, Douze & Schmid, TPAMI 2011) — the
   // 100-TB MEMORY story for embeddings: int8 (quantizeInt8) cuts 4×,
@@ -763,14 +564,13 @@ object Ann {
   /** Train a product quantizer: the same deterministic bounded sample
     * as [[ivfCentroids]] (smallest xxhash64(id), TakeOrdered — uniform
     * and partitioning-independent), sliced into `m` subspaces, each
-    * k-means'd independently (kmeans++ seeding, `iters` Lloyd rounds)
+    * k-means'd independently (kmeans++ seeding, Lloyd rounds)
     * on the driver. Sample and model stay broadcast-sized at any
     * corpus scale; training cost is O(sampleN · k · dim) driver work,
     * once per corpus.
     */
   def pqTrain(vecs: DataFrame, idCol: String, embCol: String,
-              m: Int, k: Int, sampleN: Int = DefaultSampleN,
-              iters: Int = 5, seed: Long = 4321L): PqModel = {
+              m: Int, k: Int, sampleN: Int = DefaultSampleN): PqModel = {
     require(m >= 1, s"m must be >= 1: $m")
     require(k >= 1 && k <= 256, s"k must be in [1, 256]: $k")
     val s = vecs.sparkSession
@@ -790,8 +590,8 @@ object Ann {
     val codebooks = Array.tabulate(m) { sub =>
       val subSample = sample.map(_.slice(sub * dSub, (sub + 1) * dSub))
       var cent = kppSeeds(subSample, math.min(k, subSample.length),
-        seed + sub)
-      for (_ <- 0 until iters) {
+        4321L + sub)
+      for (_ <- 0 until LloydIters) {
         val sums = Array.fill(cent.length)(new Array[Double](dSub))
         val cnts = new Array[Int](cent.length)
         subSample.foreach { v =>
@@ -880,53 +680,5 @@ object Ann {
       .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select(col("q_id"), col("rank"), col("vec_id"), col("adist"))
-  }
-
-  /** Persist a PQ model — same contract as [[saveCentroids]]: IEEE-754
-    * bit-pattern hex (bit-exact across JVMs; a vector encoded under one
-    * codebook but searched under a last-ulp-different one silently
-    * bleeds recall), atomic write, loud corrupt-file failures on load.
-    */
-  def savePq(spark: SparkSession, model: PqModel, path: String): Unit = {
-    val body = model.codebooks.map(cb =>
-      cb.map(_.map(f =>
-        Integer.toHexString(java.lang.Float.floatToIntBits(f)))
-        .mkString("[\"", "\",\"", "\"]"))
-        .mkString("[", ",", "]"))
-      .mkString(",")
-    val json = s"""{"format":"graft-pq","version":1,""" +
-      s""""m":${model.m},"k":${model.k},"d_sub":${model.dSub},""" +
-      s""""codebooks":[$body]}"""
-    graft.io.TableIO.atomicWrite(path, json,
-      spark.sessionState.newHadoopConf())
-  }
-
-  /** Load a PQ model written by [[savePq]] — bit-exact roundtrip. */
-  def loadPq(spark: SparkSession, path: String): PqModel = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val in = p.getFileSystem(conf).open(p)
-    val json = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    require(json.contains("\"format\":\"graft-pq\""),
-      s"$path is not a graft PQ model file")
-    val header = """"m":(\d+),"k":(\d+),"d_sub":(\d+)""".r
-    val (m, k, dSub) = header.findFirstMatchIn(json) match {
-      case Some(mm) => (mm.group(1).toInt, mm.group(2).toInt,
-        mm.group(3).toInt)
-      case None => throw new IllegalArgumentException(
-        s"$path: PQ header missing m/k/d_sub")
-    }
-    val cents = """\["[0-9a-f",]+"\]""".r.findAllIn(json).map { cell =>
-      cell.stripPrefix("[\"").stripSuffix("\"]").split("\",\"")
-        .map(h => java.lang.Float.intBitsToFloat(
-          java.lang.Integer.parseUnsignedInt(h, 16)))
-    }.toArray
-    require(cents.length == m * k && cents.forall(_.length == dSub),
-      s"$path: corrupt PQ model — header says ${m}x${k}x$dSub, body has " +
-        s"${cents.length} centroids of sizes " +
-        cents.map(_.length).distinct.mkString(","))
-    PqModel(dSub, Array.tabulate(m)(sub =>
-      Array.tabulate(k)(c => cents(sub * k + c))))
   }
 }

@@ -145,8 +145,7 @@ object Classifier {
     * weights (the [[FilterModel.fingerprint]] is over bit patterns, and
     * the checkpoint-lineage guard compares it): doubles are serialized
     * as IEEE-754 bit patterns (hex), not decimal, and the write is
-    * atomic (temp + rename) through the Hadoop FS API — the
-    * `Ann.saveCentroids` conventions.
+    * atomic (temp + rename) through the Hadoop FS API.
     */
   def save(spark: org.apache.spark.sql.SparkSession, model: FilterModel,
            path: String): Unit = {

@@ -15,21 +15,13 @@ import org.apache.spark.sql.functions._
   *                             the report costs no extra scan
   *   1. exact dedup          — content-hash groupBy, keep the min-id
   *                             exemplar per identical text (q16's shape)
-  *   1b. decontamination (optional) — drop docs sharing an n-token
-  *                             shingle with a held-out eval set
-  *                             ([[Decontam.contaminated]], q67);
-  *                             checkpoint id 5
   *   2. boilerplate drop     — substring-level dedup at document
   *                             granularity: drop docs whose share of
-  *                             duplicated 20-token spans exceeds a
-  *                             threshold ([[TextDedup.boilerplateShare]],
+  *                             duplicated 20-token spans reaches 0.8
+  *                             ([[TextDedup.boilerplateShare]],
   *                             the doc-level action of q51/q52)
-  *   2b. repetition filter (optional) — Gopher top-gram-share /
-  *                             duplicated-gram-fraction threshold drop
-  *                             ([[Quality.repetitionStats]], q68);
-  *                             checkpoint id 6
   *   2c. quality classifier (optional) — trained model-based filter:
-  *                             drop docs scoring under a threshold
+  *                             drop docs scoring under 0.5
   *                             ([[Classifier.scoreDocs]], q75's kernel);
   *                             zero-shuffle scan-side scoring, BEFORE
   *                             the expensive near-dup stages so they
@@ -37,8 +29,8 @@ import org.apache.spark.sql.functions._
   *                             fingerprint in the lineage
   *   2d. LM perplexity filter (optional) — the CCNet-style generative
   *                             complement: drop docs whose stupid-
-  *                             backoff bigram perplexity exceeds a
-  *                             ceiling ([[Ngram.scoreDocs]], q77's
+  *                             backoff bigram perplexity exceeds 1e6
+  *                             ([[Ngram.scoreDocs]], q77's
   *                             operator); docs with no bigram positions
   *                             (single-token) carry no evidence and
   *                             pass, like no-vector docs in stage 4;
@@ -52,19 +44,15 @@ import org.apache.spark.sql.functions._
   *                             switches to SemDeDup ([[Ann.semDedup]],
   *                             q72): kmeans cells, transitive groups,
   *                             keep the least-centroid-similar member
-  *   4b. mixture sampling (optional) — temperature-scaled per-stratum
-  *                             downsample to a row budget
-  *                             ([[Sampling.temperatureSample]], q71/q65)
-  *                             as the LAST content decision
-  *                             (`mixtureCol` + `mixtureTargetRows`);
-  *                             checkpoint id 7
   *   5. hot-key detection    — CMS heavy hitters over the write key
-  *                             ([[Sketches.heavyHitters]], q54); the
-  *                             report's `salts` is only an estimate of
-  *                             the hot-key fan-out, derived from them
-  *   6. resumable write      — [[TableIO.writeResumable]] (adaptive
-  *                             rebalance, which splits a hot bucket by
-  *                             itself, + the manifest/resume contract)
+  *                             ([[Sketches.heavyHitters]], q54) at a
+  *                             1/16 share; the report's `salts` is only
+  *                             an estimate of the hot-key fan-out,
+  *                             derived from them
+  *   6. resumable write      — [[TableIO.writeResumable]] into 16
+  *                             buckets (adaptive rebalance, which splits
+  *                             a hot bucket by itself, + the
+  *                             manifest/resume contract)
   *
   * NULL-text rows are set aside BEFORE stage 1 and counted in the
   * report: `md5(NULL)` is NULL, so the exact-dedup groupBy would
@@ -122,6 +110,19 @@ object Curate {
     */
   val StageBuckets = 8
 
+  /** Stage 2 drops docs whose duplicated-span share is at least this. */
+  private val MaxDupSpanShare = 0.8
+  /** Stage 2's span width in tokens. */
+  private val SpanN = 20
+  /** Stage 5: a key is hot when it holds ≥ 1/HotDenom of the rows. */
+  private val HotDenom = 16L
+  /** Buckets of the written table. */
+  private val OutBuckets = 16
+  /** Stage 2c drops docs scoring under this. */
+  val MinQualityScore = 0.5
+  /** Stage 2d drops docs whose perplexity exceeds this. */
+  val MaxPpl = 1e6
+
   /** One curation run's accounting: row counts after each stage (the
     * numbers a data-quality report is built from), the NULL-text rows
     * set aside before stage 1, the detected hot keys (key rendered as
@@ -131,27 +132,30 @@ object Curate {
     * a `stageDir` checkpoint instead of computed.
     */
   final case class Report(nInput: Long, nNullText: Long, nRedacted: Long,
-                          nAfterExact: Long, nAfterDecontam: Long,
-                          nAfterBoilerplate: Long, nAfterRepetition: Long,
+                          nAfterExact: Long, nAfterBoilerplate: Long,
                           nAfterQuality: Long, nAfterLmPpl: Long,
-                          nAfterMinhash: Long,
-                          nAfterEmbedding: Long, nAfterMixture: Long,
+                          nAfterMinhash: Long, nAfterEmbedding: Long,
                           hotKeys: Seq[(String, Long)], salts: Int,
                           nWritten: Long, resumedStages: Seq[Int]) {
+    /** The report line. `n_after_decontam`, `n_after_repetition` and
+      * `n_after_mixture` name stages the recipe no longer has; they
+      * stay in the format, carrying the previous stage's count, so
+      * readers of earlier reports keep working.
+      */
     def json: String = {
       val hk = hotKeys.map { case (k, n) =>
         s"""{"key":${TableIO.jstr(k)},"n":$n}""" }.mkString("[", ",", "]")
       s"""{"n_input":$nInput,"n_null_text":$nNullText,""" +
         s""""n_redacted":$nRedacted,""" +
         s""""n_after_exact":$nAfterExact,""" +
-        s""""n_after_decontam":$nAfterDecontam,""" +
+        s""""n_after_decontam":$nAfterExact,""" +
         s""""n_after_boilerplate":$nAfterBoilerplate,""" +
-        s""""n_after_repetition":$nAfterRepetition,""" +
+        s""""n_after_repetition":$nAfterBoilerplate,""" +
         s""""n_after_quality":$nAfterQuality,""" +
         s""""n_after_lm_ppl":$nAfterLmPpl,""" +
         s""""n_after_minhash":$nAfterMinhash,""" +
         s""""n_after_embedding":$nAfterEmbedding,""" +
-        s""""n_after_mixture":$nAfterMixture,""" +
+        s""""n_after_mixture":$nAfterEmbedding,""" +
         s""""hot_keys":$hk,"salts":$salts,"n_written":$nWritten,""" +
         s""""resumed_stages":${resumedStages.mkString("[", ",", "]")}}"""
     }
@@ -168,45 +172,22 @@ object Curate {
     * data-quality record a production run must keep outlives the
     * driver; on a resume re-run the file records that run (nWritten=0).
     *
-    * @param maxDupSpanShare drop docs whose duplicated-span share is ≥
-    *                        this (step 2); 1.0 keeps only docs that are
-    *                        PURE boilerplate out
     * @param minCos          embedding near-dup threshold (step 4)
-    * @param hotDenom        heavy-hitter share denominator (step 5): a
-    *                        key is hot when it holds ≥ 1/hotDenom of
-    *                        surviving rows
     * @param stageDir        when set, per-stage survivor id-sets are
     *                        committed here and completed stages are
     *                        skipped on re-run (see scaladoc)
     * @param redactPii       scrub emails/IPs/phones from `textCol`
     *                        before stage 1 (stage 0 above); recorded in
     *                        the checkpoint lineage
-    * @param evalSet         when set, BENCHMARK DECONTAMINATION runs
-    *                        right after exact dedup (checkpoint id 5):
-    *                        every doc sharing a `decontamN`-token
-    *                        shingle with `evalSet(evalTextCol)` is
-    *                        dropped ([[Decontam.contaminated]], q67) —
-    *                        eval data must never survive into training
-    *                        output, so this runs before the lossy
-    *                        near-dup stages, not after
-    * @param maxTopGramShare drop docs whose most frequent
-    *                        `repetitionN`-gram holds ≥ this share of
-    *                        all grams ([[Quality.repetitionStats]],
-    *                        q68); 1.0 (default) disables the check
-    * @param maxDupGramFrac  drop docs whose duplicated-gram fraction is
-    *                        ≥ this; 1.0 (default) disables the check.
-    *                        The repetition filter (checkpoint id 6)
-    *                        runs after the boilerplate drop — both
-    *                        thresholds at 1.0 skip the stage entirely
     * @param lm              when set, the LM perplexity filter
     *                        ([[Ngram.scoreDocs]]) drops docs with
-    *                        `ppl > maxPpl` right after the classifier
+    *                        `ppl > MaxPpl` right after the classifier
     *                        stage (checkpoint id 9); train the LM on a
     *                        clean reference corpus and persist it with
     *                        [[Ngram.saveLm]]
     * @param qualityModel    when set, the trained quality classifier
     *                        ([[Classifier.scoreDocs]]) drops docs
-    *                        scoring under `minQualityScore` right
+    *                        scoring under `MinQualityScore` right
     *                        before the near-dup stages (checkpoint id
     *                        8); the model's weight fingerprint rides
     *                        the checkpoint lineage
@@ -214,29 +195,13 @@ object Curate {
   def run(spark: SparkSession, docs: DataFrame, idCol: String,
           textCol: String, embeddings: Option[DataFrame],
           embIdCol: String, embCol: String, outDir: String,
-          hotKeyCol: String, maxDupSpanShare: Double = 0.8,
-          minCos: Double = 0.95, spanN: Int = 20, hotDenom: Long = 16,
-          buckets: Int = 16, stageDir: Option[String] = None,
+          hotKeyCol: String, minCos: Double = 0.95,
+          stageDir: Option[String] = None,
           clusterKeep: Boolean = false,
           semanticKeep: Boolean = false,
           redactPii: Boolean = false,
-          evalSet: Option[DataFrame] = None, evalTextCol: String = "text",
-          decontamN: Int = 8,
-          maxTopGramShare: Double = 1.0, maxDupGramFrac: Double = 1.0,
-          repetitionN: Int = 2,
-          mixtureCol: Option[String] = None, mixtureAlpha: Double = 1.0,
-          mixtureTargetRows: Long = 0L, mixtureSeed: Long = 0L,
           qualityModel: Option[Classifier.FilterModel] = None,
-          minQualityScore: Double = 0.5,
-          lm: Option[Ngram.Lm] = None,
-          maxPpl: Double = 1e6): Report = {
-    require(maxDupSpanShare > 0.0 && maxDupSpanShare <= 1.0,
-      s"maxDupSpanShare must be in (0, 1]: $maxDupSpanShare")
-    require(maxTopGramShare > 0.0 && maxTopGramShare <= 1.0,
-      s"maxTopGramShare must be in (0, 1]: $maxTopGramShare")
-    require(maxDupGramFrac > 0.0 && maxDupGramFrac <= 1.0,
-      s"maxDupGramFrac must be in (0, 1]: $maxDupGramFrac")
-    val repetitionOn = maxTopGramShare < 1.0 || maxDupGramFrac < 1.0
+          lm: Option[Ngram.Lm] = None): Report = {
     // one job: total rows + non-null texts (count(col) skips NULLs);
     // with the scrub enabled, the SAME pass also tallies how many docs
     // the redaction touches — no extra scan for the audit number
@@ -305,38 +270,18 @@ object Curate {
       "n_input" -> nInput.toString,
       "minhash_policy" -> (if (clusterKeep) "cluster" else "greedy"),
       "embedding_policy" -> (if (semanticKeep) "semantic" else "greedy"),
-      // every threshold that picks a survivor set rides the lineage —
-      // a checkpoint computed at share=0.8 must not restore into a
-      // share=0.99 run (same invariant the optional stages enforce)
-      "boilerplate" -> s"share=$maxDupSpanShare,n=$spanN") ++
+      // the boilerplate thresholds are fixed; their entry stays so
+      // that checkpoints written with it keep restoring
+      "boilerplate" -> s"share=$MaxDupSpanShare,n=$SpanN") ++
       embeddings.map(_ => "neardup" -> s"min_cos=$minCos") ++
       (if (redactPii) Map("scrub" -> "on") else Map.empty) ++
-      // the decontam entry carries the eval set's CONTENT (row count +
-      // order-free xor of text hashes, CanonState's convention), not
-      // just the shingle width: swapping benchmark A for B must
-      // invalidate the checkpoint, or docs contaminated by B restore
-      // as "clean" — the exact leak this stage exists to stop
-      evalSet.map { ev =>
-        val r = ev
-          .select(xxhash64(col(evalTextCol)).as("h"))
-          .agg(count(lit(1)), coalesce(bit_xor(col("h")), lit(0L))).head()
-        "decontam" -> s"n=$decontamN,eval=${r.getLong(0)}:${r.getLong(1)}"
-      } ++
-      (if (repetitionOn)
-         Map("repetition" ->
-           s"n=$repetitionN,top=$maxTopGramShare,dup=$maxDupGramFrac")
-       else Map.empty) ++
-      mixtureCol.filter(_ => mixtureTargetRows > 0)
-        .map(c => "mixture" -> (s"col=$c,alpha=$mixtureAlpha," +
-          s"target=$mixtureTargetRows,seed=$mixtureSeed")) ++
       // the fingerprint covers the WEIGHTS: a checkpoint filtered by
       // one model must not restore into a run scoring with another
       qualityModel
-        .map(m => "quality" -> s"min=$minQualityScore,model=${m.fingerprint}") ++
+        .map(m => "quality" -> s"min=$MinQualityScore,model=${m.fingerprint}") ++
       // the LM is a corpus-sized count table — the lineage carries its
-      // parameters + token total (the decontam stage's convention for
-      // data-sized inputs), not a content hash
-      lm.map(l => "lm" -> s"max_ppl=$maxPpl,n_tokens=${l.nTokens}")
+      // parameters + token total, not a content hash
+      lm.map(l => "lm" -> s"max_ppl=$MaxPpl,n_tokens=${l.nTokens}")
     def stage(i: Int, compute: => DataFrame,
               prev: Option[DataFrame]): (DataFrame, Long) = {
       val ckpt = stageDir.map(d => s"$d/stage$i")
@@ -387,47 +332,14 @@ object Curate {
         input.join(keepExact, Seq(idCol), "left_semi")
       }, None)
 
-      // 1b (checkpoint id 5, optional): benchmark decontamination —
-      // eval-overlapping docs must be REMOVED, not deduped, so this is
-      // an anti-join against the q67 operator's flagged ids. Runs on
-      // the exact-dedup survivors (identical twins of a contaminated
-      // exemplar are already gone either way).
-      val (afterDecon, nAfterDecon) = evalSet match {
-        case Some(ev) =>
-          stage(5, {
-            val dirty = Decontam
-              .contaminated(afterExact, ev, idCol, textCol, evalTextCol,
-                decontamN)
-              .select(col("doc_id").as(idCol))
-            afterExact.join(dirty, Seq(idCol), "left_anti")
-          }, Some(afterExact))
-        case None => (afterExact, nAfterExact)
-      }
-
       // 2. boilerplate: doc-level substring-dedup action
       val (afterBoiler, nAfterBoiler) = stage(2, {
         val boiler =
-          TextDedup.boilerplateShare(afterDecon, idCol, textCol, spanN)
-            .where(col("dup_share") >= maxDupSpanShare)
+          TextDedup.boilerplateShare(afterExact, idCol, textCol, SpanN)
+            .where(col("dup_share") >= MaxDupSpanShare)
             .select(col("doc_id").as(idCol))
-        afterDecon.join(boiler, Seq(idCol), "left_anti")
-      }, Some(afterDecon))
-
-      // 2b (checkpoint id 6, optional): repetition-quality filter —
-      // the Gopher top-gram-share / duplicated-gram-fraction rules as
-      // a threshold drop; the stats themselves are a zero-shuffle
-      // per-row fold, so this stage costs one cached-survivor scan
-      val (afterRep, nAfterRep) =
-        if (repetitionOn)
-          stage(6, {
-            val repDrop = Quality
-              .repetitionStats(afterBoiler, idCol, textCol, repetitionN)
-              .where(col("top_share") >= maxTopGramShare ||
-                col("dup_frac") >= maxDupGramFrac)
-              .select(col("doc_id").as(idCol))
-            afterBoiler.join(repDrop, Seq(idCol), "left_anti")
-          }, Some(afterBoiler))
-        else (afterBoiler, nAfterBoiler)
+        afterExact.join(boiler, Seq(idCol), "left_anti")
+      }, Some(afterExact))
 
       // 2c (checkpoint id 8, optional): trained quality-classifier
       // filter — zero-shuffle scoring (q75's kernel), threshold drop
@@ -435,12 +347,12 @@ object Curate {
       val (afterQual, nAfterQual) = qualityModel match {
         case Some(m) =>
           stage(8, {
-            val keep = Classifier.scoreDocs(afterRep, idCol, textCol, m)
-              .where(col("score") >= minQualityScore)
+            val keep = Classifier.scoreDocs(afterBoiler, idCol, textCol, m)
+              .where(col("score") >= MinQualityScore)
               .select(col("doc_id").as(idCol))
-            afterRep.join(keep, Seq(idCol), "left_semi")
-          }, Some(afterRep))
-        case None => (afterRep, nAfterRep)
+            afterBoiler.join(keep, Seq(idCol), "left_semi")
+          }, Some(afterBoiler))
+        case None => (afterBoiler, nAfterBoiler)
       }
 
       // 2d (checkpoint id 9, optional): LM perplexity ceiling — drop
@@ -452,7 +364,7 @@ object Curate {
           stage(9, {
             val tooPerplexed = Ngram
               .scoreDocs(afterQual, idCol, textCol, model)
-              .where(col("ppl") > maxPpl)
+              .where(col("ppl") > MaxPpl)
               .select(col("doc_id").as(idCol))
             afterQual.join(tooPerplexed, Seq(idCol), "left_anti")
           }, Some(afterQual))
@@ -508,42 +420,26 @@ object Curate {
         }
       }, Some(afterMinhash))
 
-      // 4b (checkpoint id 7, optional): temperature-scaled mixture
-      // sampling (Sampling.temperatureSample, q71/q65) as the recipe's
-      // LAST content decision — the budgeted rebalance a training mix
-      // applies after every dedup/quality drop, deterministic under
-      // (seed, id) so the stage checkpoint and any retry agree
-      val (afterMix, nAfterMixture) =
-        mixtureCol.filter(_ => mixtureTargetRows > 0) match {
-          case Some(mc) =>
-            stage(7, {
-              Sampling.temperatureSample(afterEmb, idCol, mc,
-                mixtureAlpha, mixtureTargetRows, mixtureSeed)
-            }, Some(afterEmb))
-          case None => (afterEmb, nAfterEmbedding)
-        }
-
       // 5. hot keys over the WRITE key. The reported salt count
       // estimates how many tasks the hottest key's rows need so that no
       // task holds more than ~1/parallelism of the data; the writer's
       // adaptive rebalance splits a hot bucket without it.
-      val hot = Sketches.heavyHitters(afterMix, hotKeyCol, hotDenom)
+      val hot = Sketches.heavyHitters(afterEmb, hotKeyCol, HotDenom)
         .collect()
         .map(r => (String.valueOf(r.get(0)), r.getLong(1)))
         .sortBy(-_._2).toSeq
       val par = spark.sparkContext.defaultParallelism
       val maxShare =
-        if (hot.isEmpty || nAfterMixture == 0) 0.0
-        else hot.head._2.toDouble / nAfterMixture
+        if (hot.isEmpty || nAfterEmbedding == 0) 0.0
+        else hot.head._2.toDouble / nAfterEmbedding
       val salts = math.min(64, math.max(8, math.ceil(maxShare * par).toInt))
 
       // 6. resumable write, bucketed by the hot-key column
-      val commits = TableIO.writeResumable(afterMix, outDir, buckets,
+      val commits = TableIO.writeResumable(afterEmb, outDir, OutBuckets,
         Seq(hotKeyCol), lineage = Map("recipe" -> "curate"))
       val report = Report(nInput, nNullText, nRedacted, nAfterExact,
-        nAfterDecon, nAfterBoiler, nAfterRep, nAfterQual, nAfterLm,
-        nAfterMinhash, nAfterEmbedding, nAfterMixture, hot, salts,
-        commits.map(_.rows).sum, resumed.toSeq)
+        nAfterBoiler, nAfterQual, nAfterLm, nAfterMinhash, nAfterEmbedding,
+        hot, salts, commits.map(_.rows).sum, resumed.toSeq)
       // the report outlives the driver, beside the manifests it explains
       TableIO.atomicWrite(reportPath(outDir), report.json,
         spark.sessionState.newHadoopConf())

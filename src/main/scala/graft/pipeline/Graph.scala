@@ -378,32 +378,6 @@ object Graph {
     df
   }
 
-  /** Free the checkpoint backing a [[pageRank]] result (and any frame
-    * derived from one): reliable checkpoints drop their files, local
-    * checkpoints quietly unpersist their blocks. The frame is NOT
-    * recomputable afterwards — release means "done with it".
-    */
-  def releaseRanks(ranks: DataFrame, blocking: Boolean = false): Unit = {
-    val rdds = rddsOf(ranks)
-    rdds.foreach { rdd =>
-      rdd.getCheckpointFile match {
-        case some @ Some(_) =>
-          Lineage.dropCheckpointFiles(ranks.sparkSession, some)
-        case None => Lineage.quietUnpersist(rdd, blocking)
-      }
-    }
-    val released = rdds.toSet
-    val deadFiles = outstandingRanks.synchronized {
-      Option(outstandingRanks.get(ranks.sparkSession)).map { buf =>
-        val d = drainDead(buf)
-        buf.filterInPlace(t => !released.contains(t.ref.get))
-        d
-      }.getOrElse(Seq.empty)
-    }
-    deadFiles.foreach(f =>
-      Lineage.dropCheckpointFiles(ranks.sparkSession, Some(f)))
-  }
-
   /** Release every outstanding [[pageRank]] checkpoint of this session —
     * bench-trial / session teardown (the [[graft.queries.PipelineQueries]]
     * `releaseAll` convention). RDDs already GC'd have their durable

@@ -52,6 +52,9 @@ object Ngram {
   final case class Lm(unigrams: DataFrame, bigrams: DataFrame,
                       nTokens: Long)
 
+  /** The stupid-backoff factor α. */
+  private val Alpha = 0.4
+
   private def words(text: Column): Column = split(text, " ")
 
   /** Adjacent-pair rows of a tokenized doc WITHOUT retaining the token
@@ -91,8 +94,8 @@ object Ngram {
     * half-written model directory is unloadable rather than silently
     * short. Production trains the LM once over the reference corpus
     * and scores everywhere — the same contract as
-    * `Classifier.save/load` and `Ann.saveCentroids`, with plain
-    * integer counts (bit-exactness concerns don't arise).
+    * `Classifier.save/load`, with plain integer counts (bit-exactness
+    * concerns don't arise).
     */
   def saveLm(lm: Lm, dir: String): Unit = {
     val spark = lm.unigrams.sparkSession
@@ -145,9 +148,7 @@ object Ngram {
     *                   text-keyed path
     */
   def scoreDocs(docs: DataFrame, idCol: String, textCol: String, lm: Lm,
-                alpha: Double = 0.4,
                 hashedKeys: Boolean = true): DataFrame = {
-    require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0, 1]: $alpha")
     require(lm.nTokens > 0, "empty language model")
     // join keys: either the gram text itself or its xxhash64 — BOTH
     // sides derive the key the same way, so the variants differ only
@@ -181,7 +182,7 @@ object Ngram {
       .select(col("doc_id"),
         when(col("c2").isNotNull && col("_c_ctx").isNotNull,
           col("c2").cast("double") / col("_c_ctx"))
-          .otherwise(lit(alpha) *
+          .otherwise(lit(Alpha) *
             coalesce(col("_c_next"), lit(1L)).cast("double") / lm.nTokens)
           .as("s"))
     scored.groupBy("doc_id")

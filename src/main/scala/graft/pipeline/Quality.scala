@@ -40,7 +40,7 @@ object Quality {
     * family): per doc, the published quality statistics and a composite
     * `keep` decision —
     *
-    *   - word count in [minWords, maxWords] (paper: 50..100k),
+    *   - word count in [minWords, 100k] (paper: 50..100k),
     *   - mean word length in [3, 10] characters,
     *   - symbol-to-word ratio ('#' chars + non-overlapping "..."
     *     occurrences, over words) ≤ 0.1,
@@ -63,8 +63,9 @@ object Quality {
     * downstream action is a threshold filter over docs that have text).
     */
   def gopherRules(docs: DataFrame, idCol: String, textCol: String,
-                  minWords: Long = 50L, maxWords: Long = 100000L,
+                  minWords: Long = 50L,
                   minStopWords: Int = 2): DataFrame = {
+    val maxWords = 100000L
     require(minWords >= 1 && maxWords >= minWords,
       s"bad word-count bounds: [$minWords, $maxWords]")
     val t = col(textCol)

@@ -41,8 +41,9 @@ import org.apache.spark.sql.functions._
 object Retrieval {
 
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
-               queryTerms: Seq[String], k: Int,
-               k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+               queryTerms: Seq[String], k: Int): DataFrame = {
+    val k1 = 1.2
+    val b = 0.75
     require(queryTerms.nonEmpty, "bm25TopK needs at least one query term")
     require(k >= 1, s"bm25TopK k must be >= 1: $k")
     val terms = queryTerms.distinct

@@ -42,14 +42,6 @@ object Sampling {
     else f"${math.floor(fraction * 4294967296.0).toLong}%08x"
   }
 
-  /** Strata-count guard for [[temperatureFractions]]' driver collect
-    * and [[temperatureSample]]'s fractions map: strata are languages /
-    * domains / sources — thousands at most. A million distinct strata
-    * means the caller grouped on a high-cardinality column (url, id)
-    * and the "mixture" is meaningless; fail loudly before collecting.
-    */
-  val MaxStrata: Int = 100000
-
   /** Temperature-scaled mixture fractions — the standard multilingual /
     * multi-domain rebalancing rule (Conneau et al. 2020 XLM-R §3.1 /
     * Xue et al. 2021 mT5 §3.2): sample stratum i with probability
@@ -78,8 +70,8 @@ object Sampling {
     require(alpha > 0.0 && alpha <= 1.0, s"alpha must be in (0, 1]: $alpha")
     require(targetRows > 0, s"targetRows must be positive: $targetRows")
     // NULL strata can't be part of a mixture: excluding them HERE keeps
-    // their weight from diluting the real strata (temperatureSample
-    // drops the rows anyway, per the sampler's default-0 convention)
+    // their weight from diluting the real strata ([[stratifiedHashSample]]
+    // drops the rows anyway, per its default-0 convention)
     val counts = docs.where(col(strataCol).isNotNull)
       .groupBy(col(strataCol).cast("string").as("stratum"))
       .agg(count(lit(1)).as("n_docs"))
@@ -90,33 +82,6 @@ object Sampling {
         round(least(lit(1.0),
           lit(targetRows.toDouble) * (pow(col("n_docs"), alpha) / col("z"))
             / col("n_docs")), 6).as("fraction"))
-  }
-
-  /** [[temperatureFractions]] composed with [[stratifiedHashSample]]:
-    * one call from "corpus + temperature + budget" to the sampled
-    * mixture, deterministic under `seed`. The fractions frame is
-    * |strata|-sized by the [[MaxStrata]] guard (enforced with a
-    * limit-probe BEFORE collecting, so a mis-grouped corpus fails fast
-    * instead of OOMing the driver). Rows with a NULL stratum carry no
-    * mixture weight and are dropped (the stratified sampler's
-    * default-0 convention for unmapped strata).
-    */
-  def temperatureSample(docs: DataFrame, idCol: String, strataCol: String,
-                        alpha: Double, targetRows: Long, seed: Long,
-                        maxStrata: Int = MaxStrata): DataFrame = {
-    val probe = temperatureFractions(docs, strataCol, alpha, targetRows)
-      .limit(maxStrata + 1).collect()
-    require(probe.length <= maxStrata,
-      s"more than $maxStrata strata in '$strataCol' (Sampling.MaxStrata) " +
-        "— mixture strata are languages/domains/sources; group on one")
-    // a corpus with no non-null strata samples to nothing (every row is
-    // "unmapped" under the default-0 convention) — not an error
-    if (probe.isEmpty) docs.where(lit(false))
-    else {
-      val fractions = probe.iterator
-        .map(r => r.getString(0) -> r.getDouble(3)).toMap
-      stratifiedHashSample(docs, idCol, strataCol, fractions, seed)
-    }
   }
 
   def stratifiedHashSample(docs: DataFrame, idCol: String,

@@ -388,10 +388,9 @@ object TextDedup {
     * a non-duplicate line; at "delete boilerplate" stakes that is the
     * documented price of never shuffling corpus bytes.
     */
-  def dedupLines(docs: DataFrame, idCol: String, textCol: String,
-                 delim: String = "\n"): DataFrame = {
-    require(delim.nonEmpty, "line delimiter must be non-empty")
-    val q = java.util.regex.Pattern.quote(delim)
+  def dedupLines(docs: DataFrame, idCol: String,
+                 textCol: String): DataFrame = {
+    val q = java.util.regex.Pattern.quote("\n")
     val lines = docs
       .where(col(textCol).isNotNull)
       .select(col(idCol).as("doc_id"),
@@ -415,7 +414,7 @@ object TextDedup {
           .otherwise(array_join(
             filter(split(docs(textCol), q),
               (_, i) => !array_contains(drops("drop_pos"), i)),
-            delim))
+            "\n"))
           .as("text"),
         coalesce(drops("n_dropped"), lit(0L)).as("n_dropped"))
   }

@@ -35,9 +35,9 @@ object PipelineQueries {
       pipelineCache.getOrElseUpdate((s, dir), {
         val files = KgPipeline.synthInput(s, nFilesFor(dir), partitions = 8)
         val r = KgPipeline.run(s, files, KgMain.model)
-        // run() already persists `linked` and `canon`; pin `triples` too
-        // (q43 and the flagship entry share it). Re-caching linked here
-        // would just log "already cached" warnings.
+        // run() already persists `linked`; pin `triples` too (q43 and
+        // the flagship entry share it). Re-caching linked here would
+        // just log "already cached" warnings.
         r.triples.cache()
         r
       })
@@ -117,14 +117,6 @@ object PipelineQueries {
   def q46_ann_lsh(s: SparkSession, dir: String): DataFrame =
     graft.pipeline.Ann.lshNeighbors(emb(s, dir), "vec_id", "embedding",
       probePred = col("vec_id") < 20, k = 3, nBits = 4, nTables = 12)
-
-  /** Kept as the spec-facing quantizer entry point; the implementation
-    * lives in [[graft.pipeline.Ann.ivfCentroids]].
-    */
-  def ivfCentroids(vecs: DataFrame, nCells: Int,
-                   sampleN: Int = graft.pipeline.Ann.DefaultSampleN): Array[Array[Float]] =
-    graft.pipeline.Ann.ivfCentroids(vecs, "vec_id", "embedding",
-      nCells, sampleN)
 
   /** IVF-bucketed approximate nearest neighbors — the second scale path
     * beside LSH (q46); see [[graft.pipeline.Ann.ivfNeighbors]].
@@ -308,12 +300,17 @@ object PipelineQueries {
     */
   private[queries] val CanonBroadcastRows = 5000000L
 
-  private def fileEntities(r: graft.pipeline.KgPipeline.Result): DataFrame = {
-    // canon is cached and already materialized by the pipeline build,
-    // so the size probe is a cheap cache-scan count, not a recompute
-    val canonJoin =
-      if (r.canon.count() <= CanonBroadcastRows) broadcast(r.canon)
-      else r.canon
+  private[graft] def fileEntities(
+      r: graft.pipeline.KgPipeline.Result): DataFrame = {
+    // below ccCollectThreshold the canon map is a driver-built local
+    // relation of at most 2 × ccCollectThreshold rows, far under the
+    // budget: broadcast it without running a job. Only the distributed
+    // map is counted.
+    val small = r.canon.queryExecution.optimizedPlan match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
+      case _ => r.canon.count() <= CanonBroadcastRows
+    }
+    val canonJoin = if (small) broadcast(r.canon) else r.canon
     r.linked
       .join(canonJoin, Seq("entity_id"), "left")
       .select(concat_ws("#", col("repo"), col("path"), col("commit")).as("file"),
@@ -385,9 +382,6 @@ object PipelineQueries {
     graft.pipeline.Ann.pqNeighbors(e, "vec_id", "embedding", model,
       probePred = col("vec_id") < 20, k = 3)
   }
-
-  private[queries] def nearestCell(cs: Array[Array[Float]], v: Array[Float]): Int =
-    VecOps.nearestCell(cs, v)
 
   /** Related canonical entities of the flagship's own KG
     * ([[graft.pipeline.Graph.coOccurrence]] over per-file co-mention):

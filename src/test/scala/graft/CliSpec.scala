@@ -30,15 +30,33 @@ class CliSpec extends AnyFunSuite {
     }
   }
 
-  /** Run `graft.Cli` in a fresh JVM: (exit code, stderr). */
-  private def runCli(args: String*): (Int, String) = {
+  /** Run `main` in a fresh JVM with this JVM's `--add-opens` flags (a
+    * Spark session needs them on JDK 17): (exit code, stdout, stderr).
+    */
+  private def runMain(main: String, args: String*): (Int, String, String) = {
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
     val cp = System.getProperty("java.class.path")
-    val p = new ProcessBuilder((Seq(javaBin, "-cp", cp, "graft.Cli") ++ args): _*)
-      .redirectOutput(ProcessBuilder.Redirect.DISCARD)
-      .start()
-    val err = new String(p.getErrorStream.readAllBytes(), "UTF-8")
-    (p.waitFor(), err)
+    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.toArray.map(_.toString)
+      .filter(_.startsWith("--add-opens")).toSeq
+    // stderr to a file: a Spark run's log would fill the pipe while
+    // this thread blocks on stdout
+    val errFile = java.io.File.createTempFile("clispec", ".err")
+    try {
+      val p = new ProcessBuilder(
+          (Seq(javaBin, "-Xmx1g") ++ opens ++ Seq("-cp", cp, main) ++ args): _*)
+        .redirectError(errFile)
+        .start()
+      val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
+      val code = p.waitFor()
+      (code, out, new String(java.nio.file.Files.readAllBytes(errFile.toPath), "UTF-8"))
+    } finally errFile.delete()
+  }
+
+  /** Run `graft.Cli` in a fresh JVM: (exit code, stderr). */
+  private def runCli(args: String*): (Int, String) = {
+    val (code, _, err) = runMain("graft.Cli", args: _*)
+    (code, err)
   }
 
   test("a bad bucket count is a usage error with exit 2") {
@@ -61,6 +79,35 @@ class CliSpec extends AnyFunSuite {
         err.contains("exactly 3 whitespace-separated terms"),
         s"'$pat': stderr: $err")
       assert(!err.contains("Exception"), s"'$pat': stderr: $err")
+    }
+  }
+
+  test("curate on sf0.001: report keys in order; disabled stages pass counts through") {
+    val out = java.nio.file.Files.createTempDirectory("clicurate").toString
+    val (code, stdout, err) = runMain("graft.Cli", "curate", "/root/testdata/sf0.001", s"$out/t")
+    assert(code == 0, s"exit $code, stderr: ${err.takeRight(2000)}")
+    val json = stdout.linesIterator.filter(_.startsWith("{")).toSeq.last
+    val keys = "\"([a-z_]+)\":".r.findAllMatchIn(json).map(_.group(1))
+      .filterNot(k => k == "key" || k == "n").toSeq
+    assert(keys == Seq("n_input", "n_null_text", "n_redacted",
+      "n_after_exact", "n_after_decontam", "n_after_boilerplate",
+      "n_after_repetition", "n_after_quality", "n_after_lm_ppl",
+      "n_after_minhash", "n_after_embedding", "n_after_mixture",
+      "hot_keys", "salts", "n_written", "resumed_stages"), json)
+    def n(k: String): Long =
+      s"\"$k\":(\\d+)".r.findFirstMatchIn(json).get.group(1).toLong
+    assert(n("n_after_decontam") == n("n_after_exact"), json)
+    assert(n("n_after_repetition") == n("n_after_boilerplate"), json)
+    assert(n("n_after_mixture") == n("n_after_embedding"), json)
+    assert(n("n_written") == n("n_after_mixture"), json)
+  }
+
+  test("Verify with other than 2 or 3 arguments is a usage error with exit 2") {
+    Seq(Seq.empty[String], Seq("only-one"), Seq("a", "b", "c", "d")).foreach { args =>
+      val (code, _, err) = runMain("graft.Verify", args: _*)
+      assert(code == 2, s"$args: exit $code, stderr: $err")
+      assert(err.startsWith("usage: graft.Verify"), s"$args: stderr: $err")
+      assert(!err.contains("Exception"), s"$args: stderr: $err")
     }
   }
 }

@@ -202,14 +202,6 @@ class FeaturesSpec extends AnyFunSuite {
     assert(obs(0).render.isEmpty) // no previous token
     assert(obs(1).render.toSet == Set("0~xx-Xx"))
   }
-  test("numSites matches emitted site range") {
-    val conf = SchemaConf.default(neDicts = List(Map("a" -> List("x"))),
-      intDict = Some(Map("b" -> List("y"))), extDict = Some(Map("c" -> List("z"))))
-    val n = numSites(conf)
-    val obs = schematize(conf, Vector("a", "b", "c"))
-    val maxSite = obs.flatMap(_.sites).max
-    assert(maxSite < n)
-  }
   test("reused Ox never aliases results across reset rounds") {
     // schematize reuses one Ox across positions (r7); result() must hand
     // out arrays a later round can never mutate. Rounds sweep sizes

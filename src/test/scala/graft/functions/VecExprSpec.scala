@@ -35,21 +35,18 @@ class VecExprSpec extends AnyFunSuite {
     }
   }
 
-  test("ner_cosine is null-safe and SQL-registered") {
+  test("ner_cosine is null-safe") {
     import spark.implicits._
-    VecFunctions.register(spark)
     val df = Seq(
       (1L, Array(1f, 0f), Array(1f, 0f)),
       (2L, Array(0f, 2f), Array(0f, 1f)),
       (3L, Array(3f, 4f), Array(4f, 3f))
     ).toDF("id", "a", "b")
-    df.createOrReplaceTempView("vec_pairs")
-    val viaSql = spark.sql(
-      "SELECT id, ner_cosine(a, b) AS c FROM vec_pairs ORDER BY id")
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(viaSql(0)._2 == 1.0)
-    assert(math.abs(viaSql(1)._2 - 1.0) < 1e-12)
-    assert(math.abs(viaSql(2)._2 - 24.0 / 25.0) < 1e-12)
+    val cos = df.select(col("id"), VecFunctions.ner_cosine(col("a"), col("b")))
+      .orderBy("id").collect().map(r => (r.getLong(0), r.getDouble(1)))
+    assert(cos(0)._2 == 1.0)
+    assert(math.abs(cos(1)._2 - 1.0) < 1e-12)
+    assert(math.abs(cos(2)._2 - 24.0 / 25.0) < 1e-12)
     // nulls propagate
     val withNull = df.select(
       VecFunctions.ner_cosine(lit(null).cast("array<float>"), col("b")).as("c"))
@@ -57,9 +54,9 @@ class VecExprSpec extends AnyFunSuite {
     assert(withNull.forall(_.isNullAt(0)))
     // a null ELEMENT null-poisons too (lambda parity) — reading the slot
     // as 0.0 would produce a defined-but-wrong similarity
-    val nullElem = spark.sql(
-      "SELECT ner_cosine(array(CAST(NULL AS FLOAT), CAST(1.0 AS FLOAT)), " +
-        "array(CAST(1.0 AS FLOAT), CAST(1.0 AS FLOAT))) AS c")
+    val nullElem = spark.range(1).select(VecFunctions.ner_cosine(
+        expr("array(CAST(NULL AS FLOAT), CAST(1.0 AS FLOAT))"),
+        expr("array(CAST(1.0 AS FLOAT), CAST(1.0 AS FLOAT))")))
       .collect()(0)
     assert(nullElem.isNullAt(0), "null element must yield SQL NULL")
   }

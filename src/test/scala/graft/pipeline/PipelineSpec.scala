@@ -514,6 +514,20 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val budget = 8
     val dir = java.nio.file.Files.createTempDirectory("graft_io_jobs").toString
     val files = KgPipeline.synthInput(spark, 40, partitions = 2)
+    val (r, jobs) = jobsOf {
+      val r = KgPipeline.run(spark, files, model)
+      TableIO.writeResumable(r.triples, s"$dir/t", 16,
+        Seq("src_repo", "src_path"))
+      r
+    }
+    KgPipeline.release(spark, r, blocking = true)
+    assert(TableIO.verifyCommits(spark, s"$dir/t", 16).isEmpty)
+    assert(jobs <= budget,
+      s"one build launched $jobs Spark jobs, budget $budget")
+  }
+
+  /** `body`'s result and the number of Spark jobs it launched. */
+  private def jobsOf[A](body: => A): (A, Int) = {
     val sc = spark.sparkContext
     // job events reach listeners asynchronously
     def drain(): Unit = {
@@ -530,18 +544,23 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     drain()
     sc.addSparkListener(listener)
-    val r =
-      try {
-        val r = KgPipeline.run(spark, files, model)
-        TableIO.writeResumable(r.triples, s"$dir/t", 16,
-          Seq("src_repo", "src_path"))
-        drain()
-        r
-      } finally sc.removeSparkListener(listener)
+    try {
+      val a = body
+      drain()
+      (a, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("fileEntities broadcasts a driver-built canon map without running a job") {
+    val files = KgPipeline.synthInput(spark, 40, partitions = 2)
+    val r = KgPipeline.run(spark, files, model)
+    val (plan, jobs) = jobsOf {
+      graft.queries.PipelineQueries.fileEntities(r)
+        .queryExecution.executedPlan.toString
+    }
     KgPipeline.release(spark, r, blocking = true)
-    assert(TableIO.verifyCommits(spark, s"$dir/t", 16).isEmpty)
-    assert(jobs.get <= budget,
-      s"one build launched ${jobs.get} Spark jobs, budget $budget")
+    assert(jobs == 0, s"building fileEntities launched $jobs jobs")
+    assert(plan.contains("BroadcastHashJoin"), plan)
   }
 
   test("manifest publish leaves no temp file, fresh or overwriting") {

@@ -6,11 +6,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Gates for the product-quantization family ([[Ann.pqTrain]] /
-  * [[Ann.pqEncode]] / [[Ann.pqNeighbors]] / [[Ann.savePq]]):
+  * [[Ann.pqEncode]] / [[Ann.pqNeighbors]]):
   * driver-recompute encode parity, a dyadic-lossless rendition where
   * ADC search must equal brute-force L2 EXACTLY, recall on a clustered
-  * fixture, bit-exact model persistence, and the probe-budget /
-  * geometry fail-fasts.
+  * fixture, and the probe-budget / geometry fail-fasts.
   */
 class PqSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -142,31 +141,6 @@ class PqSpec extends AnyFunSuite {
     val pure = top3.count { case (q, id) => id % 20 == q % 20 }
     val purity = pure.toDouble / top3.length
     assert(purity >= 0.9, s"PQ ADC top-3 cluster purity $purity < 0.9")
-  }
-
-  test("savePq/loadPq: bit-exact roundtrip; loud corrupt/foreign failures") {
-    val data = dyadicFixture()
-    val model = Ann.pqTrain(vecDf(data), "vec_id", "embedding", m = 4, k = 4)
-    val dir = java.nio.file.Files.createTempDirectory("pq").toString
-    val path = s"$dir/pq.json"
-    Ann.savePq(spark, model, path)
-    val back = Ann.loadPq(spark, path)
-    assert(back.m == model.m && back.k == model.k && back.dSub == model.dSub)
-    assert(back.codebooks.flatten.flatten.map(java.lang.Float.floatToIntBits)
-      .toSeq == model.codebooks.flatten.flatten
-      .map(java.lang.Float.floatToIntBits).toSeq)
-    // foreign file
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/other.json"),
-      """{"format":"something-else"}""".getBytes("UTF-8"))
-    intercept[IllegalArgumentException] { Ann.loadPq(spark, s"$dir/other.json") }
-    // truncated body
-    val json = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(path)), "UTF-8")
-    val cut = json.substring(0, json.lastIndexOf("[\""))
-      .stripSuffix(",") + "]}"
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/cut.json"),
-      cut.getBytes("UTF-8"))
-    intercept[IllegalArgumentException] { Ann.loadPq(spark, s"$dir/cut.json") }
   }
 
   test("fail-fasts: probe budget, geometry, k range") {

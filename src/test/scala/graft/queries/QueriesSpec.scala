@@ -85,16 +85,6 @@ class AnnSpec extends AnyFunSuite {
     info(f"int8-search recall@3 vs float32 = $meanRecall%.3f")
     assert(meanRecall >= 0.9,
       f"int8 quantization destroyed neighbor structure: $meanRecall%.3f")
-    // dequantize inverts to exactly q*scale (float), per element
-    val deq = graft.pipeline.Ann.dequantizeInt8(qdf, "vec_id")
-      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    rows.foreach { case (id, sc, qa) =>
-      val d = deq(id)
-      qa.indices.foreach { i =>
-        assert(d(i) == (qa(i) * sc.toDouble).toFloat,
-          s"dequant vec $id pos $i: ${d(i)} != ${qa(i)} * $sc")
-      }
-    }
   }
 
   test("IVF quantizer: k-means cells are populated and balanced") {
@@ -102,10 +92,11 @@ class AnnSpec extends AnyFunSuite {
     val vs = vectors()
     val vecsDf = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
-    val cent = PipelineQueries.ivfCentroids(vecsDf, nCells = 8)
+    val cent = graft.pipeline.Ann.ivfCentroids(vecsDf, "vec_id", "embedding",
+      nCells = 8)
     assert(cent.length == 8)
     val sizes = vs.groupBy { case (_, v) =>
-      PipelineQueries.nearestCell(cent, v) }.map(_._2.length)
+      VecOps.nearestCell(cent, v) }.map(_._2.length)
     assert(sizes.size == 8, s"empty cells: only ${sizes.size} populated")
     val mean = vs.length.toDouble / 8
     assert(sizes.max <= 2 * mean,
@@ -653,54 +644,6 @@ class AnnSpec extends AnyFunSuite {
     assertVectorShuffleFree(PipelineQueries.q49_ann_ivf(spark, dir), "q49")
   }
 
-  test("persisted IVF index: row parity, no assignment stage, pruned scan") {
-    assume(available)
-    import graft.pipeline.Ann
-    val df = spark.read.parquet(s"$dir/embeddings.parquet")
-    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_idx")
-      .toString + "/ivf"
-    val nc = Ann.buildIvfIndex(df, "vec_id", "embedding", idx, nCells = 32)
-    assert(nc == 32)
-    val probePred = col("vec_id") < 20
-    def rowsOf(d: org.apache.spark.sql.DataFrame) =
-      d.collect().map(_.toString).sorted.toSeq
-    // parity: the index persists assignments under the SAME quantizer
-    // (bit-exact save/load, same seed/sample), so results are identical
-    val inline = Ann.ivfNeighbors(df, "vec_id", "embedding", probePred,
-      k = 3, nCells = 32, nProbe = 4)
-    val indexed = Ann.ivfNeighbors(df, "vec_id", "embedding", probePred,
-      k = 3, nProbe = 4, indexDir = Some(idx))
-    assert(rowsOf(indexed) == rowsOf(inline),
-      "indexed path diverged from inline")
-    // no assignment stage: the corpus side reads persisted cells — the
-    // nearest-cell expression must appear NOWHERE in the indexed plan
-    // (probes use ner_top_cells, a different function)
-    indexed.collect()
-    val planStr = indexed.queryExecution.executedPlan.toString
-    assert(!planStr.contains("ner_nearest_cell"),
-      s"indexed path still computes assignments:\n$planStr")
-    // pruned scan: the index read must carry partition filters on cell
-    // (the static pruning that makes repeated queries read nProbe/nCells
-    // of the corpus, not all of it)
-    val scans = graft.plans.PlanInspector
-      .allNodes(indexed.queryExecution.executedPlan).collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec
-            if f.output.exists(_.name == "cell") => f
-      }
-    assert(scans.nonEmpty, s"no file scan over the index:\n$planStr")
-    scans.foreach { f =>
-      assert(f.partitionFilters.exists(_.references.exists(_.name == "cell")),
-        s"index scan is not partition-pruned on cell:\n$f")
-    }
-    // and the indexed path keeps the broadcast/vector-free contract
-    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
-    val nodes = graft.plans.PlanInspector
-      .allNodes(indexed.queryExecution.executedPlan)
-    assert(nodes.exists(_.isInstanceOf[BroadcastHashJoinExec]) &&
-      !nodes.exists(_.isInstanceOf[SortMergeJoinExec]),
-      s"indexed probe join is not a guaranteed broadcast:\n$planStr")
-  }
-
   test("IVF recall@3 holds across quantizer seeds (min-over-seeds gate)") {
     assume(available)
     val brute = bruteTopK(vectors(), 3)
@@ -710,9 +653,10 @@ class AnnSpec extends AnyFunSuite {
     val seeds = Seq(4321L, 7L, 99L)
     val recalls = seeds.map { seed =>
       val vecsDf = spark.read.parquet(s"$dir/embeddings.parquet")
-      val got = graft.pipeline.Ann.ivfNeighbors(vecsDf, "vec_id", "embedding",
-          probePred = col("vec_id") < 20, k = 3, nCells = 32, nProbe = 16,
-          seed = seed)
+      val cents = graft.pipeline.Ann.ivfCentroids(vecsDf, "vec_id",
+        "embedding", nCells = 32, seed = seed)
+      val got = graft.pipeline.Ann.ivfSearch(vecsDf, "vec_id", "embedding",
+          col("vec_id") < 20, k = 3, cents = cents, nProbe = 16)
         .collect().groupBy(_.getAs[Long]("q_id"))
         .map { case (q, rows) => q -> rows.map(_.getAs[Long]("vec_id")).toSet }
       val hits = brute.toSeq.map { case (q, want) =>
@@ -959,11 +903,6 @@ class AnnSpec extends AnyFunSuite {
         probePred = lit(true), maxProbeBytes = 1024L)
     }
     assert(ex.getMessage.contains("probe-broadcast budget"), ex.getMessage)
-    val ex2 = intercept[IllegalArgumentException] {
-      graft.pipeline.Ann.ivfNeighbors(df, "vec_id", "embedding",
-        probePred = lit(true), maxProbeBytes = 1024L)
-    }
-    assert(ex2.getMessage.contains("probe-broadcast budget"), ex2.getMessage)
   }
 
   test("clustered embeddings: LSH and IVF recall@3 >= 0.95") {
@@ -993,42 +932,6 @@ class AnnSpec extends AnyFunSuite {
     info(f"clustered recall@3: LSH=$lsh%.3f IVF=$ivf%.3f")
     assert(lsh >= 0.95, f"LSH recall on clustered data $lsh%.3f < 0.95")
     assert(ivf >= 0.95, f"IVF recall on clustered data $ivf%.3f < 0.95")
-
-    // quantizer persistence: production trains the coarse quantizer
-    // ONCE and reuses it across jobs — the reload must be BIT-exact
-    // (last-ulp drift re-assigns vectors at cell borders and silently
-    // costs recall) and searching under the loaded quantizer must
-    // reproduce the inline result row-for-row
-    val cents = graft.pipeline.Ann.ivfCentroids(df, "vec_id", "embedding",
-      nCells = 16)
-    val qpath = java.nio.file.Files.createTempDirectory("graft_ivf")
-      .toString + "/quantizer.json"
-    graft.pipeline.Ann.saveCentroids(spark, cents, qpath)
-    val loaded = graft.pipeline.Ann.loadCentroids(spark, qpath)
-    assert(cents.length == loaded.length &&
-      cents.zip(loaded).forall { case (a, b) =>
-        a.length == b.length && a.zip(b).forall { case (x, y) =>
-          java.lang.Float.floatToIntBits(x) == java.lang.Float.floatToIntBits(y)
-        }
-      }, "quantizer roundtrip is not bit-exact")
-    def rows(r: org.apache.spark.sql.DataFrame) =
-      r.collect().map(x => (x.getLong(0), x.getInt(1), x.getLong(2),
-        x.getDouble(3))).sortBy(identity).toSeq
-    val inline = rows(graft.pipeline.Ann.ivfNeighbors(df, "vec_id",
-      "embedding", probePred = col("vec_id") < 20, k = 3, nCells = 16,
-      nProbe = 4))
-    val preloaded = rows(graft.pipeline.Ann.ivfNeighbors(df, "vec_id",
-      "embedding", probePred = col("vec_id") < 20, k = 3, nProbe = 4,
-      centroids = Some(loaded)))
-    assert(inline == preloaded,
-      "search under the reloaded quantizer diverged from inline training")
-    // wrong format fails loudly, not with a silently empty quantizer
-    val bad = qpath.stripSuffix("quantizer.json") + "bad.json"
-    graft.io.TableIO.atomicWrite(bad, """{"something":"else"}""",
-      spark.sessionState.newHadoopConf())
-    intercept[IllegalArgumentException] {
-      graft.pipeline.Ann.loadCentroids(spark, bad)
-    }
 
     // AUTO geometry (the production default — VERDICT r4 #7): √1000 ≈
     // 32 cells, nProbe max(4, 32/8) = 4, a 12.5% probe fraction. The
@@ -1310,25 +1213,17 @@ class AnnSpec extends AnyFunSuite {
       s"de must saturate: ${fr("de")}")
     // composed sampler: whole saturated stratum kept, en near its
     // fraction, nulls dropped, deterministic
-    val kept = Sampling.temperatureSample(
-        docs, "doc_id", "lang", 0.5, 100L, seed = 7L)
+    def sample() = Sampling.stratifiedHashSample(docs, "doc_id", "lang",
+        fr.map { case (k, v) => k -> v._3 }, seed = 7L)
       .select("doc_id").collect().map(_.getLong(0)).toSet
+    val kept = sample()
     assert((321L to 330L).forall(kept), "saturated stratum not kept whole")
     assert((331L to 335L).forall(id => !kept(id)), "null-stratum rows leaked")
     val enKept = kept.count(_ <= 320L).toDouble / 320.0
     val enFrac = fr("en")._3
     assert(math.abs(enKept - enFrac) < 0.15,
       f"en keep rate $enKept%.3f far from fraction $enFrac%.3f")
-    assert(kept == Sampling.temperatureSample(
-        docs, "doc_id", "lang", 0.5, 100L, seed = 7L)
-      .select("doc_id").collect().map(_.getLong(0)).toSet,
-      "temperatureSample is not deterministic")
-    // strata-cardinality guard fails fast before collecting
-    val ex = intercept[IllegalArgumentException] {
-      Sampling.temperatureSample(docs, "doc_id", "doc_id", 0.5, 100L, 7L,
-        maxStrata = 10)
-    }
-    assert(ex.getMessage.contains("MaxStrata"))
+    assert(kept == sample(), "the composed sample is not deterministic")
   }
 
   test("approx_percentile (the 100-TB path) tracks exact percentile") {
