@@ -88,10 +88,10 @@ object KgMain {
       val bad = TableIO.verifyCommits(spark, s"$outDir/triples", 16)
       require(bad.isEmpty,
         s"manifest audit FAILED: buckets $bad disagree with written data")
-      // compaction exercise, same opt-in: collapse the rebalanced write's
-      // per-bucket file fan-out and prove (via the split-independent
-      // checksum) the table is byte-equivalent after — maintenance a
-      // long-lived production table runs on a schedule
+      // compaction exercise, same opt-in: rewrite each multi-file
+      // bucket as one file, publish the rewrite only when its
+      // split-independent checksum equals the manifest's, and re-audit —
+      // maintenance a long-lived production table runs on a schedule
       val filesAfter = (0 until 16)
         .map(k => TableIO.compactBucket(spark, s"$outDir/triples", 16, k))
         .sum

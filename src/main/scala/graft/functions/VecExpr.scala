@@ -25,9 +25,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * while this kernel scores the common prefix with full-array norms —
   * a defined value instead of a silent NULL drop. Measured 34x faster
   * than the lambda on the q21 all-pairs shape (2M pairs, 64-dim,
-  * local[8] — `tools/CosineBench`). A NULL ELEMENT anywhere in either
-  * array null-poisons the result, exactly like the lambda (reading the
-  * slot as 0.0 would produce a defined-but-wrong similarity).
+  * local[8], a one-off micro-benchmark that is not kept). A NULL
+  * ELEMENT anywhere in either array null-poisons the result, exactly
+  * like the lambda (reading the slot as 0.0 would produce a
+  * defined-but-wrong similarity).
   */
 object VecKernels {
   /** dot(a,b) / (|a|·|b|) over the common prefix; null if either array

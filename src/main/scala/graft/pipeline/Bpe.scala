@@ -1,43 +1,24 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** BPE tokenizer training + encoding (Sennrich et al. 2016, "Neural
-  * Machine Translation of Rare Words with Subword Units") — the
-  * tokenizer-building step a pretraining pipeline runs between curation
-  * and packing: learn a merge table from corpus word frequencies, then
-  * segment every document with it (feeding q69's sequence packing,
-  * whose unit is the token).
+/** BPE encoding (Sennrich et al. 2016, "Neural Machine Translation of
+  * Rare Words with Subword Units") — the tokenizer step a pretraining
+  * pipeline runs between curation and packing: segment every document
+  * with a merge table (feeding q69's sequence packing, whose unit is
+  * the token).
   *
-  * Semantics (the published algorithm, pinned by BpeSpec):
+  * Semantics (pinned by BpeSpec):
   *  - a word is split to code points plus a terminal [[Marker]] symbol
   *    (so decode = concat + strip marker is well-defined);
-  *  - training repeatedly takes the most frequent adjacent symbol pair
-  *    (count desc, then pair lexicographic — a deterministic tie-break,
-  *    Sennrich leaves ties unspecified) and merges it leftmost-first in
-  *    every word;
   *  - encoding greedily merges the LOWEST-RANK pair present until none
-  *    applies — the standard subword-nmt / HF-tokenizers rule.
+  *    applies — the standard subword-nmt / HF-tokenizers rule; a merge
+  *    applies leftmost-first.
   *
-  * Scale shape:
-  *  - [[wordCounts]] is the only corpus-wide pass (explode + partial
-  *    agg; the shuffle carries (word, long), collapsed map-side).
-  *  - [[trainDistributed]] iterates on the VOCAB table, not the
-  *    corpus: per merge, one pair-count aggregate over the cached
-  *    symbol-sequence table (vocab-sized, all shuffles carry (pair,
-  *    long)) + a TakeOrdered(1) for the winner; the driver holds only
-  *    the merge list. A 100-TB corpus's DISTINCT-word table is the
-  *    thing that no longer fits a single process — this path never
-  *    collects it. Each merge is one job, so `nMerges` stays
-  *    practically bounded (hundreds–low thousands); production
-  *    tokenizers at 32k+ merges train on a bounded corpus SAMPLE by
-  *    standard practice (SentencePiece/HF do the same), for which
-  *    [[trainLocal]] is the exact driver kernel — the two are
-  *    parity-gated merge-for-merge.
-  *  - [[encodeDocs]] broadcasts the rank table and segments in a typed
-  *    map (pure JVM kernel, corpus never shuffles) — one pass at any
-  *    scale, streaming-compatible.
+  * Scale shape: [[encodeDocs]] broadcasts the rank table and segments
+  * in a typed map (pure JVM kernel, corpus never shuffles) — one pass
+  * at any scale, streaming-compatible.
   *
   * Empty words (consecutive spaces) are skipped everywhere — they
   * carry no subwords; NULL texts encode to zero words (q13 convention).
@@ -48,12 +29,6 @@ object Bpe {
     * word-final subwords are distinct from word-internal ones.
     */
   val Marker = "</w>"
-
-  /** Corpus word frequencies — the one corpus-wide pass. */
-  def wordCounts(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(explode(split(col(textCol), " ")).as("word"))
-      .where(col("word") =!= "")
-      .groupBy("word").agg(count(lit(1)).as("cnt"))
 
   /** Code-point symbols + terminal marker. */
   def baseSymbols(word: String): Array[String] = {
@@ -78,116 +53,6 @@ object Bpe {
       } else { out += syms(i); i += 1 }
     }
     out.result()
-  }
-
-  /** Tie-break order for merge winners: UNSIGNED UTF-8 BYTE order —
-    * what Spark's string ordering (UTF8String binary compare) uses in
-    * [[trainDistributed]]'s `orderBy`. Java's natural String order
-    * compares UTF-16 code units, which DISAGREES with byte order
-    * between [U+E000, U+FFFF] and supplementary-plane characters
-    * (emoji vs U+FFFD — both routine in noisy web text), so a
-    * java-ordered driver kernel could pick a different tie winner and
-    * silently break the merge-for-merge parity contract.
-    */
-  private val utf8Order: Ordering[String] = (x: String, y: String) =>
-    // delegate to the SAME comparison the distributed orderBy runs —
-    // parity by construction, not by a hand-kept reimplementation
-    org.apache.spark.unsafe.types.UTF8String.fromString(x)
-      .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(y))
-
-  private def countPairs(seqs: Iterable[(Array[String], Long)])
-      : scala.collection.mutable.HashMap[(String, String), Long] = {
-    val m = scala.collection.mutable.HashMap.empty[(String, String), Long]
-    seqs.foreach { case (s, c) =>
-      var i = 0
-      while (i < s.length - 1) {
-        val k = (s(i), s(i + 1))
-        m.update(k, m.getOrElse(k, 0L) + c)
-        i += 1
-      }
-    }
-    m
-  }
-
-  /** Driver BPE training kernel over a word-frequency table — exact,
-    * for sample-sized vocabularies; [[trainDistributed]] is pinned
-    * equal to it.
-    */
-  def trainLocal(words: Seq[(String, Long)], nMerges: Int,
-                 minCount: Long = 2L): Seq[(String, String)] = {
-    require(nMerges >= 0, s"nMerges must be >= 0: $nMerges")
-    var seqs = words.filter(_._1.nonEmpty)
-      .map { case (w, c) => (baseSymbols(w), c) }
-    val merges = Seq.newBuilder[(String, String)]
-    var k = 0
-    var stop = false
-    while (k < nMerges && !stop) {
-      val counts = countPairs(seqs)
-      if (counts.isEmpty) stop = true
-      else {
-        val (pair, cnt) = counts.minBy { case ((a, b), c) => (-c, a, b) }(
-          Ordering.Tuple3(Ordering.Long, utf8Order, utf8Order))
-        if (cnt < minCount) stop = true
-        else {
-          merges += pair
-          seqs = seqs.map { case (s, c) =>
-            (mergePair(s, pair._1, pair._2), c)
-          }
-          k += 1
-        }
-      }
-    }
-    merges.result()
-  }
-
-  /** Distributed BPE training over a `(word, cnt)` frame (the
-    * [[wordCounts]] output): the vocab table is encoded to symbol
-    * sequences and cached; each merge runs one pair-count aggregate +
-    * TakeOrdered(1) and remaps the cache. Merge-for-merge equal to
-    * [[trainLocal]] (BpeSpec) — the winner pick uses the same
-    * (count desc, pair asc) order and pair counting is integer, so
-    * distribution cannot reorder ties.
-    */
-  def trainDistributed(wordCounts: DataFrame, nMerges: Int,
-                       minCount: Long = 2L,
-                       log: String => Unit = _ => ()): Seq[(String, String)] = {
-    require(nMerges >= 0, s"nMerges must be >= 0: $nMerges")
-    val spark = wordCounts.sparkSession
-    import spark.implicits._
-    // every round remaps the previous round's output, so lineage (and
-    // plan size) would grow per merge — truncate it with an eager
-    // checkpoint each round (Lineage.chk) and release the superseded
-    // round's blocks/files once the new one is materialized
-    var seqs: Dataset[(Array[String], Long)] = Lineage.chk(wordCounts
-      .select(col("word").cast("string"), col("cnt").cast("long"))
-      .as[(String, Long)]
-      .filter(_._1.nonEmpty)
-      .map { case (w, c) => (baseSymbols(w), c) })
-    val merges = Seq.newBuilder[(String, String)]
-    try {
-      var k = 0
-      var stop = false
-      while (k < nMerges && !stop) {
-        val top = seqs.flatMap { case (s, c) =>
-          (0 until s.length - 1).iterator.map(i => (s(i), s(i + 1), c))
-        }.toDF("a", "b", "c")
-          .groupBy("a", "b").agg(sum("c").as("cnt"))
-          .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
-          .limit(1).as[(String, String, Long)].collect()
-        top.headOption match {
-          case Some((a, b, cnt)) if cnt >= minCount =>
-            merges += ((a, b))
-            val next =
-              Lineage.chk(seqs.map { case (s, c) => (mergePair(s, a, b), c) })
-            Lineage.release(seqs)
-            seqs = next
-            k += 1
-            if (k % 10 == 0) log(s"[bpe] $k merges learned (last: '$a'+'$b' x$cnt)")
-          case _ => stop = true
-        }
-      }
-      merges.result()
-    } finally Lineage.release(seqs)
   }
 
   /** Encode one word under a rank table: greedily merge the

@@ -17,9 +17,9 @@ import graft.io.TableIO
   * own evidence: with state, no periodic full re-canonicalization is
   * needed to reconcile cross-file alias bridges.
   *
-  * Evidence is APPEND-ONLY by design: deleting a file retracts its
-  * triples ([[KgPipeline.mergeDeltaCanonical]] `deletedFiles`) but not the
-  * linguistic evidence its mentions contributed to alias bridging —
+  * Evidence is APPEND-ONLY by design: emptying a file retracts its
+  * triples ([[KgPipeline.mergeDeltaCanonical]]'s vacated files) but not
+  * the linguistic evidence its mentions contributed to alias bridging —
   * a conservative choice (canonical merges never flap when files
   * churn). An operator who wants deletion to retract evidence rebuilds
   * the state from a full run, exactly as before this state existed.
@@ -36,7 +36,7 @@ import graft.io.TableIO
   * is retained for ONE generation (a lazily-loaded frame survives one
   * concurrent save — see [[save]]), older dirs are best-effort deleted. Integrity: row count + order- and
   * split-independent XOR of `xxhash64(columns)` per frame (the
-  * compactBucket checksum convention) — a corrupt or truncated state
+  * table manifests' checksum convention) — a corrupt or truncated state
   * fails LOUD on load, it never silently yields a smaller edge set
   * (which would silently fork canonical ids).
   *

@@ -1,18 +1,20 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-/** Trained document-quality classifier — the model-based filter the
-  * big pretraining pipelines run after the rule-based passes: a
-  * logistic regression over hashed bag-of-words features, scoring each
+/** Document-quality classifier — the model-based filter the big
+  * pretraining pipelines run after the rule-based passes: a logistic
+  * regression over hashed bag-of-words features, scoring each
   * document's probability of being "high quality" (GPT-3 trains an LR
   * quality classifier against a curated positive set, Brown et al.
   * 2020 appendix A; LLaMA uses a fastText-style linear classifier the
   * same way, Touvron et al. 2023 §2). The labeled complement to
   * [[Dsir]]'s label-free importance weighting — both share the hashed
   * unigram+bigram featurization and the zero-shuffle scoring fold.
+  * This object scores with a given model and persists it ([[save]] /
+  * [[load]], the file `curate quality=<model.json>` reads); it does not
+  * train.
   *
   * Features: [[Dsir.grams]] hashed to `nBuckets` slots via the md5 hex
   * prefix (`hash16 % nBuckets`, nBuckets ≤ 65536), doc vector =
@@ -21,27 +23,16 @@ import org.apache.spark.storage.StorageLevel
   * dictionary to build, bounded model size, graceful collisions — the
   * published fastText recipe.
   *
-  * Scale shape:
-  *  - TRAINING ([[trainFilter]]) is distributed full-batch gradient
-  *    descent, the `Train.trainDistributed` pattern: documents are
-  *    encoded ONCE to all-int sparse form and cached; each epoch
-  *    broadcasts the (nBuckets+1)-sized weights, computes per-doc
-  *    `(σ(w·x) − y)·x` contributions in `mapPartitions`-style
-  *    accumulation, and `treeAggregate`s one dense model-sized array
-  *    to the driver for the step. Nothing corpus-sized ever reaches
-  *    the driver; epoch cost is one scan of the cached encodings.
-  *    Full-batch gradients are order-free up to float summation, so
-  *    no seeded shuffling is needed and runs are deterministic.
-  *  - SCORING ([[scoreDocs]]) is ZERO-shuffle: weights ride as a
-  *    broadcast and each doc's logit is one scan-side typed-kernel
-  *    pass (reused digest — the q40/q74 pattern; a Catalyst
-  *    higher-order fold evaluates interpreted and measured ~50x
-  *    slower). Scoring 100 TB is one pass that writes (doc_id, score).
+  * Scale shape: SCORING ([[scoreDocs]]) is ZERO-shuffle: weights ride
+  * as a broadcast and each doc's logit is one scan-side typed-kernel
+  * pass (reused digest — the q40/q74 pattern; a Catalyst higher-order
+  * fold evaluates interpreted and measured ~50x slower). Scoring 100 TB
+  * is one pass that writes (doc_id, score).
   *
   * The scoring kernel is cross-engine oracleable at nBuckets = 256
   * with a fixed weight vector (q75) — the degenerate-rendition
   * convention (q56/q59/q72): the oracle exercises the SAME fold /
-  * normalize / sigmoid code path the trained model runs.
+  * normalize / sigmoid code path any model runs.
   *
   * NULL texts have no grams and are dropped (the q13/q74 convention).
   */
@@ -194,112 +185,5 @@ object Classifier {
       s"$path: corrupt model — header says $nBuckets weights, body has " +
         s"${weights.length}")
     FilterModel(nBuckets, weights, bias)
-  }
-
-  /** One encoded training doc: label + per-gram bucket ids (occurrence
-    * list, not a count map — the gradient walks it once) — all ints,
-    * the cached unit of the epoch scans.
-    */
-  final case class EncDoc(y: Double, buckets: Array[Int])
-
-  /** Encode labeled docs to all-int form through the SAME JVM bucket
-    * kernel the specs pin against the oracle derivation. Docs with no grams
-    * carry no gradient and are dropped here.
-    */
-  def encode(labeled: DataFrame, textCol: String, labelCol: String,
-             nBuckets: Int): Dataset[EncDoc] = {
-    requireBuckets(nBuckets)
-    val spark = labeled.sparkSession
-    import spark.implicits._
-    labeled
-      .select(col(labelCol).cast("double").as("y"), col(textCol).as("t"))
-      .as[(Double, String)]
-      .mapPartitions { it =>
-        // one digest per partition (the scoreDocs hot-loop shape), not
-        // one MessageDigest.getInstance per gram
-        val md = java.security.MessageDigest.getInstance("MD5")
-        it.flatMap { case (y, t) =>
-          val gs = (Decontam.shinglesOf(t, 1) ++ Decontam.shinglesOf(t, 2))
-            .map(bucketWith(md, _, nBuckets)).toArray
-          if (gs.isEmpty) None else Some(EncDoc(y, gs))
-        }
-      }
-  }
-
-  /** Per-doc gradient contribution, shared between the distributed
-    * epoch and the spec's sequential driver fold: with x = normalized
-    * counts, z = bias + Σ w[b]/n, g = σ(z) − y, emit g/n per
-    * occurrence into `acc` (indices 0..nBuckets-1) and g into the bias
-    * slot (index nBuckets).
-    */
-  private[pipeline] def accumulate(doc: EncDoc, w: Array[Double],
-                                   bias: Double,
-                                   acc: Array[Double]): Unit = {
-    val n = doc.buckets.length.toDouble
-    var z = 0.0
-    var i = 0
-    while (i < doc.buckets.length) { z += w(doc.buckets(i)); i += 1 }
-    z = bias + z / n
-    val g = 1.0 / (1.0 + math.exp(-z)) - doc.y
-    val gn = g / n
-    i = 0
-    while (i < doc.buckets.length) { acc(doc.buckets(i)) += gn; i += 1 }
-    acc(w.length) += g
-  }
-
-  /** One full-batch gradient under broadcast weights — dense
-    * per-partition accumulation, `treeAggregate`d. Exposed for the
-    * parity gate in ClassifierSpec (must equal a sequential
-    * [[accumulate]] fold up to float summation order).
-    */
-  private[pipeline] def distributedGradient(enc: Dataset[EncDoc],
-                                            w: Array[Double],
-                                            bias: Double): Array[Double] = {
-    val spark = enc.sparkSession
-    val bw = spark.sparkContext.broadcast(w)
-    val n = w.length
-    try {
-      enc.rdd.treeAggregate(new Array[Double](n + 1))(
-        seqOp = (acc, d) => { accumulate(d, bw.value, bias, acc); acc },
-        combOp = (a, b) => {
-          var i = 0
-          while (i <= n) { a(i) += b(i); i += 1 }
-          a
-        },
-        depth = 2)
-    } finally bw.destroy()
-  }
-
-  /** Train the quality filter: distributed full-batch gradient descent
-    * with L2 regularization. `labeled` carries a 0/1 label column
-    * (1 = high quality). Deterministic: full-batch gradients are
-    * order-free up to float summation, the encoding is a pure function
-    * of the text, and the step schedule is fixed.
-    */
-  def trainFilter(labeled: DataFrame, textCol: String, labelCol: String,
-                  nBuckets: Int = 4096, epochs: Int = 60,
-                  learnRate: Double = 2.0, l2: Double = 1e-4,
-                  log: String => Unit = _ => ()): FilterModel = {
-    requireBuckets(nBuckets)
-    require(epochs >= 1, s"epochs must be >= 1: $epochs")
-    val enc = encode(labeled, textCol, labelCol, nBuckets)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nDocs = enc.count()
-      require(nDocs > 0, "no labeled docs with grams to train on")
-      log(s"[quality-lr] buckets=$nBuckets docs=$nDocs epochs=$epochs")
-      val w = new Array[Double](nBuckets)
-      var bias = 0.0
-      for (epoch <- 1 to epochs) {
-        val grad = distributedGradient(enc, w, bias)
-        var i = 0
-        while (i < nBuckets) {
-          w(i) -= learnRate * (grad(i) / nDocs + l2 * w(i)); i += 1
-        }
-        bias -= learnRate * grad(nBuckets) / nDocs
-        if (epoch % 10 == 0) log(f"[quality-lr] epoch $epoch%3d done")
-      }
-      FilterModel(nBuckets, w, bias)
-    } finally enc.unpersist()
   }
 }

@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * that graph (degree profiles for hub detection, triangles for
   * alias-cluster sanity, k-hop neighborhoods for context harvesting,
   * PageRank for entity salience) stops one step short of useful. These
-  * operators take a generic edge DataFrame (two long node columns), so
+  * operators take a generic edge DataFrame (two long node columns,
+  * `src` and `dst`), so
   * they run over KG triples (`subj`/`obj` keyed by dictionary-encoded
   * ids) and over any relational edge derivation alike.
   *
@@ -33,20 +34,20 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  private def canon(edges: DataFrame, src: String, dst: String): DataFrame =
+  private def canon(edges: DataFrame): DataFrame = {
+    val (src, dst) = (col("src"), col("dst"))
     edges
-      .where(col(src).isNotNull && col(dst).isNotNull && col(src) =!= col(dst))
-      .select(least(col(src), col(dst)).as("a"),
-              greatest(col(src), col(dst)).as("b"))
+      .where(src.isNotNull && dst.isNotNull && src =!= dst)
+      .select(least(src, dst).as("a"), greatest(src, dst).as("b"))
       .distinct()
+  }
 
   /** Undirected degree per node: distinct-neighbor count over the
     * de-duplicated, self-loop-free undirected closure of `edges`.
     * Two shuffles (edge distinct, count), both keyed on longs.
     */
-  def degrees(edges: DataFrame, src: String = "src", dst: String = "dst")
-      : DataFrame =
-    canon(edges, src, dst)
+  def degrees(edges: DataFrame): DataFrame =
+    canon(edges)
       .select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy("node")
       .agg(count(lit(1)).as("degree"))
@@ -61,9 +62,8 @@ object Graph {
     * the wedge self-join is keyed on the wedge apex; the closing join
     * is keyed on the (v, w) pair — all fixed-width.
     */
-  def triangles(edges: DataFrame, src: String = "src", dst: String = "dst")
-      : DataFrame = {
-    val und = canon(edges, src, dst)
+  def triangles(edges: DataFrame): DataFrame = {
+    val und = canon(edges)
     val deg = und.select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("degree"))
 
@@ -104,9 +104,8 @@ object Graph {
     * adjacency. At web scale the distinct on (node, peer) is the
     * dominant exchange — fixed-width, two longs.
     */
-  def twoHopCounts(edges: DataFrame, src: String = "src", dst: String = "dst")
-      : DataFrame = {
-    val und = canon(edges, src, dst)
+  def twoHopCounts(edges: DataFrame): DataFrame = {
+    val und = canon(edges)
     val adj = und.select(col("a").as("x"), col("b").as("y"))
       .unionByName(und.select(col("b").as("x"), col("a").as("y")))
     val nn = adj.select(col("x"), col("y").as("mid"))
@@ -144,8 +143,8 @@ object Graph {
     * floating-point PageRank, deterministic per plan but compared by
     * tolerance (GraphSpec pins it against a driver recompute).
     */
-  def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85,
-               src: String = "src", dst: String = "dst"): DataFrame = {
+  def pageRank(edges: DataFrame, iters: Int,
+               damping: Double = 0.85): DataFrame = {
     require(iters >= 1 && iters <= 200, s"iters out of range: $iters")
     require(damping >= 0.0 && damping <= 1.0, s"damping out of range: $damping")
     // The edge frame is read by nodes, outDeg, and EVERY iteration's
@@ -159,7 +158,7 @@ object Graph {
     // edge set every round — one upfront edge shuffle buys `iters`
     // avoided ones (measured: q82 3.45 -> 2.92 s at sf0.1; the outDeg
     // aggregate reuses the same partitioning for free).
-    val e = edges.select(col(src).as("s"), col(dst).as("t"))
+    val e = edges.select(col("src").as("s"), col("dst").as("t"))
       .where(col("s").isNotNull && col("t").isNotNull)
       .repartition(col("s"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

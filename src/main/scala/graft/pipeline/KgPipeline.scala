@@ -258,13 +258,16 @@ object KgPipeline {
   //  input_hint — SURVEY.md §2.9)
   // ------------------------------------------------------------------
 
+  /** Round budget of [[connectedComponents]]. */
+  private val CcMaxRounds = 20
+
   /** Minimum-label propagation (hash-to-min) over an undirected edge
     * set. Returns (node, component) where component = min node id in the
     * component. Edge sets here are alias clusters: tiny diameter, so the
-    * fixpoint converges in a handful of rounds; each round's lineage is
-    * truncated via [[Lineage.chk]].
+    * fixpoint converges in a handful of rounds (at most [[CcMaxRounds]]);
+    * each round's lineage is truncated via [[Lineage.chk]].
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
+  def connectedComponents(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     // undirected, distinct edge set (the only wide dep on the full input)
     val und = Lineage.chk(edges.select(col("src"), col("dst"))
@@ -277,7 +280,7 @@ object KgPipeline {
     var iter = 0
     var converged = false
     try {
-      while (iter < maxIter && !converged) {
+      while (iter < CcMaxRounds && !converged) {
         // (loop body below; non-convergence fails LOUD after the loop —
         // silently returning split components would corrupt canonical ids)
         val viaNeighbor = und
@@ -301,9 +304,9 @@ object KgPipeline {
       }
     } finally Lineage.dropCheckpointFiles(spark, Lineage.checkpointFileOf(und))
     if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIter rounds — " +
-        "component diameter exceeds the iteration budget; raise maxIter " +
-        "(min-label propagation needs ~diameter rounds)")
+      s"connectedComponents did not converge in $CcMaxRounds rounds — " +
+        "component diameter exceeds the iteration budget (min-label " +
+        "propagation needs ~diameter rounds)")
     labels
   }
 
@@ -883,25 +886,19 @@ object KgPipeline {
   }
 
   /** Changed files whose NEW content yields ZERO triples (an edit that
-    * removed every entity mention) contribute no upsert keys — without
-    * an explicit delete their STALE triples would survive the merge.
-    * Return `deletedFiles` plus those vacated keys (anti-join keeps the
-    * result disjoint from the upsert keys, as mergeBuckets' ambiguity
+    * removed every entity mention, or emptied the file) contribute no
+    * upsert keys — without an explicit delete their STALE triples would
+    * survive the merge. Returns those vacated keys (the anti-join keeps
+    * them disjoint from the upsert keys, as mergeBuckets' ambiguity
     * fail-fast requires; delta-sized frames throughout).
     */
-  private def withVacatedFiles(changed: Dataset[RepoFile],
-                               trip: DataFrame,
-                               deletedFiles: Option[DataFrame])
-      : Option[DataFrame] = {
-    val vacated = changed.toDF()
+  private def vacatedFiles(changed: Dataset[RepoFile],
+                           trip: DataFrame): DataFrame =
+    changed.toDF()
       .select(col("repo").as("src_repo"), col("path").as("src_path"))
       .distinct()
       .join(trip.select("src_repo", "src_path").distinct(),
         Seq("src_repo", "src_path"), "left_anti")
-    Some(deletedFiles.fold(vacated)(_
-      .select(col("src_repo"), col("src_path")).unionByName(vacated)
-      .distinct()))
-  }
 
   // ------------------------------------------------------------------
   // Incremental canonicalization (persisted evidence -> exact parity)
@@ -1043,15 +1040,16 @@ object KgPipeline {
     * committed triples table ([[graft.KgMain]]'s layout: buckets on
     * (src_repo, src_path)). Changed files REPLACE every triple they
     * previously contributed (file-level upsert — each triple row is
-    * owned by its provenance file), `deletedFiles` (src_repo, src_path)
-    * retract theirs, and NER cost is ∝ delta, not corpus;
+    * owned by its provenance file), a changed file with no triples left
+    * retracts its old ones, and NER cost is ∝ delta, not corpus;
     * [[graft.io.TableIO.mergeBuckets]] rewrites exactly the buckets the
     * touched files route to. The delta's triples are materialized under
     * the GLOBAL canonical map (all evidence ever ingested, not just this
     * batch's), and previously-written triples whose canon ids drifted
     * are reconciled in place — the committed table always equals a full
-    * pipeline re-run over the union of every batch's files (deletions
-    * retract triples but not alias evidence; see [[CanonState]]).
+    * pipeline re-run over the union of every batch's files (a
+    * retraction removes triples but not alias evidence; see
+    * [[CanonState]]).
     *
     * Crash ordering: delta merge, then reconcile, then state save —
     * each idempotent, so re-running after a crash at any boundary
@@ -1062,8 +1060,7 @@ object KgPipeline {
     */
   def mergeDeltaCanonical(spark: SparkSession, triplesDir: String,
                           buckets: Int, changed: Dataset[RepoFile],
-                          model: NerfModel, stateDir: String,
-                          deletedFiles: Option[DataFrame] = None)
+                          model: NerfModel, stateDir: String)
       : (graft.io.TableIO.MergeReport, graft.io.TableIO.MergeReport) = {
     val ments = detectMentions(spark, changed, model)
     val kb = kbAliasDf(spark, Synth.knowledgeBase)
@@ -1079,7 +1076,7 @@ object KgPipeline {
           buckets, bucketCols = Seq("src_repo", "src_path"),
           keyCols = Seq("src_repo", "src_path"),
           upserts = trip,
-          deleteKeys = withVacatedFiles(changed, trip, deletedFiles))
+          deleteKeys = Some(vacatedFiles(changed, trip)))
         val hasDrift = !cd.remap.isEmpty
         val reconcileReport =
           if (hasDrift) reconcileCanon(spark, triplesDir, buckets, cd.remap)
@@ -1120,13 +1117,13 @@ object KgPipeline {
     * BASELINE.md bench protocol step 1). No driver-side materialization —
     * the same code path scales to arbitrary row counts.
     */
-  def synthInput(spark: SparkSession, nFiles: Long, sentsPerFile: Int = 8,
+  def synthInput(spark: SparkSession, nFiles: Long,
                  seed: Long = 42L, partitions: Int = 0): Dataset[RepoFile] = {
     import spark.implicits._
     val base = if (partitions > 0) spark.range(0L, nFiles, 1L, partitions)
                else spark.range(nFiles)
     base.map { i =>
-      val r = Synth.repoRow(i, sentsPerFile, seed = seed)
+      val r = Synth.repoRow(i, seed = seed)
       RepoFile(r.repo, r.path, r.commit, r.lang, r.content)
     }
   }

@@ -86,14 +86,14 @@ private[graft] object Lineage {
     * files; local checkpoints quietly unpersist their blocks. The
     * frame is NOT recomputable afterwards — release means "done".
     */
-  def release(ds: Dataset[_], blocking: Boolean = false): Unit =
+  def release(ds: Dataset[_]): Unit =
     ds.queryExecution.logical match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.getCheckpointFile match {
           case some @ Some(_) =>
             dropCheckpointFiles(ds.sparkSession, some)
-          case None => quietUnpersist(lr.rdd, blocking)
+          case None => quietUnpersist(lr.rdd, blocking = false)
         }
-      case _ => ds.unpersist(blocking)
+      case _ => ds.unpersist()
     }
 }

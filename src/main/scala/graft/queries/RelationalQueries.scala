@@ -1451,8 +1451,7 @@ object RelationalQueries {
     * start a new session. Delegates to [[graft.pipeline.Sessionize]]'s
     * single-pass form (one user_id exchange shared by both windows,
     * plan-gated); its scaladoc states the intrinsic hot-user window-
-    * partition skew bound and [[graft.pipeline.Sessionize.sessionsTwoPass]]
-    * is the mitigation (parity-gated on a Zipf-hot fixture).
+    * partition skew bound.
     * Deterministic tie-break on event_id for equal timestamps (a
     * nondeterministic window order would flake the cross-engine hash).
     */

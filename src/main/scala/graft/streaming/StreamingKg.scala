@@ -31,10 +31,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * full re-merge byte-identical) — so the composition is effectively
   * exactly-once on table content.
   *
-  * Single-maintainer contract (same as all TableIO maintenance): one
-  * maintenance writer per table at a time. Micro-batches of one query
-  * serialize by construction; do not run a second maintenance job —
-  * streaming or batch — against the same `triplesDir` concurrently.
+  * Single-maintainer contract: one maintenance writer per table at a
+  * time. Micro-batches of one query serialize by construction. A second
+  * maintenance job — streaming or batch — against the same `triplesDir`
+  * fails fast when its merge reaches a bucket this one holds (TableIO's
+  * per-bucket locks), but the canonicalization state has one writer and
+  * no lock, so do not run one concurrently at all.
   */
 object StreamingKg {
 

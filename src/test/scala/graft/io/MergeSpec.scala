@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Gates for [[TableIO.mergeBuckets]] — the copy-on-write MERGE a
   * living KG table needs: exact upsert/delete semantics vs a driver
   * recompute, untouched buckets byte-identical, the audit green after a
-  * merge, ambiguity/validation fail-fasts, both crash-window repairs,
-  * zero-row bucket handling, and lineage preservation across merges.
+  * merge, ambiguity/validation fail-fasts, both crash states of the
+  * publish, the bucket lock, zero-row bucket handling, and lineage
+  * preservation across merges.
   */
 class MergeSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -46,11 +47,33 @@ class MergeSpec extends AnyFunSuite {
       .select(col("k"), col("tag"), col("v")).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
 
+  /** Every file of bucket `k`, data and manifest: relative path, size. */
   private def bucketListing(dir: String, k: Int): Seq[(String, Long)] = {
-    val d = new java.io.File(s"$dir/data/_bucket=$k")
-    if (!d.exists()) Seq.empty
-    else d.listFiles().filter(_.getName.endsWith(".parquet"))
-      .map(f => (f.getName, f.length())).sorted.toSeq
+    val root = java.nio.file.Paths.get(dir)
+    val files = Seq(root.resolve(s"data/_bucket=$k"),
+      root.resolve(s"_commits/bucket-$k.json"))
+      .filter(java.nio.file.Files.exists(_))
+      .flatMap(p => java.nio.file.Files.walk(p).toArray.toSeq)
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(java.nio.file.Files.isRegularFile(_))
+    files.map(f => (root.relativize(f).toString, java.nio.file.Files.size(f)))
+      .sorted
+  }
+
+  /** The version directories of bucket `k` on disk. */
+  private def versions(dir: String, k: Int): Set[String] =
+    Option(new java.io.File(s"$dir/data/_bucket=$k").list())
+      .fold(Set.empty[String])(_.toSet)
+
+  /** The version directory bucket `k`'s manifest names. */
+  private def named(dir: String, k: Int): String =
+    "_v=" + TableIO.readManifest(dir, k,
+      spark.sessionState.newHadoopConf()).get.data
+
+  private def copyDir(src: String, dst: String): Unit = {
+    val (s, d) = (java.nio.file.Paths.get(src), java.nio.file.Paths.get(dst))
+    java.nio.file.Files.walk(s).forEach(p =>
+      java.nio.file.Files.copy(p, d.resolve(s.relativize(p).toString)))
   }
 
   test("merge semantics: replace / insert / delete, untouched buckets byte-identical") {
@@ -74,7 +97,7 @@ class MergeSpec extends AnyFunSuite {
       upserts.toSet
     assert(readBack(dir) == want)
     assert(report.rowsAfter == report.rowsBefore - 4 + 3)
-    // untouched buckets: same files, same sizes
+    // untouched buckets: same data files and manifests, same sizes
     untouched.foreach(k => assert(bucketListing(dir, k) == before(k),
       s"bucket $k was rewritten by a merge that never touched it"))
     // manifests audit clean after the merge
@@ -125,7 +148,7 @@ class MergeSpec extends AnyFunSuite {
     val (jobs1, r1) = mergeJobs(oneBucket)
     val (jobs4, r4) = mergeJobs(fourBuckets)
     assert(r1.affectedBuckets.length == 1 && r4.affectedBuckets.length == 4)
-    // the staged manifests come from the merge write's own counters; a
+    // the manifests come from the merge write's own counters; a
     // read-back of each affected bucket would add jobs per bucket
     assert(jobs4 == jobs1,
       s"a 4-bucket merge launched $jobs4 jobs, a 1-bucket merge $jobs1")
@@ -153,155 +176,68 @@ class MergeSpec extends AnyFunSuite {
     }
   }
 
-  test("crash between swap renames: rolled back, merge re-runs to the right state") {
+  test("crash states of mergeBuckets: published rows only; next call reaps") {
     val base = baseRows(100)
     val dir = freshTable(base)
-    val key = 5L
-    val k = bucketOf(key)
-    // simulate the worst window: live dir renamed aside, a staged
-    // manifest from the dead merge left behind, live missing
-    val live = new java.io.File(s"$dir/data/_bucket=$k")
-    val backup = new java.io.File(s"$dir/data/.premerge-$k")
-    assert(live.exists())
-    assert(live.renameTo(backup))
-    new java.io.File(s"$dir/_merge_tmp").mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/_merge_tmp/manifest-$k.json"),
-      s"""{"bucket":$k,"rows":1,"checksum":42,"layout":2,"buckets":$Buckets,"lineage":{}}"""
-        .getBytes("UTF-8"))
-    // a reader in the crash window fails LOUDLY, not short
-    intercept[Exception] {
-      TableIO.readCommitted(spark, dir, Buckets).count()
-    }
-    // the next merge repairs (roll back) and then applies its delta
-    val report = TableIO.mergeBuckets(spark, dir, Buckets, Seq("k"),
-      Seq("k"), df(Seq((key, "tag-new", 1L))), None)
-    assert(report.affectedBuckets.contains(k))
-    assert(!backup.exists())
-    assert(!new java.io.File(s"$dir/_merge_tmp/manifest-$k.json").exists())
-    val want = base.filterNot(_._1 == key).toSet + ((key, "tag-new", 1L))
+    val (kPub, kCrash) = (bucketOf(5L), bucketOf(6L))
+    assume(kPub != kCrash)
+    // (b) a merge published its manifest and crashed before reaping:
+    // its superseded version is still on disk beside the published one
+    val superseded = named(dir, kPub)
+    val saved = java.nio.file.Files.createTempDirectory("superseded")
+      .resolve("v")
+    copyDir(s"$dir/data/_bucket=$kPub/$superseded", saved.toString)
+    TableIO.mergeBuckets(spark, dir, Buckets, Seq("k"), Seq("k"),
+      df(Seq((5L, "tag-new", 1L))), None)
+    copyDir(saved.toString, s"$dir/data/_bucket=$kPub/$superseded")
+    assert(versions(dir, kPub) == Set(named(dir, kPub), superseded))
+    // (a) a merge wrote its version and crashed before publishing it
+    df(Seq((6L, "tag-phantom", 2L))).coalesce(1)
+      .write.parquet(s"$dir/data/_bucket=$kCrash/_v=crashed")
+    assert(versions(dir, kCrash) == Set(named(dir, kCrash), "_v=crashed"))
+    // readers and the audit see exactly the published rows
+    val want = base.filterNot(_._1 == 5L).toSet + ((5L, "tag-new", 1L))
+    assert(TableIO.readCommitted(spark, dir, Buckets).count() == want.size)
     assert(readBack(dir) == want)
+    assert(TableIO.verifyCommits(spark, dir, Buckets).isEmpty)
+    // the next merge on both buckets merges the published rows and
+    // leaves only the versions it names
+    val next = Seq((5L, "tag-next", 3L), (6L, "tag-next", 4L))
+    TableIO.mergeBuckets(spark, dir, Buckets, Seq("k"), Seq("k"), df(next),
+      None)
+    Seq(kPub, kCrash).foreach(k =>
+      assert(versions(dir, k) == Set(named(dir, k)), s"bucket $k"))
+    assert(readBack(dir) == want.filterNot(r => r._1 == 5L || r._1 == 6L) ++
+      next)
     assert(TableIO.verifyCommits(spark, dir, Buckets).isEmpty)
   }
 
-  test("crash after manifest install: rolled forward (backup reclaimed)") {
-    val base = baseRows(100)
+  test("a second merge on an overlapping bucket fails fast on the bucket lock") {
+    val base = baseRows(40)
     val dir = freshTable(base)
-    val k = 3
-    // simulate: swap + manifest install done, backup + staged not cleaned
-    val live = java.nio.file.Paths.get(s"$dir/data/_bucket=$k")
-    val backup = java.nio.file.Paths.get(s"$dir/data/.premerge-$k")
-    assume(java.nio.file.Files.exists(live))
-    // backup = a copy of live (content identical stands in for "old")
-    java.nio.file.Files.createDirectory(backup)
-    java.nio.file.Files.list(live).forEach { f =>
-      java.nio.file.Files.copy(f, backup.resolve(f.getFileName.toString))
-    }
-    new java.io.File(s"$dir/_merge_tmp").mkdirs()
-    val installed = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/_commits/bucket-$k.json")), "UTF-8")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/_merge_tmp/manifest-$k.json"),
-      installed.getBytes("UTF-8")) // staged == installed → swap completed
-    // any merge touching the bucket rolls forward (reclaims the backup)
-    // without disturbing the live data
-    val someKeyInK = (0L until 100L).find(bucketOf(_) == k).get
-    val report = TableIO.mergeBuckets(spark, dir, Buckets, Seq("k"),
-      Seq("k"), df(Seq((someKeyInK, "tag-fwd", 9L))), None)
-    assert(report.affectedBuckets.contains(k))
-    assert(!java.nio.file.Files.exists(backup))
-    val want = base.filterNot(_._1 == someKeyInK).toSet +
-      ((someKeyInK, "tag-fwd", 9L))
-    assert(readBack(dir) == want)
-  }
-
-  test("no-op replay crash between renames rolls BACK (manifest equality alone must not reclaim the backup)") {
-    val base = baseRows(100)
-    val dir = freshTable(base)
-    val key = 7L
-    val k = bucketOf(key)
-    // simulate an at-least-once REPLAY of an already-applied merge
-    // crashing between the two renames: live parked in the backup, and
-    // the staged manifest BYTE-IDENTICAL to the committed one (a
-    // content-no-op merge re-stages exactly what is installed). The old
-    // discriminator (installed == staged ⇒ roll forward) would delete
-    // the backup — the only copy of the bucket.
-    val live = new java.io.File(s"$dir/data/_bucket=$k")
-    val backup = new java.io.File(s"$dir/data/.premerge-$k")
-    assert(live.exists())
-    assert(live.renameTo(backup))
-    new java.io.File(s"$dir/_merge_tmp").mkdirs()
-    val installed = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/_commits/bucket-$k.json")), "UTF-8")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/_merge_tmp/manifest-$k.json"),
-      installed.getBytes("UTF-8"))
-    // the next merge must restore the backup, then apply its delta —
-    // nothing lost
-    val report = TableIO.mergeBuckets(spark, dir, Buckets, Seq("k"),
-      Seq("k"), df(Seq((key, "tag-replay", 1L))), None)
-    assert(report.affectedBuckets.contains(k))
-    assert(!backup.exists())
-    val want = base.filterNot(_._1 == key).toSet + ((key, "tag-replay", 1L))
-    assert(readBack(dir) == want)
-    assert(TableIO.verifyCommits(spark, dir, Buckets).isEmpty)
-  }
-
-  test("crash after tmp→live rename into a previously-EMPTY bucket: uncommitted rows rolled back, never resurrected") {
-    // all base keys routed to ONE bucket leave the rest committed-empty
-    // (rows=0 manifest, no dir — writeResumable's contract)
-    val k0 = bucketOf(0L)
-    val base = (0L until 1000L).filter(bucketOf(_) == k0).take(20)
-      .map(i => (i, s"tag-old-$i", i * 10))
-    val dir = freshTable(base)
-    val kEmpty = (0 until Buckets).find(_ != k0).get
-    val keyNew = (0L until 1000L).find(bucketOf(_) == kEmpty).get
-    val live = new java.io.File(s"$dir/data/_bucket=$kEmpty")
-    assert(!live.exists(), "fixture bucket must start empty")
-    // simulate the crash window an empty-origin merge leaves: tmp data
-    // renamed into place (live dir holds the dead merge's UNCOMMITTED
-    // rows), staged manifest present, committed manifest still rows=0,
-    // and NO backup (live never existed, so no rename-aside happened)
-    val tmp = java.nio.file.Files.createTempDirectory("phantom").toString
-    df(Seq((keyNew, "tag-phantom", 1L))).coalesce(1)
-      .write.mode("overwrite").parquet(tmp)
-    assert(new java.io.File(tmp).renameTo(live))
-    new java.io.File(s"$dir/_merge_tmp").mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/_merge_tmp/manifest-$kEmpty.json"),
-      s"""{"bucket":$kEmpty,"rows":1,"checksum":42,"layout":2,"buckets":$Buckets,"lineage":{}}"""
-        .getBytes("UTF-8"))
-    // the next merge must DISCARD the phantom rows (they never
-    // committed), then apply its own delta — the pre-fix repair kept
-    // the live dir, and the merge read "tag-phantom" as committed old
-    // data and silently committed it
-    val report = TableIO.mergeBuckets(spark, dir, Buckets, Seq("k"),
-      Seq("k"), df(Seq((keyNew, "tag-new", 2L))), None)
-    assert(report.affectedBuckets.contains(kEmpty))
-    assert(!new java.io.File(s"$dir/_merge_tmp/manifest-$kEmpty.json").exists())
-    val got = readBack(dir)
-    assert(!got.exists(_._2 == "tag-phantom"),
-      "a crashed merge's uncommitted rows were resurrected as committed data")
-    assert(got == base.toSet + ((keyNew, "tag-new", 2L)))
-    assert(TableIO.verifyCommits(spark, dir, Buckets).isEmpty)
-  }
-
-  test("merges serialize on the table lock (shared staging area)") {
-    val dir = freshTable(baseRows(40))
-    new java.io.File(s"$dir/_merge_tmp").mkdirs()
-    val lock = new java.io.File(s"$dir/_merge_tmp/_merge.lock")
-    assert(lock.createNewFile())
+    val (kBusy, kFree) = (bucketOf(1L), bucketOf(2L))
+    assume(kBusy != kFree)
+    // a merge in flight on kBusy holds that bucket's lock
+    val locks = new java.io.File(s"$dir/_locks")
+    val busy = new java.io.File(locks, s"bucket-$kBusy.lock")
+    locks.mkdirs()
+    assert(busy.createNewFile())
+    // merges on disjoint buckets do not wait for each other
+    TableIO.mergeBuckets(spark, dir, Buckets, Seq("k"), Seq("k"),
+      df(Seq((2L, "tag-free", 2L))), None)
     val ex = intercept[IllegalStateException] {
       TableIO.mergeBuckets(spark, dir, Buckets, Seq("k"), Seq("k"),
-        df(Seq((1L, "tag-x", 1L))), None)
+        df(Seq((1L, "tag-x", 1L), (2L, "tag-x", 1L))), None)
     }
-    assert(ex.getMessage.contains("single-process per table"),
-      ex.getMessage)
-    assert(lock.delete())
-    // lock released → merge proceeds, and releases its own lock after
+    assert(ex.getMessage.contains("lock"), ex.getMessage)
+    // the refused merge changed nothing and released what it took
+    assert(locks.list().toSeq == Seq(busy.getName))
+    val want = base.filterNot(_._1 == 2L).toSet + ((2L, "tag-free", 2L))
+    assert(readBack(dir) == want)
+    assert(busy.delete())
     TableIO.mergeBuckets(spark, dir, Buckets, Seq("k"), Seq("k"),
-      df(Seq((1L, "tag-x", 1L))), None)
-    assert(!lock.exists(), "merge leaked its table lock")
+      df(Seq((1L, "tag-x", 1L), (2L, "tag-x", 1L))), None)
+    assert(locks.list().isEmpty, "merge leaked a bucket lock")
   }
 
   test("a table merged down to zero rows accepts a later merge") {

@@ -3,16 +3,12 @@ package graft.pipeline
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Gates on the trained quality classifier ([[Classifier]]):
+/** Gates on the quality classifier's scorer ([[Classifier]]):
   *  - the JVM bucket kernel must be BIT-PARITY with the column
-  *    expression (they meet in training vs scoring — a disagreement
-  *    would train on different features than it scores),
-  *  - the distributed treeAggregate gradient must equal a sequential
-  *    driver fold of the same per-doc kernel,
-  *  - training on a separable planted fixture must actually converge
-  *    and generalize to held-out docs from the same populations,
+  *    expression the q75 oracle replays,
   *  - scoring must be a zero-shuffle scan-side fold, and must equal a
-  *    driver recompute through the JVM kernel.
+  *    driver recompute through the JVM kernel,
+  *  - a saved model must load back bit-exact.
   */
 class ClassifierSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -22,16 +18,6 @@ class ClassifierSpec extends AnyFunSuite {
 
   private def gramsOf(t: String): Seq[String] =
     (Decontam.shinglesOf(t, 1) ++ Decontam.shinglesOf(t, 2)).toSeq
-
-  // two separable populations with a little shared vocabulary
-  private def fixture(n: Int, off: Int = 0) = {
-    import spark.implicits._
-    val good = (0 until n).map(i => (i.toLong,
-      s"the quick essay w${i + off} discusses history and with care", 1.0))
-    val bad = (0 until n).map(i => (n + i.toLong,
-      s"BUY cheap pills w${i + off} click WIN FREE casino now", 0.0))
-    (good ++ bad).toDF("doc_id", "text", "label")
-  }
 
   test("JVM bucket kernel is bit-parity with the column expression") {
     assume(available)
@@ -49,41 +35,6 @@ class ClassifierSpec extends AnyFunSuite {
           s"bucket kernel diverged on '$g' at nBuckets=$nb")
       }
     }
-  }
-
-  test("distributed gradient equals a sequential driver fold") {
-    assume(available)
-    val enc = Classifier.encode(fixture(60), "text", "label", 512)
-    val docs = enc.collect()
-    val rnd = new scala.util.Random(7)
-    val w = Array.fill(512)(rnd.nextGaussian() * 0.1)
-    val bias = 0.3
-    val want = new Array[Double](513)
-    docs.foreach(d => Classifier.accumulate(d, w, bias, want))
-    val got = Classifier.distributedGradient(enc.repartition(8), w, bias)
-    assert(got.length == want.length)
-    got.indices.foreach { i =>
-      val denom = math.max(1e-12, math.abs(want(i)))
-      assert(math.abs(got(i) - want(i)) / denom < 1e-9,
-        s"gradient slot $i: got ${got(i)}, want ${want(i)}")
-    }
-  }
-
-  test("training converges and generalizes on a separable fixture") {
-    assume(available)
-    val model = Classifier.trainFilter(fixture(80), "text", "label",
-      nBuckets = 2048, epochs = 80)
-    // held-out docs: same populations, unseen w$i filler tokens
-    val held = fixture(40, off = 1000)
-    val rows = Classifier.scoreDocs(held, "doc_id", "text", model)
-      .join(held, "doc_id")
-      .select("score", "label").collect()
-      .map(r => (r.getDouble(0), r.getDouble(1)))
-    assert(rows.length == 80)
-    val acc = rows.count { case (s, y) =>
-      (s >= 0.5 && y == 1.0) || (s < 0.5 && y == 0.0)
-    }.toDouble / rows.length
-    assert(acc >= 0.95, s"held-out accuracy $acc < 0.95")
   }
 
   test("scoreDocs runs unchanged on a stream, row-identical to batch") {

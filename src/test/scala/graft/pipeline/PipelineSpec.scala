@@ -22,6 +22,22 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = SparkTestSession.spark
   lazy val model = KgMain.model
 
+  /** The version directory bucket `k`'s manifest names. */
+  private def livePath(dir: String, k: Int): String =
+    TableIO.versionPath(dir, k, TableIO.readManifest(dir, k,
+      spark.sessionState.newHadoopConf()).get.data)
+
+  /** The version directories of bucket `k` on disk. */
+  private def versions(dir: String, k: Int): Set[String] =
+    Option(new java.io.File(s"$dir/data/_bucket=$k").list())
+      .fold(Set.empty[String])(_.toSet)
+
+  private def copyDir(src: String, dst: String): Unit = {
+    val (s, d) = (java.nio.file.Paths.get(src), java.nio.file.Paths.get(dst))
+    java.nio.file.Files.walk(s).forEach(p =>
+      java.nio.file.Files.copy(p, d.resolve(s.relativize(p).toString)))
+  }
+
   test("detectMentions finds entities in synthesized files, partition-independent") {
     import spark.implicits._
     val files1 = KgPipeline.synthInput(spark, 50, partitions = 1)
@@ -497,7 +513,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val commits = TableIO.writeResumable(df, s"$dir/t", 4, Seq("src_repo"))
     assert(commits.map(_.rows).sum == 300)
     commits.foreach { c =>
-      val d = new java.io.File(s"$dir/t/data/_bucket=${c.bucket}")
+      val d = new java.io.File(livePath(s"$dir/t", c.bucket))
       val files =
         if (d.exists()) d.listFiles().count(_.getName.endsWith(".parquet"))
         else 0
@@ -593,26 +609,43 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ex2.getMessage.contains("bucket"), ex2.getMessage)
   }
 
-  test("a zero-row bucket with stale uncommitted data is cleaned, not blessed") {
+  test("crash states of writeResumable: published rows only; next call reaps") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_io_stale").toString
-    val df = Seq(("r1", "a"), ("r2", "b"), ("r3", "c")).toDF("src_repo", "src_path")
-    // find a bucket that receives zero rows under buckets=64
-    val probe = df.withColumn("_b",
-      pmod(hash(col("src_repo")), lit(64))).select("_b")
-      .collect().map(_.getInt(0)).toSet
-    val emptyBucket = (0 until 64).find(k => !probe.contains(k)).get
-    // plant STALE parquet (a prior run's uncommitted leftovers) there
-    df.limit(2).write.parquet(s"$dir/t/data/_bucket=$emptyBucket")
-    val commits = TableIO.writeResumable(df, s"$dir/t", 64, Seq("src_repo"))
-    val c = commits.find(_.bucket == emptyBucket).get
-    assert(c.rows == 0L && c.checksum == 0L,
-      "stale rows must not be blessed into the manifest")
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$dir/t/data/_bucket=$emptyBucket")),
-      "stale bucket directory must be deleted")
-    // the audit agrees the table is clean
-    assert(TableIO.verifyCommits(spark, s"$dir/t", 64).isEmpty)
+    val dir = java.nio.file.Files.createTempDirectory("graft_io_crash").toString
+    val df = (1 to 200).map(i => (s"repo$i", s"path$i")).toDF("src_repo", "src_path")
+    val all = TableIO.writeResumable(df, s"$dir/t", 4, Seq("src_repo"))
+    val Seq(victim, other) = all.filter(_.rows > 0).map(_.bucket).take(2)
+    // (a) a write crashed before publishing bucket `victim`: its version
+    // is on disk, no manifest names it
+    val Seq(unpublished) = versions(s"$dir/t", victim).toSeq
+    val saved = java.nio.file.Files.createTempDirectory("superseded")
+      .resolve("v").toString
+    copyDir(s"$dir/t/data/_bucket=$victim/$unpublished", saved)
+    java.nio.file.Files.delete(
+      java.nio.file.Paths.get(s"$dir/t/_commits/bucket-$victim.json"))
+    // ... and an earlier crashed attempt left a version in bucket `other`
+    df.limit(3).write.parquet(s"$dir/t/data/_bucket=$other/_v=crashed")
+    val published = all.filter(_.bucket != victim).map(_.rows).sum
+    assert(TableIO.readCommitted(spark, s"$dir/t", 4).count() == published)
+    assert(TableIO.verifyCommits(spark, s"$dir/t", 4).isEmpty)
+    // the next write commits `victim` as a new version and reaps both
+    val redone = TableIO.writeResumable(df, s"$dir/t", 4, Seq("src_repo"))
+    assert(redone.map(_.bucket) == Seq(victim))
+    assert(redone.head == all.find(_.bucket == victim).get)
+    Seq(victim, other).foreach(k => assert(
+      versions(s"$dir/t", k) == Set(new java.io.File(livePath(s"$dir/t", k)).getName),
+      s"bucket $k"))
+    // (b) the write published and crashed before reaping: the version
+    // it superseded is back beside the published one
+    copyDir(saved, s"$dir/t/data/_bucket=$victim/$unpublished")
+    assert(versions(s"$dir/t", victim).size == 2)
+    assert(TableIO.readCommitted(spark, s"$dir/t", 4).count() ==
+      all.map(_.rows).sum)
+    assert(TableIO.verifyCommits(spark, s"$dir/t", 4).isEmpty)
+    // the next write has nothing to commit, and still reaps
+    assert(TableIO.writeResumable(df, s"$dir/t", 4, Seq("src_repo")).isEmpty)
+    assert(versions(s"$dir/t", victim) ==
+      Set(new java.io.File(livePath(s"$dir/t", victim)).getName))
   }
 
   test("reliable fixpoint checkpoints are cleaned after convergence (no leak)") {
@@ -672,6 +705,27 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ex2.getMessage.contains("missing"), ex2.getMessage)
   }
 
+  test("readCommitted fails loudly on a manifest missing its row count") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_io_field").toString
+    val df = (1 to 200).map(i => (s"repo$i", s"path$i")).toDF("src_repo", "src_path")
+    val commits = TableIO.writeResumable(df, s"$dir/t", 4, Seq("src_repo"))
+    val k = commits.find(_.rows > 0).get.bucket
+    // a manifest without "rows" must not read as an empty bucket: that
+    // would serve a silently short table
+    val p = s"$dir/t/_commits/bucket-$k.json"
+    val json = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(p)), "UTF-8")
+    val stripped = json.replaceFirst("\"rows\":\\d+,", "")
+    assert(stripped != json)
+    TableIO.atomicWrite(p, stripped)
+    val ex = intercept[IllegalArgumentException] {
+      TableIO.readCommitted(spark, s"$dir/t", 4).count()
+    }
+    assert(ex.getMessage.contains(p) && ex.getMessage.contains("rows"),
+      ex.getMessage)
+  }
+
   test("retry witness: scoped to its job group, sees stage and task retries") {
     val w = new TableIO.RetryWitness("mine")
     w.jobStarted("other", Seq(1, 2))
@@ -706,7 +760,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // checksum — the written files themselves are correct
     val inflated = TableIO.BucketCommit(truth.bucket, truth.rows + 5,
       truth.checksum ^ 0x5eedL)
-    val checked = TableIO.crossCheck(spark, s"$dir/t", inflated,
+    val checked = TableIO.crossCheck(spark, livePath(s"$dir/t", truth.bucket), inflated,
       spark.sessionState.newHadoopConf(), stageRetried = true)
     assert(checked == truth,
       s"recompute must restore footer-derived truth: got $checked want $truth")
@@ -714,7 +768,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // double-apply: files the job wrote are missing — must fail fast,
     // not bless the surviving partial data (partial-loss hole)
     val ex = intercept[IllegalStateException] {
-      TableIO.crossCheck(spark, s"$dir/t", inflated,
+      TableIO.crossCheck(spark, livePath(s"$dir/t", truth.bucket), inflated,
         spark.sessionState.newHadoopConf(), stageRetried = false)
     }
     assert(ex.getMessage.contains("missing"), ex.getMessage)
@@ -741,15 +795,15 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // pick a bucket that actually has several files
     val conf = spark.sessionState.newHadoopConf()
     val k = (0 until 4).find { b =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/t/data/_bucket=$b")
+      val p = new org.apache.hadoop.fs.Path(livePath(s"$dir/t", b))
       val fs = p.getFileSystem(conf)
       fs.exists(p) &&
         fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet")) > 1
     }.getOrElse(fail("fixture produced no multi-file bucket"))
     // refusal FIRST, while the bucket still has multiple files (the
     // early exit would otherwise skip verification entirely): a
-    // manifest whose checksum cannot be reproduced must not swap —
-    // originals stay untouched. Rewrite through the same Hadoop-FS
+    // rewrite that cannot reproduce the manifest's checksum is never
+    // published — the committed version stays untouched. Rewrite through the same Hadoop-FS
     // path the writer uses — a raw nio write would orphan
     // LocalFileSystem's .crc sidecar.
     val commitFile = s"$dir/t/_commits/bucket-$k.json"
@@ -782,33 +836,51 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(TableIO.compactBucket(spark, s"$dir/t", 4, k) == 1)
   }
 
-  test("bucket compaction repairs a crash between the swap renames") {
+  test("crash states of compactBucket: published rows only; next call reaps") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_io_crash").toString
     val df = (1 to 200).map(i => (s"repo${i % 5}", s"path$i"))
       .toDF("src_repo", "src_path")
-    TableIO.writeResumable(df, s"$dir/t", 4, Seq("src_repo"))
-    val conf = spark.sessionState.newHadoopConf()
-    val k = (0 until 4).find { b =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/t/data/_bucket=$b")
-      p.getFileSystem(conf).exists(p)
-    }.get
-    val before = TableIO.readCommitted(spark, s"$dir/t", 4).count()
-    // simulate the crash window: original moved aside, replacement not
-    // yet in place — the bucket directory is GONE with a backup present
-    val bucketPath = new org.apache.hadoop.fs.Path(s"$dir/t/data/_bucket=$k")
-    val backup = new org.apache.hadoop.fs.Path(s"$dir/t/data/.precompact-$k")
-    val fs = bucketPath.getFileSystem(conf)
-    require(fs.rename(bucketPath, backup))
-    // in the window, the committed read fails LOUDLY (no short table)
-    val ex = intercept[IllegalArgumentException] {
-      TableIO.readCommitted(spark, s"$dir/t", 4).count()
+    val maxRecords = "spark.sql.files.maxRecordsPerFile"
+    val prevMaxRecords = spark.conf.getOption(maxRecords)
+    spark.conf.set(maxRecords, "20")
+    try TableIO.writeResumable(df, s"$dir/t", 4, Seq("src_repo"))
+    finally prevMaxRecords match {
+      case Some(v) => spark.conf.set(maxRecords, v)
+      case None => spark.conf.unset(maxRecords)
     }
-    assert(ex.getMessage.contains("missing"), ex.getMessage)
-    // the next compaction restores the backup, then compacts normally
+    val k = (0 until 4).find(b => Option(new java.io.File(livePath(s"$dir/t", b))
+      .list()).exists(_.count(_.endsWith(".parquet")) > 1))
+      .getOrElse(fail("fixture produced no multi-file bucket"))
+    val before = TableIO.readCommitted(spark, s"$dir/t", 4)
+      .collect().map(_.toString).sorted.toSeq
+    def named = new java.io.File(livePath(s"$dir/t", k)).getName
+    // (a) a compaction wrote its rewrite and crashed before publishing it
+    df.limit(7).write.parquet(s"$dir/t/data/_bucket=$k/_v=crashed")
+    val superseded = named
+    assert(versions(s"$dir/t", k) == Set(superseded, "_v=crashed"))
+    def check(): Unit = {
+      assert(TableIO.readCommitted(spark, s"$dir/t", 4)
+        .collect().map(_.toString).sorted.toSeq == before)
+      assert(TableIO.verifyCommits(spark, s"$dir/t", 4).isEmpty)
+    }
+    check()
+    val saved = java.nio.file.Files.createTempDirectory("superseded")
+      .resolve("v").toString
+    copyDir(s"$dir/t/data/_bucket=$k/$superseded", saved)
+    // the next compaction reaps the unpublished rewrite, then compacts
     assert(TableIO.compactBucket(spark, s"$dir/t", 4, k) == 1)
-    assert(TableIO.readCommitted(spark, s"$dir/t", 4).count() == before)
-    assert(!fs.exists(backup), "backup must be reclaimed after the swap")
+    assert(versions(s"$dir/t", k) == Set(named))
+    check()
+    // (b) the compaction published and crashed before reaping: the
+    // version it superseded is back beside the published one
+    copyDir(saved, s"$dir/t/data/_bucket=$k/$superseded")
+    assert(versions(s"$dir/t", k) == Set(named, superseded))
+    check()
+    // the next compaction has nothing to rewrite, and still reaps
+    assert(TableIO.compactBucket(spark, s"$dir/t", 4, k) == 1)
+    assert(versions(s"$dir/t", k) == Set(named))
+    check()
   }
 
   test("bucket compaction is single-process per bucket (lock file)") {
@@ -823,9 +895,9 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       p.getFileSystem(conf).exists(p)
     }.get
     // a concurrent compactor's lock blocks a second call FAST, before
-    // any repair/rename could interleave with the in-flight swap
+    // it could reap the in-flight compactor's unpublished version
     val lock = new org.apache.hadoop.fs.Path(
-      s"$dir/t/_compact_tmp/bucket-$k.lock")
+      s"$dir/t/_locks/bucket-$k.lock")
     val fs = lock.getFileSystem(conf)
     fs.mkdirs(lock.getParent)
     fs.create(lock, false).close()
@@ -876,7 +948,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val deflated = TableIO.BucketCommit(truth.bucket, truth.rows - 3,
       truth.checksum ^ 0xbadL)
     val ex = intercept[IllegalStateException] {
-      TableIO.crossCheck(spark, s"$dir/t", deflated,
+      TableIO.crossCheck(spark, livePath(s"$dir/t", truth.bucket), deflated,
         spark.sessionState.newHadoopConf(), stageRetried = true)
     }
     assert(ex.getMessage.contains("extra/stale"), ex.getMessage)
@@ -891,11 +963,12 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // wipe the bucket's data: write "succeeded" per the metrics but the
     // files are gone — committing rows=0 would mark it done and silently
     // lose the rows on every resume (ADVICE r3)
-    val p = new org.apache.hadoop.fs.Path(s"$dir/t/data/_bucket=${victim.bucket}")
+    val live = livePath(s"$dir/t", victim.bucket)
+    val p = new org.apache.hadoop.fs.Path(live)
     p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
     val ex = intercept[IllegalStateException] {
       // total loss fails fast regardless of whether a retry was seen
-      TableIO.crossCheck(spark, s"$dir/t", victim,
+      TableIO.crossCheck(spark, live, victim,
         spark.sessionState.newHadoopConf(), stageRetried = true)
     }
     assert(ex.getMessage.contains("no data"), ex.getMessage)
@@ -914,7 +987,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         java.nio.file.Paths.get(p)), "UTF-8")
       .replace(s""","layout":${TableIO.LayoutVersion}""", "")
     TableIO.atomicWrite(p, v1)
-    assert(TableIO.readLayout(s"$dir/t", 1) == 1)
+    assert(TableIO.readManifest(s"$dir/t", 1,
+      spark.sessionState.newHadoopConf()).get.layout == 1)
     val ex = intercept[IllegalArgumentException] {
       TableIO.writeResumable(df, s"$dir/t", 4, Seq("src_repo"))
     }
@@ -1181,16 +1255,14 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // replay delta 2 (crash-recovery path): must be byte-idempotent
     KgPipeline.mergeDeltaCanonical(spark, dir, buckets,
       spark.createDataset(d2), model, stateDir)
-    // delta 3: pure deletion (files 0..2, no changed files) — triples
-    // retract, alias EVIDENCE stays (CanonState is append-only by
-    // design); on this corpus linking is deterministic so the retained
-    // evidence changes no canonical decision and table parity holds
-    val deleted = (0L until 3L).map { i =>
-      val id = ident(i); (id.repo, id.path)
-    }
+    // delta 3: files 0..2 emptied — their triples retract through the
+    // vacated-file path, alias EVIDENCE stays (CanonState is append-only
+    // by design); on this corpus linking is deterministic so the
+    // retained evidence changes no canonical decision and table parity
+    // holds
+    val emptied = (0L until 3L).map(i => fileOf(ident(i)).copy(content = ""))
     KgPipeline.mergeDeltaCanonical(spark, dir, buckets,
-      spark.createDataset(Seq.empty[KgPipeline.RepoFile]), model, stateDir,
-      deletedFiles = Some(deleted.toDF("src_repo", "src_path")))
+      spark.createDataset(emptied), model, stateDir)
     val corpus = base.slice(3, 5) ++ d1 ++ base.slice(10, 30) ++ d2 ++
       base.slice(35, 40)
     val rf = KgPipeline.run(spark, spark.createDataset(corpus), model)

@@ -1021,43 +1021,6 @@ class AnnSpec extends AnyFunSuite {
       tau = 0.9).collect().isEmpty, "all-null embeddings must yield no rows")
   }
 
-  test("two-pass sessionization matches single-pass on a Zipf-hot fixture") {
-    import spark.implicits._
-    import graft.pipeline.Sessionize
-    // hot user 1: a long event stream whose sessions both span many
-    // 1-hour slices (90% 10-min gaps chain across slice boundaries) and
-    // split inside them (10% 2-hour gaps); 50 cold users with random
-    // times, including equal-timestamp ties broken by event id
-    val rnd = new scala.util.Random(3)
-    val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    var eid = 0L; var ms = 0L
-    for (_ <- 1 to 2000) {
-      ms += (if (rnd.nextDouble() < 0.9) 600000L else 7200000L)
-      rows += ((1L, eid, ms)); eid += 1
-    }
-    for (u <- 2 to 51; _ <- 1 to 20) {
-      rows += ((u.toLong, eid, math.abs(rnd.nextLong()) % (86400000L * 5)))
-      eid += 1
-    }
-    // ties: same user, same ms, distinct event ids
-    rows += ((2L, eid, 1234L)); eid += 1
-    rows += ((2L, eid, 1234L)); eid += 1
-    val df = rows.toSeq.toDF("user_id", "event_id", "ms")
-    val one = Sessionize.sessions(df, "user_id", "ms", "event_id", 1800000L)
-      .collect().map(_.toString).sorted.toSeq
-    val two = Sessionize.sessionsTwoPass(df, "user_id", "ms", "event_id",
-      1800000L, sliceMs = 3600000L)
-      .collect().map(_.toString).sorted.toSeq
-    assert(two == one,
-      s"two-pass diverged: ${two.size} vs ${one.size} rows; " +
-        s"first diff: ${two.zip(one).find(p => p._1 != p._2)}")
-    // the mitigation must have had something to mitigate: the hot user's
-    // chains really cross slice boundaries (pass-2 merging is exercised)
-    val hotSessions = one.count(_.startsWith("[1,"))
-    assert(hotSessions > 10 && hotSessions < 2000,
-      s"fixture degenerate: $hotSessions hot-user sessions")
-  }
-
   test("q73 gopher rules: every rule fires on its planted case") {
     import spark.implicits._
     val good = ("the quick brown fox jumps over the lazy dog near " +
