@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over the materialized knowledge graph.
@@ -28,7 +28,13 @@ import org.apache.spark.sql.functions._
   * sum(deg^2) — the difference between a star graph costing O(m) and
   * costing O(m^2). PageRank is Page et al. (1999) in the classic
   * unnormalized Spark formulation (init 1.0, `(1-d) + d*in`), with
-  * dangling mass redistributed uniformly and per-iteration lineage
+  * dangling mass redistributed uniformly. It has two paths: a graph of
+  * at most `collectThreshold` edges (default
+  * [[KgPipeline.ccCollectThreshold]], the canonicalization collect
+  * budget) is collected once and iterated on the driver over CSR
+  * arrays, summing in-contributions in sorted source order so the
+  * ranks do not depend on partitioning; a larger graph runs the
+  * distributed loop, one join + groupBy per iteration with lineage
   * truncation via [[Lineage.chk]] (40 iterations would otherwise nest
   * 40 plans).
   */
@@ -128,25 +134,102 @@ object Graph {
     * no out-edges) is redistributed uniformly — dropping it instead
     * deflates every rank and the fixpoint stops meaning anything.
     *
-    * Per iteration: one long-keyed join (ranks ⋈ edges on src), one
-    * partial-agg groupBy(dst), one broadcast 1-row dangling aggregate;
-    * lineage truncated each round ([[Lineage.chk]]) and the superseded
-    * frame released, so iteration count never inflates the plan or
-    * pins unbounded storage. (Round 7 measured the k=3 truncation
-    * cadence VERDICT r6 #2 proposed and it regressed ~2x — see the
-    * loop comment; the only kept change is that the initial
-    * constant-1.0 frame is no longer checkpointed.)
+    * Two paths, chosen the way [[KgPipeline.canonFromEdges]] chooses:
+    * one action, `limit(collectThreshold + 1)` over the non-null
+    * `(src, dst)` pairs cast to long, both decides the path and
+    * collects the edges. At or below `collectThreshold` edges the
+    * iterations run on the driver ([[pageRankOnDriver]]) and the result
+    * is a local relation; above it the distributed loop runs
+    * ([[pageRankDistributed]]). A negative threshold forces the
+    * distributed path. At benchmark size (tens to hundreds of nodes)
+    * the distributed loop's per-iteration jobs cost seconds the
+    * arithmetic never needed.
     *
-    * All arithmetic is join-order-independent WHEN the inputs make it
-    * exact (see q82: power-of-two out-degrees + dyadic damping give
-    * bit-identical ranks in any engine); otherwise it is standard
-    * floating-point PageRank, deterministic per plan but compared by
-    * tolerance (GraphSpec pins it against a driver recompute).
+    * Both paths return `(node: bigint, pr: double)`. The driver path
+    * sums each node's in-contributions in ascending source-id order, so
+    * its ranks are bit-identical whatever the collect order, partition
+    * count or `local[N]`. The distributed path's sums follow the plan's
+    * partitioning. All arithmetic is order-independent WHEN the inputs
+    * make it exact (see q82: power-of-two out-degrees + dyadic damping
+    * give bit-identical ranks in any engine and on either path);
+    * otherwise the two paths agree to rounding (GraphSpec pins both
+    * against a driver recompute).
     */
-  def pageRank(edges: DataFrame, iters: Int,
-               damping: Double = 0.85): DataFrame = {
+  def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85,
+               collectThreshold: Int = KgPipeline.ccCollectThreshold)
+      : DataFrame = {
     require(iters >= 1 && iters <= 200, s"iters out of range: $iters")
     require(damping >= 0.0 && damping <= 1.0, s"damping out of range: $damping")
+    val pairs = edges
+      .select(col("src").cast("long").as("s"), col("dst").cast("long").as("t"))
+      .where(col("s").isNotNull && col("t").isNotNull)
+    KgPipeline.collectAtMost(pairs, collectThreshold) match {
+      case Some(rows) => pageRankOnDriver(edges.sparkSession,
+        rows.map(_.getLong(0)), rows.map(_.getLong(1)), iters, damping)
+      case None => pageRankDistributed(pairs, iters, damping)
+    }
+  }
+
+  /** [[pageRank]] on the driver over the collected edges `src(i) →
+    * dst(i)`. Node ids map to a dense range by binary search over the
+    * sorted distinct ids (the CompactDict convention); the in-edges
+    * form a CSR whose per-node source lists are sorted, which fixes the
+    * summation order. Each iteration is the distributed loop's
+    * recurrence with the same double operations: `pr(u) / out(u)`
+    * summed per target, dangling mass summed over the out-degree-0
+    * nodes, then `(1-d) + d * (in_sum + dmass / |V|)`.
+    */
+  private def pageRankOnDriver(spark: SparkSession, src: Array[Long],
+                               dst: Array[Long], iters: Int,
+                               damping: Double): DataFrame = {
+    val ids = (src ++ dst).distinct
+    java.util.Arrays.sort(ids)
+    val n = ids.length
+    require(n > 0, "pageRank on an empty graph")
+    val s = src.map(java.util.Arrays.binarySearch(ids, _))
+    val t = dst.map(java.util.Arrays.binarySearch(ids, _))
+    val outDeg = new Array[Int](n)
+    s.foreach(u => outDeg(u) += 1)
+    val inOff = new Array[Int](n + 1)
+    t.foreach(v => inOff(v + 1) += 1)
+    for (v <- 0 until n) inOff(v + 1) += inOff(v)
+    val inSrc = new Array[Int](s.length)
+    val fill = inOff.clone()
+    for (i <- s.indices) { inSrc(fill(t(i))) = s(i); fill(t(i)) += 1 }
+    for (v <- 0 until n) java.util.Arrays.sort(inSrc, inOff(v), inOff(v + 1))
+
+    var pr = Array.fill(n)(1.0)
+    for (_ <- 1 to iters) {
+      var dmass = 0.0
+      for (u <- 0 until n) if (outDeg(u) == 0) dmass += pr(u)
+      val share = dmass / n.toDouble
+      val next = new Array[Double](n)
+      for (v <- 0 until n) {
+        var inSum = 0.0
+        var i = inOff(v)
+        while (i < inOff(v + 1)) {
+          val u = inSrc(i)
+          inSum += pr(u) / outDeg(u).toDouble
+          i += 1
+        }
+        next(v) = (1.0 - damping) + damping * (inSum + share)
+      }
+      pr = next
+    }
+    import spark.implicits._
+    ids.indices.map(i => (ids(i), pr(i))).toDF("node", "pr")
+  }
+
+  /** [[pageRank]] above the collect threshold, over the non-null long
+    * pairs `(s, t)`. Per iteration: one long-keyed join (ranks ⋈ edges
+    * on src), one partial-agg groupBy(dst), one broadcast 1-row
+    * dangling aggregate; lineage truncated each round ([[Lineage.chk]])
+    * and the superseded frame released, so iteration count never
+    * inflates the plan or pins unbounded storage. The result is backed
+    * by a checkpoint, tracked for [[releaseAllRanks]].
+    */
+  private def pageRankDistributed(pairs: DataFrame, iters: Int,
+                                  damping: Double): DataFrame = {
     // The edge frame is read by nodes, outDeg, and EVERY iteration's
     // contribs join — uncached, each of those re-executes the caller's
     // whole edge derivation (for the co-mention graph: the per-file
@@ -158,8 +241,7 @@ object Graph {
     // edge set every round — one upfront edge shuffle buys `iters`
     // avoided ones (measured: q82 3.45 -> 2.92 s at sf0.1; the outDeg
     // aggregate reuses the same partitioning for free).
-    val e = edges.select(col("src").as("s"), col("dst").as("t"))
-      .where(col("s").isNotNull && col("t").isNotNull)
+    val e = pairs
       .repartition(col("s"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nodes = e.select(col("s").as("node"))
@@ -174,17 +256,18 @@ object Graph {
     val nNodes = base.count() // materializes the cache; |V| for dangling share
     require(nNodes > 0, "pageRank on an empty graph")
 
-    // rank init rides on `base` directly (cached above) — round 6 paid
-    // an extra checkpoint job just to materialize the constant-1.0
-    // frame the first iteration immediately superseded. The loop keeps
-    // round 6's checkpoint-EVERY-round cadence deliberately: this
-    // round measured both alternatives VERDICT r6 #2 suggested
-    // (truncate every 3rd round with the interim rounds nested, and
-    // the same with interim rounds lazily cached) and both REGRESSED
-    // q83 ~2x (8.3 s -> 18.8/19.7 s at sf0.1) — the merged adaptive
-    // plans re-derive the dangling branch per nested round and AQE
-    // re-plans every stage of the widened plan, costing more than the
-    // saved per-round action. Evidence: OPTIMIZATION_r07.md §q83.
+    // rank init rides on `base` directly (cached above): checkpointing
+    // the constant-1.0 frame cost a job the first iteration superseded.
+    // This loop checkpoints EVERY round. Round 7 measured the two
+    // alternatives (truncate every 3rd round with the interim rounds
+    // nested, and the same with them lazily cached) on q83 at sf0.1,
+    // when every graph took this loop: both REGRESSED ~2x (8.3 s ->
+    // 18.8/19.7 s) — the merged adaptive plans re-derive the dangling
+    // branch per nested round and AQE re-plans every stage of the
+    // widened plan, costing more than the saved per-round action
+    // (OPTIMIZATION_r07.md §q83). Graphs at or below the collect
+    // threshold no longer reach this loop, so that evidence speaks only
+    // for graphs above it; re-measure there before changing the cadence.
     var ranks: DataFrame =
       base.select(col("node"), col("out_deg"), lit(1.0).as("pr"))
     var lastChk: Option[DataFrame] = None
@@ -309,13 +392,14 @@ object Graph {
       .agg(sort_array(collect_list(col("item"))).as("items"))
 
   /** Rank frames whose backing checkpoint is not yet released, per
-    * session. [[pageRank]]'s output is backed by a checkpoint —
-    * reliable-checkpoint FILES when a checkpoint dir is configured,
-    * pinned localCheckpoint blocks otherwise — that Spark never
-    * reclaims on its own, so without a public release every pageRank
-    * call (every q82/q83 bench trial, every library invocation) leaks
-    * one node-sized block set for the life of the session. Weak session
-    * keys: a stopped, dereferenced session drops its entries.
+    * session. The output of [[pageRank]]'s distributed path is backed
+    * by a checkpoint — reliable-checkpoint FILES when a checkpoint dir
+    * is configured, pinned localCheckpoint blocks otherwise — that
+    * Spark never reclaims on its own, so without a public release every
+    * such call leaks one node-sized block set for the life of the
+    * session. The driver path's local relation holds no checkpoint and
+    * is not tracked. Weak session keys: a stopped, dereferenced session
+    * drops its entries.
     */
   // WEAK refs to the backing RDD, not the DataFrame: the RDD is the
   // correct liveness identity — a derived frame (`pageRank(...)

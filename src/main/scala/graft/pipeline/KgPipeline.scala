@@ -362,12 +362,7 @@ object KgPipeline {
   def canonFromEdges(spark: SparkSession, allEdges0: DataFrame,
                      kbAliases: DataFrame,
                      collectThreshold: Int = ccCollectThreshold): DataFrame = {
-    val fits =
-      if (collectThreshold < 0) None
-      else Some(allEdges0.select("src", "dst")
-          .limit(math.min(collectThreshold, Int.MaxValue - 1) + 1).collect())
-        .filter(_.length <= collectThreshold)
-    fits match {
+    collectAtMost(allEdges0.select("src", "dst"), collectThreshold) match {
       case Some(rows) => canonOnDriver(spark,
         rows.map(r => (r.getString(0), r.getString(1))).distinct, kbAliases)
       case None => canonDistributed(spark, allEdges0, kbAliases)
@@ -459,6 +454,17 @@ object KgPipeline {
     * rows is a few MB on the driver — far below any OOM hazard.
     */
   val ccCollectThreshold: Int = 100000
+
+  /** `df`'s rows if it has at most `threshold`, else None: one action,
+    * `limit(threshold + 1)`, both decides and collects. A negative
+    * threshold answers None without a job (it forces the distributed
+    * path of [[canonFromEdges]] and [[Graph.pageRank]]).
+    */
+  private[pipeline] def collectAtMost(df: DataFrame,
+                                      threshold: Int): Option[Array[Row]] =
+    if (threshold < 0) None
+    else Some(df.limit(math.min(threshold, Int.MaxValue - 1) + 1).collect())
+      .filter(_.length <= threshold)
 
   /** Driver-side union-find with path compression; component label =
     * lexicographic min member (same convention as the distributed CC).

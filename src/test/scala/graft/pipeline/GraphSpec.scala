@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * closed-form fixtures for degrees/triangles/2-hop, a brute-force
   * parity sweep on a seeded random graph, and PageRank pinned against
   * a driver recompute (including dangling-node redistribution and the
-  * dyadic bit-exactness the q82 oracle relies on).
+  * dyadic bit-exactness the q82 oracle relies on) on both of its paths:
+  * the driver path at the default collect threshold, the distributed
+  * one forced by a negative threshold.
   */
 class GraphSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -17,6 +19,15 @@ class GraphSpec extends AnyFunSuite {
     import spark.implicits._
     es.toDF("src", "dst")
   }
+
+  /** The default collect threshold (driver path here) and a negative
+    * one (distributed path).
+    */
+  private val thresholds = Seq(KgPipeline.ccCollectThreshold, -1)
+
+  private def onDriver(ranks: DataFrame): Boolean =
+    ranks.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
 
   // K4 on {1,2,3,4} plus a pendant path 4-5-6, with noise the canonical
   // closure must absorb: duplicates, reversed duplicates, a self-loop.
@@ -100,15 +111,20 @@ class GraphSpec extends AnyFunSuite {
       u <- 0L until 35L; _ <- 0 until 3
       v = rnd.nextInt(40).toLong if v != u
     } yield (u, v)
-    val got = Graph.pageRank(edgeDf(es), iters = 10, damping = 0.85)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val want = pageRankLocal(es, 10, 0.85)
-    assert(got.keySet == want.keySet)
-    got.foreach { case (nd, pr) =>
-      assert(math.abs(pr - want(nd)) < 1e-9, s"node $nd: $pr vs ${want(nd)}")
+    for (t <- thresholds) {
+      val ranks = Graph.pageRank(edgeDf(es), iters = 10, damping = 0.85,
+        collectThreshold = t)
+      assert(onDriver(ranks) == (t >= 0), s"threshold $t took the wrong path")
+      val got = ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(got.keySet == want.keySet)
+      got.foreach { case (nd, pr) =>
+        assert(math.abs(pr - want(nd)) < 1e-9,
+          s"threshold $t, node $nd: $pr vs ${want(nd)}")
+      }
+      // unnormalized formulation with dangling redistribution: sum == |V|
+      assert(math.abs(got.values.sum - want.size) < 1e-6)
     }
-    // unnormalized formulation with dangling redistribution: sum == |V|
-    assert(math.abs(got.values.sum - want.size) < 1e-6)
   }
 
   test("pageRank: dyadic inputs (pow-2 out-degrees, damping 1/2) are bit-exact") {
@@ -118,12 +134,53 @@ class GraphSpec extends AnyFunSuite {
       (u, (u * 13 + 5) % n))).distinct
     assert(es.groupBy(_._1).values.forall(g =>
       g.size == 1 || g.size == 2)) // powers of two
-    val got = Graph.pageRank(edgeDf(es), iters = 4, damping = 0.5)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val want = pageRankLocal(es, 4, 0.5)
-    got.foreach { case (nd, pr) =>
-      assert(pr == want(nd), s"node $nd not bit-exact: $pr vs ${want(nd)}")
+    for (t <- thresholds) {
+      val got = Graph.pageRank(edgeDf(es), iters = 4, damping = 0.5,
+          collectThreshold = t)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(got.keySet == want.keySet)
+      got.foreach { case (nd, pr) =>
+        assert(pr == want(nd),
+          s"threshold $t, node $nd not bit-exact: $pr vs ${want(nd)}")
+      }
     }
+  }
+
+  test("pageRank: exactly collectThreshold edges run on the driver, one more does not") {
+    val es = (0L until 12L).map(u => (u, (u * 5 + 1) % 12))
+    assert(onDriver(Graph.pageRank(edgeDf(es), iters = 3,
+      collectThreshold = es.size)))
+    assert(!onDriver(Graph.pageRank(edgeDf(es), iters = 3,
+      collectThreshold = es.size - 1)))
+    // NULL ends are not edges: they neither count nor become nodes
+    import spark.implicits._
+    val withNulls = (es.map { case (u, v) => (Option(u), Option(v)) } ++
+      Seq((None, Some(1L)), (Some(2L), None))).toDF("src", "dst")
+    val ranks = Graph.pageRank(withNulls, iters = 3, collectThreshold = es.size)
+    assert(onDriver(ranks))
+    assert(ranks.count() == 12)
+    Graph.releaseAllRanks(spark, blocking = true)
+  }
+
+  test("pageRank: the driver path is bitwise independent of edge order and partitioning") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(17)
+    val es = for {
+      u <- 0L until 50L; _ <- 0 until 4
+      v = rnd.nextInt(60).toLong if v != u
+    } yield (u, v)
+    def ranks(df: DataFrame): Map[Long, Long] = {
+      val r = Graph.pageRank(df, iters = 12, damping = 0.85)
+      assert(onDriver(r))
+      r.collect().map(row => row.getLong(0) ->
+        java.lang.Double.doubleToRawLongBits(row.getDouble(1))).toMap
+    }
+    val one = ranks(es.toDF("src", "dst").repartition(1))
+    val eight = ranks(new scala.util.Random(5).shuffle(es)
+      .toDF("src", "dst").repartition(8))
+    assert(one.size == (es.map(_._1) ++ es.map(_._2)).distinct.size)
+    assert(one == eight)
   }
 
   test("coOccurrence: closed-form lift/PMI, input dedup, minPairCount prune") {
@@ -196,10 +253,12 @@ class GraphSpec extends AnyFunSuite {
   test("releaseAllRanks frees pageRank's checkpoint pins") {
     val sc = spark.sparkContext
     val before = sc.getRDDStorageInfo.map(_.id).toSet
+    // only the distributed path holds a checkpoint
     val r1 = Graph.pageRank(edgeDf(Seq((1L, 2L), (2L, 3L), (3L, 1L))),
-      iters = 3)
+      iters = 3, collectThreshold = -1)
     r1.count()
-    val r2 = Graph.pageRank(edgeDf(Seq((1L, 2L), (2L, 1L))), iters = 2)
+    val r2 = Graph.pageRank(edgeDf(Seq((1L, 2L), (2L, 1L))), iters = 2,
+      collectThreshold = -1)
     r2.count()
     val pinned = sc.getRDDStorageInfo.map(_.id).toSet -- before
     assert(pinned.nonEmpty, "pageRank's result should be checkpoint-pinned")
@@ -217,8 +276,9 @@ class GraphSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       Graph.pageRank(edgeDf(Seq((1L, 2L))), iters = 5, damping = 1.5)
     }
-    intercept[IllegalArgumentException] {
-      Graph.pageRank(edgeDf(Seq.empty[(Long, Long)]), iters = 1)
+    for (t <- thresholds) intercept[IllegalArgumentException] {
+      Graph.pageRank(edgeDf(Seq.empty[(Long, Long)]), iters = 1,
+        collectThreshold = t)
     }
   }
 }
