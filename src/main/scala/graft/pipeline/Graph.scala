@@ -30,9 +30,8 @@ import org.apache.spark.sql.functions._
   * unnormalized Spark formulation (init 1.0, `(1-d) + d*in`), with
   * dangling mass redistributed uniformly. It has two paths: a graph of
   * at most `collectThreshold` edges (default
-  * [[KgPipeline.ccCollectThreshold]], the canonicalization collect
-  * budget) is collected once and iterated on the driver over CSR
-  * arrays, summing in-contributions in sorted source order so the
+  * [[pageRankCollectThreshold]], one million, set by measurement) is
+  * collected once and iterated on the driver over CSR arrays, summing in-contributions in sorted source order so the
   * ranks do not depend on partitioning; a larger graph runs the
   * distributed loop, one join + groupBy per iteration with lineage
   * truncation via [[Lineage.chk]] (40 iterations would otherwise nest
@@ -140,10 +139,10 @@ object Graph {
     * collects the edges. At or below `collectThreshold` edges the
     * iterations run on the driver ([[pageRankOnDriver]]) and the result
     * is a local relation; above it the distributed loop runs
-    * ([[pageRankDistributed]]). A negative threshold forces the
-    * distributed path. At benchmark size (tens to hundreds of nodes)
-    * the distributed loop's per-iteration jobs cost seconds the
-    * arithmetic never needed.
+    * ([[pageRankDistributed]]), after that action has evaluated the
+    * input once. A negative threshold forces the distributed path. At
+    * benchmark size (tens to hundreds of nodes) the distributed loop's
+    * per-iteration jobs cost seconds the arithmetic never needed.
     *
     * Both paths return `(node: bigint, pr: double)`. The driver path
     * sums each node's in-contributions in ascending source-id order, so
@@ -156,7 +155,7 @@ object Graph {
     * against a driver recompute).
     */
   def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85,
-               collectThreshold: Int = KgPipeline.ccCollectThreshold)
+               collectThreshold: Int = pageRankCollectThreshold)
       : DataFrame = {
     require(iters >= 1 && iters <= 200, s"iters out of range: $iters")
     require(damping >= 0.0 && damping <= 1.0, s"damping out of range: $damping")
@@ -169,6 +168,26 @@ object Graph {
       case None => pageRankDistributed(pairs, iters, damping)
     }
   }
+
+  /** The largest edge count [[pageRank]] collects and iterates on the
+    * driver. Set from `PageRankCrossover` (test sources): seeded random
+    * graphs of 25k to 2M edges, average out-degree 8, 8 iterations,
+    * `local[4]` on a 4-core host, 3 interleaved repetitions per size
+    * (records in `BENCH/graph-small/threshold/`).
+    *   - The driver path was faster at every size, by at least 2x:
+    *     median 1.94 s against 5.78 s at 1M edges, 4.80 s against
+    *     11.93 s at 2M. Wall time sets no bound up to 2M edges here.
+    *   - Driver memory does: the calling thread allocates about 0.4 KB
+    *     per edge on that path (406 MB at 1M edges, 807 MB at 2M).
+    *   - Above the threshold, the limit-collect that finds the graph
+    *     too big costs threshold + 1 fetched rows and one more
+    *     evaluation of the input: at 2M edges the call took 13.10 s
+    *     against 11.93 s for the distributed loop alone (+10%); at a
+    *     100,000 threshold it added 0.56 s (10.60 against 10.04 s).
+    * One million keeps the driver's allocation under half a gigabyte
+    * and the pass above it near a tenth of a distributed call.
+    */
+  val pageRankCollectThreshold: Int = 1000000
 
   /** [[pageRank]] on the driver over the collected edges `src(i) →
     * dst(i)`. Node ids map to a dense range by binary search over the

@@ -315,21 +315,11 @@ object PipelineQueries {
     * definition). Rows-only: FP ranks aren't cross-engine-hashable, but
     * the loop kernel has a bit-exact DuckDB oracle in q82 (dyadic
     * rendition) and GraphSpec pins both PageRank paths (damping 0.85,
-    * dangling nodes) against a driver recompute. The top 50 are
-    * collected inside the call and returned as a local relation.
+    * dangling nodes) against a driver recompute.
     */
   def q83_entity_rank(s: SparkSession, dir: String): DataFrame = {
     val r = pipelineFor(s, dir)
-    // ONE evaluation of the linked ⋈ canon join feeds both the edge
-    // build and `names`: persisted here, materialized by pageRank's
-    // edge collect, read again by the final join and released before
-    // returning, which is why the top 50 (bounded by the limit) are
-    // collected inside the call. The names still come from every
-    // (file, ent) row, not from the capped sets: an entity capped out
-    // of every file can share a node hash with a ranked one, and the
-    // join must see it as before.
     val ment = fileEntities(r)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // cap-32 per file through the shared spillable-window convention
     // (Graph.cappedSets — same set as the old slice-after-collect, the
     // 32 smallest ents, without buffering a pathological file's whole
@@ -347,9 +337,9 @@ object PipelineQueries {
     // pass at sf0.1 — guide §2.4 "remove shuffles outright" /
     // §5 caching a reused, expensive intermediate). Edge-sized, two
     // longs — the same working-set class pageRank itself persists.
-    // Released right after pageRank returns (pageRank is eager; its
-    // result is a local relation or checkpoint-backed and never
-    // re-reads the input).
+    // Released right after pageRank returns or throws (pageRank is
+    // eager; its result is a local relation or checkpoint-backed and
+    // never re-reads the input).
     val edges = pairs.select(xxhash64(col("ea")).as("src"),
       xxhash64(col("eb")).as("dst"))
       .distinct()
@@ -363,17 +353,14 @@ object PipelineQueries {
       .distinct()
     val names = ment.select(col("ent")).distinct()
       .select(xxhash64(col("ent")).as("node"), col("ent").as("entity"))
-    val ranks = graft.pipeline.Graph.pageRank(undirected, iters = 8,
-      damping = 0.85)
-    edges.unpersist()
-    val top = ranks
+    val ranks =
+      try graft.pipeline.Graph.pageRank(undirected, iters = 8, damping = 0.85)
+      finally edges.unpersist()
+    ranks
       .join(names, "node")
       .select(col("entity"), round(col("pr"), 6).as("salience"))
       .orderBy(col("salience").desc, col("entity"))
       .limit(50)
-    val rows = top.collect()
-    ment.unpersist()
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), top.schema)
   }
 
   /** Product-quantized ANN — the compressed-domain search: train an

@@ -23,7 +23,7 @@ class GraphSpec extends AnyFunSuite {
   /** The default collect threshold (driver path here) and a negative
     * one (distributed path).
     */
-  private val thresholds = Seq(KgPipeline.ccCollectThreshold, -1)
+  private val thresholds = Seq(Graph.pageRankCollectThreshold, -1)
 
   private def onDriver(ranks: DataFrame): Boolean =
     ranks.queryExecution.optimizedPlan
