@@ -31,8 +31,9 @@ import org.apache.spark.sql.functions._
   * dangling mass redistributed uniformly. It has two paths: a graph of
   * at most `collectThreshold` edges (default
   * [[pageRankCollectThreshold]], one million, set by measurement) is
-  * collected once and iterated on the driver over CSR arrays, summing in-contributions in sorted source order so the
-  * ranks do not depend on partitioning; a larger graph runs the
+  * collected once and iterated on the driver over CSR arrays, summing
+  * in-contributions in sorted source order so the ranks do not depend
+  * on partitioning; a larger graph runs the
   * distributed loop, one join + groupBy per iteration with lineage
   * truncation via [[Lineage.chk]] (40 iterations would otherwise nest
   * 40 plans).
@@ -181,11 +182,13 @@ object Graph {
     *     per edge on that path (406 MB at 1M edges, 807 MB at 2M).
     *   - Above the threshold, the limit-collect that finds the graph
     *     too big costs threshold + 1 fetched rows and one more
-    *     evaluation of the input: at 2M edges the call took 13.10 s
-    *     against 11.93 s for the distributed loop alone (+10%); at a
-    *     100,000 threshold it added 0.56 s (10.60 against 10.04 s).
+    *     evaluation of the input: at 1.5M and 2M edges the call took
+    *     10.44 and 13.10 s against 8.69 and 11.93 s for the distributed
+    *     loop alone (+20%, +10%); at a 100,000 threshold it added 0.56 s
+    *     at 2M edges (10.60 against 10.04 s).
     * One million keeps the driver's allocation under half a gigabyte
-    * and the pass above it near a tenth of a distributed call.
+    * and the pass above it at 10-20% of a distributed call, while
+    * graphs of 100k to 1M edges run 3-10x faster than on the loop.
     */
   val pageRankCollectThreshold: Int = 1000000
 
