@@ -27,7 +27,13 @@ import scala.jdk.CollectionConverters._
   *                                            hot keys -> salted write (JSON report);
   *                                            "semantic" = SemDeDup embedding stage,
   *                                            "quality=" = trained-filter stage
-  *                                            (Classifier.save model file),
+  *                                            (Classifier.save model file:
+  *                                            one JSON object with "format":
+  *                                            "graft-quality-lr", "version": 1,
+  *                                            "n_buckets": <int>, "bias_bits":
+  *                                            "<hex>", "weight_bits": [n_buckets
+  *                                            x "<hex>"]; hex = a double's
+  *                                            IEEE-754 bits; no verb writes it),
   *                                            "lm=" = perplexity ceiling stage
   *                                            (Ngram.saveLm directory)
   */

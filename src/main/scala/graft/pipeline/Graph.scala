@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over the materialized knowledge graph.
@@ -15,28 +15,44 @@ import org.apache.spark.sql.functions._
   * they run over KG triples (`subj`/`obj` keyed by dictionary-encoded
   * ids) and over any relational edge derivation alike.
   *
-  * Scale shape shared by all four:
+  * Two paths per op, one decision. [[degrees]], [[triangles]],
+  * [[twoHopCounts]], [[components]] and [[pageRank]] each take a
+  * `collectThreshold` in edges (default: the op's measured budget,
+  * e.g. [[trianglesCollectThreshold]]). One action,
+  * `limit(collectThreshold + 1)` over the non-NULL edges
+  * ([[KgPipeline.collectAtMost]]), both decides and collects:
+  *   - at or below the threshold the op runs on the driver over one
+  *     [[LocalGraph]] (dense ids, CSR adjacency, primitive arrays) and
+  *     returns a local relation with the distributed path's schema.
+  *     At benchmark size (tens to hundreds of edges) this replaces
+  *     every shuffle and per-iteration job with one collect: "To
+  *     Partition, or Not to Partition" (skip the distributed machinery
+  *     when the build side fits);
+  *   - above it the distributed path runs unchanged, after that action
+  *     has evaluated the input once more. A negative threshold forces
+  *     it (specs and `GraphCrossover` use that).
+  * The driver path never does more work than the distributed one
+  * shuffles (see each op), so an edge budget alone bounds its time;
+  * its memory is the collected rows plus a few int arrays per edge.
+  *
+  * Scale shape of the distributed paths:
   *   - nodes/edges only ever shuffle as LONG keys (no string rides an
   *     exchange — encode entity uris to ids first, the q52 convention);
   *   - every aggregation is partial-agg friendly (map-side combine);
   *   - the only joins are long-keyed equi-joins; nothing is all-pairs.
   *
-  * Methods: triangle enumeration is the degree-ordered wedge join of
-  * Suri & Vassilvitskii (WWW 2011) / Cohen (CiSE 2009) — orienting each
+  * Methods: triangle enumeration is degree-ordered on both paths
+  * (Suri & Vassilvitskii, WWW 2011 / Cohen, CiSE 2009) — orienting each
   * edge from its lower-(degree, id) endpoint bounds oriented out-degree
   * by O(sqrt(m)), so wedge volume is O(m^1.5) worst case instead of
   * sum(deg^2) — the difference between a star graph costing O(m) and
   * costing O(m^2). PageRank is Page et al. (1999) in the classic
   * unnormalized Spark formulation (init 1.0, `(1-d) + d*in`), with
-  * dangling mass redistributed uniformly. It has two paths: a graph of
-  * at most `collectThreshold` edges (default
-  * [[pageRankCollectThreshold]], one million, set by measurement) is
-  * collected once and iterated on the driver over CSR arrays, summing
+  * dangling mass redistributed uniformly; the driver path sums
   * in-contributions in sorted source order so the ranks do not depend
-  * on partitioning; a larger graph runs the
-  * distributed loop, one join + groupBy per iteration with lineage
-  * truncation via [[Lineage.chk]] (40 iterations would otherwise nest
-  * 40 plans).
+  * on partitioning, and the distributed loop is one join + groupBy
+  * per iteration with lineage truncation via [[Lineage.chk]] (40
+  * iterations would otherwise nest 40 plans).
   */
 object Graph {
 
@@ -48,11 +64,59 @@ object Graph {
       .distinct()
   }
 
+  /** The non-NULL `(src, dst)` pairs cast to long: what every driver
+    * path collects, and what its budget counts.
+    */
+  private def longPairs(edges: DataFrame): DataFrame =
+    edges
+      .select(col("src").cast("long").as("s"), col("dst").cast("long").as("t"))
+      .where(col("s").isNotNull && col("t").isNotNull)
+
+  /** A per-node count on whichever path fits: one
+    * [[KgPipeline.collectAtMost]] of [[longPairs]] decides. At most
+    * `collectThreshold` edges: `count` runs on the collected
+    * [[LocalGraph]] and its nonzero entries become a local relation
+    * with exactly `distributed`'s schema (names, types, nullability;
+    * integer ids convert back to the node column's type). Above it, or
+    * for a node column that is not an integer type, `distributed` runs
+    * as it is; it is only analyzed before that.
+    */
+  private def perNode(edges: DataFrame, collectThreshold: Int,
+                      distributed: DataFrame)(count: LocalGraph => Array[Long])
+      : DataFrame = {
+    import org.apache.spark.sql.types._
+    val schema = distributed.schema
+    val toNode: Option[Long => Any] = schema.head.dataType match {
+      case LongType => Some(identity)
+      case IntegerType => Some(_.toInt)
+      case ShortType => Some(_.toShort)
+      case ByteType => Some(_.toByte)
+      case _ => None
+    }
+    toNode.flatMap(conv =>
+      KgPipeline.collectAtMost(longPairs(edges), collectThreshold).map { rows =>
+        val g = LocalGraph.fromRows(rows)
+        val c = count(g)
+        val out = new java.util.ArrayList[Row]()
+        for (i <- 0 until g.n if c(i) > 0) out.add(Row(conv(g.ids(i)), c(i)))
+        edges.sparkSession.createDataFrame(out, schema)
+      }).getOrElse(distributed)
+  }
+
   /** Undirected degree per node: distinct-neighbor count over the
     * de-duplicated, self-loop-free undirected closure of `edges`.
-    * Two shuffles (edge distinct, count), both keyed on longs.
+    *
+    * Two paths, decided as [[pageRank]] decides: at most
+    * `collectThreshold` edges (default [[degreesCollectThreshold]])
+    * count on the driver ([[LocalGraph.degrees]]) into a local
+    * relation; above it, two shuffles (edge distinct, count), both
+    * keyed on longs. A negative threshold forces the distributed path.
     */
-  def degrees(edges: DataFrame): DataFrame =
+  def degrees(edges: DataFrame,
+              collectThreshold: Int = degreesCollectThreshold): DataFrame =
+    perNode(edges, collectThreshold, degreesDistributed(edges))(_.degrees)
+
+  private def degreesDistributed(edges: DataFrame): DataFrame =
     canon(edges)
       .select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy("node")
@@ -60,15 +124,23 @@ object Graph {
 
   /** Per-node triangle participation counts (nodes in ≥ 1 triangle).
     *
-    * Degree-ordered enumeration: orient every undirected edge from its
-    * lower endpoint under the total order (degree asc, id asc). Each
-    * triangle {u < v < w} in that order is then generated exactly once,
-    * as the wedge (u→v, u→w) closed by the oriented edge v→w. The
-    * orientation join attaches degrees (node-sized frame, long-keyed);
-    * the wedge self-join is keyed on the wedge apex; the closing join
-    * is keyed on the (v, w) pair — all fixed-width.
+    * Degree-ordered enumeration on both paths: orient every undirected
+    * edge from its lower endpoint under the total order (degree asc, id
+    * asc). Each triangle {u < v < w} in that order is then generated
+    * exactly once, as the wedge (u→v, u→w) closed by the oriented edge
+    * v→w. At most `collectThreshold` edges (default
+    * [[trianglesCollectThreshold]]) run on the driver
+    * ([[LocalGraph.triangles]], a marker array over u's out-neighbors);
+    * above it the distributed joins run: the orientation join attaches
+    * degrees (node-sized frame, long-keyed), the wedge self-join is
+    * keyed on the wedge apex, the closing join on the (v, w) pair, all
+    * fixed-width. A negative threshold forces the distributed path.
     */
-  def triangles(edges: DataFrame): DataFrame = {
+  def triangles(edges: DataFrame,
+                collectThreshold: Int = trianglesCollectThreshold): DataFrame =
+    perNode(edges, collectThreshold, trianglesDistributed(edges))(_.triangles)
+
+  private def trianglesDistributed(edges: DataFrame): DataFrame = {
     val und = canon(edges)
     val deg = und.select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("degree"))
@@ -104,13 +176,21 @@ object Graph {
 
   /** Count of nodes at undirected distance EXACTLY 2 per node (the
     * co-occurrence neighborhood: reachable through a shared neighbor,
-    * not adjacent, not self). Adjacency expands once (m → 2m directed
-    * rows), the mid-join is keyed on the shared neighbor, and the
-    * exactly-2 discipline is one long-keyed anti-join back against
-    * adjacency. At web scale the distinct on (node, peer) is the
-    * dominant exchange — fixed-width, two longs.
+    * not adjacent, not self). At most `collectThreshold` edges (default
+    * [[twoHopCollectThreshold]]) count on the driver
+    * ([[LocalGraph.twoHop]], per-node stamp arrays, no pair set).
+    * Above it, adjacency expands once (m → 2m directed rows), the
+    * mid-join is keyed on the shared neighbor, and the exactly-2
+    * discipline is one long-keyed anti-join back against adjacency; at
+    * web scale the distinct on (node, peer) is the dominant exchange,
+    * fixed-width, two longs. A negative threshold forces the
+    * distributed path.
     */
-  def twoHopCounts(edges: DataFrame): DataFrame = {
+  def twoHopCounts(edges: DataFrame,
+                   collectThreshold: Int = twoHopCollectThreshold): DataFrame =
+    perNode(edges, collectThreshold, twoHopDistributed(edges))(_.twoHop)
+
+  private def twoHopDistributed(edges: DataFrame): DataFrame = {
     val und = canon(edges)
     val adj = und.select(col("a").as("x"), col("b").as("y"))
       .unionByName(und.select(col("b").as("x"), col("a").as("y")))
@@ -127,6 +207,45 @@ object Graph {
       .select(col("node"), col("n_2hop"))
   }
 
+  /** Min-label connected components `(node, comp)` of an undirected
+    * edge set `(src, dst)`: comp is the least node of the component
+    * (byte order for strings, as Spark's `min`). At most
+    * `collectThreshold` non-NULL edges (default
+    * [[componentsCollectThreshold]]) whose ends are both `bigint` or
+    * both `string` are labelled on the driver
+    * ([[LocalGraph.components]]; strings through
+    * [[LocalGraph.ofNames]]) into a local relation of non-null longs,
+    * or of strings. Anything else runs
+    * [[KgPipeline.connectedComponents]], the checkpointed fixpoint, on
+    * `edges` as given. A negative threshold forces that path.
+    */
+  def components(edges: DataFrame,
+                 collectThreshold: Int = componentsCollectThreshold)
+      : DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val pairs = edges.select("src", "dst")
+      .where(col("src").isNotNull && col("dst").isNotNull)
+    val local = pairs.schema.map(_.dataType) match {
+      case Seq(StringType, StringType) =>
+        KgPipeline.collectAtMost(pairs, collectThreshold).map { rows =>
+          val (g, names) = LocalGraph.ofNames(rows.map(_.getString(0)),
+            rows.map(_.getString(1)))
+          val c = g.components
+          names.indices.map(i => (names(i), names(c(i)))).toDF("node", "comp")
+        }
+      case Seq(LongType, LongType) =>
+        KgPipeline.collectAtMost(pairs, collectThreshold).map { rows =>
+          val g = LocalGraph.fromRows(rows)
+          val c = g.components
+          g.ids.indices.map(i => (g.ids(i), g.ids(c(i)))).toDF("node", "comp")
+        }
+      case _ => None
+    }
+    local.getOrElse(KgPipeline.connectedComponents(edges))
+  }
+
   /** PageRank over a DIRECTED multigraph (callers dedupe if they mean a
     * simple graph). Unnormalized classic formulation: rank init 1.0,
     * `r'(v) = (1-d) + d * (sum_in r(u)/out(u) + danglingMass / |V|)`
@@ -138,7 +257,7 @@ object Graph {
     * one action, `limit(collectThreshold + 1)` over the non-null
     * `(src, dst)` pairs cast to long, both decides the path and
     * collects the edges. At or below `collectThreshold` edges the
-    * iterations run on the driver ([[pageRankOnDriver]]) and the result
+    * iterations run on the driver ([[LocalGraph.pageRank]]) and the result
     * is a local relation; above it the distributed loop runs
     * ([[pageRankDistributed]]), after that action has evaluated the
     * input once. A negative threshold forces the distributed path. At
@@ -160,18 +279,22 @@ object Graph {
       : DataFrame = {
     require(iters >= 1 && iters <= 200, s"iters out of range: $iters")
     require(damping >= 0.0 && damping <= 1.0, s"damping out of range: $damping")
-    val pairs = edges
-      .select(col("src").cast("long").as("s"), col("dst").cast("long").as("t"))
-      .where(col("s").isNotNull && col("t").isNotNull)
+    val pairs = longPairs(edges)
     KgPipeline.collectAtMost(pairs, collectThreshold) match {
-      case Some(rows) => pageRankOnDriver(edges.sparkSession,
-        rows.map(_.getLong(0)), rows.map(_.getLong(1)), iters, damping)
+      case Some(rows) =>
+        val g = LocalGraph.fromRows(rows)
+        require(g.n > 0, "pageRank on an empty graph")
+        val pr = g.pageRank(iters, damping)
+        val spark = edges.sparkSession
+        import spark.implicits._
+        g.ids.indices.map(i => (g.ids(i), pr(i))).toDF("node", "pr")
       case None => pageRankDistributed(pairs, iters, damping)
     }
   }
 
   /** The largest edge count [[pageRank]] collects and iterates on the
-    * driver. Set from `PageRankCrossover` (test sources): seeded random
+    * driver. Set from `GraphCrossover` (test sources; then named
+    * `PageRankCrossover`): seeded random
     * graphs of 25k to 2M edges, average out-degree 8, 8 iterations,
     * `local[4]` on a 4-core host, 3 interleaved repetitions per size
     * (records in `BENCH/graph-small/threshold/`).
@@ -192,55 +315,59 @@ object Graph {
     */
   val pageRankCollectThreshold: Int = 1000000
 
-  /** [[pageRank]] on the driver over the collected edges `src(i) →
-    * dst(i)`. Node ids map to a dense range by binary search over the
-    * sorted distinct ids (the CompactDict convention); the in-edges
-    * form a CSR whose per-node source lists are sorted, which fixes the
-    * summation order. Each iteration is the distributed loop's
-    * recurrence with the same double operations: `pr(u) / out(u)`
-    * summed per target, dangling mass summed over the out-degree-0
-    * nodes, then `(1-d) + d * (in_sum + dmass / |V|)`.
-    */
-  private def pageRankOnDriver(spark: SparkSession, src: Array[Long],
-                               dst: Array[Long], iters: Int,
-                               damping: Double): DataFrame = {
-    val ids = (src ++ dst).distinct
-    java.util.Arrays.sort(ids)
-    val n = ids.length
-    require(n > 0, "pageRank on an empty graph")
-    val s = src.map(java.util.Arrays.binarySearch(ids, _))
-    val t = dst.map(java.util.Arrays.binarySearch(ids, _))
-    val outDeg = new Array[Int](n)
-    s.foreach(u => outDeg(u) += 1)
-    val inOff = new Array[Int](n + 1)
-    t.foreach(v => inOff(v + 1) += 1)
-    for (v <- 0 until n) inOff(v + 1) += inOff(v)
-    val inSrc = new Array[Int](s.length)
-    val fill = inOff.clone()
-    for (i <- s.indices) { inSrc(fill(t(i))) = s(i); fill(t(i)) += 1 }
-    for (v <- 0 until n) java.util.Arrays.sort(inSrc, inOff(v), inOff(v + 1))
+  // The four budgets below come from one `GraphCrossover` run per size
+  // range (records in `BENCH/graph-kernel/crossover/`): seeded random
+  // graphs of 164 to 1M edges (average out-degree 8; triangles and
+  // twoHop also on a hub-skewed graph), `local[4]` with 4 shuffle
+  // partitions on a 4-core host, each op's paths interleaved, 5
+  // repetitions per size up to 10k edges and 3 above. The rule is
+  // PageRank's: the largest measured size at which the driver path is
+  // not slower and the calling thread allocates under half a gigabyte
+  // (the collected rows dominate: 0.44-0.46 KB per edge for long ids,
+  // 0.62 KB for the 12-character string ids of `components`). None of
+  // the driver paths does more work than its distributed path shuffles,
+  // so an edge count bounds its time as well as its memory.
 
-    var pr = Array.fill(n)(1.0)
-    for (_ <- 1 to iters) {
-      var dmass = 0.0
-      for (u <- 0 until n) if (outDeg(u) == 0) dmass += pr(u)
-      val share = dmass / n.toDouble
-      val next = new Array[Double](n)
-      for (v <- 0 until n) {
-        var inSum = 0.0
-        var i = inOff(v)
-        while (i < inOff(v + 1)) {
-          val u = inSrc(i)
-          inSum += pr(u) / outDeg(u).toDouble
-          i += 1
-        }
-        next(v) = (1.0 - damping) + damping * (inSum + share)
-      }
-      pr = next
-    }
-    import spark.implicits._
-    ids.indices.map(i => (ids(i), pr(i))).toDF("node", "pr")
-  }
+  /** The largest edge count [[degrees]] collects and counts on the
+    * driver. Degrees' distributed path is two partial-agg shuffles,
+    * which cost about what the collect does: from 164 to 9,964 edges
+    * the paths' medians were within 0.03 s of each other (driver
+    * 0.16-0.20 s, distributed 0.17-0.19 s), and from 25k edges up the
+    * distributed path was faster (0.23 against 0.28 s at 25k, 0.98
+    * against 2.08 s at 1M). Ten thousand is the largest measured size
+    * inside that tie; below it the driver path saves the shuffles' jobs
+    * (q79: 4 jobs a call to 2).
+    */
+  val degreesCollectThreshold: Int = 10000
+
+  /** The largest edge count [[triangles]] collects and counts on the
+    * driver. The driver path was faster at every measured size, on
+    * both graphs: 0.18-0.21 s against 0.47-0.53 s up to 10k edges, 2.14
+    * against 6.00 s at 1M (uniform) and 1.84 against 5.78 s at 1M
+    * (hub-skewed), allocating 443 MB there.
+    */
+  val trianglesCollectThreshold: Int = 1000000
+
+  /** The largest edge count [[twoHopCounts]] collects and counts on
+    * the driver. The driver path was faster at every measured size,
+    * most on the hub-skewed graph, where the distributed mid-join's
+    * wedge volume grows with the squared hub degrees: 0.98 against
+    * 23.4 s at 400k edges and 2.76 against 70.1 s at 1M (uniform: 2.68
+    * against 32.3 s), allocating 462 MB at 1M.
+    */
+  val twoHopCollectThreshold: Int = 1000000
+
+  /** The largest edge count [[components]] (and so
+    * [[KgPipeline.canonFromEdges]], `dupClusters` and `semDedup`)
+    * collects and labels on the driver; it replaces the 100,000 those
+    * paths borrowed unmeasured. Measured on string ids, the heavier
+    * case: the driver path was 5-11x faster at every size (0.40 against
+    * 4.58 s at 100k edges, 1.47 against 9.07 s at 400k, 3.85 against
+    * 20.86 s at 1M), but allocated 621 MB at 1M against 248 MB at 400k.
+    * Above the budget the limit-collect pass added 3% at 1M (with a
+    * 100,000 budget: 21.46 against 20.86 s).
+    */
+  val componentsCollectThreshold: Int = 400000
 
   /** [[pageRank]] above the collect threshold, over the non-null long
     * pairs `(s, t)`. Per iteration: one long-keyed join (ranks ⋈ edges

@@ -27,7 +27,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - the wide operations are the link stage's mention-sized distinct
   *    (duplicate input rows), the distinct alias edge set (orders of
   *    magnitude smaller than the corpus; canonicalized on the driver
-  *    below `ccCollectThreshold` edges, by the CC fixpoint above it), and
+  *    up to `Graph.componentsCollectThreshold` edges, by the CC
+  *    fixpoint above it), and
   *    the type-triple dedup (map-side partial distinct collapses
   *    per-file repeats before the exchange — see `triples`).
   *  - popular-repo skew is defused by the committed write itself:
@@ -324,7 +325,7 @@ object KgPipeline {
     */
   def canonicalize(spark: SparkSession, linked: DataFrame,
                    kbAliases: DataFrame,
-                   collectThreshold: Int = ccCollectThreshold): DataFrame =
+                   collectThreshold: Int = Graph.componentsCollectThreshold): DataFrame =
     canonFromEdges(spark, aliasEdges(linked, kbAliases), kbAliases,
       collectThreshold)
 
@@ -361,7 +362,7 @@ object KgPipeline {
     */
   def canonFromEdges(spark: SparkSession, allEdges0: DataFrame,
                      kbAliases: DataFrame,
-                     collectThreshold: Int = ccCollectThreshold): DataFrame = {
+                     collectThreshold: Int = Graph.componentsCollectThreshold): DataFrame = {
     collectAtMost(allEdges0.select("src", "dst"), collectThreshold) match {
       case Some(rows) => canonOnDriver(spark,
         rows.map(r => (r.getString(0), r.getString(1))).distinct, kbAliases)
@@ -371,8 +372,11 @@ object KgPipeline {
 
   /** [[canonFromEdges]] on the driver: the same bridgeability counts as
     * the distributed left join on distinct `(entity_id, canonical)`,
-    * union-find, and the min entity id (UTF-8 byte order, as Spark's
-    * `min`) per component. Edges with a NULL end never bridge.
+    * then [[LocalGraph.components]] over the bridging edges, with the
+    * names encoded to dense ids once in UTF-8 byte order (Spark's `min`
+    * on strings). Names ascend with their ids, so the first entity met
+    * in a component is its min entity id. Edges with a NULL end never
+    * bridge.
     */
   private def canonOnDriver(spark: SparkSession, edges: Array[(String, String)],
                             kbAliases: DataFrame): DataFrame = {
@@ -388,16 +392,16 @@ object KgPipeline {
     val bridgeable = edges.groupBy(_._2).collect {
       case (dst, group) if dst != null && bridges(group.map(_._1)) => dst
     }.toSet
-    val uf = new UnionFind
-    edges.foreach { case (s, d) => if (s != null && bridgeable(d)) uf.union(s, d) }
-    val entities = uf.components().filterNot(_._1.startsWith("alias:")).toSeq
-    val canonId = entities.groupMapReduce(_._2)(_._1) { (a, b) =>
-      if (UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b)) <= 0) a
-      else b
+    val kept = edges.filter { case (s, d) => s != null && bridgeable(d) }
+    val (g, names) = LocalGraph.ofNames(kept.map(_._1), kept.map(_._2))
+    val comp = g.components
+    val canonOfComp = new Array[String](names.length)
+    val out = names.indices.filterNot(names(_).startsWith("alias:")).map { i =>
+      if (canonOfComp(comp(i)) == null) canonOfComp(comp(i)) = names(i)
+      (names(i), canonOfComp(comp(i)))
     }
     import spark.implicits._
-    entities.map { case (e, comp) => (e, canonId(comp)) }
-      .toDF("entity_id", "canon_id")
+    out.toDF("entity_id", "canon_id")
   }
 
   /** [[canonFromEdges]] above the collect threshold: a distributed
@@ -449,12 +453,6 @@ object KgPipeline {
     pinned
   }
 
-  /** At most this many distinct alias edges are canonicalized on the
-    * driver; above it, the distributed fixpoint runs. 100k two-string
-    * rows is a few MB on the driver — far below any OOM hazard.
-    */
-  val ccCollectThreshold: Int = 100000
-
   /** `df`'s rows if it has at most `threshold`, else None: one action,
     * `limit(threshold + 1)`, both decides and collects. A negative
     * threshold answers None without a job (it forces the distributed
@@ -465,34 +463,6 @@ object KgPipeline {
     if (threshold < 0) None
     else Some(df.limit(math.min(threshold, Int.MaxValue - 1) + 1).collect())
       .filter(_.length <= threshold)
-
-  /** Driver-side union-find with path compression; component label =
-    * lexicographic min member (same convention as the distributed CC).
-    */
-  private final class UnionFind {
-    private val parent = scala.collection.mutable.Map.empty[String, String]
-    def find(x: String): String = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    def union(a: String, b: String): Unit = {
-      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-    }
-    def components(): Iterator[(String, String)] = {
-      // roots are not guaranteed min under union-by-value alone after
-      // path compression interleavings; take min per root explicitly
-      val byRoot = parent.keys.groupBy(find)
-      byRoot.iterator.flatMap { case (_, members) =>
-        val m = members.min
-        members.iterator.map(x => (x, m))
-      }
-    }
-  }
 
   // ------------------------------------------------------------------
   // Stage 4: triple materialization (O5)
@@ -943,7 +913,7 @@ object KgPipeline {
     */
   def canonicalizeWithState(spark: SparkSession, linked: DataFrame,
                             kbAliases: DataFrame, stateDir: String,
-                            collectThreshold: Int = ccCollectThreshold)
+                            collectThreshold: Int = Graph.componentsCollectThreshold)
       : CanonDelta = {
     val deltaEdges = aliasEdges(linked, kbAliases)
     val merged = CanonState.loadEdges(spark, stateDir) match {

@@ -233,63 +233,18 @@ object TextDedup {
     * struct-max combines map-side. NULL texts tokenize to n_toks = 0,
     * shingle to nothing, and come out as singleton clusters.
     *
-    * Like the KG canonicalizer, the closure decides driver-vs-
-    * distributed on a cheap edge COUNT (partial-agg, no rows pulled): a
-    * sub-threshold pair set union-finds on the driver in microseconds —
-    * skipping the fixpoint's per-round jobs — while a corpus whose
-    * dup graph is genuinely large takes the iterative, checkpointed CC.
-    * 100k two-long rows is ~2 MB on the driver, far below OOM hazard.
+    * Like the KG canonicalizer, the closure is [[Graph.components]]:
+    * a pair set of at most `collectThreshold` edges (default
+    * [[Graph.componentsCollectThreshold]]) is collected once and
+    * labelled on the driver, skipping the fixpoint's per-round jobs,
+    * while a corpus whose dup graph is genuinely large takes the
+    * iterative, checkpointed CC.
     */
-  /** Component labels (node, comp = min member id) for an edge list —
-    * the shared closure step of [[dupClusters]] and
-    * [[graft.pipeline.Ann.semDedup]]. Chooses driver union-find vs the
-    * distributed CC fixpoint on a cheap edge COUNT (partial-agg, no
-    * rows pulled): a sub-threshold pair set union-finds on the driver
-    * in microseconds — skipping the fixpoint's per-round jobs — while
-    * a corpus whose dup graph is genuinely large takes the iterative,
-    * checkpointed CC. 100k two-long rows is ~2 MB on the driver, far
-    * below OOM hazard. The edge frame is persisted for its two
-    * consumers (count + closure input) and released before return.
-    */
-  private[pipeline] def componentLabels(pairs: DataFrame,
-                                        collectThreshold: Int): DataFrame = {
-    val edges = pairs
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nEdges = edges.count()
-    val labels = if (nEdges <= collectThreshold) {
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x; while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) {
-          val n = parent(c); parent(c) = r; c = n
-        }
-        r
-      }
-      edges.collect().foreach { e =>
-        val a = e.getLong(0); val b = e.getLong(1)
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      val sess = pairs.sparkSession
-      import sess.implicits._
-      // min member per root explicitly: path-compression interleavings
-      // don't guarantee the root IS the min
-      parent.keys.toSeq.groupBy(find).iterator.flatMap { case (_, ms) =>
-        val m = ms.min; ms.iterator.map(x => (x, m))
-      }.toSeq.toDF("node", "comp")
-    } else graft.pipeline.KgPipeline.connectedComponents(edges)
-    // both branches have fully consumed the cache by here (collect, or
-    // the eager checkpointed fixpoint); labels no longer depend on it
-    edges.unpersist()
-    labels
-  }
-
   def dupClusters(docs: DataFrame, idCol: String, textCol: String,
                   k: Int = 3, numHashes: Int = 16, bands: Int = 4,
-                  collectThreshold: Int = 100000): DataFrame = {
-    val labels = componentLabels(
+                  collectThreshold: Int = Graph.componentsCollectThreshold)
+      : DataFrame = {
+    val labels = Graph.components(
       minhashPairs(docs, idCol, textCol, k, numHashes, bands)
         .select(col("d1").as("src"), col("d2").as("dst")),
       collectThreshold)

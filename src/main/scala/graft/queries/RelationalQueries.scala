@@ -530,8 +530,11 @@ object RelationalQueries {
   // =================================================================
 
   /** CC over a small deterministic bipartite graph (orders<->parts),
-    * oracled by a DuckDB recursive CTE — validates the iterative
-    * DataFrame min-label algorithm used by canonicalization (§2.9).
+    * oracled by a DuckDB recursive CTE — validates the min-label
+    * components used by canonicalization (§2.9), through
+    * [[graft.pipeline.Graph.components]]: this 159-edge graph is
+    * labelled on the driver, a graph above its budget by the iterative
+    * DataFrame fixpoint.
     */
   def q25_connected_components(s: SparkSession, dir: String): DataFrame = {
     val edges = t(s, dir, "lineitem")
@@ -544,7 +547,7 @@ object RelationalQueries {
     val strEdges = edges.select(
       lpad(col("src").cast("string"), 12, "0").as("src"),
       lpad(col("dst").cast("string"), 12, "0").as("dst"))
-    graft.pipeline.KgPipeline.connectedComponents(strEdges)
+    graft.pipeline.Graph.components(strEdges)
       .select(col("node").cast("long").as("node"),
         col("comp").cast("long").as("comp"))
   }

@@ -5,12 +5,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantic gates for the graph-analytics operators ([[Graph]]):
-  * closed-form fixtures for degrees/triangles/2-hop, a brute-force
-  * parity sweep on a seeded random graph, and PageRank pinned against
-  * a driver recompute (including dangling-node redistribution and the
-  * dyadic bit-exactness the q82 oracle relies on) on both of its paths:
-  * the driver path at the default collect threshold, the distributed
-  * one forced by a negative threshold.
+  * closed-form fixtures for degrees/triangles/2-hop/components, a
+  * brute-force parity sweep on a seeded random graph, and PageRank
+  * pinned against a driver recompute (including dangling-node
+  * redistribution and the dyadic bit-exactness the q82 oracle relies
+  * on). Every op runs on both of its paths: the driver path
+  * ([[LocalGraph]]) at its default collect threshold, the distributed
+  * one forced by a negative threshold; a boundary test pins where the
+  * threshold switches and a schema test that both paths agree on it.
   */
 class GraphSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -20,8 +22,8 @@ class GraphSpec extends AnyFunSuite {
     es.toDF("src", "dst")
   }
 
-  /** The default collect threshold (driver path here) and a negative
-    * one (distributed path).
+  /** PageRank's default collect threshold (driver path here) and a
+    * negative one (distributed path).
     */
   private val thresholds = Seq(Graph.pageRankCollectThreshold, -1)
 
@@ -36,21 +38,33 @@ class GraphSpec extends AnyFunSuite {
     (4L, 5L), (5L, 6L),
     (2L, 1L), (3L, 1L), (1L, 2L), (5L, 5L))
 
+  /** Each op's default collect threshold (driver path here) and a
+    * negative one (distributed path).
+    */
+  private def both(default: Int) = Seq(default, -1)
+
   test("degrees: canonical closure (dedupe, reverse, self-loop) + counts") {
-    val got = Graph.degrees(edgeDf(fixture)).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 3, 2L -> 3, 3L -> 3, 4L -> 4, 5L -> 2, 6L -> 1))
+    for (t <- both(Graph.degreesCollectThreshold)) {
+      val df = Graph.degrees(edgeDf(fixture), t)
+      assert(onDriver(df) == (t >= 0), s"threshold $t took the wrong path")
+      val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == Map(1L -> 3, 2L -> 3, 3L -> 3, 4L -> 4, 5L -> 2, 6L -> 1))
+    }
   }
 
   test("triangles: K4 gives every member 3; pendant path members absent") {
-    val got = Graph.triangles(edgeDf(fixture)).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 3, 2L -> 3, 3L -> 3, 4L -> 3))
+    for (t <- both(Graph.trianglesCollectThreshold)) {
+      val df = Graph.triangles(edgeDf(fixture), t)
+      assert(onDriver(df) == (t >= 0), s"threshold $t took the wrong path")
+      val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == Map(1L -> 3, 2L -> 3, 3L -> 3, 4L -> 3))
+    }
   }
 
   test("triangles: star graph has none (degree orientation handles the hub)") {
     val star = (1L to 40L).map(i => (0L, i))
-    assert(Graph.triangles(edgeDf(star)).collect().isEmpty)
+    for (t <- both(Graph.trianglesCollectThreshold))
+      assert(Graph.triangles(edgeDf(star), t).collect().isEmpty)
   }
 
   test("triangles: brute-force parity on a seeded random graph") {
@@ -69,21 +83,103 @@ class GraphSpec extends AnyFunSuite {
         expected(b) = expected.getOrElse(b.toLong, 0L) + 1
         expected(c) = expected.getOrElse(c.toLong, 0L) + 1
       }
-    val got = Graph.triangles(edgeDf(es)).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == expected.toMap)
+    for (t <- both(Graph.trianglesCollectThreshold)) {
+      val got = Graph.triangles(edgeDf(es), t).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == expected.toMap, s"threshold $t")
+    }
   }
 
   test("twoHopCounts: path graph exact; clique members have no distance-2 peers") {
     // path 1-2-3-4-5: exactly-2 sets {3},{4},{1,5},{2},{3}
     val path = Seq[(Long, Long)]((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
-    val got = Graph.twoHopCounts(edgeDf(path)).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 1, 2L -> 1, 3L -> 2, 4L -> 1, 5L -> 1))
     // K4 alone: everything adjacent, nothing at distance exactly 2
     val k4 = Seq[(Long, Long)]((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L),
       (2L, 4L), (3L, 4L))
-    assert(Graph.twoHopCounts(edgeDf(k4)).collect().isEmpty)
+    for (t <- both(Graph.twoHopCollectThreshold)) {
+      val df = Graph.twoHopCounts(edgeDf(path), t)
+      assert(onDriver(df) == (t >= 0), s"threshold $t took the wrong path")
+      val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == Map(1L -> 1, 2L -> 1, 3L -> 2, 4L -> 1, 5L -> 1))
+      assert(Graph.twoHopCounts(edgeDf(k4), t).collect().isEmpty)
+    }
+  }
+
+  test("twoHopCounts and degrees: both paths agree on a seeded hub-skewed graph") {
+    val rnd = new scala.util.Random(23)
+    // a noisy multigraph: hub-biased ends, duplicates, reversals, loops
+    val es = (1 to 400).map { _ =>
+      val a = (math.pow(rnd.nextDouble(), 3) * 80).toLong
+      (a, rnd.nextInt(80).toLong)
+    }
+    def counts(df: DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(counts(Graph.twoHopCounts(edgeDf(es))) ==
+      counts(Graph.twoHopCounts(edgeDf(es), -1)))
+    assert(counts(Graph.degrees(edgeDf(es))) ==
+      counts(Graph.degrees(edgeDf(es), -1)))
+    assert(counts(Graph.triangles(edgeDf(es))) ==
+      counts(Graph.triangles(edgeDf(es), -1)))
+  }
+
+  test("components: min label on both paths; strings by UTF-8 byte order") {
+    val es = Seq[(Long, Long)]((5L, 3L), (3L, 9L), (7L, 8L), (4L, 4L), (9L, 5L))
+    val want = Map(3L -> 3L, 5L -> 3L, 9L -> 3L, 7L -> 7L, 8L -> 7L, 4L -> 4L)
+    // U+FF21 sorts before U+1F600 in UTF-8 bytes (Spark's `min`), after
+    // it in UTF-16 units (String.compareTo)
+    val (fw, emoji) = ("\uFF21", new String(Character.toChars(0x1F600)))
+    import spark.implicits._
+    val strs = Seq((emoji, fw), ("b", "a"), ("c", "b")).toDF("src", "dst")
+    val wantStr = Map(emoji -> fw, fw -> fw, "a" -> "a", "b" -> "a", "c" -> "a")
+    for (t <- both(Graph.componentsCollectThreshold)) {
+      val df = Graph.components(edgeDf(es), t)
+      assert(onDriver(df) == (t >= 0), s"threshold $t took the wrong path")
+      assert(df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == want)
+      val ds = Graph.components(strs, t)
+      assert(onDriver(ds) == (t >= 0), s"threshold $t took the wrong path")
+      assert(ds.collect().map(r => r.getString(0) -> r.getString(1)).toMap ==
+        wantStr, s"threshold $t")
+    }
+  }
+
+  test("degrees, triangles, twoHopCounts, components: exactly collectThreshold edges run on the driver, one more does not") {
+    // K4 plus a pendant: 7 edges, every op has output
+    val es = Seq[(Long, Long)]((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L),
+      (2L, 4L), (3L, 4L), (4L, 5L))
+    val ops = Seq[(String, Int => DataFrame)](
+      "degrees" -> (Graph.degrees(edgeDf(es), _)),
+      "triangles" -> (Graph.triangles(edgeDf(es), _)),
+      "twoHopCounts" -> (Graph.twoHopCounts(edgeDf(es), _)),
+      "components" -> (Graph.components(edgeDf(es), _)))
+    for ((name, op) <- ops) {
+      assert(onDriver(op(es.size)), name)
+      assert(!onDriver(op(es.size - 1)), name)
+      assert(op(es.size).collect().toSet == op(es.size - 1).collect().toSet, name)
+    }
+    // NULL ends are not edges: they neither count nor become nodes
+    import spark.implicits._
+    val withNulls = (es.map { case (u, v) => (Option(u), Option(v)) } ++
+      Seq((None, Some(1L)), (Some(2L), None))).toDF("src", "dst")
+    val deg = Graph.degrees(withNulls, es.size)
+    assert(onDriver(deg))
+    assert(deg.count() == 5)
+  }
+
+  test("degrees, triangles, twoHopCounts: both paths give the same schema, int inputs included") {
+    import spark.implicits._
+    val es = Seq((1, 2), (1, 3), (2, 3), (3, 4))
+    val ints = es.toDF("src", "dst")
+    val mixed = es.map { case (a, b) => (a, b.toLong) }.toDF("src", "dst")
+    val ops = Seq[(DataFrame, Int) => DataFrame](
+      Graph.degrees, Graph.triangles, Graph.twoHopCounts)
+    for (op <- ops; df <- Seq(ints, mixed)) {
+      val (local, dist) = (op(df, Int.MaxValue), op(df, -1))
+      assert(onDriver(local))
+      assert(local.schema == dist.schema)
+      assert(local.collect().toSet == dist.collect().toSet)
+    }
+    assert(Graph.degrees(ints).schema("node").dataType ==
+      org.apache.spark.sql.types.IntegerType)
   }
 
   /** Driver recompute of [[Graph.pageRank]]'s documented semantics. */

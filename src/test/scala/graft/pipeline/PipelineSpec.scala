@@ -598,6 +598,24 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(jobs <= budget, s"one q83 call launched $jobs Spark jobs, budget $budget")
   }
 
+  // One call plus the collect of its result, on the sf0.001 tables (the
+  // benchmark's copy). Each graph has a few hundred edges, so per-job
+  // fixed cost is the whole query: before these graphs went to the
+  // driver kernel (LocalGraph), a call launched 4 jobs here for q79, 12
+  // for q80, 10 for q81 and 165 for q25. What is left is each query's
+  // parquet schema reads, q80/q81's broadcast node count and the
+  // limit-collect. The budgets may only tighten.
+  for ((key, budget) <- Seq("q79_graph_degree" -> 2, "q80_triangles" -> 6,
+         "q81_two_hop" -> 6, "q25_connected_components" -> 3))
+    test(s"one $key call and the collect of its result stay within the Spark job budget") {
+      val dir = "perfbench/data/sf0.001"
+      val query = graft.SparkEntry.queries(key)
+      query(spark, dir).collect()
+      val (rows, jobs) = jobsOf(query(spark, dir).collect())
+      assert(rows.nonEmpty)
+      assert(jobs <= budget, s"one $key call launched $jobs Spark jobs, budget $budget")
+    }
+
   test("manifest publish leaves no temp file, fresh or overwriting") {
     val dir = java.nio.file.Files.createTempDirectory("graft_io_publish").toFile
     val p = s"$dir/sub/_manifest.json"
