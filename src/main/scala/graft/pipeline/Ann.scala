@@ -239,7 +239,8 @@ object Ann {
     * all-pairs product, no vector in any bucket shuffle, degenerate
     * cells capped at `maxCellSize`); the closure runs over dup-involved
     * ids only ([[Graph.components]]' driver/distributed choice); the
-    * keep pick is a partial-agg `min(struct(ccos, id))` per cluster — not a window, so a giant duplicate family never
+    * keep pick is a partial-agg `min(struct(ccos, id))`
+    * per cluster — not a window, so a giant duplicate family never
     * lands one task. Clusters form WITHIN cells by construction
     * (SemDeDup's deliberate approximation: cross-cell near-dups are
     * the quantizer's miss rate, bounded in-suite on a clustered

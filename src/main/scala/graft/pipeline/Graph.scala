@@ -77,9 +77,9 @@ object Graph {
     * `collectThreshold` edges: `count` runs on the collected
     * [[LocalGraph]] and its nonzero entries become a local relation
     * with exactly `distributed`'s schema (names, types, nullability;
-    * integer ids convert back to the node column's type). Above it, or
-    * for a node column that is not an integer type, `distributed` runs
-    * as it is; it is only analyzed before that.
+    * ids convert back to an `int` node column). Above it, or for a node
+    * column that is neither `bigint` nor `int`, `distributed` runs as
+    * it is; it is only analyzed before that.
     */
   private def perNode(edges: DataFrame, collectThreshold: Int,
                       distributed: DataFrame)(count: LocalGraph => Array[Long])
@@ -89,8 +89,6 @@ object Graph {
     val toNode: Option[Long => Any] = schema.head.dataType match {
       case LongType => Some(identity)
       case IntegerType => Some(_.toInt)
-      case ShortType => Some(_.toShort)
-      case ByteType => Some(_.toByte)
       case _ => None
     }
     toNode.flatMap(conv =>

@@ -28,9 +28,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    (duplicate input rows), the distinct alias edge set (orders of
   *    magnitude smaller than the corpus; canonicalized on the driver
   *    up to `Graph.componentsCollectThreshold` edges, by the CC
-  *    fixpoint above it), and
-  *    the type-triple dedup (map-side partial distinct collapses
-  *    per-file repeats before the exchange — see `triples`).
+  *    fixpoint above it), and the type-triple dedup (map-side partial
+  *    distinct collapses per-file repeats before the exchange — see
+  *    `triples`).
   *  - popular-repo skew is defused by the committed write itself:
   *    `TableIO.writeBuckets` AQE-rebalances rows on `_bucket`, which
   *    splits a hot bucket over several tasks.
@@ -325,7 +325,8 @@ object KgPipeline {
     */
   def canonicalize(spark: SparkSession, linked: DataFrame,
                    kbAliases: DataFrame,
-                   collectThreshold: Int = Graph.componentsCollectThreshold): DataFrame =
+                   collectThreshold: Int = Graph.componentsCollectThreshold)
+      : DataFrame =
     canonFromEdges(spark, aliasEdges(linked, kbAliases), kbAliases,
       collectThreshold)
 
@@ -362,7 +363,8 @@ object KgPipeline {
     */
   def canonFromEdges(spark: SparkSession, allEdges0: DataFrame,
                      kbAliases: DataFrame,
-                     collectThreshold: Int = Graph.componentsCollectThreshold): DataFrame = {
+                     collectThreshold: Int = Graph.componentsCollectThreshold)
+      : DataFrame = {
     collectAtMost(allEdges0.select("src", "dst"), collectThreshold) match {
       case Some(rows) => canonOnDriver(spark,
         rows.map(r => (r.getString(0), r.getString(1))).distinct, kbAliases)
@@ -456,7 +458,7 @@ object KgPipeline {
   /** `df`'s rows if it has at most `threshold`, else None: one action,
     * `limit(threshold + 1)`, both decides and collects. A negative
     * threshold answers None without a job (it forces the distributed
-    * path of [[canonFromEdges]] and [[Graph.pageRank]]).
+    * path of [[canonFromEdges]] and of every [[Graph]] op).
     */
   private[pipeline] def collectAtMost(df: DataFrame,
                                       threshold: Int): Option[Array[Row]] =

@@ -105,7 +105,7 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
-  test("twoHopCounts and degrees: both paths agree on a seeded hub-skewed graph") {
+  test("degrees, triangles, twoHopCounts: both paths agree on a seeded hub-skewed multigraph") {
     val rnd = new scala.util.Random(23)
     // a noisy multigraph: hub-biased ends, duplicates, reversals, loops
     val es = (1 to 400).map { _ =>
