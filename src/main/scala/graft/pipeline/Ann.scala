@@ -238,8 +238,8 @@ object Ann {
     * candidate-join/exact-verify with `cell` as the bucket (no
     * all-pairs product, no vector in any bucket shuffle, degenerate
     * cells capped at `maxCellSize`); the closure runs over dup-involved
-    * ids only ([[Graph.components]]' driver/distributed choice); the
-    * keep pick is a partial-agg `min(struct(ccos, id))`
+    * ids only ([[TextDedup.componentLabels]]'s driver/distributed
+    * choice); the keep pick is a partial-agg `min(struct(ccos, id))`
     * per cluster — not a window, so a giant duplicate family never
     * lands one task. Clusters form WITHIN cells by construction
     * (SemDeDup's deliberate approximation: cross-cell near-dups are
@@ -291,7 +291,8 @@ object Ann {
         tau - 1e-6, maxCellSize)
       .where(col("cos") >= tau)
       .select(col("d1").as("src"), col("d2").as("dst"))
-    val labels = Graph.components(pairs)
+    val labels = TextDedup
+      .componentLabels(pairs, Graph.componentsCollectThreshold)
       .withColumnRenamed("node", "vec_id")
     val withClusters = assigned
       .join(labels, Seq("vec_id"), "left")

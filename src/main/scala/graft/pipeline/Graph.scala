@@ -16,10 +16,9 @@ import org.apache.spark.sql.functions._
   * ids) and over any relational edge derivation alike.
   *
   * Two paths per op, one decision. [[degrees]], [[triangles]],
-  * [[twoHopCounts]], [[components]] and [[pageRank]] each take a
-  * `collectThreshold` in edges (default: the op's measured budget,
-  * e.g. [[trianglesCollectThreshold]]). One action,
-  * `limit(collectThreshold + 1)` over the non-NULL edges
+  * [[twoHopCounts]], [[components]] and [[pageRank]] each have an edge
+  * budget, measured per op (e.g. [[trianglesCollectThreshold]]). One
+  * action, `limit(budget + 1)` over the non-NULL edges
   * ([[KgPipeline.collectAtMost]]), both decides and collects:
   *   - at or below the threshold the op runs on the driver over one
   *     [[LocalGraph]] (dense ids, CSR adjacency, primitive arrays) and
@@ -29,8 +28,10 @@ import org.apache.spark.sql.functions._
   *     Partition, or Not to Partition" (skip the distributed machinery
   *     when the build side fits);
   *   - above it the distributed path runs unchanged, after that action
-  *     has evaluated the input once more. A negative threshold forces
-  *     it (specs and `GraphCrossover` use that).
+  *     has evaluated the input once more. Specs and `GraphCrossover`
+  *     pass their own budget through a package-private overload (a
+  *     negative one forces the distributed path); [[pageRank]] keeps its
+  *     `collectThreshold` argument.
   * The driver path never does more work than the distributed one
   * shuffles (see each op), so an edge budget alone bounds its time;
   * its memory is the collected rows plus a few int arrays per edge.
@@ -105,13 +106,18 @@ object Graph {
     * de-duplicated, self-loop-free undirected closure of `edges`.
     *
     * Two paths, decided as [[pageRank]] decides: at most
-    * `collectThreshold` edges (default [[degreesCollectThreshold]])
-    * count on the driver ([[LocalGraph.degrees]]) into a local
-    * relation; above it, two shuffles (edge distinct, count), both
-    * keyed on longs. A negative threshold forces the distributed path.
+    * [[degreesCollectThreshold]] edges count on the driver
+    * ([[LocalGraph.degrees]]) into a local relation; above it, two
+    * shuffles (edge distinct, count), both keyed on longs.
     */
-  def degrees(edges: DataFrame,
-              collectThreshold: Int = degreesCollectThreshold): DataFrame =
+  def degrees(edges: DataFrame): DataFrame =
+    degrees(edges, degreesCollectThreshold)
+
+  /** [[degrees]] with its budget given; a negative one forces the
+    * distributed path.
+    */
+  private[pipeline] def degrees(edges: DataFrame,
+                                collectThreshold: Int): DataFrame =
     perNode(edges, collectThreshold, degreesDistributed(edges))(_.degrees)
 
   private def degreesDistributed(edges: DataFrame): DataFrame =
@@ -126,16 +132,21 @@ object Graph {
     * edge from its lower endpoint under the total order (degree asc, id
     * asc). Each triangle {u < v < w} in that order is then generated
     * exactly once, as the wedge (u→v, u→w) closed by the oriented edge
-    * v→w. At most `collectThreshold` edges (default
-    * [[trianglesCollectThreshold]]) run on the driver
-    * ([[LocalGraph.triangles]], a marker array over u's out-neighbors);
-    * above it the distributed joins run: the orientation join attaches
-    * degrees (node-sized frame, long-keyed), the wedge self-join is
-    * keyed on the wedge apex, the closing join on the (v, w) pair, all
-    * fixed-width. A negative threshold forces the distributed path.
+    * v→w. At most [[trianglesCollectThreshold]] edges run on the
+    * driver ([[LocalGraph.triangles]], a marker array over u's
+    * out-neighbors); above it the distributed joins run: the
+    * orientation join attaches degrees (node-sized frame, long-keyed),
+    * the wedge self-join is keyed on the wedge apex, the closing join
+    * on the (v, w) pair, all fixed-width.
     */
-  def triangles(edges: DataFrame,
-                collectThreshold: Int = trianglesCollectThreshold): DataFrame =
+  def triangles(edges: DataFrame): DataFrame =
+    triangles(edges, trianglesCollectThreshold)
+
+  /** [[triangles]] with its budget given; a negative one forces the
+    * distributed path.
+    */
+  private[pipeline] def triangles(edges: DataFrame,
+                                  collectThreshold: Int): DataFrame =
     perNode(edges, collectThreshold, trianglesDistributed(edges))(_.triangles)
 
   private def trianglesDistributed(edges: DataFrame): DataFrame = {
@@ -174,18 +185,22 @@ object Graph {
 
   /** Count of nodes at undirected distance EXACTLY 2 per node (the
     * co-occurrence neighborhood: reachable through a shared neighbor,
-    * not adjacent, not self). At most `collectThreshold` edges (default
-    * [[twoHopCollectThreshold]]) count on the driver
-    * ([[LocalGraph.twoHop]], per-node stamp arrays, no pair set).
-    * Above it, adjacency expands once (m → 2m directed rows), the
-    * mid-join is keyed on the shared neighbor, and the exactly-2
-    * discipline is one long-keyed anti-join back against adjacency; at
-    * web scale the distinct on (node, peer) is the dominant exchange,
-    * fixed-width, two longs. A negative threshold forces the
+    * not adjacent, not self). At most [[twoHopCollectThreshold]] edges
+    * count on the driver ([[LocalGraph.twoHop]], per-node stamp arrays,
+    * no pair set). Above it, adjacency expands once (m → 2m directed
+    * rows), the mid-join is keyed on the shared neighbor, and the
+    * exactly-2 discipline is one long-keyed anti-join back against
+    * adjacency; at web scale the distinct on (node, peer) is the
+    * dominant exchange, fixed-width, two longs.
+    */
+  def twoHopCounts(edges: DataFrame): DataFrame =
+    twoHopCounts(edges, twoHopCollectThreshold)
+
+  /** [[twoHopCounts]] with its budget given; a negative one forces the
     * distributed path.
     */
-  def twoHopCounts(edges: DataFrame,
-                   collectThreshold: Int = twoHopCollectThreshold): DataFrame =
+  private[pipeline] def twoHopCounts(edges: DataFrame,
+                                     collectThreshold: Int): DataFrame =
     perNode(edges, collectThreshold, twoHopDistributed(edges))(_.twoHop)
 
   private def twoHopDistributed(edges: DataFrame): DataFrame = {
@@ -207,19 +222,29 @@ object Graph {
 
   /** Min-label connected components `(node, comp)` of an undirected
     * edge set `(src, dst)`: comp is the least node of the component
-    * (byte order for strings, as Spark's `min`). At most
-    * `collectThreshold` non-NULL edges (default
-    * [[componentsCollectThreshold]]) whose ends are both `bigint` or
-    * both `string` are labelled on the driver
+    * (byte order for strings, as Spark's `min`). Edges with a NULL end
+    * are dropped first, on both paths. At most
+    * [[componentsCollectThreshold]] edges whose ends are both `bigint`
+    * or both `string` are labelled on the driver
     * ([[LocalGraph.components]]; strings through
     * [[LocalGraph.ofNames]]) into a local relation of non-null longs,
     * or of strings. Anything else runs
-    * [[KgPipeline.connectedComponents]], the checkpointed fixpoint, on
-    * `edges` as given. A negative threshold forces that path.
+    * [[KgPipeline.connectedComponents]], the checkpointed fixpoint.
+    * Above the budget the input is evaluated up to three times (the
+    * limit-collect, then both sides of the fixpoint's undirected
+    * union); a caller with a costly derivation persists it first, as
+    * [[TextDedup.componentLabels]] does. Both paths have consumed the
+    * input on return (the local relation, or the fixpoint's eager
+    * checkpoints), so such a cache can be released then.
     */
-  def components(edges: DataFrame,
-                 collectThreshold: Int = componentsCollectThreshold)
-      : DataFrame = {
+  def components(edges: DataFrame): DataFrame =
+    components(edges, componentsCollectThreshold)
+
+  /** [[components]] with its budget given; a negative one forces the
+    * fixpoint.
+    */
+  private[pipeline] def components(edges: DataFrame,
+                                   collectThreshold: Int): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StringType}
     val spark = edges.sparkSession
     import spark.implicits._
@@ -241,7 +266,7 @@ object Graph {
         }
       case _ => None
     }
-    local.getOrElse(KgPipeline.connectedComponents(edges))
+    local.getOrElse(KgPipeline.connectedComponents(pairs))
   }
 
   /** PageRank over a DIRECTED multigraph (callers dedupe if they mean a
@@ -355,15 +380,18 @@ object Graph {
     */
   val twoHopCollectThreshold: Int = 1000000
 
-  /** The largest edge count [[components]] (and so
-    * [[KgPipeline.canonFromEdges]], `dupClusters` and `semDedup`)
-    * collects and labels on the driver; it replaces the 100,000 those
-    * paths borrowed unmeasured. Measured on string ids, the heavier
-    * case: the driver path was 5-11x faster at every size (0.40 against
-    * 4.58 s at 100k edges, 1.47 against 9.07 s at 400k, 3.85 against
-    * 20.86 s at 1M), but allocated 621 MB at 1M against 248 MB at 400k.
-    * Above the budget the limit-collect pass added 3% at 1M (with a
-    * 100,000 budget: 21.46 against 20.86 s).
+  /** The largest edge count [[components]] (and so `dupClusters` and
+    * `semDedup`) collects and labels on the driver; it replaces the
+    * 100,000 those paths borrowed unmeasured. Measured on string ids,
+    * the heavier case: the driver path was 5-11x faster at every size
+    * (0.40 against 4.58 s at 100k edges, 1.47 against 9.07 s at 400k,
+    * 3.85 against 20.86 s at 1M), but allocated 621 MB at 1M against
+    * 248 MB at 400k. Above the budget the limit-collect pass added 3%
+    * at 1M (with a 100,000 budget: 21.46 against 20.86 s) on the
+    * harness's cheap input; the dedup closures persist their costlier
+    * pairs first ([[TextDedup.componentLabels]]), so that pass and the
+    * fixpoint read them from the cache. The canonicalizer has its own
+    * budget, [[KgPipeline.ccCollectThreshold]].
     */
   val componentsCollectThreshold: Int = 400000
 

@@ -27,10 +27,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - the wide operations are the link stage's mention-sized distinct
   *    (duplicate input rows), the distinct alias edge set (orders of
   *    magnitude smaller than the corpus; canonicalized on the driver
-  *    up to `Graph.componentsCollectThreshold` edges, by the CC
-  *    fixpoint above it), and the type-triple dedup (map-side partial
-  *    distinct collapses per-file repeats before the exchange — see
-  *    `triples`).
+  *    up to `ccCollectThreshold` edges, by the CC fixpoint above it),
+  *    and the type-triple dedup (map-side partial distinct collapses
+  *    per-file repeats before the exchange — see `triples`).
   *  - popular-repo skew is defused by the committed write itself:
   *    `TableIO.writeBuckets` AQE-rebalances rows on `_bucket`, which
   *    splits a hot bucket over several tasks.
@@ -325,8 +324,7 @@ object KgPipeline {
     */
   def canonicalize(spark: SparkSession, linked: DataFrame,
                    kbAliases: DataFrame,
-                   collectThreshold: Int = Graph.componentsCollectThreshold)
-      : DataFrame =
+                   collectThreshold: Int = ccCollectThreshold): DataFrame =
     canonFromEdges(spark, aliasEdges(linked, kbAliases), kbAliases,
       collectThreshold)
 
@@ -363,8 +361,7 @@ object KgPipeline {
     */
   def canonFromEdges(spark: SparkSession, allEdges0: DataFrame,
                      kbAliases: DataFrame,
-                     collectThreshold: Int = Graph.componentsCollectThreshold)
-      : DataFrame = {
+                     collectThreshold: Int = ccCollectThreshold): DataFrame = {
     collectAtMost(allEdges0.select("src", "dst"), collectThreshold) match {
       case Some(rows) => canonOnDriver(spark,
         rows.map(r => (r.getString(0), r.getString(1))).distinct, kbAliases)
@@ -454,6 +451,30 @@ object KgPipeline {
     if (!callerCached) allEdges.unpersist()
     pinned
   }
+
+  /** At most this many distinct alias edges are canonicalized on the
+    * driver; above it, the distributed fixpoint runs. Set from
+    * `GraphCrossover canon` (test sources; records in
+    * `BENCH/graph-kernel/crossover/crossover-canon-25k-1m.jsonl`):
+    * [[canonFromEdges]] on seeded alias graphs of 22.7k to 907k edges
+    * (string ids, about four alias edges per entity, pairs of entities
+    * merged by a shared alias), `local[4]` with 4 shuffle partitions
+    * on a 4-core host, 3 interleaved repetitions per size.
+    *   - The driver path was 3-12x faster at every size: median 0.43
+    *     against 5.33 s at 22.7k edges, 3.13 against 13.95 s at 199k,
+    *     4.18 against 16.79 s at 363k, 12.44 against 37.83 s at 907k.
+    *   - It allocates 2.0-2.2 KB per edge on the calling thread, three
+    *     times what [[Graph.components]] does on string ids (the
+    *     bridgeability counts and the name encoding run over Scala
+    *     collections): 420 MB at 199k edges, 709 MB at 363k.
+    *   - Above the budget the limit-collect pass (then at 100,000) cost
+    *     +12% at 199k edges (15.62 against 13.95 s), none at 363k and
+    *     +7% at 907k (40.47 against 37.83 s).
+    * PageRank's rule (the largest measured size at which the driver
+    * path is not slower and allocates under half a gigabyte) gives
+    * 200,000.
+    */
+  val ccCollectThreshold: Int = 200000
 
   /** `df`'s rows if it has at most `threshold`, else None: one action,
     * `limit(threshold + 1)`, both decides and collects. A negative
@@ -915,7 +936,7 @@ object KgPipeline {
     */
   def canonicalizeWithState(spark: SparkSession, linked: DataFrame,
                             kbAliases: DataFrame, stateDir: String,
-                            collectThreshold: Int = Graph.componentsCollectThreshold)
+                            collectThreshold: Int = ccCollectThreshold)
       : CanonDelta = {
     val deltaEdges = aliasEdges(linked, kbAliases)
     val merged = CanonState.loadEdges(spark, stateDir) match {

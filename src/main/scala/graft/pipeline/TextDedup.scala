@@ -233,18 +233,35 @@ object TextDedup {
     * struct-max combines map-side. NULL texts tokenize to n_toks = 0,
     * shingle to nothing, and come out as singleton clusters.
     *
-    * Like the KG canonicalizer, the closure is [[Graph.components]]:
-    * a pair set of at most `collectThreshold` edges (default
-    * [[Graph.componentsCollectThreshold]]) is collected once and
-    * labelled on the driver, skipping the fixpoint's per-round jobs,
-    * while a corpus whose dup graph is genuinely large takes the
-    * iterative, checkpointed CC.
+    * Like the KG canonicalizer, the closure decides driver-vs-
+    * distributed with one limit-collect ([[componentLabels]]): a pair
+    * set of at most `collectThreshold` edges (default
+    * [[Graph.componentsCollectThreshold]]) is labelled on the driver,
+    * skipping the fixpoint's per-round jobs, while a corpus whose dup
+    * graph is genuinely large takes the iterative, checkpointed CC.
     */
+  /** Component labels (node, comp = min member id) for a dup-pair edge
+    * list — the shared closure step of [[dupClusters]] and
+    * [[graft.pipeline.Ann.semDedup]]: [[Graph.components]] over the
+    * pairs, persisted for the call. Both callers' pairs are costly
+    * derivations (MinHash banding, or the candidate join and exact
+    * verify) that the driver path reads once and the fixpoint path up
+    * to three times; the cache makes that once in either case, and is
+    * released on return, when both paths have consumed it.
+    */
+  private[pipeline] def componentLabels(pairs: DataFrame,
+                                        collectThreshold: Int): DataFrame = {
+    val edges = pairs
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try Graph.components(edges, collectThreshold)
+    finally edges.unpersist()
+  }
+
   def dupClusters(docs: DataFrame, idCol: String, textCol: String,
                   k: Int = 3, numHashes: Int = 16, bands: Int = 4,
                   collectThreshold: Int = Graph.componentsCollectThreshold)
       : DataFrame = {
-    val labels = Graph.components(
+    val labels = componentLabels(
       minhashPairs(docs, idCol, textCol, k, numHashes, bands)
         .select(col("d1").as("src"), col("d2").as("dst")),
       collectThreshold)

@@ -287,8 +287,8 @@ object PipelineQueries {
     */
   private[graft] def fileEntities(
       r: graft.pipeline.KgPipeline.Result): DataFrame = {
-    // below componentsCollectThreshold the canon map is a driver-built
-    // local relation of at most 2 × that many rows, far under the
+    // below ccCollectThreshold the canon map is a driver-built local
+    // relation of at most 2 × ccCollectThreshold rows, far under the
     // budget: broadcast it without running a job. Only the distributed
     // map is counted.
     val small = r.canon.queryExecution.optimizedPlan match {

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * the measurement behind the ops' collect thresholds
   * ([[Graph.pageRankCollectThreshold]], [[Graph.degreesCollectThreshold]],
   * [[Graph.trianglesCollectThreshold]], [[Graph.twoHopCollectThreshold]],
-  * [[Graph.componentsCollectThreshold]]), not a test.
+  * [[Graph.componentsCollectThreshold]],
+  * [[KgPipeline.ccCollectThreshold]]), not a test.
   *
   * Each graph is an uncached derivation with a shuffle (`range` → two
   * hashed endpoints → `distinct`, average out-degree 8), so a path that
@@ -17,8 +18,15 @@ import org.apache.spark.sql.functions._
   * the squared degrees) draws the target as `n * u^2`, so node density
   * falls as 1/sqrt(id) and the lowest ids are hubs. `components` runs
   * on the ids zero-padded to strings, as q25 and the canonicalizer
-  * label strings. Per op, graph, size and repetition the modes run
-  * interleaved:
+  * label strings. `canon` times [[KgPipeline.canonFromEdges]] against
+  * [[KgPipeline.ccCollectThreshold]] on its own `alias` graph: entity
+  * ids `ent:<12 digits>` with about four alias edges each; three in
+  * four go to an `alias:<12 digits>` drawn from as many aliases as
+  * edges (one source, or an ambiguous few), one in four to the alias
+  * its entity shares with its canonical twin, so that alias bridges
+  * and each component holds two entities. The KB (`entity_id`,
+  * `canonical`) is a local relation, as the pipeline's is. Per op,
+  * graph, size and repetition the modes run interleaved:
   *   - `driver`: threshold above the edge count (collect + LocalGraph);
   *   - `distributed`: threshold −1 (the distributed path alone);
   *   - `default` (sizes above the op's default threshold only): the
@@ -34,7 +42,7 @@ import org.apache.spark.sql.functions._
   * Run (the session is `local[4]` with 4 shuffle partitions and AQE,
   * as the benchmark's):
   * {{{
-  * SPARK_DRIVER_MEM=3g sbt "Test/runMain graft.pipeline.GraphCrossover degrees,triangles,twoHop,components 25000,100000,400000 3"
+  * SPARK_DRIVER_MEM=3g sbt "Test/runMain graft.pipeline.GraphCrossover degrees,triangles,twoHop,components,canon 25000,100000,400000 3"
   * }}}
   */
 object GraphCrossover {
@@ -56,13 +64,45 @@ object GraphCrossover {
     "degrees" -> Graph.degreesCollectThreshold,
     "triangles" -> Graph.trianglesCollectThreshold,
     "twoHop" -> Graph.twoHopCollectThreshold,
-    "components" -> Graph.componentsCollectThreshold)
+    "components" -> Graph.componentsCollectThreshold,
+    "canon" -> KgPipeline.ccCollectThreshold)
+
+  /** `alias` edges `(src, dst)` of about `m` rows and their KB. */
+  private def aliasGraph(spark: SparkSession, m: Int)
+      : (DataFrame, DataFrame) = {
+    import spark.implicits._
+    val nEnt = math.max(m / 4, 2)
+    val ent = pmod(xxhash64(col("id"), lit(1)), lit(nEnt.toLong))
+    val edges = spark.range(m.toLong).select(
+      format_string("ent:%012d", ent).as("src"),
+      when(pmod(xxhash64(col("id"), lit(3)), lit(4)) === 0,
+        format_string("alias:c%012d", floor(ent / 2)))
+        .otherwise(format_string("alias:%012d",
+          pmod(xxhash64(col("id"), lit(2)), lit(m.toLong))))
+        .as("dst")).distinct()
+    val kb = (0 until nEnt).map(i => (f"ent:$i%012d", f"c${i / 2}%012d"))
+      .toDF("entity_id", "canonical")
+    (edges, kb)
+  }
+
+  /** One [[KgPipeline.canonFromEdges]] call at budget `t`, reduced to a
+    * checksum; the distributed map's checkpoint is released after.
+    */
+  private def canonChecksum(edges: DataFrame, kb: DataFrame, t: Int): Double = {
+    val spark = edges.sparkSession
+    val canon = KgPipeline.canonFromEdges(spark, edges, kb, t)
+    try canon.agg(coalesce(sum(pmod(xxhash64(col("entity_id"),
+      col("canon_id")), lit(1000003L)).cast("double")), lit(0.0)))
+      .head().getDouble(0)
+    finally KgPipeline.releaseCanon(spark, canon, blocking = true)
+  }
 
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").map(_.trim).toSeq
     val sizes = args(1).split(",").map(_.trim.toInt).toSeq
     val reps = if (args.length > 2) args(2).toInt else 3
-    require(names.forall(ops.contains), s"ops are ${ops.keys.mkString(",")}")
+    require(names.forall(defaults.contains),
+      s"ops are ${defaults.keys.mkString(",")}")
     val spark = SparkSession.builder()
       .master("local[4]")
       .appName("graph-crossover")
@@ -88,16 +128,28 @@ object GraphCrossover {
     }
     def checksum(df: DataFrame): Double =
       df.agg(coalesce(sum(col("c")), lit(0.0))).head().getDouble(0)
+    // one call of op `name` on a graph of about `m` edges, at budget t
+    def call(name: String, kind: String, m: Int): (DataFrame, Int => Double) =
+      if (name == "canon") {
+        val (edges, kb) = aliasGraph(spark, m)
+        (edges, canonChecksum(edges, kb, _))
+      } else {
+        val edges = graph(kind, m)
+        (edges, t => checksum(ops(name)(edges, t)))
+      }
     try {
       // untimed warm-up of both paths of every op (JIT, codegen)
       for (name <- names; t <- Seq(Int.MaxValue, -1))
-        checksum(ops(name)(graph("uniform", 1000), t))
+        call(name, "uniform", 1000)._2(t)
       Graph.releaseAllRanks(spark, blocking = true)
       for (name <- names;
-           kind <- if (Set("triangles", "twoHop")(name)) Seq("uniform", "hub")
-                   else Seq("uniform");
+           kind <- name match {
+             case "triangles" | "twoHop" => Seq("uniform", "hub")
+             case "canon" => Seq("alias")
+             case _ => Seq("uniform")
+           };
            m <- sizes) {
-        val edges = graph(kind, m)
+        val (edges, run) = call(name, kind, m)
         val actual = edges.count()
         val modes = Seq("driver" -> Int.MaxValue, "distributed" -> -1) ++
           (if (actual > defaults(name)) Seq("default" -> defaults(name)) else Nil)
@@ -105,7 +157,7 @@ object GraphCrossover {
                if (rep % 2 == 1) modes else modes.reverse) {
           val a0 = threads.getThreadAllocatedBytes(self)
           val t0 = System.nanoTime()
-          val sum = checksum(ops(name)(edges, t))
+          val sum = run(t)
           val wall = (System.nanoTime() - t0) / 1e9
           val alloc = threads.getThreadAllocatedBytes(self) - a0
           Graph.releaseAllRanks(spark, blocking = true)

@@ -123,16 +123,21 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("components: min label on both paths; strings by UTF-8 byte order") {
-    val es = Seq[(Long, Long)]((5L, 3L), (3L, 9L), (7L, 8L), (4L, 4L), (9L, 5L))
+    import spark.implicits._
+    // the NULL-ended edges are dropped on both paths: no NULL node, no merge
+    val es = Seq[(Option[Long], Option[Long])]((Some(5L), Some(3L)),
+      (Some(3L), Some(9L)), (Some(7L), Some(8L)), (Some(4L), Some(4L)),
+      (Some(9L), Some(5L)), (Some(8L), None), (None, Some(3L)), (None, None))
+      .toDF("src", "dst")
     val want = Map(3L -> 3L, 5L -> 3L, 9L -> 3L, 7L -> 7L, 8L -> 7L, 4L -> 4L)
     // U+FF21 sorts before U+1F600 in UTF-8 bytes (Spark's `min`), after
     // it in UTF-16 units (String.compareTo)
     val (fw, emoji) = ("\uFF21", new String(Character.toChars(0x1F600)))
-    import spark.implicits._
-    val strs = Seq((emoji, fw), ("b", "a"), ("c", "b")).toDF("src", "dst")
+    val strs = Seq((emoji, fw), ("b", "a"), ("c", "b"), ("d", null),
+      (null, "a")).toDF("src", "dst")
     val wantStr = Map(emoji -> fw, fw -> fw, "a" -> "a", "b" -> "a", "c" -> "a")
     for (t <- both(Graph.componentsCollectThreshold)) {
-      val df = Graph.components(edgeDf(es), t)
+      val df = Graph.components(es, t)
       assert(onDriver(df) == (t >= 0), s"threshold $t took the wrong path")
       assert(df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == want)
       val ds = Graph.components(strs, t)

@@ -191,7 +191,7 @@ class LinkParitySpec extends AnyFunSuite {
     assert(local.queryExecution.optimizedPlan.isInstanceOf[
       org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
       local.queryExecution.optimizedPlan)
-    val viaDriver = canon(Graph.componentsCollectThreshold)
+    val viaDriver = canon(KgPipeline.ccCollectThreshold)
     assert(viaDriver == canon(0))
     assert(viaDriver == canon(-1))
     ids.foreach(id => assert(viaDriver(id) == "org:Ａ", id))
