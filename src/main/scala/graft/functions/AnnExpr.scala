@@ -60,25 +60,32 @@ object AnnKernels {
       .fromPrimitiveArray(out)
   }
 
+  /** Squared L2 distance from centroid `cv` to `v` over their common
+    * prefix, NULL elements read as 0.0 — the one distance loop of
+    * [[nearestCell]] and [[topCells]].
+    */
+  private def sqDist(cv: Array[Float], v: ArrayData): Double = {
+    var d = 0.0
+    var i = 0
+    val n = math.min(cv.length, v.numElements())
+    while (i < n) {
+      val x = if (v.isNullAt(i)) 0.0f else v.getFloat(i)
+      val diff = cv(i) - x
+      d += diff * diff
+      i += 1
+    }
+    d
+  }
+
   /** Squared-L2 nearest centroid, deterministic first-wins tie-break —
     * identical to `VecOps.nearestCell` (pinned equal in AnnExprSpec).
     */
   def nearestCell(cents: Array[Array[Float]], v: ArrayData): Int = {
-    val vn = v.numElements()
     var best = 0
     var bestD = Double.MaxValue
     var c = 0
     while (c < cents.length) {
-      val cv = cents(c)
-      var d = 0.0
-      var i = 0
-      val n = math.min(cv.length, vn)
-      while (i < n) {
-        val x = if (v.isNullAt(i)) 0.0f else v.getFloat(i)
-        val diff = cv(i) - x
-        d += diff * diff
-        i += 1
-      }
+      val d = sqDist(cents(c), v)
       if (d < bestD) { bestD = d; best = c }
       c += 1
     }
@@ -90,21 +97,10 @@ object AnnKernels {
     * `VecOps.topCells` (full sort by (dist, idx), then prefix).
     */
   def topCells(cents: Array[Array[Float]], n: Int, v: ArrayData): ArrayData = {
-    val vn = v.numElements()
     val ds = new Array[(Double, Int)](cents.length)
     var c = 0
     while (c < cents.length) {
-      val cv = cents(c)
-      var d = 0.0
-      var i = 0
-      val m = math.min(cv.length, vn)
-      while (i < m) {
-        val x = if (v.isNullAt(i)) 0.0f else v.getFloat(i)
-        val diff = cv(i) - x
-        d += diff * diff
-        i += 1
-      }
-      ds(c) = (d, c)
+      ds(c) = (sqDist(cents(c), v), c)
       c += 1
     }
     val sorted = ds.sortBy(identity)

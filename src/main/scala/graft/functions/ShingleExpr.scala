@@ -10,9 +10,10 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native n-token shingle generation: `ner_shingles(text, n)` — all
   * n-token windows of the space-split text, space-rejoined; the
-  * workhorse under substring dedup (q51/q52/q55), decontamination
-  * (q67), repetition stats (q68), and the hashed-n-gram featurizers
-  * (q74/q75).
+  * workhorse under MinHash near-dup detection (q44/q59/q60 and the
+  * curate near-dup stage), substring dedup (q51/q52/q55 and the curate
+  * boilerplate stage), decontamination (q67), repetition stats (q68),
+  * and the hashed-n-gram featurizers (q74/q75).
   *
   * Why a native expression and not the `transform(sequence(...),
   * slice+array_join)` composition it replaces: Catalyst higher-order
@@ -23,37 +24,47 @@ import org.apache.spark.unsafe.types.UTF8String
   * (q67 6.7 s, q68 5.2 s, q74 14 s at sf0.1). This expression is one
   * O(chars) kernel call that participates in whole-stage codegen.
   *
-  * Semantics are BIT-PARITY with [[graft.pipeline.Decontam.shinglesOf]]
-  * (split on " " keeping empty tokens, fewer than n tokens → empty
-  * array, windows joined with " ") and with the old column composition:
-  * NULL text yields an EMPTY ARRAY, not NULL — `size(...) > 0` filters
-  * must keep behaving identically. Pinned in DecontamSpec.
+  * Semantics (split on " " keeping empty tokens, fewer than n tokens →
+  * empty array, windows joined with " ") are the old column
+  * composition's: NULL text yields an EMPTY ARRAY, not NULL —
+  * `size(...) > 0` filters must keep behaving identically. The JVM
+  * featurizers ([[graft.pipeline.Decontam.shinglesOf]]) run the same
+  * [[ShingleKernel.windows]] loop; DecontamSpec pins the two entry
+  * points equal.
   */
 object ShingleKernel {
-  def shingles(s: UTF8String, n: Int): ArrayData = {
-    if (s == null) return new GenericArrayData(Array.empty[Any])
-    val toks = s.toString.split(" ", -1)
-    if (toks.length < n) new GenericArrayData(Array.empty[Any])
-    else {
-      val out = new Array[Any](toks.length - n + 1)
-      var i = 0
-      while (i <= toks.length - n) {
-        if (n == 1) out(i) = UTF8String.fromString(toks(i))
-        else {
-          val sb = new java.lang.StringBuilder
-          var j = 0
-          while (j < n) {
-            if (j > 0) sb.append(' ')
-            sb.append(toks(i + j))
-            j += 1
-          }
-          out(i) = UTF8String.fromString(sb.toString)
+  private val NoWindows = new Array[String](0)
+
+  /** The n-token windows of `text`, in order: the one tokenize-and-
+    * window routine behind both the column expression and the JVM
+    * featurizers. Empty for NULL or fewer than n tokens.
+    */
+  def windows(text: String, n: Int): Array[String] = {
+    if (text == null) return NoWindows
+    val toks = text.split(" ", -1)
+    if (toks.length < n) return NoWindows
+    val out = new Array[String](toks.length - n + 1)
+    var i = 0
+    while (i < out.length) {
+      if (n == 1) out(i) = toks(i)
+      else {
+        val sb = new java.lang.StringBuilder
+        var j = 0
+        while (j < n) {
+          if (j > 0) sb.append(' ')
+          sb.append(toks(i + j))
+          j += 1
         }
-        i += 1
+        out(i) = sb.toString
       }
-      new GenericArrayData(out)
+      i += 1
     }
+    out
   }
+
+  def shingles(s: UTF8String, n: Int): ArrayData =
+    new GenericArrayData(windows(if (s == null) null else s.toString, n)
+      .map[Any](UTF8String.fromString))
 }
 
 case class NerShingles(child: Expression, n: Int) extends UnaryExpression {

@@ -491,14 +491,21 @@ object TableIO {
     val conf = spark.sessionState.newHadoopConf()
     if (!hExists(path, conf)) BucketCommit(k, 0L, 0L)
     else {
-      val written = spark.read.parquet(path)
-      val agg = written
-        .select(xxhash64(written.columns.map(col): _*).as("h"))
-        .agg(count(lit(1)).as("rows"),
-             coalesce(bit_xor(col("h")), lit(0L)).as("checksum"))
-        .collect()(0)
-      BucketCommit(k, agg.getLong(0), agg.getLong(1))
+      val (rows, checksum) = rowsAndChecksum(spark.read.parquet(path))
+      BucketCommit(k, rows, checksum)
     }
+  }
+
+  /** (rows, checksum) of a frame in one aggregate, checksum = XOR of
+    * `xxhash64` over all its columns (0 when empty): order- and
+    * split-independent, the manifests' convention and the canon
+    * state's.
+    */
+  private[graft] def rowsAndChecksum(df: DataFrame): (Long, Long) = {
+    val r = df.select(xxhash64(df.columns.map(col): _*).as("h"))
+      .agg(count(lit(1)), coalesce(bit_xor(col("h")), lit(0L)))
+      .head()
+    (r.getLong(0), r.getLong(1))
   }
 
   private def parquetFiles(fs: FileSystem, path: String): Int =

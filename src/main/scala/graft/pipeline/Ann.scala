@@ -307,31 +307,47 @@ object Ann {
           .as("is_kept"))
   }
 
-  /** Coarse IVF quantizer: deterministic seeded sample (smallest
-    * xxhash64(id) — uniform, partitioning-independent, TakeOrdered so no
-    * full sort) + kmeans++ seeding (Arthur & Vassilvitskii 2007) +
-    * Lloyd iterations on the driver. Sample and centroids stay
-    * broadcast-sized at any corpus scale. Round 2 seeded with the first
-    * `nCells` sample vectors (≈ random seeding), which left unbalanced
-    * cells and recall 0.65; kmeans++ spreads the seeds by D² sampling
-    * and is still fully deterministic (seeded RNG over a deterministic
-    * sample). `seed` is what the suite's min-over-seeds recall gate
-    * varies.
+  /** Coarse IVF quantizer: [[kmeans]] over the [[trainingSample]] on
+    * the driver. Sample and centroids stay broadcast-sized at any
+    * corpus scale. Round 2 seeded with the first `nCells` sample
+    * vectors (≈ random seeding), which left unbalanced cells and recall
+    * 0.65; kmeans++ spreads the seeds by D² sampling and is still fully
+    * deterministic (seeded RNG over a deterministic sample). `seed` is
+    * what the suite's min-over-seeds recall gate varies.
     */
   def ivfCentroids(vecs: DataFrame, idCol: String, embCol: String,
-                   nCells: Int, seed: Long = 4321L): Array[Array[Float]] = {
+                   nCells: Int, seed: Long = 4321L): Array[Array[Float]] =
+    kmeans(trainingSample(vecs, idCol, embCol, DefaultSampleN), nCells, seed)
+
+  /** The deterministic training sample every quantizer fits on: the
+    * `n` non-NULL embeddings (the index's null-row contract) with the
+    * smallest `(xxhash64(id, 7), id)` — uniform, partitioning-
+    * independent, TakeOrdered so no full sort.
+    */
+  private def trainingSample(vecs: DataFrame, idCol: String, embCol: String,
+                             n: Int): Array[Array[Float]] = {
     val s = vecs.sparkSession
     import s.implicits._
     val sample = vecs
-      .where(col(embCol).isNotNull) // match the index's null-row contract
+      .where(col(embCol).isNotNull)
       .select(col(idCol).as("vec_id"), col(embCol).as("embedding"),
         xxhash64(col(idCol), lit(7)).as("hk"))
-      .orderBy(col("hk"), col("vec_id")).limit(DefaultSampleN)
+      .orderBy(col("hk"), col("vec_id")).limit(n)
       .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
       .collect().map(_._2)
     require(sample.nonEmpty, "empty vector table")
+    sample
+  }
+
+  /** k-means on the driver: kmeans++ seeding from `seed` ([[kppSeeds]])
+    * then [[LloydIters]] Lloyd rounds (nearest centroid by squared L2,
+    * first-wins ties; an empty cell keeps its centroid). At most
+    * `sample.length` centroids.
+    */
+  private def kmeans(sample: Array[Array[Float]], k: Int,
+                     seed: Long): Array[Array[Float]] = {
     val dim = sample.head.length
-    var cent = kppSeeds(sample, math.min(nCells, sample.length), seed)
+    var cent = kppSeeds(sample, math.min(k, sample.length), seed)
     for (_ <- 0 until LloydIters) {
       val sums = Array.fill(cent.length)(new Array[Double](dim))
       val cnts = new Array[Int](cent.length)
@@ -348,13 +364,6 @@ object Ann {
     cent
   }
 
-  private def sqDist(a: Array[Float], b: Array[Float]): Double = {
-    var d = 0.0; var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) { val diff = a(i) - b(i); d += diff * diff; i += 1 }
-    d
-  }
-
   /** kmeans++ seeding over the driver-side sample: first seed from the
     * RNG, each further seed drawn with probability proportional to its
     * squared distance from the nearest already-chosen seed — the
@@ -365,7 +374,7 @@ object Ann {
     val rnd = new scala.util.Random(seed)
     val seeds = new Array[Array[Float]](k)
     seeds(0) = sample(rnd.nextInt(sample.length)).clone
-    val d2 = sample.map(sqDist(_, seeds(0)))
+    val d2 = sample.map(VecOps.sqDist(_, seeds(0)))
     var c = 1
     while (c < k) {
       val total = d2.sum
@@ -384,7 +393,7 @@ object Ann {
       seeds(c) = sample(pick).clone
       var j = 0
       while (j < sample.length) {
-        val d = sqDist(sample(j), seeds(c))
+        val d = VecOps.sqDist(sample(j), seeds(c))
         if (d < d2(j)) d2(j) = d
         j += 1
       }
@@ -561,52 +570,25 @@ object Ann {
     require(k <= 256, s"PQ k=$k > 256 — codes must stay byte-packable")
   }
 
-  /** Train a product quantizer: the same deterministic bounded sample
-    * as [[ivfCentroids]] (smallest xxhash64(id), TakeOrdered — uniform
-    * and partitioning-independent), sliced into `m` subspaces, each
-    * k-means'd independently (kmeans++ seeding, Lloyd rounds)
-    * on the driver. Sample and model stay broadcast-sized at any
-    * corpus scale; training cost is O(sampleN · k · dim) driver work,
-    * once per corpus.
+  /** Train a product quantizer: the same [[trainingSample]] as
+    * [[ivfCentroids]], sliced into `m` subspaces, each [[kmeans]]'d
+    * independently (subspace `sub` seeded `4321 + sub`) on the driver.
+    * Sample and model stay broadcast-sized at any corpus scale;
+    * training cost is O(sampleN · k · dim) driver work, once per
+    * corpus.
     */
   def pqTrain(vecs: DataFrame, idCol: String, embCol: String,
               m: Int, k: Int, sampleN: Int = DefaultSampleN): PqModel = {
     require(m >= 1, s"m must be >= 1: $m")
     require(k >= 1 && k <= 256, s"k must be in [1, 256]: $k")
-    val s = vecs.sparkSession
-    import s.implicits._
-    val sample = vecs
-      .where(col(embCol).isNotNull)
-      .select(col(idCol).as("vec_id"), col(embCol).as("embedding"),
-        xxhash64(col(idCol), lit(7)).as("hk"))
-      .orderBy(col("hk"), col("vec_id")).limit(sampleN)
-      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-      .collect().map(_._2)
-    require(sample.nonEmpty, "empty vector table")
+    val sample = trainingSample(vecs, idCol, embCol, sampleN)
     val dim = sample.head.length
     require(dim % m == 0,
       s"embedding dim $dim not divisible into $m subspaces")
     val dSub = dim / m
-    val codebooks = Array.tabulate(m) { sub =>
-      val subSample = sample.map(_.slice(sub * dSub, (sub + 1) * dSub))
-      var cent = kppSeeds(subSample, math.min(k, subSample.length),
-        4321L + sub)
-      for (_ <- 0 until LloydIters) {
-        val sums = Array.fill(cent.length)(new Array[Double](dSub))
-        val cnts = new Array[Int](cent.length)
-        subSample.foreach { v =>
-          val c = VecOps.nearestCell(cent, v)
-          cnts(c) += 1
-          var i = 0; while (i < dSub) { sums(c)(i) += v(i); i += 1 }
-        }
-        cent = Array.tabulate(cent.length) { c =>
-          if (cnts(c) == 0) cent(c)
-          else sums(c).map(x => (x / cnts(c)).toFloat)
-        }
-      }
-      cent
-    }
-    PqModel(dSub, codebooks)
+    PqModel(dSub, Array.tabulate(m) { sub =>
+      kmeans(sample.map(_.slice(sub * dSub, (sub + 1) * dSub)), k, 4321L + sub)
+    })
   }
 
   /** Encode every vector to its m-code PQ representation: per subspace,

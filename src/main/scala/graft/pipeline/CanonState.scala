@@ -50,13 +50,6 @@ object CanonState {
 
   private def currentPath(dir: String) = s"$dir/_current"
 
-  private def xorOf(df: DataFrame): Long = {
-    val cols = df.columns.map(col)
-    df.select(xxhash64(cols: _*).as("h"))
-      .agg(coalesce(bit_xor(col("h")), lit(0L)))
-      .head.getLong(0)
-  }
-
   private def readMeta(spark: SparkSession, dir: String): Option[Meta] = {
     val conf = spark.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(currentPath(dir))
@@ -79,12 +72,7 @@ object CanonState {
                           wantRows: Long, wantXor: Long,
                           what: String): DataFrame = {
     val df = spark.read.parquet(path)
-    val (rows, x) = {
-      val r = df.select(count(lit(1)).as("n"),
-        coalesce(bit_xor(xxhash64(df.columns.map(col): _*)), lit(0L))
-          .as("x")).head
-      (r.getLong(0), r.getLong(1))
-    }
+    val (rows, x) = TableIO.rowsAndChecksum(df)
     require(rows == wantRows && x == wantXor,
       s"canon state $what at $path fails its integrity check " +
         s"(rows $rows vs $wantRows, xor $x vs $wantXor) — the state is " +
@@ -129,9 +117,11 @@ object CanonState {
       .write.mode("overwrite").parquet(s"$vDir/canon")
     // checksums from the files ON DISK, not the input frames: the meta
     // must vouch for what a later load will actually read
-    val e = spark.read.parquet(s"$vDir/edges")
-    val c = spark.read.parquet(s"$vDir/canon")
-    val meta = Meta(v, e.count(), xorOf(e), c.count(), xorOf(c))
+    def onDisk(what: String) =
+      TableIO.rowsAndChecksum(spark.read.parquet(s"$vDir/$what"))
+    val (eRows, eXor) = onDisk("edges")
+    val (cRows, cXor) = onDisk("canon")
+    val meta = Meta(v, eRows, eXor, cRows, cXor)
     val conf = spark.sessionState.newHadoopConf()
     TableIO.atomicWrite(currentPath(dir),
       s"""{"version":${meta.version},"edges_rows":${meta.edgesRows},""" +

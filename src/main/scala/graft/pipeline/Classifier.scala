@@ -74,23 +74,12 @@ object Classifier {
     * `conv(substring(md5(g), 1, 4), 16, 10) % nBuckets` that the q75
     * oracle replays, pinned in ClassifierSpec (the
     * `Decontam.shinglesOf` convention: the oracle and any ingest-time
-    * filter can never disagree with this kernel).
+    * filter can never disagree with this kernel): the shared
+    * [[Dsir.md5Prefix16]] mod `nBuckets`.
     */
-  def bucketOf(gram: String, nBuckets: Int): Int = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(gram.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    (((d(0) & 0xff) << 8) | (d(1) & 0xff)) % nBuckets
-  }
-
-  /** JVM bucket under a REUSED digest (the hot-loop form of
-    * [[bucketOf]] — one MessageDigest per partition, not per gram).
-    */
-  private def bucketWith(md: java.security.MessageDigest, g: String,
-                         nBuckets: Int): Int = {
-    md.reset()
-    val d = md.digest(g.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    (((d(0) & 0xff) << 8) | (d(1) & 0xff)) % nBuckets
-  }
+  def bucketOf(gram: String, nBuckets: Int): Int =
+    Dsir.md5Prefix16(java.security.MessageDigest.getInstance("MD5"), gram) %
+      nBuckets
 
   /** Score documents under a model: `(doc_id, n_grams, score)`, score
     * = σ(bias + (Σ_grams w[bucket]) / n) rounded to 6 digits (one
@@ -107,28 +96,13 @@ object Classifier {
     val spark = docs.sparkSession
     import spark.implicits._
     val bModel = spark.sparkContext.broadcast(model)
-    docs
-      .select(col(idCol).cast("long").as("_id"),
-        col(textCol).cast("string").as("_t"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val m = bModel.value
-        it.flatMap { case (id, t) =>
-          var n = 0L
-          var sumW = 0.0
-          (Decontam.shinglesOf(t, 1) ++ Decontam.shinglesOf(t, 2))
-            .foreach { g =>
-              sumW += m.weights(bucketWith(md, g, m.nBuckets)); n += 1
-            }
-          if (n == 0L) None
-          else {
-            val s = 1.0 / (1.0 + math.exp(-(m.bias + sumW / n)))
-            Some((id, n, Dsir.round6(s)))
-          }
-        }
-      }
-      .toDF("doc_id", "n_grams", "score")
+    val bias = model.bias
+    Dsir.gramSums(docs, idCol, textCol) { () =>
+      val m = bModel.value
+      p => m.weights(p % m.nBuckets)
+    }.map { case (id, n, sumW) =>
+      (id, n, Dsir.round6(1.0 / (1.0 + math.exp(-(bias + sumW / n)))))
+    }.toDF("doc_id", "n_grams", "score")
   }
 
   /** Persist a trained filter model — the production pipeline trains

@@ -17,12 +17,11 @@ import org.apache.spark.sql.functions._
   * shingle set broadcasts; a fail-fast guards the contract the same way
   * `CompactDict.MaxBroadcastEntries` guards dictionary broadcasts. The
   * CORPUS side never shuffles text: shingles are generated inside the
-  * scan stage (split → slice → join per position, all codegen'd
-  * collection expressions, no UDF) and die in the same stage at the
-  * broadcast-hash-join probe; only `(doc_id, n_grams)` longs plus the
-  * matched-shingle rows — a benchmark-bounded trickle — reach the
-  * aggregation exchange. A 100-TB corpus therefore pays one scan and
-  * shuffles kilobytes.
+  * scan stage (the codegen'd `ner_shingles` kernel, no UDF) and die in
+  * the same stage at the broadcast-hash-join probe; only
+  * `(doc_id, n_grams)` longs plus the matched-shingle rows — a
+  * benchmark-bounded trickle — reach the aggregation exchange. A 100-TB
+  * corpus therefore pays one scan and shuffles kilobytes.
   *
   * The join key is the shingle STRING, not a hash: the broadcast side
   * is small either way, and string equality makes the match EXACT (a
@@ -52,21 +51,15 @@ object Decontam {
   def shingles(text: Column, n: Int): Column =
     graft.functions.ShingleFunctions.ner_shingles(text, n)
 
-  /** Pure-JVM rendition of [[shingles]] — BIT-PARITY with the column
-    * expression (same `split(" ", -1)` tokenization incl. empty
-    * trailing tokens, same space re-join), pinned in DecontamSpec so
-    * the Dsir/Classifier featurizers and the column operators can never
-    * disagree on membership. Empty for NULL/short texts.
+  /** Pure-JVM rendition of [[shingles]] — the same
+    * [[graft.functions.ShingleKernel.windows]] loop (`split(" ", -1)`
+    * tokenization incl. empty trailing tokens, space re-join), pinned
+    * bit-parity with the column in DecontamSpec so the Dsir/Classifier
+    * featurizers and the column operators can never disagree on
+    * membership. Empty for NULL/short texts.
     */
-  def shinglesOf(text: String, n: Int): Iterator[String] = {
-    if (text == null) Iterator.empty
-    else {
-      val toks = text.split(" ", -1)
-      if (toks.length < n) Iterator.empty
-      else (0 to toks.length - n).iterator
-        .map(i => toks.slice(i, i + n).mkString(" "))
-    }
-  }
+  def shinglesOf(text: String, n: Int): Iterator[String] =
+    graft.functions.ShingleKernel.windows(text, n).iterator
 
   /** Contaminated corpus documents: every doc sharing at least one
     * n-token shingle with `evalSet`, with overlap tallies —

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** DSIR — Data Selection via Importance Resampling (Xie et al. 2023,
@@ -120,19 +120,16 @@ object Dsir {
     arr
   }
 
-  /** JVM bucket of one gram under a REUSED digest — bit-parity with
-    * the oracle-side `substring(md5(gram), 1, 2)` derivation (the
-    * first md5 byte), pinned in DsirSpec. Scoring runs this kernel
-    * per gram: the first cut used a Catalyst `aggregate` higher-order
-    * fold, but lambda functions evaluate INTERPRETED (CodegenFallback),
-    * and the per-gram interpreted md5 made q74 the slowest query on
-    * the bench board (14 s at sf0.1, ~50x the scan cost) — the typed
-    * kernel is the q40 pattern: still scan-side, still zero-shuffle,
-    * one object boundary instead of 240k interpreted expression trees.
+  /** The first two md5 bytes of `g` as a 16-bit prefix, under a REUSED
+    * digest. Dsir's bucket is the high byte (the oracle's
+    * `substring(md5(gram), 1, 2)`, pinned in DsirSpec);
+    * [[Classifier.bucketOf]] takes it mod `nBuckets`.
     */
-  private def bucketWith(md: java.security.MessageDigest, g: String): Int = {
+  private[pipeline] def md5Prefix16(md: java.security.MessageDigest,
+                                    g: String): Int = {
     md.reset()
-    md.digest(g.getBytes(java.nio.charset.StandardCharsets.UTF_8))(0) & 0xff
+    val d = md.digest(g.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    ((d(0) & 0xff) << 8) | (d(1) & 0xff)
   }
 
   /** Spark's `round(x, 6)` (BigDecimal HALF_UP), for kernel-side
@@ -141,30 +138,45 @@ object Dsir {
   private[pipeline] def round6(x: Double): Double =
     BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  /** Unrounded per-doc (n_grams, log_w) under a broadcast ratio array —
-    * the shared scoring kernel. Left-fold in gram order (unigrams then
-    * bigrams), matching the spec's recompute.
+  /** The hashed-gram fold of both scorers: per document with a gram,
+    * `(id, n_grams, Σ weight(md5Prefix16(gram)))` summed in gram order
+    * (unigrams then bigrams), one scan-side typed pass with one digest
+    * per partition. A Catalyst `aggregate` fold evaluates its lambda
+    * INTERPRETED and made q74 the slowest query (14 s at sf0.1).
+    * `weights` runs once per partition and returns the caller's lookup.
     */
-  private def scoreKernel(docs: DataFrame, idCol: String, textCol: String,
-                          arr: Array[Double]) = {
+  private[pipeline] def gramSums(docs: DataFrame, idCol: String,
+                                 textCol: String)(
+      weights: () => Int => Double): Dataset[(Long, Long, Double)] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val bArr = spark.sparkContext.broadcast(arr)
     docs
       .select(col(idCol).cast("long").as("_id"),
         col(textCol).cast("string").as("_t"))
       .as[(Long, String)]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
-        val a = bArr.value
+        val weightOf = weights()
         it.flatMap { case (id, t) =>
           var n = 0L
           var w = 0.0
           (Decontam.shinglesOf(t, 1) ++ Decontam.shinglesOf(t, 2))
-            .foreach { g => w += a(bucketWith(md, g)); n += 1 }
+            .foreach { g => w += weightOf(md5Prefix16(md, g)); n += 1 }
           if (n == 0L) None else Some((id, n, w))
         }
       }
+  }
+
+  /** Unrounded per-doc (n_grams, log_w): [[gramSums]] over the
+    * broadcast 256-slot ratio array.
+    */
+  private def scoreKernel(docs: DataFrame, idCol: String, textCol: String,
+                          arr: Array[Double]): Dataset[(Long, Long, Double)] = {
+    val bArr = docs.sparkSession.sparkContext.broadcast(arr)
+    gramSums(docs, idCol, textCol) { () =>
+      val a = bArr.value
+      p => a(p >>> 8)
+    }
   }
 
   /** Per-document log importance weights under a fitted [[logRatios]]

@@ -283,7 +283,7 @@ object Graph {
     * iterations run on the driver ([[LocalGraph.pageRank]]) and the result
     * is a local relation; above it the distributed loop runs
     * ([[pageRankDistributed]]), after that action has evaluated the
-    * input once. A negative threshold forces the distributed path. At
+    * input once. The threshold is [[pageRankCollectThreshold]]. At
     * benchmark size (tens to hundreds of nodes) the distributed loop's
     * per-iteration jobs cost seconds the arithmetic never needed.
     *
@@ -297,9 +297,14 @@ object Graph {
     * otherwise the two paths agree to rounding (GraphSpec pins both
     * against a driver recompute).
     */
-  def pageRank(edges: DataFrame, iters: Int, damping: Double = 0.85,
-               collectThreshold: Int = pageRankCollectThreshold)
-      : DataFrame = {
+  def pageRank(edges: DataFrame, iters: Int,
+               damping: Double = 0.85): DataFrame =
+    pageRank(edges, iters, damping, pageRankCollectThreshold)
+
+  /** [[pageRank]] at a given edge budget (< 0: distributed). */
+  private[pipeline] def pageRank(edges: DataFrame, iters: Int,
+                                 damping: Double,
+                                 collectThreshold: Int): DataFrame = {
     require(iters >= 1 && iters <= 200, s"iters out of range: $iters")
     require(damping >= 0.0 && damping <= 1.0, s"damping out of range: $damping")
     val pairs = longPairs(edges)
@@ -649,12 +654,7 @@ object Graph {
       buf.foreach(_.clear())
       out
     }
-    entries.foreach { t =>
-      (Option(t.ref.get), t.checkpointFile) match {
-        case (_, some @ Some(_)) => Lineage.dropCheckpointFiles(spark, some)
-        case (Some(rdd), None) => Lineage.quietUnpersist(rdd, blocking)
-        case (None, None) => () // GC'd local checkpoint: ContextCleaner's
-      }
-    }
+    entries.foreach(t => Lineage.releaseCheckpoint(spark,
+      Option(t.ref.get), t.checkpointFile, blocking))
   }
 }

@@ -323,8 +323,13 @@ object KgPipeline {
     * bridge.
     */
   def canonicalize(spark: SparkSession, linked: DataFrame,
-                   kbAliases: DataFrame,
-                   collectThreshold: Int = ccCollectThreshold): DataFrame =
+                   kbAliases: DataFrame): DataFrame =
+    canonicalize(spark, linked, kbAliases, ccCollectThreshold)
+
+  /** [[canonicalize]] at a given edge budget (< 0: distributed). */
+  private[pipeline] def canonicalize(spark: SparkSession, linked: DataFrame,
+                                     kbAliases: DataFrame,
+                                     collectThreshold: Int): DataFrame =
     canonFromEdges(spark, aliasEdges(linked, kbAliases), kbAliases,
       collectThreshold)
 
@@ -359,9 +364,10 @@ object KgPipeline {
     * relation; above it, the distributed fixpoint runs. A negative
     * threshold forces the distributed path.
     */
-  def canonFromEdges(spark: SparkSession, allEdges0: DataFrame,
-                     kbAliases: DataFrame,
-                     collectThreshold: Int = ccCollectThreshold): DataFrame = {
+  private[pipeline] def canonFromEdges(spark: SparkSession,
+                                       allEdges0: DataFrame,
+                                       kbAliases: DataFrame,
+                                       collectThreshold: Int): DataFrame = {
     collectAtMost(allEdges0.select("src", "dst"), collectThreshold) match {
       case Some(rows) => canonOnDriver(spark,
         rows.map(r => (r.getString(0), r.getString(1))).distinct, kbAliases)
@@ -935,8 +941,17 @@ object KgPipeline {
     * step is idempotent (edge union, keyed upsert, remap join).
     */
   def canonicalizeWithState(spark: SparkSession, linked: DataFrame,
-                            kbAliases: DataFrame, stateDir: String,
-                            collectThreshold: Int = ccCollectThreshold)
+                            kbAliases: DataFrame,
+                            stateDir: String): CanonDelta =
+    canonicalizeWithState(spark, linked, kbAliases, stateDir,
+      ccCollectThreshold)
+
+  /** [[canonicalizeWithState]] at a given edge budget. */
+  private[pipeline] def canonicalizeWithState(spark: SparkSession,
+                                              linked: DataFrame,
+                                              kbAliases: DataFrame,
+                                              stateDir: String,
+                                              collectThreshold: Int)
       : CanonDelta = {
     val deltaEdges = aliasEdges(linked, kbAliases)
     val merged = CanonState.loadEdges(spark, stateDir) match {
@@ -1093,23 +1108,11 @@ object KgPipeline {
 
   /** Free a canonical map returned by [[canonFromEdges]]: cache blocks
     * plus, for a distributed-path map, the backing checkpoint (a
-    * driver-path map is a local relation) — reliable-checkpoint files dropped,
-    * localCheckpoint blocks released on the quiet path (its "can no
-    * longer be recomputed" WARN is this method's contract, not an
-    * incident — same as [[release]]).
+    * driver-path map is a local relation) — [[Lineage.release]].
     */
   def releaseCanon(spark: SparkSession, canon: DataFrame,
-                   blocking: Boolean = false): Unit = {
-    canon.unpersist(blocking)
-    canon.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.getCheckpointFile match {
-          case some @ Some(_) => Lineage.dropCheckpointFiles(spark, some)
-          case None => Lineage.quietUnpersist(lr.rdd, blocking)
-        }
-      case _ => ()
-    }
-  }
+                   blocking: Boolean = false): Unit =
+    Lineage.release(canon, blocking)
 
   /** Synthesize the flagship input table as a Dataset, generated
     * *distributed* with per-row seeding (partitioning-independent;

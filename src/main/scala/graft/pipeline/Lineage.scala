@@ -82,18 +82,30 @@ private[graft] object Lineage {
     }
   }
 
-  /** Free a superseded [[chk]] result: reliable checkpoints drop their
-    * files; local checkpoints quietly unpersist their blocks. The
-    * frame is NOT recomputable afterwards — release means "done".
+  /** Free a superseded [[chk]] result or any checkpoint-backed frame:
+    * cache blocks first, then the checkpoint. The frame is NOT
+    * recomputable afterwards — release means "done".
     */
-  def release(ds: Dataset[_]): Unit =
+  def release(ds: Dataset[_], blocking: Boolean = false): Unit = {
+    ds.unpersist(blocking)
     ds.queryExecution.logical match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.getCheckpointFile match {
-          case some @ Some(_) =>
-            dropCheckpointFiles(ds.sparkSession, some)
-          case None => quietUnpersist(lr.rdd, blocking = false)
-        }
-      case _ => ds.unpersist()
+        releaseCheckpoint(ds.sparkSession, Some(lr.rdd),
+          lr.rdd.getCheckpointFile, blocking)
+      case _ => ()
+    }
+  }
+
+  /** The checkpoint half of [[release]], for an RDD tracked by weak
+    * reference (it may be GC'd already): reliable checkpoints drop
+    * their files; local checkpoints quietly unpersist their blocks.
+    */
+  def releaseCheckpoint(spark: SparkSession,
+                        rdd: Option[org.apache.spark.rdd.RDD[_]],
+                        file: Option[String], blocking: Boolean): Unit =
+    (rdd, file) match {
+      case (_, Some(_)) => dropCheckpointFiles(spark, file)
+      case (Some(r), None) => quietUnpersist(r, blocking)
+      case (None, None) => () // GC'd local checkpoint: ContextCleaner frees it
     }
 }

@@ -23,37 +23,32 @@ import org.apache.spark.sql.functions._
   */
 object TextDedup {
 
-  /** Distinct k-word shingles: (id, tok). Text-valued — use only where
-    * the downstream needs the string (oracle checks, exemplars); the
-    * MinHash pipeline runs on [[shingleHashes]] so its shuffles carry
-    * fixed-width 8-byte keys instead of ~3-word strings.
-    */
-  /** SQL for the array of k-word shingles of `ws` — single source for
-    * both the text-keyed and hash-keyed pipelines.
-    */
-  private def shingleArraySql(k: Int): String =
-    s"transform(sequence(0, greatest(size(ws) - $k, 0)), i -> concat_ws(' ', slice(ws, i + 1, $k)))"
-
-  def shingles(docs: DataFrame, idCol: String, textCol: String,
-               k: Int = 3): DataFrame =
-    docs.select(col(idCol).as("doc_id"), split(col(textCol), " ").as("ws"))
-      .select(col("doc_id"), explode(expr(shingleArraySql(k))).as("tok"))
-      .distinct()
-
-  /** Distinct k-word shingle HASHES: (id, gh) with gh = xxhash64(text).
-    * The shingle text is hashed INSIDE the scan-side generator, so the
-    * distinct, the signature agg, and the candidate verify-join all
-    * shuffle 8-byte longs — at 100 TB the string-keyed variant moves
+  /** Distinct k-word shingle HASHES: (id, gh) with gh = xxhash64(text),
+    * so the distinct, the signature agg, and the candidate verify-join
+    * all shuffle 8-byte longs — at 100 TB a string-keyed variant moves
     * an order of magnitude more shuffle bytes for identical results
     * (a 64-bit collision between two distinct shingles of one document
-    * pair is the only divergence, ~2^-64 per pair).
+    * pair is the only divergence, ~2^-64 per pair). The shingles come
+    * from the native `ner_shingles` kernel ([[Decontam.shingles]]) and
+    * are hashed after the explode, so the hash is codegen'd and stays
+    * in the scan stage.
+    *
+    * Short-document rule: a text with fewer than k tokens is one
+    * shingle, the text itself. A NULL text counts as `""` and so is
+    * one shingle `""` (the rule of the `sequence`/`slice` composition
+    * this replaced, pinned in ShingleSpec).
     */
   def shingleHashes(docs: DataFrame, idCol: String, textCol: String,
-                    k: Int = 3): DataFrame =
-    docs.select(col(idCol).as("doc_id"), split(col(textCol), " ").as("ws"))
-      .select(col("doc_id"), explode(expr(
-        s"transform(${shingleArraySql(k)}, g -> xxhash64(g))")).as("gh"))
+                    k: Int = 3): DataFrame = {
+    val t = coalesce(col(textCol), lit(""))
+    docs.select(col(idCol).as("doc_id"), t.as("t"),
+        Decontam.shingles(t, k).as("sh"))
+      .select(col("doc_id"), explode(
+        when(size(col("sh")) === 0, array(col("t"))).otherwise(col("sh")))
+        .as("g"))
+      .select(col("doc_id"), xxhash64(col("g")).as("gh"))
       .distinct()
+  }
 
   /** MinHash signatures banded to (doc_id, band, bk) rows; `numHashes`
     * seeded xxhash64 min-hashes split into `bands` bands. Input is the
@@ -117,6 +112,16 @@ object TextDedup {
       .select(col("d1"), col("d2"), col("shared"))
   }
 
+  /** Every n-token span of every document: (doc_id, gram) — the shared
+    * generator of the three span operators below, so tokenization and
+    * the short-doc rule (NULL or fewer than n tokens: no spans) can
+    * never drift between them.
+    */
+  private def spanGrams(docs: DataFrame, idCol: String, textCol: String,
+                        n: Int): DataFrame =
+    docs.select(col(idCol).as("doc_id"),
+      explode(Decontam.shingles(col(textCol), n)).as("gram"))
+
   /** Oracle rendition of substring-level exact dedup: every `n`-token
     * span occurring in more than one document, grouped by its TEXT —
     * portable and DuckDB-checkable (q51's shape), but the final shuffle
@@ -126,19 +131,6 @@ object TextDedup {
     * where full span text (not one exemplar) must survive, or for
     * cross-engine verification.
     */
-  /** Every n-token span of every document: (doc_id, gram) — the shared
-    * generator for both duplicated-span renditions, so the short-doc
-    * guard (Spark's sequence(1, 0) DESCENDS rather than being empty)
-    * and the tokenization can never drift between them.
-    */
-  private def spanGrams(docs: DataFrame, idCol: String, textCol: String,
-                        n: Int): DataFrame =
-    docs.select(col(idCol).as("doc_id"), split(col(textCol), " ").as("ws"))
-      .where(size(col("ws")) >= n)
-      .select(col("doc_id"), explode(expr(
-        s"transform(sequence(1, size(ws) - ${n - 1}), i -> concat_ws(' ', slice(ws, i, $n)))"))
-        .as("gram"))
-
   def duplicatedSpans(docs: DataFrame, idCol: String, textCol: String,
                       n: Int = 20): DataFrame =
     spanGrams(docs, idCol, textCol, n)
@@ -209,37 +201,6 @@ object TextDedup {
         round(col("n_dup_spans").cast("double") / col("n_spans"), 6))
   }
 
-  /** Near-duplicate CLUSTERS with a canonical pick — the transitive
-    * closure of [[minhashPairs]] plus the keep-decision a curation
-    * pipeline acts on. Where Curate's greedy pass drops `d2` of each
-    * pair independently (order-dependent at the margins), this operator
-    * groups mutually-near documents into one cluster and keeps exactly
-    * one canonical representative per cluster: the member with the MOST
-    * whitespace tokens (the best exemplar of a template family), ties
-    * broken by min doc_id. Output: (doc_id, cluster_id, is_canonical
-    * 0/1) for EVERY input document; singletons are their own cluster
-    * and trivially canonical. cluster_id = min doc_id in the cluster
-    * (the same min-label convention as the KG canonicalizer).
-    *
-    * Scale shape: pair generation is the banded-LSH pipeline (no
-    * all-pairs product); the CC fixpoint runs over ONLY the documents
-    * that appear in some pair — dup-involved docs, not the corpus — and
-    * alias-cluster diameters are tiny, so it converges in a few rounds
-    * (each round checkpoint-truncated, see
-    * [[graft.pipeline.KgPipeline.connectedComponents]]). The canonical
-    * pick is a partial-agg `max(struct(n_toks, -doc_id))` per cluster —
-    * deliberately NOT a row_number window: a 10M-doc boilerplate
-    * cluster would land one window partition on one task, while the
-    * struct-max combines map-side. NULL texts tokenize to n_toks = 0,
-    * shingle to nothing, and come out as singleton clusters.
-    *
-    * Like the KG canonicalizer, the closure decides driver-vs-
-    * distributed with one limit-collect ([[componentLabels]]): a pair
-    * set of at most `collectThreshold` edges (default
-    * [[Graph.componentsCollectThreshold]]) is labelled on the driver,
-    * skipping the fixpoint's per-round jobs, while a corpus whose dup
-    * graph is genuinely large takes the iterative, checkpointed CC.
-    */
   /** Component labels (node, comp = min member id) for a dup-pair edge
     * list — the shared closure step of [[dupClusters]] and
     * [[graft.pipeline.Ann.semDedup]]: [[Graph.components]] over the
@@ -257,10 +218,42 @@ object TextDedup {
     finally edges.unpersist()
   }
 
+  /** Near-duplicate CLUSTERS with a canonical pick — the transitive
+    * closure of [[minhashPairs]] plus the keep-decision a curation
+    * pipeline acts on. Where Curate's greedy pass drops `d2` of each
+    * pair independently (order-dependent at the margins), this operator
+    * groups mutually-near documents into one cluster and keeps exactly
+    * one canonical representative per cluster: the member with the MOST
+    * whitespace tokens (the best exemplar of a template family), ties
+    * broken by min doc_id. Output: (doc_id, cluster_id, is_canonical
+    * 0/1) for EVERY input document; singletons are their own cluster
+    * and trivially canonical. cluster_id = min doc_id in the cluster
+    * (the same min-label convention as the KG canonicalizer).
+    *
+    * Scale shape: pair generation is the banded-LSH pipeline (no
+    * all-pairs product); the closure ([[componentLabels]], i.e.
+    * [[Graph.components]]) runs over ONLY the documents that appear in
+    * some pair — dup-involved docs, not the corpus. A pair set of at
+    * most [[Graph.componentsCollectThreshold]] edges is labelled on the
+    * driver, skipping the fixpoint's per-round jobs; a corpus whose dup
+    * graph is genuinely large takes the iterative, checkpointed CC.
+    * The canonical pick is a partial-agg `max(struct(n_toks, -doc_id))`
+    * per cluster — deliberately NOT a row_number window: a 10M-doc
+    * boilerplate cluster would land one window partition on one task,
+    * while the struct-max combines map-side. NULL texts tokenize to
+    * n_toks = 0 and shingle as `""` ([[shingleHashes]]), so they
+    * cluster with each other and with empty texts.
+    */
   def dupClusters(docs: DataFrame, idCol: String, textCol: String,
-                  k: Int = 3, numHashes: Int = 16, bands: Int = 4,
-                  collectThreshold: Int = Graph.componentsCollectThreshold)
-      : DataFrame = {
+                  k: Int = 3, numHashes: Int = 16, bands: Int = 4): DataFrame =
+    dupClusters(docs, idCol, textCol, k, numHashes, bands,
+      Graph.componentsCollectThreshold)
+
+  /** [[dupClusters]] at a given closure edge budget (< 0: distributed). */
+  private[graft] def dupClusters(docs: DataFrame, idCol: String,
+                                 textCol: String, k: Int, numHashes: Int,
+                                 bands: Int,
+                                 collectThreshold: Int): DataFrame = {
     val labels = componentLabels(
       minhashPairs(docs, idCol, textCol, k, numHashes, bands)
         .select(col("d1").as("src"), col("d2").as("dst")),

@@ -426,16 +426,23 @@ object PipelineQueries {
   */
 object VecOps extends Serializable {
 
+  /** Squared L2 distance over the common prefix of `a` and `b`, each
+    * difference taken in float: the driver-side distance of the
+    * quantizer trainers and of [[nearestCell]] / [[topCells]].
+    */
+  def sqDist(a: Array[Float], b: Array[Float]): Double = {
+    var d = 0.0; var i = 0
+    val n = math.min(a.length, b.length)
+    while (i < n) { val diff = a(i) - b(i); d += diff * diff; i += 1 }
+    d
+  }
+
   /** Squared-L2 nearest centroid, deterministic first-wins tie-break. */
   def nearestCell(cs: Array[Array[Float]], v: Array[Float]): Int = {
     var best = 0; var bestD = Double.MaxValue
     var c = 0
     while (c < cs.length) {
-      var d = 0.0; var i = 0
-      val cv = cs(c)
-      while (i < math.min(cv.length, v.length)) {
-        val diff = cv(i) - v(i); d += diff * diff; i += 1
-      }
+      val d = sqDist(cs(c), v)
       if (d < bestD) { bestD = d; best = c }
       c += 1
     }
@@ -445,15 +452,7 @@ object VecOps extends Serializable {
   /** Indices of the `n` nearest centroids, ascending distance,
     * deterministic index tie-break.
     */
-  def topCells(cs: Array[Array[Float]], v: Array[Float], n: Int): Seq[Int] = {
-    val ds = cs.indices.map { c =>
-      var d = 0.0; var i = 0
-      val cv = cs(c)
-      while (i < math.min(cv.length, v.length)) {
-        val diff = cv(i) - v(i); d += diff * diff; i += 1
-      }
-      (d, c)
-    }
-    ds.sortBy(identity).take(n).map(_._2)
-  }
+  def topCells(cs: Array[Array[Float]], v: Array[Float], n: Int): Seq[Int] =
+    cs.indices.map(c => (sqDist(cs(c), v), c))
+      .sortBy(identity).take(n).map(_._2)
 }

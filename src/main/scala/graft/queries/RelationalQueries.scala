@@ -1705,8 +1705,9 @@ object RelationalQueries {
     */
   private def syntheticGraph(s: SparkSession, dir: String,
                              planted: Boolean): DataFrame = {
-    val un = t(s, dir, "part").select(col("p_partkey").as("u"))
-      .crossJoin(broadcast(t(s, dir, "part").agg(count(lit(1)).as("n"))))
+    val part = t(s, dir, "part")
+    val un = part.select(col("p_partkey").as("u"))
+      .crossJoin(broadcast(part.agg(count(lit(1)).as("n"))))
     val g1 = un.select(col("u"), ((col("u") * 7 + 3) % col("n")).as("v"))
     val g2 = un.select(col("u"), ((col("u") * 13 + 5) % col("n")).as("v"))
     val gen = g1.unionByName(g2)

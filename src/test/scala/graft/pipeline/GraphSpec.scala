@@ -250,15 +250,16 @@ class GraphSpec extends AnyFunSuite {
 
   test("pageRank: exactly collectThreshold edges run on the driver, one more does not") {
     val es = (0L until 12L).map(u => (u, (u * 5 + 1) % 12))
-    assert(onDriver(Graph.pageRank(edgeDf(es), iters = 3,
+    assert(onDriver(Graph.pageRank(edgeDf(es), iters = 3, damping = 0.85,
       collectThreshold = es.size)))
-    assert(!onDriver(Graph.pageRank(edgeDf(es), iters = 3,
+    assert(!onDriver(Graph.pageRank(edgeDf(es), iters = 3, damping = 0.85,
       collectThreshold = es.size - 1)))
     // NULL ends are not edges: they neither count nor become nodes
     import spark.implicits._
     val withNulls = (es.map { case (u, v) => (Option(u), Option(v)) } ++
       Seq((None, Some(1L)), (Some(2L), None))).toDF("src", "dst")
-    val ranks = Graph.pageRank(withNulls, iters = 3, collectThreshold = es.size)
+    val ranks = Graph.pageRank(withNulls, iters = 3, damping = 0.85,
+      collectThreshold = es.size)
     assert(onDriver(ranks))
     assert(ranks.count() == 12)
     Graph.releaseAllRanks(spark, blocking = true)
@@ -356,10 +357,10 @@ class GraphSpec extends AnyFunSuite {
     val before = sc.getRDDStorageInfo.map(_.id).toSet
     // only the distributed path holds a checkpoint
     val r1 = Graph.pageRank(edgeDf(Seq((1L, 2L), (2L, 3L), (3L, 1L))),
-      iters = 3, collectThreshold = -1)
+      iters = 3, damping = 0.85, collectThreshold = -1)
     r1.count()
     val r2 = Graph.pageRank(edgeDf(Seq((1L, 2L), (2L, 1L))), iters = 2,
-      collectThreshold = -1)
+      damping = 0.85, collectThreshold = -1)
     r2.count()
     val pinned = sc.getRDDStorageInfo.map(_.id).toSet -- before
     assert(pinned.nonEmpty, "pageRank's result should be checkpoint-pinned")
@@ -379,7 +380,7 @@ class GraphSpec extends AnyFunSuite {
     }
     for (t <- thresholds) intercept[IllegalArgumentException] {
       Graph.pageRank(edgeDf(Seq.empty[(Long, Long)]), iters = 1,
-        collectThreshold = t)
+        damping = 0.85, collectThreshold = t)
     }
   }
 }

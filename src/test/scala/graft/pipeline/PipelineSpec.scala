@@ -604,9 +604,10 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   // driver kernel (LocalGraph), a call launched 4 jobs here for q79, 12
   // for q80, 10 for q81 and 165 for q25. What is left is each query's
   // parquet schema reads, q80/q81's broadcast node count and the
-  // limit-collect. The budgets may only tighten.
-  for ((key, budget) <- Seq("q79_graph_degree" -> 2, "q80_triangles" -> 6,
-         "q81_two_hop" -> 6, "q25_connected_components" -> 3))
+  // limit-collect; q80/q81 read `part` once (6 jobs when they read it
+  // twice). The budgets may only tighten.
+  for ((key, budget) <- Seq("q79_graph_degree" -> 2, "q80_triangles" -> 5,
+         "q81_two_hop" -> 5, "q25_connected_components" -> 3))
     test(s"one $key call and the collect of its result stay within the Spark job budget") {
       val dir = "perfbench/data/sf0.001"
       val query = graft.SparkEntry.queries(key)

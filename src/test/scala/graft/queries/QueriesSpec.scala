@@ -31,6 +31,27 @@ class AnnSpec extends AnyFunSuite {
   }
 
   /** Brute-force top-k neighbor ids per probe (the oracle). */
+  /** Brute-force near-dup oracle of q44/q59/q60: every doc pair whose
+    * 3-word shingle sets (a text under 3 words: the text itself) have
+    * Jaccard >= 1/2, as (min id, max id).
+    */
+  private def bruteForcePairs(
+      docs: Array[(Long, String)]): Set[(Long, Long)] = {
+    def shingles(t: String): Set[String] = {
+      val ws = t.split(" ")
+      (0 to math.max(ws.length - 3, 0)).map(i =>
+        ws.slice(i, i + 3).mkString(" ")).toSet
+    }
+    val sh = docs.map { case (id, t) => id -> shingles(t) }
+    (for {
+      i <- sh.indices.iterator
+      j <- (i + 1) until sh.length
+      (id1, s1) = sh(i); (id2, s2) = sh(j)
+      inter = (s1 & s2).size
+      if inter * 2 >= s1.size + s2.size - inter // J >= 0.5
+    } yield (math.min(id1, id2), math.max(id1, id2))).toSet
+  }
+
   private def bruteTopK(vs: Array[(Long, Array[Float])], k: Int)
       : Map[Long, Set[Long]] = {
     val probes = vs.filter(_._1 < 20)
@@ -149,19 +170,7 @@ class AnnSpec extends AnyFunSuite {
     // brute-force oracle: all pairs with shingle-Jaccard >= 0.5
     val docs = spark.read.parquet(s"$qDir/documents.parquet")
       .select(col("doc_id"), col("text")).as[(Long, String)].collect()
-    def shingles(t: String): Set[String] = {
-      val ws = t.split(" ")
-      (0 to math.max(ws.length - 3, 0)).map(i =>
-        ws.slice(i, i + 3).mkString(" ")).toSet
-    }
-    val sh = docs.map { case (id, t) => id -> shingles(t) }
-    val truePairs = (for {
-      i <- sh.indices.iterator
-      j <- (i + 1) until sh.length
-      (id1, s1) = sh(i); (id2, s2) = sh(j)
-      inter = (s1 & s2).size
-      if inter * 2 >= s1.size + s2.size - inter // J >= 0.5
-    } yield (math.min(id1, id2), math.max(id1, id2))).toSet
+    val truePairs = bruteForcePairs(docs)
     val got = PipelineQueries.q44_minhash_pairs(spark, qDir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // the exact-Jaccard verify step makes precision 1.0 by construction
@@ -185,19 +194,7 @@ class AnnSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$qDir/documents.parquet")
       .where(col("doc_id") < 300)
       .select(col("doc_id"), col("text")).as[(Long, String)].collect()
-    def shingles(t: String): Set[String] = {
-      val ws = t.split(" ")
-      (0 to math.max(ws.length - 3, 0)).map(i =>
-        ws.slice(i, i + 3).mkString(" ")).toSet
-    }
-    val sh = docs.map { case (id, t) => id -> shingles(t) }
-    val truePairs = (for {
-      i <- sh.indices.iterator
-      j <- (i + 1) until sh.length
-      (id1, s1) = sh(i); (id2, s2) = sh(j)
-      inter = (s1 & s2).size
-      if inter * 2 >= s1.size + s2.size - inter // J >= 0.5
-    } yield (math.min(id1, id2), math.max(id1, id2))).toSet
+    val truePairs = bruteForcePairs(docs)
     val got = RelationalQueries.q59_minhash_pairs_exact(spark, qDir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == truePairs,
@@ -211,19 +208,7 @@ class AnnSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$qDir/documents.parquet")
       .where(col("doc_id") < 300)
       .select(col("doc_id"), col("text")).as[(Long, String)].collect()
-    def shingles(t: String): Set[String] = {
-      val ws = t.split(" ")
-      (0 to math.max(ws.length - 3, 0)).map(i =>
-        ws.slice(i, i + 3).mkString(" ")).toSet
-    }
-    val sh = docs.map { case (id, t) => id -> shingles(t) }
-    val truePairs = (for {
-      i <- sh.indices.iterator
-      j <- (i + 1) until sh.length
-      (id1, s1) = sh(i); (id2, s2) = sh(j)
-      inter = (s1 & s2).size
-      if inter * 2 >= s1.size + s2.size - inter
-    } yield (math.min(id1, id2), math.max(id1, id2))).toSet
+    val truePairs = bruteForcePairs(docs)
     // independent transitive closure: driver union-find, min-id label
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x: Long): Long = {
@@ -279,7 +264,7 @@ class AnnSpec extends AnyFunSuite {
     val in = spark.read.parquet(s"$qDir/documents.parquet")
       .where(col("doc_id") < 300)
     def run(th: Int) = graft.pipeline.TextDedup.dupClusters(
-        in, "doc_id", "text", numHashes = 16, bands = 4,
+        in, "doc_id", "text", k = 3, numHashes = 16, bands = 4,
         collectThreshold = th)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     val viaDriver = run(Int.MaxValue)
