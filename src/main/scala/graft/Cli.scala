@@ -1,6 +1,7 @@
 package graft
 
 import graft.core._
+import graft.io.Json
 import java.nio.file.{Files, Paths, Path}
 import scala.jdk.CollectionConverters._
 
@@ -27,13 +28,9 @@ import scala.jdk.CollectionConverters._
   *                                            hot keys -> salted write (JSON report);
   *                                            "semantic" = SemDeDup embedding stage,
   *                                            "quality=" = trained-filter stage
-  *                                            (Classifier.save model file:
-  *                                            one JSON object with "format":
-  *                                            "graft-quality-lr", "version": 1,
-  *                                            "n_buckets": <int>, "bias_bits":
-  *                                            "<hex>", "weight_bits": [n_buckets
-  *                                            x "<hex>"]; hex = a double's
-  *                                            IEEE-754 bits; no verb writes it),
+  *                                            (a Classifier.save model file,
+  *                                            README "On-disk metadata files";
+  *                                            no verb writes it),
   *                                            "lm=" = perplexity ceiling stage
   *                                            (Ngram.saveLm directory)
   */
@@ -117,6 +114,13 @@ object Cli {
       }
       b.result()
     }
+
+  /** kg-export's JSON line. `out` is user input, and a quote or a
+    * newline is legal in a POSIX path: the codec escapes both, so the
+    * line stays one JSON line that scripted consumers can parse.
+    */
+  private[graft] def exportLine(n: Long, out: String): String =
+    Json.render(Json.obj("ntriples_written" -> n, "out" -> out))
 
   def main(args: Array[String]): Unit = {
     // stable number formatting in compare/cv tables and JSON regardless
@@ -298,8 +302,7 @@ object Cli {
         "entities_referenced", "entities_typed", "dangling_entities",
         "orphan_typed_entities", "multi_typed_entities",
         "duplicate_triples", "null_key_triples")
-      utf8Out.println(order.map(m => s""""$m":${audit(m)}""")
-        .mkString("{", ",", "}"))
+      utf8Out.println(Json.render(Json.obj(order.map(m => m -> audit(m)): _*)))
       val defects = audit("dangling_entities") +
         audit("orphan_typed_entities") + audit("duplicate_triples") +
         audit("null_key_triples")
@@ -315,12 +318,7 @@ object Cli {
       val t = graft.io.TableIO.readCommitted(spark, tableDir, buckets)
       val lines = graft.pipeline.KgPipeline.ntriples(t)
       lines.write.mode("overwrite").text(outDir)
-      val n = spark.read.text(outDir).count()
-      // the path is user input — escape it (quotes, backslashes, AND
-      // control chars: a newline is POSIX-legal in a path) or it
-      // breaks the one-JSON-line contract scripted consumers parse
-      utf8Out.println(s"""{"ntriples_written":$n,""" +
-        s""""out":${graft.io.TableIO.jstr(outDir)}}""")
+      utf8Out.println(exportLine(spark.read.text(outDir).count(), outDir))
       spark.stop()
 
     case "kg-query" :: tableDir :: rest if rest.nonEmpty =>
@@ -418,82 +416,45 @@ object NerfModel {
     NerfModel(schema, Sgd.train(sents, cfg, log, eval))
   }
 
-  // ---- JSON (de)serialization; hand-rolled, no extra deps ----
+  // ---- the model file: the schema first, so the file describes itself
+  //      like the reference's binary Nerf model, then the CRF weights ----
 
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
-  // ---- SchemaConf JSON (the model is self-describing, like the
-  //      reference's binary Nerf: /root/reference/src/NLP/Nerf.hs:39-41) ----
-
-  private def jdict(d: CompactDict): String =
-    d.entries.map { case (k, vs) =>
-      s"${jstr(k)}:${vs.map(jstr).mkString("[", ",", "]")}"
-    }.mkString("{", ",", "}") // entries iterate in key order (sorted)
-
-  private def jints(xs: List[Int]): String = xs.mkString("[", ",", "]")
-
-  private def schemaJson(c: Features.SchemaConf): String = {
-    val parts = scala.collection.mutable.ListBuffer.empty[String]
-    def opt(name: String, v: Option[String]): Unit =
-      parts += s"${jstr(name)}:${v.getOrElse("null")}"
-    opt("orth", c.orthC.map(jints))
-    opt("splitOrth", c.splitOrthC.map(jints))
-    opt("lowPrefixes", c.lowPrefixesC.map { case (r, ns) =>
-      s"""{"range":${jints(r)},"ns":${jints(ns)}}""" })
-    opt("lowSuffixes", c.lowSuffixesC.map { case (r, ns) =>
-      s"""{"range":${jints(r)},"ns":${jints(ns)}}""" })
-    opt("lemma", c.lemmaC.map { case (r, n) =>
-      s"""{"range":${jints(r)},"n":$n}""" })
-    opt("shape", c.shapeC.map(jints))
-    opt("packed", c.packedC.map(jints))
-    opt("shapePair", c.shapePairC.map(jints))
-    opt("packedPair", c.packedPairC.map(jints))
-    opt("dicts", c.dictC.map { case (r, ds) =>
-      s"""{"range":${jints(r)},"dicts":${ds.map(jdict).mkString("[", ",", "]")}}""" })
-    opt("intTrigs", c.intTrigsC.map { case (r, d) =>
-      s"""{"range":${jints(r)},"dict":${jdict(d)}}""" })
-    opt("extTrigs", c.extTrigsC.map { case (r, d) =>
-      s"""{"range":${jints(r)},"dict":${jdict(d)}}""" })
-    parts.mkString("{", ",", "}")
+  private def schemaJson(c: Features.SchemaConf) = {
+    // entries iterate in key order (sorted)
+    def dict(d: CompactDict) = Json.obj(d.entries.toSeq: _*)
+    def ranged(r: List[Int], k: String, v: Any) = Json.obj("range" -> r, k -> v)
+    Json.obj("orth" -> c.orthC, "splitOrth" -> c.splitOrthC,
+      "lowPrefixes" -> c.lowPrefixesC.map { case (r, ns) => ranged(r, "ns", ns) },
+      "lowSuffixes" -> c.lowSuffixesC.map { case (r, ns) => ranged(r, "ns", ns) },
+      "lemma" -> c.lemmaC.map { case (r, n) => ranged(r, "n", n) },
+      "shape" -> c.shapeC, "packed" -> c.packedC,
+      "shapePair" -> c.shapePairC, "packedPair" -> c.packedPairC,
+      "dicts" -> c.dictC.map { case (r, ds) => ranged(r, "dicts", ds.map(dict)) },
+      "intTrigs" -> c.intTrigsC.map { case (r, d) => ranged(r, "dict", dict(d)) },
+      "extTrigs" -> c.extTrigsC.map { case (r, d) => ranged(r, "dict", dict(d)) })
   }
 
-  private def parseSchema(o: Map[String, Any]): Features.SchemaConf = {
-    def ints(v: Any): List[Int] =
-      v.asInstanceOf[List[Any]].map(_.asInstanceOf[Double].toInt)
-    def dict(v: Any): CompactDict =
-      CompactDict.fromPairs(
-        v.asInstanceOf[Map[String, Any]].iterator.map { case (k, vs) =>
-          k -> vs.asInstanceOf[List[Any]].map(_.toString)
-        })
-    def get(name: String): Option[Any] =
-      o.get(name).filter(_ != null)
-    def rangeAnd[A](name: String, f: Map[String, Any] => A): Option[(List[Int], A)] =
-      get(name).map { v =>
-        val m = v.asInstanceOf[Map[String, Any]]
-        (ints(m("range")), f(m))
-      }
+  private def ints(v: Json.Value): List[Int] = v.elems.map(_.int).toList
+  private def doubles(v: Json.Value): Array[Double] = v.elems.map(_.double).toArray
+
+  private def parseSchema(o: Json.Value): Features.SchemaConf = {
+    def dict(v: Json.Value) = CompactDict.fromPairs(v.fields.iterator.map {
+      case (k, labels) => k -> labels.elems.map(_.str).toList })
+    def ranged[A](name: String)(f: Json.Value => A): Option[(List[Int], A)] =
+      o.opt(name).map(m => (ints(m("range")), f(m)))
     Features.SchemaConf(
-      orthC = get("orth").map(ints),
-      splitOrthC = get("splitOrth").map(ints),
-      lowPrefixesC = rangeAnd("lowPrefixes", m => ints(m("ns"))),
-      lowSuffixesC = rangeAnd("lowSuffixes", m => ints(m("ns"))),
-      lemmaC = rangeAnd("lemma", m => m("n").asInstanceOf[Double].toInt),
-      shapeC = get("shape").map(ints),
-      packedC = get("packed").map(ints),
-      shapePairC = get("shapePair").map(ints),
-      packedPairC = get("packedPair").map(ints),
-      dictC = rangeAnd("dicts",
-        m => m("dicts").asInstanceOf[List[Any]].map(dict)),
-      intTrigsC = rangeAnd("intTrigs", m => dict(m("dict"))),
-      extTrigsC = rangeAnd("extTrigs", m => dict(m("dict"))))
+      orthC = o.opt("orth").map(ints),
+      splitOrthC = o.opt("splitOrth").map(ints),
+      lowPrefixesC = ranged("lowPrefixes")(m => ints(m("ns"))),
+      lowSuffixesC = ranged("lowSuffixes")(m => ints(m("ns"))),
+      lemmaC = ranged("lemma")(_("n").int),
+      shapeC = o.opt("shape").map(ints),
+      packedC = o.opt("packed").map(ints),
+      shapePairC = o.opt("shapePair").map(ints),
+      packedPairC = o.opt("packedPair").map(ints),
+      dictC = ranged("dicts")(_("dicts").elems.map(dict).toList),
+      intTrigsC = ranged("intTrigs")(m => dict(m("dict"))),
+      extTrigsC = ranged("extTrigs")(m => dict(m("dict"))))
   }
 
   def save(m: NerfModel, path: Path): Unit = {
@@ -505,121 +466,36 @@ object NerfModel {
             m.crf.obsWeights.forall(_.forall(java.lang.Double.isFinite)),
       "model has non-finite weights (NaN/Infinity) — training diverged; " +
         "refusing to serialize an unloadable model")
-    val sb = new StringBuilder
-    sb ++= "{\"schema\":"
-    sb ++= schemaJson(m.schema)
-    sb ++= ",\"labels\":["
-    sb ++= m.crf.labels.map(jstr).mkString(",")
-    sb ++= "],\"sing\":["
-    sb ++= m.crf.sing.toArray.map(_.toString).mkString(",")
-    sb ++= "],\"trans\":["
-    sb ++= m.crf.trans.data.map(_.toString).mkString(",")
-    sb ++= "],\"obs\":["
-    // per save-site objects: { value: obsId, ... }
-    sb ++= m.crf.obsIds.map { siteMap =>
-      siteMap.toSeq.sortBy(_._2)
-        .map { case (k, id) => s"${jstr(k)}:$id" }.mkString("{", ",", "}")
-    }.mkString(",")
-    sb ++= "],\"obsLabels\":["
-    sb ++= m.crf.obsLabels.map(a => a.mkString("[", ",", "]")).mkString(",")
-    sb ++= "],\"obsWeights\":["
-    sb ++= m.crf.obsWeights.map(a => a.mkString("[", ",", "]")).mkString(",")
-    sb ++= "]}"
+    val doc = Json.obj("schema" -> schemaJson(m.schema),
+      "labels" -> m.crf.labels, "sing" -> m.crf.sing.toArray,
+      "trans" -> m.crf.trans.data,
+      // per site: { value: obsId, ... } in id order
+      "obs" -> m.crf.obsIds.map(site => Json.obj(site.toSeq.sortBy(_._2): _*)),
+      "obsLabels" -> m.crf.obsLabels, "obsWeights" -> m.crf.obsWeights)
     Files.createDirectories(path.toAbsolutePath.getParent)
-    Files.write(path, sb.toString.getBytes("UTF-8"))
+    Files.write(path, Json.render(doc).getBytes("UTF-8"))
   }
 
+  /** Load a model file written by [[save]]; a file that is truncated, is
+    * not JSON, or has a missing or mistyped field fails naming `path`.
+    */
   def load(path: Path): NerfModel = {
-    val txt = new String(Files.readAllBytes(path), "UTF-8")
-    val p = new MiniJson(txt)
-    val obj = p.parse().asInstanceOf[Map[String, Any]]
-    val labels = obj("labels").asInstanceOf[List[Any]].map(_.toString).toArray
-    val sing = breeze.linalg.DenseVector(
-      obj("sing").asInstanceOf[List[Any]].map(_.asInstanceOf[Double]).toArray)
-    val transData = obj("trans").asInstanceOf[List[Any]].map(_.asInstanceOf[Double]).toArray
+    val o = Json.parse(new String(Files.readAllBytes(path), "UTF-8"),
+      s"NER model file $path")
+    val labels = o("labels").elems.map(_.str).toArray
+    val sing = doubles(o("sing"))
+    val trans = doubles(o("trans"))
     val l = labels.length
-    val trans = new breeze.linalg.DenseMatrix(l, l, transData)
-    val obsIds = obj("obs") match {
-      case sites: List[Any] @unchecked => sites.map { site =>
-        site.asInstanceOf[Map[String, Any]]
-          .map { case (k, v) => k -> v.asInstanceOf[Double].toInt }
-      }.toArray
-      case _ => sys.error(
-        s"$path uses the pre-(siteId,value) model format; retrain with `graft.Cli train`")
-    }
-    val obsLabels = obj("obsLabels").asInstanceOf[List[Any]]
-      .map(_.asInstanceOf[List[Any]].map(_.asInstanceOf[Double].toInt).toArray).toArray
-    val obsWeights = obj("obsWeights").asInstanceOf[List[Any]]
-      .map(_.asInstanceOf[List[Any]].map(_.asInstanceOf[Double]).toArray).toArray
-    val schema = obj.get("schema") match {
-      case Some(s: Map[String, Any] @unchecked) => parseSchema(s)
-      case _ => defaultSchema // pre-schema model files
-    }
-    NerfModel(schema,
-      Crf.Model(labels, obsIds, sing, trans, obsLabels, obsWeights))
-  }
-}
-
-/** Minimal JSON parser (objects, arrays, strings, numbers) — enough for
-  * the model file; avoids adding dependencies (offline sandbox).
-  */
-private final class MiniJson(s: String) {
-  private var i = 0
-  def parse(): Any = { skip(); value() }
-  private def skip(): Unit = while (i < s.length && s.charAt(i).isWhitespace) i += 1
-  private def value(): Any = s.charAt(i) match {
-    case '{' =>
-      i += 1; skip()
-      val m = scala.collection.mutable.LinkedHashMap.empty[String, Any]
-      if (s.charAt(i) == '}') { i += 1 }
-      else {
-        var done = false
-        while (!done) {
-          skip()
-          val k = str()
-          skip(); require(s.charAt(i) == ':'); i += 1; skip()
-          m(k) = value()
-          skip()
-          if (s.charAt(i) == ',') { i += 1 } else { require(s.charAt(i) == '}'); i += 1; done = true }
-        }
-      }
-      m.toMap
-    case '[' =>
-      i += 1; skip()
-      val b = scala.collection.mutable.ListBuffer.empty[Any]
-      if (s.charAt(i) == ']') { i += 1 }
-      else {
-        var done = false
-        while (!done) {
-          skip(); b += value(); skip()
-          if (s.charAt(i) == ',') { i += 1 } else { require(s.charAt(i) == ']'); i += 1; done = true }
-        }
-      }
-      b.toList
-    case '"' => str()
-    case 'n' => i += 4; null
-    case 't' => i += 4; java.lang.Boolean.TRUE
-    case 'f' => i += 5; java.lang.Boolean.FALSE
-    case _ =>
-      val start = i
-      while (i < s.length && "+-0123456789.eE".indexOf(s.charAt(i)) >= 0) i += 1
-      s.substring(start, i).toDouble
-  }
-  private def str(): String = {
-    require(s.charAt(i) == '"'); i += 1
-    val b = new StringBuilder
-    while (s.charAt(i) != '"') {
-      if (s.charAt(i) == '\\') {
-        i += 1
-        s.charAt(i) match {
-          case 'n' => b += '\n'; case 't' => b += '\t'; case 'r' => b += '\r'
-          case 'u' => b += Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar; i += 4
-          case c => b += c
-        }
-      } else b += s.charAt(i)
-      i += 1
-    }
-    i += 1
-    b.result()
+    if (sing.length != l || trans.length != l * l) o.refuse(s"has $l " +
+      s"labels but ${sing.length} initial and ${trans.length} transition weights")
+    val obs = o("obs")
+    require(obs.node.isArray,
+      s"$path uses the pre-(siteId,value) model format; retrain with `graft.Cli train`")
+    val obsIds = obs.elems.map(_.fields.map { case (k, id) => k -> id.int }.toMap).toArray
+    NerfModel(o.opt("schema").fold(defaultSchema)(parseSchema), // pre-schema files
+      Crf.Model(labels, obsIds, breeze.linalg.DenseVector(sing),
+        new breeze.linalg.DenseMatrix(l, l, trans),
+        o("obsLabels").elems.map(ints(_).toArray).toArray,
+        o("obsWeights").elems.map(doubles).toArray))
   }
 }

@@ -74,7 +74,12 @@ object KgDeltaMain {
     val secs = (System.nanoTime() - t0) / 1e9
     val totRows = TableIO.readCommits(triplesDir, 16,
       spark.sessionState.newHadoopConf()).map(_.rows).sum
-    println(f"""{"delta_files":${hi - lo},"bootstrapped":$bootstrapped,"delta_buckets":${deltaRep.affectedBuckets.length},"delta_upserts":${deltaRep.nUpserts},"reconciled_buckets":${reconRep.affectedBuckets.length},"table_rows":$totRows,"sec":$secs%.2f}""")
+    println(graft.io.Json.render(graft.io.Json.obj("delta_files" -> (hi - lo),
+      "bootstrapped" -> bootstrapped,
+      "delta_buckets" -> deltaRep.affectedBuckets.length,
+      "delta_upserts" -> deltaRep.nUpserts,
+      "reconciled_buckets" -> reconRep.affectedBuckets.length,
+      "table_rows" -> totRows, "sec" -> graft.io.Json.fixed(secs, 2))))
     spark.stop()
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import graft.core._
 import graft.pipeline.KgPipeline
-import graft.io.TableIO
+import graft.io.{Json, TableIO}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -109,9 +109,8 @@ object KgMain {
         require(audit(m) == 0L, s"KG semantic audit FAILED: $m=" +
           s"${audit(m)} (full audit: $audit)")
       }
-      println(s"""{"verify":"ok","buckets_audited":16,""" +
-        s""""files_after_compaction":$filesAfter,""" +
-        s""""kg_audit_defects":0}""")
+      println(Json.render(Json.obj("verify" -> "ok", "buckets_audited" -> 16,
+        "files_after_compaction" -> filesAfter, "kg_audit_defects" -> 0)))
     }
 
     // lineage + stage counters persisted beside the commit manifests
@@ -128,22 +127,24 @@ object KgMain {
     val nLinked = cnt.getLong(1)
     // distinct canonical entities, not (entity -> canon) mapping rows
     val nCanon = result.canon.select("canon_id").distinct().count()
-    val metrics =
-      f"""{"snapshot":"synth-$nFiles-seed42","model":"sgd-seed42",
-         |"input_files":$nFiles,"mentions":$nMentions,"linked":$nLinked,
-         |"canon_entities":$nCanon,"triples":$totRows,
-         |"buckets_total":16,"buckets_written_this_run":${commits.length},
-         |"wall_sec":$secs%.2f}""".stripMargin.replace("\n", "")
     // temp+rename like the bucket manifests — a crash mid-write must not
     // leave a truncated metrics file beside atomically-published commits
-    TableIO.atomicWrite(s"$outDir/triples/_metrics.json", metrics, hconf)
+    Json.write(s"$outDir/triples/_metrics.json", Json.obj(
+      "snapshot" -> s"synth-$nFiles-seed42", "model" -> "sgd-seed42",
+      "input_files" -> nFiles, "mentions" -> nMentions, "linked" -> nLinked,
+      "canon_entities" -> nCanon, "triples" -> totRows, "buckets_total" -> 16,
+      "buckets_written_this_run" -> commits.length,
+      "wall_sec" -> Json.fixed(secs, 2)), hconf)
 
     // throughput denominates over rows written THIS run: on a resume
     // that skips committed buckets, dividing the table total by this
     // run's wall time would report inflated triples/sec for work a
     // previous run did
     val rowsThisRun = commits.map(_.rows).sum
-    println(f"""{"files":$nFiles,"triples":$totRows,"rows_this_run":$rowsThisRun,"sec":$secs%.2f,"triples_per_sec":${rowsThisRun / secs}%.1f,"buckets_written":${commits.length}}""")
+    println(Json.render(Json.obj("files" -> nFiles, "triples" -> totRows,
+      "rows_this_run" -> rowsThisRun, "sec" -> Json.fixed(secs, 2),
+      "triples_per_sec" -> Json.fixed(rowsThisRun / secs, 1),
+      "buckets_written" -> commits.length)))
     spark.stop()
   }
 }

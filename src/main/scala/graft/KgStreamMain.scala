@@ -59,7 +59,8 @@ object KgStreamMain {
     q.awaitTermination()
     val totRows = TableIO.readCommits(triplesDir, 16,
       spark.sessionState.newHadoopConf()).map(_.rows).sum
-    println(s"""{"mode":"${if (once) "once" else "continuous"}","table_rows":$totRows}""")
+    println(graft.io.Json.render(graft.io.Json.obj(
+      "mode" -> (if (once) "once" else "continuous"), "table_rows" -> totRows)))
     spark.stop()
   }
 }

@@ -82,10 +82,9 @@ object TableIO {
     val withSha = df.withColumn("content_sha256", sha2(col("content"), 256))
       .observe(obs, count(lit(1)).as("rows"))
     withSha.write.mode("overwrite").parquet(s"$dir/data")
-    val rows = obs.get("rows").asInstanceOf[Long]
-    val manifest =
-      s"""{"snapshot_id":${jstr(snapshotId)},"rows":$rows,"format":"parquet","invariant":"content_sha256"}"""
-    atomicWrite(s"$dir/_snapshot.json", manifest,
+    Json.write(s"$dir/_snapshot.json", Json.obj("snapshot_id" -> snapshotId,
+      "rows" -> obs.get("rows").asInstanceOf[Long], "format" -> "parquet",
+      "invariant" -> "content_sha256"),
       df.sparkSession.sessionState.newHadoopConf())
   }
 
@@ -110,11 +109,11 @@ object TableIO {
   private[graft] final case class Manifest(commit: BucketCommit, layout: Int,
                                            buckets: Int, data: String,
                                            lineage: Map[String, String]) {
-    def json: String = {
-      val lineageJson = lineage.toSeq.sortBy(_._1).map { case (k, v) =>
-        s"${jstr(k)}:${jstr(v)}" }.mkString(",")
-      s"""{"bucket":${commit.bucket},"rows":${commit.rows},"checksum":${commit.checksum},"layout":$layout,"buckets":$buckets,"data":${jstr(data)},"lineage":{$lineageJson}}"""
-    }
+    def json: com.fasterxml.jackson.databind.JsonNode = Json.obj(
+      "bucket" -> commit.bucket, "rows" -> commit.rows,
+      "checksum" -> commit.checksum, "layout" -> layout,
+      "buckets" -> buckets, "data" -> data,
+      "lineage" -> Json.obj(lineage.toSeq.sortBy(_._1): _*))
   }
 
   private def commitPath(dir: String, k: Int) = s"$dir/_commits/bucket-$k.json"
@@ -224,7 +223,7 @@ object TableIO {
     // input forever chasing a bucket that can never appear.
     val (id, written) = writeBuckets(bucketed, dir, todo, bucketCols.head)
     written.map { c =>
-      atomicWrite(commitPath(dir, c.bucket),
+      Json.write(commitPath(dir, c.bucket),
         Manifest(c, LayoutVersion, buckets, id, lineage).json, conf)
       c
     }
@@ -579,7 +578,7 @@ object TableIO {
                 "untouched")
           }
           val compacted = m.copy(data = id)
-          atomicWrite(commitPath(dir, k), compacted.json, conf)
+          Json.write(commitPath(dir, k), compacted.json, conf)
           reap(fs, dir, compacted)
           parquetFiles(fs, out)
         }
@@ -790,7 +789,7 @@ object TableIO {
     val (id, written) = writeBuckets(merged, dir, affected, bucketCols.head)
     val commits = written.map { c =>
       val m = byBucket(c.bucket).copy(commit = c, data = id)
-      atomicWrite(commitPath(dir, c.bucket), m.json, conf)
+      Json.write(commitPath(dir, c.bucket), m.json, conf)
       reap(fs, dir, m)
       c
     }
@@ -871,39 +870,20 @@ object TableIO {
     * would drop the bucket from every read). A manifest older than the
     * `layout` or `buckets` field reads as layout 1 or buckets -1, which
     * every guard refuses; `data` and `lineage` are required from layout
-    * 3 on. The lineage object is matched structurally — quoted
-    * strings may contain braces, and the capture stops at the first
-    * UNQUOTED close brace — so a `{` inside a snapshot id cannot
-    * pollute the parsed map.
+    * 3 on.
     */
   private[graft] def readManifest(dir: String, k: Int,
-                                  conf: Configuration): Option[Manifest] = {
-    val path = commitPath(dir, k)
-    hRead(path, conf).map { txt =>
-      def field(re: String): Option[String] =
-        re.r.findFirstMatchIn(txt).map(_.group(1))
-      def required(name: String, v: Option[String]): String = {
-        require(v.isDefined, s"bucket manifest $path is corrupt: missing " +
-          s"field $name in: $txt")
-        v.get
-      }
-      val layout = field("\"layout\":(\\d+)").map(_.toInt).getOrElse(1)
+                                  conf: Configuration): Option[Manifest] =
+    Json.read(commitPath(dir, k), conf, "bucket manifest").map { m =>
+      val layout = m.opt("layout").fold(1)(_.int)
       val current = layout == LayoutVersion
-      val quoted = "\"((?:[^\"\\\\]|\\\\.)*)\""
-      val lineage = field("\"lineage\":\\{((?:[^{}\"]|\"(?:[^\"\\\\]|\\\\.)*\")*)\\}")
-      Manifest(
-        BucketCommit(k, required("rows", field("\"rows\":(\\d+)")).toLong,
-          required("checksum", field("\"checksum\":(-?\\d+)")).toLong),
-        layout,
-        field("\"buckets\":(\\d+)").map(_.toInt).getOrElse(-1),
-        if (current) junescape(required("data", field("\"data\":" + quoted)))
-        else "",
-        (if (current) Some(required("lineage", lineage)) else lineage)
-          .fold(Map.empty[String, String])(body =>
-            s"$quoted\\s*:\\s*$quoted".r.findAllMatchIn(body)
-              .map(m => junescape(m.group(1)) -> junescape(m.group(2))).toMap))
+      val lineage = if (current) Some(m("lineage")) else m.opt("lineage")
+      Manifest(BucketCommit(k, m("rows").long, m("checksum").long), layout,
+        m.opt("buckets").fold(-1)(_.int),
+        if (current) m("data").str else "",
+        lineage.fold(Map.empty[String, String])(
+          _.fields.map { case (key, v) => key -> v.str }.toMap))
     }
-  }
 
   /** Every committed bucket's manifest, in bucket order. */
   private def readManifests(dir: String, buckets: Int,
@@ -921,46 +901,6 @@ object TableIO {
                   conf: Configuration = defaultConf()): Map[String, String] =
     readManifest(dir, bucket, conf).fold(Map.empty[String, String])(_.lineage)
 
-  /** Minimal JSON string escape/unescape for manifest fields — a quote
-    * or backslash in a snapshot id must not corrupt the manifest.
-    */
-  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
-  /** `context` names the input being unescaped ("manifest", the DSv2
-    * `paths` option, …) so a malformed escape is reported against the
-    * thing the caller actually passed, not a misleading fixed label.
-    */
-  private[graft] def junescape(s: String, context: String = "manifest"): String = {
-    val b = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      if (s.charAt(i) == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'n' => b += '\n'; i += 2
-          case 'r' => b += '\r'; i += 2
-          case 't' => b += '\t'; i += 2
-          case 'u' =>
-            // a truncated \uXX at end-of-string must fail as a named
-            // input error, not a raw StringIndexOutOfBoundsException
-            require(i + 6 <= s.length,
-              s"malformed $context: truncated unicode escape in ${s.take(80)}")
-            b += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar
-            i += 6
-          case c => b += c; i += 2
-        }
-      } else { b += s.charAt(i); i += 1 }
-    }
-    b.result()
-  }
-
   // ------------------------------------------------------------------
   // Hadoop-FS manifest primitives (work on file://, hdfs://, s3a://)
   // ------------------------------------------------------------------
@@ -973,17 +913,6 @@ object TableIO {
   private def hMkdirs(path: String, conf: Configuration): Unit = {
     val p = new HPath(path)
     p.getFileSystem(conf).mkdirs(p)
-  }
-
-  private def hRead(path: String, conf: Configuration): Option[String] = {
-    val p = new HPath(path)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8"))
-      finally in.close()
-    }
   }
 
   /** Temp-file + atomic-rename commit (provably-once manifest publish,

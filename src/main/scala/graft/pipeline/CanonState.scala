@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.io.TableIO
+import graft.io.{Json, TableIO}
 
 /** Persisted canonicalization state for incremental KG maintenance.
   *
@@ -30,7 +30,7 @@ import graft.io.TableIO
   *   stateDir/v<N>/edges/     # parquet (src, dst) — distinct alias edges
   *   stateDir/v<N>/canon/     # parquet (entity_id, canon_id)
   * }}}
-  * `_current` is written atomically ([[TableIO.atomicWrite]]) AFTER the
+  * `_current` is written atomically ([[Json.write]]) AFTER the
   * new version's data is fully written and read back, so a reader never
   * observes a half-written version; the immediately superseded version
   * is retained for ONE generation (a lazily-loaded frame survives one
@@ -50,23 +50,12 @@ object CanonState {
 
   private def currentPath(dir: String) = s"$dir/_current"
 
-  private def readMeta(spark: SparkSession, dir: String): Option[Meta] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(currentPath(dir))
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()
-    def num(k: String): Long = {
-      val m = s""""$k"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(txt)
-      require(m.isDefined, s"canon state ${currentPath(dir)} is corrupt: " +
-        s"missing field $k in: $txt")
-      m.get.group(1).toLong
+  private[graft] def readMeta(spark: SparkSession, dir: String): Option[Meta] =
+    Json.read(currentPath(dir), spark.sessionState.newHadoopConf(),
+        "canon state").map { m =>
+      Meta(m("version").long, m("edges_rows").long, m("edges_xor").long,
+        m("canon_rows").long, m("canon_xor").long)
     }
-    Some(Meta(num("version"), num("edges_rows"), num("edges_xor"),
-      num("canon_rows"), num("canon_xor")))
-  }
 
   private def loadChecked(spark: SparkSession, path: String,
                           wantRows: Long, wantXor: Long,
@@ -123,10 +112,9 @@ object CanonState {
     val (cRows, cXor) = onDisk("canon")
     val meta = Meta(v, eRows, eXor, cRows, cXor)
     val conf = spark.sessionState.newHadoopConf()
-    TableIO.atomicWrite(currentPath(dir),
-      s"""{"version":${meta.version},"edges_rows":${meta.edgesRows},""" +
-        s""""edges_xor":${meta.edgesXor},"canon_rows":${meta.canonRows},""" +
-        s""""canon_xor":${meta.canonXor}}""", conf)
+    Json.write(currentPath(dir), Json.obj("version" -> meta.version,
+      "edges_rows" -> meta.edgesRows, "edges_xor" -> meta.edgesXor,
+      "canon_rows" -> meta.canonRows, "canon_xor" -> meta.canonXor), conf)
     // keep v and v-1 (see scaladoc); reap everything older
     prior.foreach { old =>
       val root = new org.apache.hadoop.fs.Path(dir)

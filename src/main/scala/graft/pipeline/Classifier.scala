@@ -114,15 +114,12 @@ object Classifier {
     */
   def save(spark: org.apache.spark.sql.SparkSession, model: FilterModel,
            path: String): Unit = {
-    val body = model.weights.map(d =>
-      java.lang.Long.toHexString(java.lang.Double.doubleToLongBits(d)))
-      .mkString("[\"", "\",\"", "\"]")
-    val bias =
-      java.lang.Long.toHexString(java.lang.Double.doubleToLongBits(model.bias))
-    val json = s"""{"format":"graft-quality-lr","version":1,""" +
-      s""""n_buckets":${model.nBuckets},"bias_bits":"$bias",""" +
-      s""""weight_bits":$body}"""
-    graft.io.TableIO.atomicWrite(path, json,
+    def bits(d: Double) =
+      java.lang.Long.toHexString(java.lang.Double.doubleToLongBits(d))
+    graft.io.Json.write(path, graft.io.Json.obj(
+      "format" -> "graft-quality-lr", "version" -> 1,
+      "n_buckets" -> model.nBuckets, "bias_bits" -> bits(model.bias),
+      "weight_bits" -> model.weights.map(bits)),
       spark.sessionState.newHadoopConf())
   }
 
@@ -132,29 +129,16 @@ object Classifier {
     */
   def load(spark: org.apache.spark.sql.SparkSession,
            path: String): FilterModel = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val in = p.getFileSystem(conf).open(p)
-    val json = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    require(json.contains("\"format\":\"graft-quality-lr\""),
+    val m = graft.io.Json.read(path, spark.sessionState.newHadoopConf())
+      .getOrElse(throw new java.io.FileNotFoundException(path))
+    require(m.has("format", "graft-quality-lr"),
       s"$path is not a graft quality-filter model file")
-    val nBuckets = """"n_buckets":(\d+)""".r.findFirstMatchIn(json)
-      .map(_.group(1).toInt)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$path: model header missing n_buckets"))
-    val bias = """"bias_bits":"([0-9a-f]+)"""".r.findFirstMatchIn(json)
-      .map(m => java.lang.Double.longBitsToDouble(
-        java.lang.Long.parseUnsignedLong(m.group(1), 16)))
-      .getOrElse(throw new IllegalArgumentException(
-        s"$path: model header missing bias_bits"))
-    val weights = """"weight_bits":\["([0-9a-f",]+)"\]""".r
-      .findFirstMatchIn(json)
-      .map(_.group(1).split("\",\"")
-        .map(h => java.lang.Double.longBitsToDouble(
-          java.lang.Long.parseUnsignedLong(h, 16))))
-      .getOrElse(throw new IllegalArgumentException(
-        s"$path: model weight_bits missing"))
+    val nBuckets = m("n_buckets").int
+    def bits(v: graft.io.Json.Value) = java.lang.Double.longBitsToDouble(
+      scala.util.Try(java.lang.Long.parseUnsignedLong(v.str, 16))
+        .getOrElse(v.refuse("is not a hex IEEE-754 bit pattern")))
+    val bias = bits(m("bias_bits"))
+    val weights = m("weight_bits").elems.map(bits).toArray
     require(weights.length == nBuckets,
       s"$path: corrupt model — header says $nBuckets weights, body has " +
         s"${weights.length}")

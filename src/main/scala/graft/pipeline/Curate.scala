@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.io.TableIO
+import graft.io.{Json, TableIO}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -142,23 +142,18 @@ object Curate {
       * stay in the format, carrying the previous stage's count, so
       * readers of earlier reports keep working.
       */
-    def json: String = {
-      val hk = hotKeys.map { case (k, n) =>
-        s"""{"key":${TableIO.jstr(k)},"n":$n}""" }.mkString("[", ",", "]")
-      s"""{"n_input":$nInput,"n_null_text":$nNullText,""" +
-        s""""n_redacted":$nRedacted,""" +
-        s""""n_after_exact":$nAfterExact,""" +
-        s""""n_after_decontam":$nAfterExact,""" +
-        s""""n_after_boilerplate":$nAfterBoilerplate,""" +
-        s""""n_after_repetition":$nAfterBoilerplate,""" +
-        s""""n_after_quality":$nAfterQuality,""" +
-        s""""n_after_lm_ppl":$nAfterLmPpl,""" +
-        s""""n_after_minhash":$nAfterMinhash,""" +
-        s""""n_after_embedding":$nAfterEmbedding,""" +
-        s""""n_after_mixture":$nAfterEmbedding,""" +
-        s""""hot_keys":$hk,"salts":$salts,"n_written":$nWritten,""" +
-        s""""resumed_stages":${resumedStages.mkString("[", ",", "]")}}"""
-    }
+    def json: String = Json.render(Json.obj("n_input" -> nInput,
+      "n_null_text" -> nNullText, "n_redacted" -> nRedacted,
+      "n_after_exact" -> nAfterExact, "n_after_decontam" -> nAfterExact,
+      "n_after_boilerplate" -> nAfterBoilerplate,
+      "n_after_repetition" -> nAfterBoilerplate,
+      "n_after_quality" -> nAfterQuality, "n_after_lm_ppl" -> nAfterLmPpl,
+      "n_after_minhash" -> nAfterMinhash,
+      "n_after_embedding" -> nAfterEmbedding,
+      "n_after_mixture" -> nAfterEmbedding,
+      "hot_keys" -> hotKeys.map { case (k, n) => Json.obj("key" -> k, "n" -> n) },
+      "salts" -> salts, "n_written" -> nWritten,
+      "resumed_stages" -> resumedStages))
   }
 
   /** Where [[run]] persists its report beside the table manifests. */

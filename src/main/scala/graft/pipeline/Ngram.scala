@@ -109,32 +109,24 @@ object Ngram {
     if (fs.exists(meta)) fs.delete(meta, false)
     lm.unigrams.write.mode("overwrite").parquet(s"$dir/unigrams")
     lm.bigrams.write.mode("overwrite").parquet(s"$dir/bigrams")
-    graft.io.TableIO.atomicWrite(s"$dir/_lm_meta.json",
-      s"""{"format":"graft-bigram-lm","version":1,""" +
-        s""""n_tokens":${lm.nTokens}}""", conf)
+    graft.io.Json.write(s"$dir/_lm_meta.json", graft.io.Json.obj(
+      "format" -> "graft-bigram-lm", "version" -> 1,
+      "n_tokens" -> lm.nTokens), conf)
   }
 
   /** Load a model written by [[saveLm]] — loud on a missing/foreign
     * meta file (count tables without their total are not a model).
     */
   def loadLm(spark: org.apache.spark.sql.SparkSession, dir: String): Lm = {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_lm_meta.json")
-    val fs = p.getFileSystem(conf)
-    require(fs.exists(p),
+    val meta = graft.io.Json.read(s"$dir/_lm_meta.json",
+      spark.sessionState.newHadoopConf())
+    require(meta.isDefined,
       s"$dir is not a graft LM directory (no _lm_meta.json — " +
         "half-written save or wrong path)")
-    val in = fs.open(p)
-    val json = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    require(json.contains("\"format\":\"graft-bigram-lm\""),
+    require(meta.get.has("format", "graft-bigram-lm"),
       s"$dir/_lm_meta.json is not a graft bigram-LM meta file")
-    val n = """"n_tokens":(\d+)""".r.findFirstMatchIn(json)
-      .map(_.group(1).toLong)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$dir/_lm_meta.json: n_tokens missing"))
     Lm(spark.read.parquet(s"$dir/unigrams"),
-      spark.read.parquet(s"$dir/bigrams"), n)
+      spark.read.parquet(s"$dir/bigrams"), meta.get("n_tokens").long)
   }
 
   /** Perplexity-score documents under a trained [[Lm]]:

@@ -87,15 +87,8 @@ object EnamexSource {
     * (`spark.read.format("enamex").load(p1, p2)`); `path` as a scalar.
     */
   def pathsFromOptions(options: CaseInsensitiveStringMap): Seq[String] = {
-    val multi = Option(options.get("paths")).toSeq.flatMap { json =>
-      // full JSON string unescape (\n, \t, \uXXXX, ... — not just \" and
-      // \\): Spark Jackson-encodes the paths array, so a path containing
-      // a control character arrives as an escape sequence
-      "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(json)
-        .map(m => graft.io.TableIO.junescape(m.group(1),
-          context = "enamex `paths` option"))
-        .toSeq
-    }
+    val multi = Option(options.get("paths")).toSeq.flatMap(json =>
+      graft.io.Json.parse(json, "enamex `paths` option").elems.map(_.str))
     val single = Option(options.get("path")).toSeq
     val all = (single ++ multi).distinct
     require(all.nonEmpty, "enamex: no path given")

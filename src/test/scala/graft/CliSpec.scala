@@ -22,6 +22,15 @@ class CliSpec extends AnyFunSuite {
     }
   }
 
+  test("kg-export's JSON line parses back to an out path holding a quote and a newline") {
+    val out = "/tmp/odd \"dir\"\nnext\\"
+    val line = Cli.exportLine(42L, out)
+    assert(!line.contains('\n'), line)
+    val doc = graft.io.Json.parse(line, "kg-export line")
+    assert(doc.fields.map(_._1) == Seq("ntriples_written", "out"))
+    assert(doc("ntriples_written").long == 42L && doc("out").str == out)
+  }
+
   test("parseBuckets accepts only integers >= 1") {
     assert(Cli.parseBuckets("16") == Some(16))
     assert(Cli.parseBuckets("1") == Some(1))
@@ -87,15 +96,13 @@ class CliSpec extends AnyFunSuite {
     val (code, stdout, err) = runMain("graft.Cli", "curate", "/root/testdata/sf0.001", s"$out/t")
     assert(code == 0, s"exit $code, stderr: ${err.takeRight(2000)}")
     val json = stdout.linesIterator.filter(_.startsWith("{")).toSeq.last
-    val keys = "\"([a-z_]+)\":".r.findAllMatchIn(json).map(_.group(1))
-      .filterNot(k => k == "key" || k == "n").toSeq
-    assert(keys == Seq("n_input", "n_null_text", "n_redacted",
+    val report = graft.io.Json.parse(json, "curate report line")
+    assert(report.fields.map(_._1) == Seq("n_input", "n_null_text", "n_redacted",
       "n_after_exact", "n_after_decontam", "n_after_boilerplate",
       "n_after_repetition", "n_after_quality", "n_after_lm_ppl",
       "n_after_minhash", "n_after_embedding", "n_after_mixture",
       "hot_keys", "salts", "n_written", "resumed_stages"), json)
-    def n(k: String): Long =
-      s"\"$k\":(\\d+)".r.findFirstMatchIn(json).get.group(1).toLong
+    def n(k: String): Long = report(k).long
     assert(n("n_after_decontam") == n("n_after_exact"), json)
     assert(n("n_after_repetition") == n("n_after_boilerplate"), json)
     assert(n("n_after_mixture") == n("n_after_embedding"), json)

@@ -292,4 +292,65 @@ class MergeSpec extends AnyFunSuite {
       Seq("k"), lineage)
     assert(resumed.isEmpty)
   }
+
+  // A layout-3 manifest exactly as the hand-written writer before the
+  // JSON codec wrote it: the lineage value holds a quote, a backslash,
+  // braces, a newline, a tab, U+0001 and a non-ASCII letter.
+  private val parentSnapshot = "s\"q\\b{x}\nl\tt\u0001é"
+  private val parentManifest =
+    """{"bucket":2,"rows":17,"checksum":-4242424242,"layout":3,"buckets":8,""" +
+      """"data":"3d1f5a2e-9c4b-4e1a-8f27-0b6c2d9e7a13","lineage":""" +
+      """{"snapshot":"s\"q\\b{x}\nl\tt""" + "\\u0001é" +
+      """","source":"unit"}}"""
+
+  /** Publish `text` as bucket `k`'s manifest and read it back. */
+  private def manifestOf(text: String, k: Int): TableIO.Manifest = {
+    val dir = java.nio.file.Files.createTempDirectory("manifest").toString
+    TableIO.atomicWrite(s"$dir/_commits/bucket-$k.json", text)
+    TableIO.readManifest(dir, k, spark.sessionState.newHadoopConf()).get
+  }
+
+  test("manifests written before the JSON codec load to the same values; the writer reproduces them") {
+    val want = TableIO.Manifest(TableIO.BucketCommit(2, 17L, -4242424242L), 3, 8,
+      "3d1f5a2e-9c4b-4e1a-8f27-0b6c2d9e7a13",
+      Map("snapshot" -> parentSnapshot, "source" -> "unit"))
+    assert(manifestOf(parentManifest, 2) == want)
+    assert(Json.render(want.json) == parentManifest)
+    // layout 1 had no layout, buckets or data field
+    assert(manifestOf("""{"bucket":1,"rows":5,"checksum":-9,"lineage":{"snapshot":"old"}}""", 1) ==
+      TableIO.Manifest(TableIO.BucketCommit(1, 5L, -9L), 1, -1, "", Map("snapshot" -> "old")))
+    // the old escaper wrote \u0008, \u000c and \u001f where Jackson writes
+    // \b, \f and \u001F: such values round-trip, their bytes differ
+    val controls = want.copy(lineage = Map("snapshot" -> "a\bb\fc\u001fd\u000b"))
+    assert(manifestOf(Json.render(controls.json), 2) == controls)
+  }
+
+  test("resume over manifests written before the JSON codec is a committed no-op") {
+    val lineage = Map("snapshot" -> parentSnapshot, "source" -> "unit")
+    val base = baseRows(60)
+    val dir = freshTable(base, lineage)
+    val conf = spark.sessionState.newHadoopConf()
+    // the old writer's template and escaper, applied to each manifest
+    def old(v: String) = "\"" + v.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    (0 until Buckets).foreach { k =>
+      val m = TableIO.readManifest(dir, k, conf).get
+      val lin = m.lineage.toSeq.sorted.map { case (a, b) => s"${old(a)}:${old(b)}" }
+      TableIO.atomicWrite(s"$dir/_commits/bucket-$k.json",
+        s"""{"bucket":$k,"rows":${m.commit.rows},"checksum":${m.commit.checksum},""" +
+          s""""layout":3,"buckets":$Buckets,"data":${old(m.data)},""" +
+          s""""lineage":{${lin.mkString(",")}}}""", conf)
+    }
+    val before = (0 until Buckets).map(bucketListing(dir, _))
+    assert(TableIO.writeResumable(df(base), dir, Buckets, Seq("k"), lineage).isEmpty)
+    assert((0 until Buckets).map(bucketListing(dir, _)) == before)
+    assert(readBack(dir) == base.toSet)
+  }
 }

@@ -85,6 +85,19 @@ class ClassifierSpec extends AnyFunSuite {
       """{"format":"something-else"}""")
     val ex = intercept[IllegalArgumentException](Classifier.load(spark, bad))
     assert(ex.getMessage.contains("not a graft quality-filter model"))
+    // truncated, not JSON, a mistyped field, a bit pattern wider than
+    // 64 bits and a missing field: each names the file
+    val head = """{"format":"graft-quality-lr","version":1,"""
+    Seq(head + """"n_buckets":1,"bias_bits":"0","weight_bits":["3ff""",
+        "format=graft-quality-lr",
+        head + """"n_buckets":"1","bias_bits":"0","weight_bits":["0"]}""",
+        head + """"n_buckets":1,"bias_bits":"xyz","weight_bits":["0"]}""",
+        head + """"n_buckets":1,"bias_bits":"1ffffffffffffffff","weight_bits":["0"]}""",
+        head + """"n_buckets":1,"weight_bits":["0"]}""").foreach { text =>
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(bad), text)
+      val e = intercept[IllegalArgumentException](Classifier.load(spark, bad))
+      assert(e.getMessage.contains(bad), s"$text: ${e.getMessage}")
+    }
   }
 
   test("scoring equals a driver recompute and runs shuffle-free") {

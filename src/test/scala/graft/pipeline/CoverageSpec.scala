@@ -364,6 +364,16 @@ class ModelSerSpec extends AnyFunSuite {
     eval.foreach { s =>
       assert(Forest.renderEnamex(m2.ner(s)) == Forest.renderEnamex(m.ner(s)))
     }
+    // a truncated file, a top-level array, a missing or mistyped field,
+    // and text that is not JSON each fail naming the file
+    Seq("""{"labels":["O"""", "[1,2]", """{"sing":[0.5]}""",
+        """{"labels":"O","sing":[0.5],"trans":[0.1],"obs":[],"obsLabels":[],"obsWeights":[]}""",
+        """{"labels":["O"],"sing":["0.5"],"trans":[0.1],"obs":[],"obsLabels":[],"obsWeights":[]}""",
+        "labels: O").foreach { bad =>
+      java.nio.file.Files.write(p, bad.getBytes("UTF-8"))
+      val e = intercept[IllegalArgumentException](graft.NerfModel.load(p))
+      assert(e.getMessage.contains(p.toString), s"$bad: ${e.getMessage}")
+    }
   }
 }
 

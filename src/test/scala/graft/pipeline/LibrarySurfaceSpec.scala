@@ -20,6 +20,27 @@ class LibrarySurfaceSpec extends AnyFunSuite {
     assert(oracles.size >= 43, s"oracled surface shrank: ${oracles.size}")
   }
 
+  test("JSON goes through graft.io.Json: no hand-written JSON reader or escaper in src/main") {
+    import scala.jdk.CollectionConverters._
+    // the benchmark harness files are kept byte-identical; both print
+    // their JSON lines by hand
+    val exempt = Set("Bench.scala", "Verify.scala")
+    // the parser and escapers the codec replaced, a regex literal that
+    // spells a JSON key and its colon (`"rows":(\d+)`, `"k"\s*:`), and a
+    // contains check over quoted JSON text
+    val banned =
+      """\b(MiniJson|jstr|junescape)\b|"(\\{1,2}s\*)?:\s*"?(\(|\\)|\.contains\("\\"""".r
+    val hits = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        !exempt(p.getFileName.toString))
+      .flatMap(p => java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+        .collect { case (line, i) if banned.findFirstIn(line).isDefined =>
+          s"$p:${i + 1}: ${line.trim}" })
+      .toList
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   test("TextDedup.minhashPairs finds planted near-duplicates, custom columns") {
     import spark.implicits._
     val base = "the quick brown fox jumps over the lazy dog again and again today"

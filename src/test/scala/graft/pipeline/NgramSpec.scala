@@ -92,6 +92,16 @@ class NgramSpec extends AnyFunSuite {
     val ex = intercept[IllegalArgumentException](
       Ngram.loadLm(spark, s"$base/nowhere"))
     assert(ex.getMessage.contains("not a graft LM directory"))
+    // a truncated meta file and a count that is a string or overflows a
+    // Long name the file
+    val meta = s"$base/lm/_lm_meta.json"
+    Seq("""{"format":"graft-bigram-lm","vers""",
+        """{"format":"graft-bigram-lm","version":1,"n_tokens":"12"}""",
+        """{"format":"graft-bigram-lm","version":1,"n_tokens":99999999999999999999}""").foreach { bad =>
+      graft.io.TableIO.atomicWrite(meta, bad)
+      val e = intercept[IllegalArgumentException](Ngram.loadLm(spark, s"$base/lm"))
+      assert(e.getMessage.contains(meta), s"$bad: ${e.getMessage}")
+    }
     // re-save over the same dir (exercises the drop-old-meta-first
     // crash-window ordering): the loaded model must be the NEW one
     val docs2 = spark.read.parquet(s"$dir/documents.parquet")

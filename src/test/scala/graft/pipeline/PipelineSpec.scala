@@ -761,6 +761,15 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(ex.getMessage.contains(p) && ex.getMessage.contains("rows"),
       ex.getMessage)
+    // a truncated manifest, or one with a mistyped counter, names itself too
+    Seq(json.take(json.length / 2),
+        json.replaceFirst("\"rows\":\\d+", "\"rows\":\"7\"")).foreach { bad =>
+      TableIO.atomicWrite(p, bad)
+      val e = intercept[IllegalArgumentException](
+        TableIO.readCommitted(spark, s"$dir/t", 4))
+      assert(e.getMessage.contains(p) && e.getMessage.contains("corrupt"),
+        e.getMessage)
+    }
   }
 
   test("retry witness: scoped to its job group, sees stage and task retries") {
@@ -1050,6 +1059,73 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ex.getMessage.contains("layout mismatch"))
   }
 
+  test("metadata files written before the JSON codec load to the same values; the writers reproduce them") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_parent_files").toString
+    val conf = spark.sessionState.newHadoopConf()
+    def text(p: String) = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(p)), "UTF-8")
+    // each literal is the file the hand-written writers produced for the
+    // same input; the old readers returned the values asserted below
+    TableIO.writeSnapshot(Seq(("a", "x"), ("b", "y")).toDF("content", "id"),
+      s"$dir/snap", "snap-\"7\"\\z")
+    assert(text(s"$dir/snap/_snapshot.json") ==
+      """{"snapshot_id":"snap-\"7\"\\z","rows":2,"format":"parquet","invariant":"content_sha256"}""")
+    CanonState.save(spark, s"$dir/state",
+      Seq(("e:a", "acme"), ("e:b", "acme")).toDF("src", "dst"),
+      Seq(("e:a", "e:a"), ("e:b", "e:a")).toDF("entity_id", "canon_id"))
+    val current = """{"version":1,"edges_rows":2,"edges_xor":-5070453797332414831,"canon_rows":2,"canon_xor":7486548793539871167}"""
+    assert(text(s"$dir/state/_current") == current)
+    TableIO.atomicWrite(s"$dir/state/_current", current, conf)
+    assert(CanonState.readMeta(spark, s"$dir/state") == Some(CanonState.Meta(
+      1L, 2L, -5070453797332414831L, 2L, 7486548793539871167L)))
+    Ngram.saveLm(Ngram.Lm(Seq(("a", 2L)).toDF("w", "n"),
+      Seq(("a", "b", 1L)).toDF("w1", "w2", "n"), 1234L), s"$dir/lm")
+    val lmMeta = """{"format":"graft-bigram-lm","version":1,"n_tokens":1234}"""
+    assert(text(s"$dir/lm/_lm_meta.json") == lmMeta)
+    TableIO.atomicWrite(s"$dir/lm/_lm_meta.json", lmMeta, conf)
+    assert(Ngram.loadLm(spark, s"$dir/lm").nTokens == 1234L)
+    val quality = Classifier.FilterModel(4,
+      Array(0.5, -1.25, 1e-300, Double.MinPositiveValue), -0.0)
+    val qualityText = """{"format":"graft-quality-lr","version":1,"n_buckets":4,"bias_bits":"8000000000000000","weight_bits":["3fe0000000000000","bff4000000000000","1a56e1fc2f8f359","1"]}"""
+    Classifier.save(spark, quality, s"$dir/q.json")
+    assert(text(s"$dir/q.json") == qualityText)
+    TableIO.atomicWrite(s"$dir/q.json", qualityText, conf)
+    assert(Classifier.load(spark, s"$dir/q.json").fingerprint == quality.fingerprint)
+    val report = Curate.Report(10, 1, 2, 9, 8, 7, 6, 5, 4,
+      Seq("src\"\\\né" -> 3L, "plain" -> 2L), 8, 4, Seq(1, 3))
+    assert(report.json == """{"n_input":10,"n_null_text":1,"n_redacted":2,"n_after_exact":9,"n_after_decontam":9,"n_after_boilerplate":8,"n_after_repetition":8,"n_after_quality":7,"n_after_lm_ppl":6,"n_after_minhash":5,"n_after_embedding":4,"n_after_mixture":4,"hot_keys":[{"key":"src\"\\\né","n":3},{"key":"plain","n":2}],"salts":8,"n_written":4,"resumed_stages":[1,3]}""")
+    // a small NER model covering every schema block kind and escapes in
+    // dictionary keys, labels and observation values
+    val schema = Features.SchemaConf(
+      orthC = Some(List(0)), lowPrefixesC = Some((List(0), List(2, 3))),
+      lemmaC = Some((List(-1, 0), 3)), shapeC = Some(List(-1, 0)),
+      shapePairC = Some(List(0)),
+      dictC = Some((List(0), List(CompactDict.fromMap(Map(
+        "Kéra" -> List("persName", "x\"y"), "Acme" -> List("orgName")))))),
+      intTrigsC = Some((List(-1), CompactDict.fromMap(Map("coach" -> List("persName"))))))
+    val crf = Crf.Model(Array("O", "B-persName", "I-persName"),
+      Array(Map("Kéra" -> 0, "acme\\x" -> 1), Map("Xx" -> 2)),
+      breeze.linalg.DenseVector(0.5, -1.0E-5, 2.0),
+      new breeze.linalg.DenseMatrix(3, 3,
+        Array(0.1, 0.2, 0.3, -0.4, 0.5, 0.6, 0.7, 0.8, 1.0E10)),
+      Array(Array(1), Array(0, 2), Array(1, 2)),
+      Array(Array(0.25), Array(-3.0, 1.5E-7), Array(4.0, -0.0)))
+    val nerfText = """{"schema":{"orth":[0],"splitOrth":null,"lowPrefixes":{"range":[0],"ns":[2,3]},"lowSuffixes":null,"lemma":{"range":[-1,0],"n":3},"shape":[-1,0],"packed":null,"shapePair":[0],"packedPair":null,"dicts":{"range":[0],"dicts":[{"Acme":["orgName"],"Kéra":["persName","x\"y"]}]},"intTrigs":{"range":[-1],"dict":{"coach":["persName"]}},"extTrigs":null},"labels":["O","B-persName","I-persName"],"sing":[0.5,-1.0E-5,2.0],"trans":[0.1,0.2,0.3,-0.4,0.5,0.6,0.7,0.8,1.0E10],"obs":[{"Kéra":0,"acme\\x":1},{"Xx":2}],"obsLabels":[[1],[0,2],[1,2]],"obsWeights":[[0.25],[-3.0,1.5E-7],[4.0,-0.0]]}"""
+    val nerfPath = java.nio.file.Paths.get(s"$dir/nerf.json")
+    NerfModel.save(NerfModel(schema, crf), nerfPath)
+    assert(text(s"$dir/nerf.json") == nerfText)
+    java.nio.file.Files.write(nerfPath, nerfText.getBytes("UTF-8"))
+    val back = NerfModel.load(nerfPath)
+    assert(back.schema == schema)
+    assert(back.crf.labels.toSeq == crf.labels.toSeq && back.crf.obsIds.toSeq == crf.obsIds.toSeq)
+    assert(back.crf.sing == crf.sing && back.crf.trans == crf.trans)
+    assert(back.crf.obsLabels.map(_.toSeq).toSeq == crf.obsLabels.map(_.toSeq).toSeq)
+    // -0.0 == 0.0, so compare bit patterns
+    assert(back.crf.obsWeights.map(_.map(java.lang.Double.doubleToLongBits).toSeq).toSeq ==
+      crf.obsWeights.map(_.map(java.lang.Double.doubleToLongBits).toSeq).toSeq)
+  }
+
   test("golden gate: triple-set P/R vs committed golden = 1.0") {
     import spark.implicits._
     val files = KgPipeline.synthInput(spark, 25, partitions = 2)
@@ -1207,6 +1283,17 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       CanonState.loadEdges(spark, stateDir)
     }
     assert(ex2.getMessage.contains("corrupt"), ex2.getMessage)
+    // truncated, not JSON, a mistyped, overflowing or missing field:
+    // each is a corrupt _current that names itself
+    Seq("""{"version":1,"edges_rows":2""", "version=1", "[1,2]",
+        """{"version":99999999999999999999,"edges_rows":2,"edges_xor":0,"canon_rows":2,"canon_xor":0}""",
+        """{"version":"1","edges_rows":2,"edges_xor":0,"canon_rows":2,"canon_xor":0}""",
+        """{"version":1,"edges_rows":2,"edges_xor":0,"canon_rows":2}""").foreach { bad =>
+      graft.io.TableIO.atomicWrite(s"$stateDir/_current", bad, conf)
+      val e = intercept[IllegalArgumentException](CanonState.loadEdges(spark, stateDir))
+      assert(e.getMessage.contains(s"$stateDir/_current") &&
+        e.getMessage.contains("corrupt"), s"$bad: ${e.getMessage}")
+    }
   }
 
   test("canonicalizeWithState fails LOUD on a canonical split") {
