@@ -17,16 +17,18 @@ import org.apache.spark.sql.functions._
   *
   * Two paths per op, one decision. [[degrees]], [[triangles]],
   * [[twoHopCounts]], [[components]] and [[pageRank]] each have an edge
-  * budget, measured per op (e.g. [[trianglesCollectThreshold]]). One
-  * action, `limit(budget + 1)` over the non-NULL edges
+  * budget, measured per op (e.g. [[trianglesCollectThreshold]]);
+  * [[coOccurrence]] has a row budget and a pair budget. One action,
+  * `limit(budget + 1)` over the non-NULL edges or rows
   * ([[KgPipeline.collectAtMost]]), both decides and collects:
   *   - at or below the threshold the op runs on the driver over one
-  *     [[LocalGraph]] (dense ids, CSR adjacency, primitive arrays) and
-  *     returns a local relation with the distributed path's schema.
-  *     At benchmark size (tens to hundreds of edges) this replaces
-  *     every shuffle and per-iteration job with one collect: "To
-  *     Partition, or Not to Partition" (skip the distributed machinery
-  *     when the build side fits);
+  *     [[LocalGraph]] (dense ids, CSR adjacency, primitive arrays), or
+  *     for [[coOccurrence]] one [[LocalSets]], and returns a local
+  *     relation with the distributed path's schema. At benchmark size
+  *     (tens to thousands of rows) this replaces every shuffle and
+  *     per-iteration job with one collect: "To Partition, or Not to
+  *     Partition" (skip the distributed machinery when the build side
+  *     fits);
   *   - above it the distributed path runs unchanged, after that action
   *     has evaluated the input once more. Specs and `GraphCrossover`
   *     pass their own budget through a package-private overload (a
@@ -493,23 +495,82 @@ object Graph {
     * consistent under the cap. `minPairCount` prunes the long noise
     * tail BEFORE the join that attaches marginals.
     *
-    * Scale shape: one distinct + one groupBy(ctx) window/aggregate
-    * pass, then ONE half-matrix explode (x <= y, bounded by
-    * maxPerCtx·(maxPerCtx+1)/2 per context) whose diagonal carries the
-    * per-item marginals — pair counts and marginals come out of a
-    * single (x, y)-keyed aggregation, reused by its three readers via
-    * the exchange (the q44 convention); the context count reads the
-    * pre-window distinct exchange; marginals attach via two item-keyed
-    * joins after the minPairCount prune, and N is a broadcast 1-row
-    * aggregate. Lift is EXACT in doubles (integer counts < 2^53, one
-    * IEEE division) and therefore cross-engine hashable; PMI's `ln`
-    * may differ in the last ulp across libm implementations — rank by
+    * Two paths, one decision, as the graph ops decide: one
+    * [[KgPipeline.collectAtMost]] of the non-NULL `(ctx, item)` rows
+    * against [[coOccurrenceCollectThreshold]].
+    *   - At or below it, when both columns are `string`, `int` or
+    *     `bigint`, the operator runs on the driver ([[LocalSets]]):
+    *     rows deduplicated, each context's items sorted in Spark's
+    *     order (UTF-8 bytes for strings) and capped, the half-matrix
+    *     pairs counted, marginals taken from the same capped view. If
+    *     the capped pair volume, known before any pair is built,
+    *     exceeds [[coOccurrencePairThreshold]], the distributed path
+    *     runs instead. The result is a local relation with the
+    *     distributed path's schema and bit-equal values: lift is
+    *     computed in the same operation order, and PMI is
+    *     `StrictMath.log`, what Spark's `log` evaluates.
+    *   - Above it the distributed path runs unchanged: one distinct +
+    *     one groupBy(ctx) window/aggregate pass, then ONE half-matrix
+    *     explode (x <= y, bounded by maxPerCtx·(maxPerCtx+1)/2 per
+    *     context) whose diagonal carries the per-item marginals — pair
+    *     counts and marginals come out of a single (x, y)-keyed
+    *     aggregation, reused by its three readers via the exchange (the
+    *     q44 convention); the context count reads the pre-window
+    *     distinct exchange; marginals attach via two item-keyed joins
+    *     after the minPairCount prune, and N is a broadcast 1-row
+    *     aggregate.
+    * Lift is EXACT in doubles (integer counts < 2^53, one IEEE
+    * division) and therefore cross-engine hashable; PMI's `ln` may
+    * differ in the last ulp across libm implementations — rank by
     * either (they are monotone in each other), hash only lift.
     */
   def coOccurrence(rows: DataFrame, ctxCol: String, itemCol: String,
-                   maxPerCtx: Int = 64, minPairCount: Long = 1): DataFrame = {
+                   maxPerCtx: Int = 64, minPairCount: Long = 1): DataFrame =
+    coOccurrence(rows, ctxCol, itemCol, maxPerCtx, minPairCount,
+      coOccurrenceCollectThreshold, coOccurrencePairThreshold)
+
+  /** [[coOccurrence]] with its row and pair budgets given; a negative
+    * row budget forces the distributed path.
+    */
+  private[graft] def coOccurrence(rows: DataFrame, ctxCol: String,
+                                  itemCol: String, maxPerCtx: Int,
+                                  minPairCount: Long, collectThreshold: Int,
+                                  pairThreshold: Long): DataFrame = {
     require(maxPerCtx >= 2, s"maxPerCtx must be >= 2: $maxPerCtx")
     require(minPairCount >= 1, s"minPairCount must be >= 1: $minPairCount")
+    val distributed = coOccurrenceDistributed(rows, ctxCol, itemCol,
+      maxPerCtx, minPairCount)
+    val pairs = rows.select(col(ctxCol).as("ctx"), col(itemCol).as("item"))
+      .where(col("ctx").isNotNull && col("item").isNotNull)
+    val Seq(ctxType, itemType) = pairs.schema.map(_.dataType)
+    val local =
+      if (!LocalSets.orders(ctxType) || !LocalSets.orders(itemType)) None
+      else KgPipeline.collectAtMost(pairs, collectThreshold).flatMap { got =>
+        val (ctx, ctxs) = LocalSets.rank(got.map(_.get(0)), ctxType)
+        val (item, items) = LocalSets.rank(got.map(_.get(1)), itemType)
+        val sets = LocalSets(ctx, item, ctxs.length, items.length, maxPerCtx)
+        if (sets.pairVolume > pairThreshold) None
+        else {
+          val (keys, counts) = sets.pairCounts
+          val marg = sets.marginals
+          val n = sets.nContexts.toDouble
+          val out = new java.util.ArrayList[Row]()
+          for (i <- keys.indices if counts(i) >= minPairCount) {
+            val (x, y) = ((keys(i) >>> 32).toInt, keys(i).toInt)
+            val lift = counts(i).toDouble * n /
+              (marg(x).toDouble * marg(y).toDouble)
+            out.add(Row(items(x), items(y), counts(i).toLong, lift,
+              StrictMath.log(lift)))
+          }
+          Some(rows.sparkSession.createDataFrame(out, distributed.schema))
+        }
+      }
+    local.getOrElse(distributed)
+  }
+
+  private def coOccurrenceDistributed(rows: DataFrame, ctxCol: String,
+                                      itemCol: String, maxPerCtx: Int,
+                                      minPairCount: Long): DataFrame = {
     val sets = cappedSets(rows, ctxCol, itemCol, maxPerCtx)
     // Round 6 fed `sets` to THREE consumers (context count, per-item
     // marginals, pair explosion), re-running the capped-set window per
@@ -547,6 +608,49 @@ object Graph {
           (col("cx").cast("double") * col("cy").cast("double"))).as("lift"))
       .withColumn("pmi", log(col("lift")))
   }
+
+  // The two co-occurrence budgets come from `GraphCrossover
+  // cooccurrence` (records in `BENCH/cooccurrence/crossover/`): seeded
+  // string `(ctx, item)` rows, 8 items a context on average, and a
+  // hub-skewed variant with a quarter of the rows in 16 contexts far
+  // above the cap; caps 32 and 64, minPairCount 1; `local[4]`, 4
+  // shuffle partitions, 4-core host. The driver path's cost follows
+  // its output: every pair becomes a local-relation row, and the
+  // calling thread allocates 1.5-1.7 KB per capped pair from 50k rows
+  // up (608 MB at 400k pairs, 5.9 GB at 4M).
+
+  /** The largest number of non-NULL `(ctx, item)` rows [[coOccurrence]]
+    * (and q83's co-mention graph) collects and counts on the driver.
+    * PageRank's rule: the largest measured size at which the driver
+    * path is not slower, in every variant, and allocates under half a
+    * gigabyte. Medians, driver against distributed:
+    *   - up to 30k rows the driver path was faster in every variant:
+    *     0.31-0.73 s against 0.90-2.39 s at 1k rows (first run), and
+    *     0.57-0.81 s against 0.74-1.15 s at 30k (a second run, 5
+    *     repetitions, in a faster host window), allocating at most
+    *     194 MB;
+    *   - at 50k it was slower in one variant in each run (hub at cap
+    *     64: 3.46 against 2.57 s; uniform at cap 64: 1.20 against
+    *     1.11 s); at 100k it allocated 0.39-0.61 GB, and from 250k it
+    *     was slower in every variant (39.3 against 11.8 s at 1M rows,
+    *     5.9 GB).
+    * Above the budget, the limit-collect pass at a 100,000-row budget
+    * read within the noise of the distributed path alone (11.6 against
+    * 11.8 s at 1M rows, 3.1 against 3.3 s at 250k).
+    */
+  val coOccurrenceCollectThreshold: Int = 30000
+
+  /** The largest capped pair volume, the sum over contexts of
+    * C(min(|set|, cap), 2), that [[coOccurrence]]'s driver path (and
+    * q83's) builds; above it the distributed path runs even though the
+    * rows fit. A hub-heavy input can reach about 31 pairs a row at cap
+    * 64, so the row budget alone does not bound the output. 120,000 is
+    * the largest pair volume measured within the row budget (uniform,
+    * 30k rows: 119,333 pairs, driver 0.78-0.81 s against 1.00-1.15 s,
+    * 194 MB); at 145k-200k pairs the driver path was slower in one
+    * variant.
+    */
+  val coOccurrencePairThreshold: Long = 120000L
 
   /** The capped per-context item-set convention shared by
     * [[coOccurrence]] and q83's co-mention graph: the first `cap`

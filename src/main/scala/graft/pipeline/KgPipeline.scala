@@ -485,10 +485,10 @@ object KgPipeline {
   /** `df`'s rows if it has at most `threshold`, else None: one action,
     * `limit(threshold + 1)`, both decides and collects. A negative
     * threshold answers None without a job (it forces the distributed
-    * path of [[canonFromEdges]] and of every [[Graph]] op).
+    * path of [[canonFromEdges]], of every [[Graph]] op and of q83).
     */
-  private[pipeline] def collectAtMost(df: DataFrame,
-                                      threshold: Int): Option[Array[Row]] =
+  private[graft] def collectAtMost(df: DataFrame,
+                                   threshold: Int): Option[Array[Row]] =
     if (threshold < 0) None
     else Some(df.limit(math.min(threshold, Int.MaxValue - 1) + 1).collect())
       .filter(_.length <= threshold)

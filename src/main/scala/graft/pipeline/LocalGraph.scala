@@ -4,7 +4,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.unsafe.types.UTF8String
 
 /** A small graph held on the driver: the one kernel behind every "fits
-  * on the driver" path of [[Graph]] and [[KgPipeline.canonFromEdges]]
+  * on the driver" graph path of [[Graph]] and [[KgPipeline.canonFromEdges]]
   * (the dedup closures of `dupClusters` and `semDedup` reach it through
   * [[Graph.components]]).
   *

@@ -306,25 +306,115 @@ object PipelineQueries {
     * entities (two entities are adjacent when linked in the same file):
     * the "which entities matter" query a KG consumer runs first, over
     * the graph the flagship just built. Entities are dictionary-encoded
-    * to 8-byte xxhash64 node ids before any shuffle (the q52
-    * fixed-width-key convention) and decoded back for display; per-file
-    * entity sets are capped at 32 so a pathological file cannot mint
-    * C(n,2) edges — the co-occurrence cap every production co-mention
-    * graph applies. Entities never co-mentioned with another entity
-    * have no edges and are excluded (salience is relational by
-    * definition). Rows-only: FP ranks aren't cross-engine-hashable, but
-    * the loop kernel has a bit-exact DuckDB oracle in q82 (dyadic
-    * rendition) and GraphSpec pins both PageRank paths (damping 0.85,
-    * dangling nodes) against a driver recompute.
+    * to 8-byte xxhash64 node ids (the q52 fixed-width-key convention)
+    * and decoded back for display; per-file entity sets are capped at
+    * their 32 least entities so a pathological file cannot mint C(n,2)
+    * edges — the co-occurrence cap every production co-mention graph
+    * applies. Entities never co-mentioned with another entity have no
+    * edges and are excluded (salience is relational by definition).
+    * Ranks are PageRank's (8 iterations, damping 0.85), rounded to 6
+    * places; the top 50 by salience, then entity.
+    *
+    * Two paths, decided as [[graft.pipeline.Graph.coOccurrence]]
+    * decides: one limit-collect of the (file, entity, hash) rows
+    * against [[graft.pipeline.Graph.coOccurrenceCollectThreshold]].
+    * Within it the whole query finishes on the driver
+    * ([[entityRankOnDriver]]) into a local relation; above it, or when
+    * the capped pair volume exceeds
+    * [[graft.pipeline.Graph.coOccurrencePairThreshold]], the distributed
+    * derivation runs ([[entityRankDistributed]]). Rows-only: FP ranks
+    * aren't cross-engine-hashable, but the loop kernel has a bit-exact
+    * DuckDB oracle in q82 (dyadic rendition) and GraphSpec pins both
+    * PageRank paths (damping 0.85, dangling nodes) against a driver
+    * recompute; PipelineSpec pins the two q83 paths against each other.
     */
-  def q83_entity_rank(s: SparkSession, dir: String): DataFrame = {
-    val r = pipelineFor(s, dir)
+  def q83_entity_rank(s: SparkSession, dir: String): DataFrame =
+    entityRank(pipelineFor(s, dir),
+      graft.pipeline.Graph.coOccurrenceCollectThreshold,
+      graft.pipeline.Graph.coOccurrencePairThreshold)
+
+  /** [[q83_entity_rank]] over a pipeline result at given row and pair
+    * budgets; a negative row budget forces the distributed derivation.
+    */
+  private[graft] def entityRank(r: KgPipeline.Result, collectThreshold: Int,
+                                pairThreshold: Long): DataFrame = {
     val ment = fileEntities(r)
-    // cap-32 per file through the shared spillable-window convention
-    // (Graph.cappedSets — same set as the old slice-after-collect, the
-    // 32 smallest ents, without buffering a pathological file's whole
-    // entity set in an agg buffer)
-    val perFile = graft.pipeline.Graph.cappedSets(ment, "file", "ent", 32)
+    KgPipeline.collectAtMost(
+        ment.select(col("file"), col("ent"), xxhash64(col("ent"))),
+        collectThreshold)
+      .flatMap(entityRankOnDriver(r.linked.sparkSession, _,
+        ment.schema("ent").nullable, pairThreshold))
+      .getOrElse(entityRankDistributed(ment))
+  }
+
+  private val EntityCap = 32
+  private val EntityTop = 50
+
+  /** q83 over its collected (file, ent, xxhash64(ent)) rows, every step
+    * the distributed derivation's: capped sets ([[graft.pipeline.LocalSets]]),
+    * the oriented `ea < eb` pairs hashed, deduplicated and mirrored,
+    * driver PageRank ([[graft.pipeline.LocalGraph.pageRank]], the kernel
+    * `Graph.pageRank` runs at this size), each node named by every
+    * distinct `ent` with its hash, Spark's own `round`, then the sort and
+    * top 50. None when the capped pair volume is over its threshold.
+    */
+  private def entityRankOnDriver(s: SparkSession,
+                                 rows: Array[org.apache.spark.sql.Row],
+                                 entNullable: Boolean,
+                                 pairThreshold: Long): Option[DataFrame] = {
+    import graft.pipeline.{LocalGraph, LocalSets}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Round}
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    val named = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+    val (ctx, files) = LocalSets.rank(named.map(_.get(0)), StringType)
+    val (item, ents) = LocalSets.rank(named.map(_.get(1)), StringType)
+    val sets = LocalSets(ctx, item, files.length, ents.length, EntityCap)
+    if (sets.pairVolume > pairThreshold) None
+    else {
+      val hashOf = new Array[Long](ents.length)
+      for (i <- named.indices) hashOf(item(i)) = named(i).getLong(2)
+      // both orientations of every pair, deduplicated once: the edge set
+      // distinct(edges ∪ mirror(edges)) of the distributed derivation
+      val edges = sets.pairCounts._1.flatMap { k =>
+        val (a, b) = (hashOf((k >>> 32).toInt), hashOf(k.toInt))
+        Array((a, b), (b, a))
+      }.distinct
+      val g = LocalGraph(edges.map(_._1), edges.map(_._2))
+      require(g.n > 0, "pageRank on an empty graph")
+      val pr = g.pageRank(iters = 8, damping = 0.85)
+      // every distinct entity of the input per hash, NULL (hash 42) too
+      val byHash = rows.map(r => r.getLong(2) -> Option(r.getString(1)))
+        .distinct.groupMap(_._1)(_._2)
+      val ranked = for {
+        i <- g.ids.indices.toArray
+        ent <- byHash.getOrElse(g.ids(i), Array.empty[Option[String]])
+      } yield (ent, Round(Literal(pr(i)), Literal(6)).eval().asInstanceOf[Double])
+      // salience desc, then entity asc in Spark's order: NULL first,
+      // then UTF-8 bytes
+      def before(x: (Option[String], Double), y: (Option[String], Double)) =
+        if (x._2 != y._2) x._2 > y._2
+        else (x._1, y._1) match {
+          case (Some(a), Some(b)) =>
+            UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b)) < 0
+          case (a, b) => a.isEmpty && b.isDefined
+        }
+      val out = new java.util.ArrayList[Row]()
+      ranked.sortWith(before).take(EntityTop)
+        .foreach { case (e, sal) => out.add(Row(e.orNull, sal)) }
+      Some(s.createDataFrame(out, StructType(Seq(
+        StructField("entity", StringType, entNullable),
+        StructField("salience", DoubleType, nullable = true)))))
+    }
+  }
+
+  /** q83's distributed derivation: capped sets through
+    * [[graft.pipeline.Graph.cappedSets]], the pair explode and the
+    * mirrored edge set in Spark, then [[graft.pipeline.Graph.pageRank]].
+    */
+  private def entityRankDistributed(ment: DataFrame): DataFrame = {
+    val perFile = graft.pipeline.Graph.cappedSets(ment, "file", "ent", EntityCap)
       .select(col("ctx").as("file"), col("items").as("ents"))
     val pairs = perFile
       .select(explode(col("ents")).as("ea"), col("ents"))
@@ -360,7 +450,7 @@ object PipelineQueries {
       .join(names, "node")
       .select(col("entity"), round(col("pr"), 6).as("salience"))
       .orderBy(col("salience").desc, col("entity"))
-      .limit(50)
+      .limit(EntityTop)
   }
 
   /** Product-quantized ANN — the compressed-domain search: train an
@@ -390,9 +480,11 @@ object PipelineQueries {
     * KG serves next to q83's salience. Same (file, entity) derivation
     * and cap-32 convention as q83's edge build; pairs needing ≥ 2
     * shared files, top 50 by lift (exact double) with a full
-    * deterministic tie-break. Rows-only: the derivation rides the NER
-    * pipeline; the lift arithmetic itself is q88-oracled cross-engine
-    * and GraphSpec-pinned.
+    * deterministic tie-break. Within `coOccurrence`'s row budget the
+    * (file, entity) rows are collected once and the table is counted on
+    * the driver. Rows-only: the derivation rides the NER pipeline; the
+    * lift arithmetic itself is q88-oracled cross-engine and GraphSpec
+    * pins both of its paths.
     */
   def q90_related_entities(s: SparkSession, dir: String): DataFrame = {
     val r = pipelineFor(s, dir)

@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * ([[Graph.pageRankCollectThreshold]], [[Graph.degreesCollectThreshold]],
   * [[Graph.trianglesCollectThreshold]], [[Graph.twoHopCollectThreshold]],
   * [[Graph.componentsCollectThreshold]],
-  * [[KgPipeline.ccCollectThreshold]]), not a test.
+  * [[KgPipeline.ccCollectThreshold]], [[Graph.coOccurrenceCollectThreshold]]
+  * and [[Graph.coOccurrencePairThreshold]]), not a test.
   *
   * Each graph is an uncached derivation with a shuffle (`range` → two
   * hashed endpoints → `distinct`, average out-degree 8), so a path that
@@ -25,9 +26,20 @@ import org.apache.spark.sql.functions._
   * edges (one source, or an ambiguous few), one in four to the alias
   * its entity shares with its canonical twin, so that alias bridges
   * and each component holds two entities. The KB (`entity_id`,
-  * `canonical`) is a local relation, as the pipeline's is. Per op,
+  * `canonical`) is a local relation, as the pipeline's is.
+  * `cooccurrence` times [[Graph.coOccurrence]] (minPairCount 1, so
+  * every pair is output) over `(ctx, item)` rows of about `m` rows, the
+  * string keys `ctx:<9 digits>` and `item:<9 digits>` of the file and
+  * entity columns q83 and q90 read: `uniform` spreads them over m/8
+  * contexts and m/4 items (8 items a context on average; sf0.001's
+  * 994 (file, entity) rows over 60 files hold 16), `hub` moves a
+  * quarter of the rows into 16 hub contexts of m/64 rows each, far
+  * above the cap. Each runs at caps 32
+  * and 64 (graph names `uniform-c32` …), and its record adds the capped
+  * pair volume the driver path checks. Per op,
   * graph, size and repetition the modes run interleaved:
-  *   - `driver`: threshold above the edge count (collect + LocalGraph);
+  *   - `driver`: threshold above the edge count (collect + LocalGraph,
+  *     or LocalSets with no pair limit);
   *   - `distributed`: threshold −1 (the distributed path alone);
   *   - `default` (sizes above the op's default threshold only): the
   *     limit-collect that finds the graph too big, then the distributed
@@ -65,7 +77,29 @@ object GraphCrossover {
     "triangles" -> Graph.trianglesCollectThreshold,
     "twoHop" -> Graph.twoHopCollectThreshold,
     "components" -> Graph.componentsCollectThreshold,
-    "canon" -> KgPipeline.ccCollectThreshold)
+    "canon" -> KgPipeline.ccCollectThreshold,
+    "cooccurrence" -> Graph.coOccurrenceCollectThreshold)
+
+  /** `(ctx, item)` rows of about `m` rows; `kind` is `uniform` or `hub`. */
+  private def ctxItems(spark: SparkSession, kind: String, m: Int): DataFrame = {
+    val uniform = pmod(xxhash64(col("id"), lit(2)), lit(math.max(m / 8, 1).toLong))
+    val ctx = kind match {
+      case "uniform" => uniform
+      case "hub" => when(pmod(xxhash64(col("id"), lit(1)), lit(4)) === 0,
+        lit(1000000000L) + pmod(xxhash64(col("id"), lit(4)), lit(16L)))
+        .otherwise(uniform)
+    }
+    spark.range(m.toLong).select(format_string("ctx:%09d", ctx).as("ctx"),
+      format_string("item:%09d",
+        pmod(xxhash64(col("id"), lit(3)), lit(math.max(m / 4, 1).toLong))).as("item"))
+  }
+
+  /** The capped pair volume sum over contexts of C(min(|set|, cap), 2). */
+  private def pairVolume(rows: DataFrame, cap: Int): Long =
+    Graph.cappedSets(rows, "ctx", "item", cap)
+      .select(size(col("items")).cast("long").as("k"))
+      .agg(coalesce(sum(col("k") * (col("k") - 1) / 2), lit(0L)))
+      .head().getAs[Number](0).longValue
 
   /** `alias` edges `(src, dst)` of about `m` rows and their KB. */
   private def aliasGraph(spark: SparkSession, m: Int)
@@ -130,7 +164,14 @@ object GraphCrossover {
       df.agg(coalesce(sum(col("c")), lit(0.0))).head().getDouble(0)
     // one call of op `name` on a graph of about `m` edges, at budget t
     def call(name: String, kind: String, m: Int): (DataFrame, Int => Double) =
-      if (name == "canon") {
+      if (name == "cooccurrence") {
+        val Array(shape, c) = kind.split("-c")
+        val rows = ctxItems(spark, shape, m)
+        (rows, t => checksum(Graph.coOccurrence(rows, "ctx", "item", c.toInt, 1,
+          t, if (t == Int.MaxValue) Long.MaxValue else Graph.coOccurrencePairThreshold)
+          .select(pmod(xxhash64(col("x"), col("y"), col("pair_count"),
+            col("lift")), lit(1000003L)).cast("double").as("c"))))
+      } else if (name == "canon") {
         val (edges, kb) = aliasGraph(spark, m)
         (edges, canonChecksum(edges, kb, _))
       } else {
@@ -140,17 +181,22 @@ object GraphCrossover {
     try {
       // untimed warm-up of both paths of every op (JIT, codegen)
       for (name <- names; t <- Seq(Int.MaxValue, -1))
-        call(name, "uniform", 1000)._2(t)
+        call(name, if (name == "cooccurrence") "uniform-c32" else "uniform",
+          1000)._2(t)
       Graph.releaseAllRanks(spark, blocking = true)
       for (name <- names;
            kind <- name match {
              case "triangles" | "twoHop" => Seq("uniform", "hub")
              case "canon" => Seq("alias")
+             case "cooccurrence" =>
+               for (g <- Seq("uniform", "hub"); c <- Seq(32, 64)) yield s"$g-c$c"
              case _ => Seq("uniform")
            };
            m <- sizes) {
         val (edges, run) = call(name, kind, m)
         val actual = edges.count()
+        val pairs = if (name == "cooccurrence")
+          s""""pairs": ${pairVolume(edges, kind.split("-c")(1).toInt)}, """ else ""
         val modes = Seq("driver" -> Int.MaxValue, "distributed" -> -1) ++
           (if (actual > defaults(name)) Seq("default" -> defaults(name)) else Nil)
         for (rep <- 1 to reps; (mode, t) <-
@@ -161,7 +207,7 @@ object GraphCrossover {
           val wall = (System.nanoTime() - t0) / 1e9
           val alloc = threads.getThreadAllocatedBytes(self) - a0
           Graph.releaseAllRanks(spark, blocking = true)
-          println(f"""{"op": "$name", "graph": "$kind", "edges": $actual, """ +
+          println(f"""{"op": "$name", "graph": "$kind", "edges": $actual, $pairs""" +
             f""""rep": $rep, "mode": "$mode", "wall_s": $wall%.3f, """ +
             f""""alloc_mb": ${alloc / 1048576.0}%.1f, "checksum": $sum%.3f}""")
         }

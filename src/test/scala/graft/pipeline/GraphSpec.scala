@@ -296,12 +296,13 @@ class GraphSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getString(1)) ->
         (r.getLong(2), r.getDouble(3), r.getDouble(4))).toMap
     assert(got.keySet == Set(("a", "b"), ("a", "c"), ("b", "c")))
+    // Spark's `log` evaluates StrictMath.log
     assert(got(("a", "b")) == ((2L, 2.0 * 3 / (3 * 2),
-      math.log(2.0 * 3 / (3 * 2)))))
+      StrictMath.log(2.0 * 3 / (3 * 2)))))
     assert(got(("a", "c")) == ((1L, 1.0 * 3 / (3 * 1),
-      math.log(1.0 * 3 / (3 * 1)))))
+      StrictMath.log(1.0 * 3 / (3 * 1)))))
     assert(got(("b", "c")) == ((1L, 1.0 * 3 / (2 * 1),
-      math.log(1.0 * 3 / (2 * 1)))))
+      StrictMath.log(1.0 * 3 / (2 * 1)))))
     // the prune drops singleton pairs before marginals attach
     val pruned = Graph.coOccurrence(rows, "ctx", "item", minPairCount = 2)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
@@ -349,6 +350,68 @@ class GraphSpec extends AnyFunSuite {
     assert(got(("a", "b")) == ((2L, 2.0 * 3 / (3 * 2))))
     intercept[IllegalArgumentException] {
       Graph.coOccurrence(rows, "ctx", "item", maxPerCtx = 1)
+    }
+  }
+
+  /** [[Graph.coOccurrence]] on its driver path (default budgets) and
+    * its forced distributed path: the same schema and bit-equal rows.
+    * Returns the number of rows.
+    */
+  private def coOccurrenceParity(rows: DataFrame, cap: Int,
+                                 minPairCount: Long): Int = {
+    def run(t: Int) = Graph.coOccurrence(rows, "ctx", "item", cap,
+      minPairCount, t, Graph.coOccurrencePairThreshold)
+    val (local, dist) = (run(Graph.coOccurrenceCollectThreshold), run(-1))
+    assert(onDriver(local) && !onDriver(dist))
+    assert(local.schema == dist.schema)
+    def bits(df: DataFrame) = df.collect().map(r => (r.get(0), r.get(1),
+      r.getLong(2), java.lang.Double.doubleToRawLongBits(r.getDouble(3)),
+      java.lang.Double.doubleToRawLongBits(r.getDouble(4)))).toSet
+    val got = bits(local)
+    assert(got == bits(dist), s"cap $cap, minPairCount $minPairCount")
+    got.size
+  }
+
+  test("coOccurrence: both paths agree bit for bit on string, int and long items") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(29)
+    // U+FF61 sorts before U+1F600 in UTF-8 bytes (Spark's order), after
+    // it in UTF-16 units (String.compareTo); the pool mixes both in
+    val odd = Seq("\uFF61", new String(Character.toChars(0x1F600)),
+      "\u00e9", "Z", "a")
+    def str(i: Int) = if (i < odd.size) odd(i) else s"i$i"
+    // 60 contexts over 40 items, hub-biased items; duplicates by chance
+    // and 20 exact repeats; NULL ctx and NULL item rows; one hub context
+    // ("c0" / 0) holding every item, above each cap
+    val base = (1 to 500).map(_ => (rnd.nextInt(60),
+      (math.pow(rnd.nextDouble(), 2) * 40).toInt))
+    val draws = base ++ base.take(20) ++ (0 until 40).map(i => (0, i))
+    val strs = (draws.map { case (c, i) => (Option(s"c$c"), Option(str(i))) } ++
+      Seq((None, Some("a")), (Some("c1"), None), (None, None)))
+      .toDF("ctx", "item")
+    val ints = (draws.map { case (c, i) => (Option(c), Option(i - 20)) } ++
+      Seq((None, Some(1)), (Some(1), None))).toDF("ctx", "item")
+    val longs = (draws.map { case (c, i) =>
+        (Option(c.toLong << 33), Option((i - 20).toLong * 3000000000L)) } ++
+      Seq((None, Some(1L)), (Some(1L), None))).toDF("ctx", "item")
+    for (rows <- Seq(strs, ints, longs); cap <- Seq(8, 64);
+         minPairCount <- Seq(1L, 2L, 3L))
+      assert(coOccurrenceParity(rows, cap, minPairCount) > 0)
+  }
+
+  test("coOccurrence: exactly the row and pair budgets run on the driver, one more does not") {
+    import spark.implicits._
+    // 7 non-NULL rows (one a duplicate) in sets {a,b,c} and {a,b}: 4 pairs
+    val rows = Seq[(String, String)](("c1", "a"), ("c1", "b"), ("c1", "c"),
+      ("c1", "c"), ("c2", "a"), ("c2", "b"), ("c3", "a"), (null, "a"),
+      ("c3", null)).toDF("ctx", "item")
+    def run(t: Int, p: Long) = Graph.coOccurrence(rows, "ctx", "item", 64, 1, t, p)
+    val want = run(-1, 0).collect().toSet
+    assert(want.size == 3)
+    for ((t, p, driver) <- Seq((7, 4L, true), (6, 4L, false), (7, 3L, false))) {
+      val df = run(t, p)
+      assert(onDriver(df) == driver, s"budgets ($t, $p)")
+      assert(df.collect().toSet == want, s"budgets ($t, $p)")
     }
   }
 
