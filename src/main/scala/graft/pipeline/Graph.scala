@@ -147,8 +147,8 @@ object Graph {
   /** [[triangles]] with its budget given; a negative one forces the
     * distributed path.
     */
-  private[pipeline] def triangles(edges: DataFrame,
-                                  collectThreshold: Int): DataFrame =
+  private[graft] def triangles(edges: DataFrame,
+                               collectThreshold: Int): DataFrame =
     perNode(edges, collectThreshold, trianglesDistributed(edges))(_.triangles)
 
   private def trianglesDistributed(edges: DataFrame): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession, Column}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession, Column}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -1703,8 +1703,8 @@ object RelationalQueries {
     * bijections (gcd(7,N)=gcd(13,N)=1 for the testdata Ns), so
     * in-degree stays bounded — no hub skew by construction.
     */
-  private def syntheticGraph(s: SparkSession, dir: String,
-                             planted: Boolean): DataFrame = {
+  private[graft] def syntheticGraph(s: SparkSession, dir: String,
+                                    planted: Boolean): DataFrame = {
     val part = t(s, dir, "part")
     val un = part.select(col("p_partkey").as("u"))
       .crossJoin(broadcast(part.agg(count(lit(1)).as("n"))))
@@ -1885,16 +1885,6 @@ object RelationalQueries {
     }.mkString("\nUNION ALL\n")
   }
 
-  /** Hybrid retrieval: reciprocal-rank fusion of the BM25 lexical
-    * top-25 (q64's scoring) with the embedding-cosine top-25 (q20's
-    * scoring, vec_id 0 as the query vector) through
-    * [[graft.pipeline.Retrieval.rrfFuse]]. Cross-engine exact: ranks
-    * are integers over deterministic (rounded-score, id) orderings,
-    * each RRF term `1/(60+rank)` is one correctly-rounded IEEE
-    * division, and a document's two terms sum commutatively — both
-    * engines produce bit-identical doubles. The windows ranking the two
-    * lists run over ≤ 25 rows each (top-k bounded by contract).
-    */
   /** `row_number()` over (score desc, doc_id asc) for a TINY frame
     * (≤ 25 rows by top-k contract) as a broadcast self-join count —
     * rank = 1 + how many rows sort strictly before it. Semantically
@@ -1916,6 +1906,16 @@ object RelationalQueries {
       .agg((count(col("y_id")) + 1).cast("int").as("rank"))
   }
 
+  /** Hybrid retrieval: reciprocal-rank fusion of the BM25 lexical
+    * top-25 (q64's scoring) with the embedding-cosine top-25 (q20's
+    * scoring, vec_id 0 as the query vector) through
+    * [[graft.pipeline.Retrieval.rrfFuse]]. Cross-engine exact: ranks
+    * are integers over deterministic (rounded-score, id) orderings,
+    * each RRF term `1/(60+rank)` is one correctly-rounded IEEE
+    * division, and a document's two terms sum commutatively — both
+    * engines produce bit-identical doubles. The windows ranking the two
+    * lists run over ≤ 25 rows each (top-k bounded by contract).
+    */
   def q86_rrf_fusion(s: SparkSession, dir: String): DataFrame = {
     val bm = graft.pipeline.Retrieval.bm25TopK(
       t(s, dir, "documents"), "doc_id", "text",
@@ -1978,22 +1978,26 @@ object RelationalQueries {
       |SELECT doc_id, rrf, n_lists FROM f
       |ORDER BY rrf DESC, doc_id ASC LIMIT 20""".stripMargin
 
-  /** KG integrity audit ([[graft.pipeline.KgPipeline.kgAudit]]) over a
-    * synthetic triple set derived deterministically from `events`, with
-    * every defect class PLANTED so the audit has something to find:
-    * uids ≥ 10 are referenced but never typed (dangling), `x:` ids are
-    * typed but never referenced (orphans), uids < 3 carry two types
-    * (multi-typed), and every 500th event's mention row is emitted
-    * twice (exact duplicates). The flagship pipeline's own output is
-    * separately gated CLEAN on all three defect metrics in
-    * PipelineSpec — this query cross-checks the audit arithmetic
-    * itself against DuckDB.
-    */
-  /** The q87/q89 shared synthetic triple set (see [[q87_kg_audit]] for
-    * the planted-defect design); [[syntheticTripCte]] is its SQL
+  /** The q87/q89/q91 shared synthetic triple set (see [[q87_kg_audit]]
+    * for the planted-defect design); [[syntheticTripCte]] is its SQL
     * mirror, ending in a `trip` CTE.
+    *
+    * Two paths, one decision: one [[graft.pipeline.KgPipeline.collectAtMost]]
+    * of the per-event values against
+    * [[graft.pipeline.KgPipeline.tripleCollectThreshold]]. Spark
+    * evaluates every `%`, `concat` and comparison in that collect, so
+    * NULL and negative ids behave as in the composition; the driver only
+    * unions and deduplicates the rows, into a local relation with the
+    * composition's own schema. Above the budget the composition runs.
     */
-  private def syntheticTriples(s: SparkSession, dir: String): DataFrame = {
+  private def syntheticTriples(s: SparkSession, dir: String): DataFrame =
+    syntheticTriples(s, dir, graft.pipeline.KgPipeline.tripleCollectThreshold)
+
+  /** [[syntheticTriples]] with its row budget given; a negative one
+    * forces the composition.
+    */
+  private[graft] def syntheticTriples(s: SparkSession, dir: String,
+                                      collectThreshold: Int): DataFrame = {
     val ev = t(s, dir, "events")
       .select(col("event_id"), (col("user_id") % 50).as("uid"))
     def ment(e: DataFrame) = e.select(
@@ -2009,9 +2013,27 @@ object RelationalQueries {
     val orphan = ev.where(col("uid") < 5)
       .select(concat(lit("x:"), col("uid")).as("subj"),
         lit("hasType").as("pred"), lit("person").as("obj")).distinct()
-    ment(ev)
+    val composed = ment(ev)
       .unionByName(ment(ev.where(col("event_id") % 500 === 0)))
       .unionByName(typed).unionByName(typed2).unionByName(orphan)
+    // a NULL comparison keeps no row, as `where` does
+    val flag = (c: Column) => coalesce(c, lit(false))
+    graft.pipeline.KgPipeline.collectAtMost(ev.select(
+        concat(lit("m:"), col("event_id")), concat(lit("e:"), col("uid")),
+        concat(lit("x:"), col("uid")), flag(col("event_id") % 500 === 0),
+        flag(col("uid") < 10), flag(col("uid") < 3), flag(col("uid") < 5)),
+        collectThreshold)
+      .fold(composed) { rows =>
+        val ment = rows.map(r =>
+          Row(r.getString(0), "hasEntity", r.getString(1)))
+        def typeRows(keep: Int, id: Int, tp: String) =
+          rows.filter(_.getBoolean(keep)).map(_.getString(id)).distinct
+            .map(Row(_, "hasType", tp))
+        val out = ment ++ ment.indices.filter(rows(_).getBoolean(3)).map(ment) ++
+          typeRows(4, 1, "person") ++ typeRows(5, 1, "org") ++
+          typeRows(6, 2, "person")
+        s.createDataFrame(java.util.Arrays.asList(out: _*), composed.schema)
+      }
   }
 
   private val syntheticTripCte: String =
@@ -2030,6 +2052,17 @@ object RelationalQueries {
       |         UNION ALL SELECT * FROM typed UNION ALL SELECT * FROM typed2
       |         UNION ALL SELECT * FROM orph)""".stripMargin
 
+  /** KG integrity audit ([[graft.pipeline.KgPipeline.kgAudit]]) over a
+    * synthetic triple set derived deterministically from `events`, with
+    * every defect class PLANTED so the audit has something to find:
+    * uids ≥ 10 are referenced but never typed (dangling), `x:` ids are
+    * typed but never referenced (orphans), uids < 3 carry two types
+    * (multi-typed), and every 500th event's mention row is emitted
+    * twice (exact duplicates). The flagship pipeline's own output is
+    * separately gated CLEAN on all three defect metrics in
+    * PipelineSpec — this query cross-checks the audit arithmetic
+    * itself against DuckDB.
+    */
   def q87_kg_audit(s: SparkSession, dir: String): DataFrame =
     graft.pipeline.KgPipeline.kgAudit(s, syntheticTriples(s, dir))
 

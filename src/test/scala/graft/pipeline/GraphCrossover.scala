@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   * ([[Graph.pageRankCollectThreshold]], [[Graph.degreesCollectThreshold]],
   * [[Graph.trianglesCollectThreshold]], [[Graph.twoHopCollectThreshold]],
   * [[Graph.componentsCollectThreshold]],
-  * [[KgPipeline.ccCollectThreshold]], [[Graph.coOccurrenceCollectThreshold]]
-  * and [[Graph.coOccurrencePairThreshold]]), not a test.
+  * [[KgPipeline.ccCollectThreshold]], [[Graph.coOccurrenceCollectThreshold]],
+  * [[Graph.coOccurrencePairThreshold]] and
+  * [[KgPipeline.tripleCollectThreshold]]), not a test.
   *
   * Each graph is an uncached derivation with a shuffle (`range` → two
   * hashed endpoints → `distinct`, average out-degree 8), so a path that
@@ -36,7 +37,14 @@ import org.apache.spark.sql.functions._
   * quarter of the rows into 16 hub contexts of m/64 rows each, far
   * above the cap. Each runs at caps 32
   * and 64 (graph names `uniform-c32` …), and its record adds the capped
-  * pair volume the driver path checks. Per op,
+  * pair volume the driver path checks. `triples` times the three
+  * triple-set consumers against [[KgPipeline.tripleCollectThreshold]]
+  * (graph names `audit`, `ntriples` and `match`, the q91 pattern) over
+  * about `m` rows `(subj, pred, obj, src_repo, src_path)` shaped like
+  * the pipeline's: seven in eight are mentions `m:<9 digits>` of m/8
+  * entities `e:<9 digits>`, one in eight types an entity with one of
+  * four types (so some entities carry several, some rows repeat), and
+  * the provenance columns hold 1,000 repos and m/16 paths. Per op,
   * graph, size and repetition the modes run interleaved:
   *   - `driver`: threshold above the edge count (collect + LocalGraph,
   *     or LocalSets with no pair limit);
@@ -44,9 +52,9 @@ import org.apache.spark.sql.functions._
   *   - `default` (sizes above the op's default threshold only): the
   *     limit-collect that finds the graph too big, then the distributed
   *     path.
-  * An untimed warm-up runs both paths of every op first. Each call's
-  * result is reduced to a checksum on the driver, so both paths finish
-  * the same work and can be compared. One JSON line per call: op,
+  * An untimed warm-up runs both paths of every op and graph first.
+  * Each call's result is reduced to a checksum on the driver, so both
+  * paths finish the same work and can be compared. One JSON line per call: op,
   * graph, edges, mode, wall seconds, the bytes the calling thread
   * allocated (the driver path's working set is allocated there) and
   * the checksum. PageRank runs 8 iterations at damping 0.85.
@@ -78,7 +86,37 @@ object GraphCrossover {
     "twoHop" -> Graph.twoHopCollectThreshold,
     "components" -> Graph.componentsCollectThreshold,
     "canon" -> KgPipeline.ccCollectThreshold,
-    "cooccurrence" -> Graph.coOccurrenceCollectThreshold)
+    "cooccurrence" -> Graph.coOccurrenceCollectThreshold,
+    "triples" -> KgPipeline.tripleCollectThreshold)
+
+  /** Triple rows of about `m` rows (see the object doc). */
+  private def tripleRows(spark: SparkSession, m: Int): DataFrame = {
+    val ent = format_string("e:%09d",
+      pmod(xxhash64(col("id"), lit(1)), lit(math.max(m / 8, 1).toLong)))
+    val isType = pmod(col("id"), lit(8)) === 0
+    spark.range(m.toLong).select(
+      when(isType, ent).otherwise(format_string("m:%09d", col("id"))).as("subj"),
+      when(isType, lit("hasType")).otherwise(lit("hasEntity")).as("pred"),
+      when(isType, element_at(array(lit("person"), lit("org"), lit("place"),
+        lit("tool")), (pmod(xxhash64(col("id"), lit(2)), lit(4)) + 1).cast("int")))
+        .otherwise(ent).as("obj"),
+      format_string("repo:%06d", pmod(col("id"), lit(1000))).as("src_repo"),
+      format_string("path:%09d", (col("id") / 16).cast("long")).as("src_path"))
+  }
+
+  /** One triple-set consumer `kind` at budget `t`, reduced to a checksum. */
+  private def tripleChecksum(rows: DataFrame, kind: String, t: Int): Double = {
+    def sumOf(df: DataFrame) = df.agg(coalesce(sum(pmod(xxhash64(
+      df.columns.map(col).toIndexedSeq: _*), lit(1000003L)).cast("double")),
+      lit(0.0))).head().getDouble(0)
+    kind match {
+      case "audit" => KgPipeline.kgAudit(rows.sparkSession, rows, t)
+        .collect().map(_.getLong(1).toDouble).sum
+      case "ntriples" => sumOf(KgPipeline.ntriples(rows, t))
+      case "match" => sumOf(KgPipeline.matchPattern(rows,
+        Seq(("?m", "hasEntity", "?e"), ("?e", "hasType", "?t")), t))
+    }
+  }
 
   /** `(ctx, item)` rows of about `m` rows; `kind` is `uniform` or `hub`. */
   private def ctxItems(spark: SparkSession, kind: String, m: Int): DataFrame = {
@@ -160,6 +198,14 @@ object GraphCrossover {
         pmod(xxhash64(col("id"), lit(1)), lit(n)).as("src"),
         dst.as("dst")).distinct()
     }
+    def kinds(name: String): Seq[String] = name match {
+      case "triangles" | "twoHop" => Seq("uniform", "hub")
+      case "canon" => Seq("alias")
+      case "triples" => Seq("audit", "ntriples", "match")
+      case "cooccurrence" =>
+        for (g <- Seq("uniform", "hub"); c <- Seq(32, 64)) yield s"$g-c$c"
+      case _ => Seq("uniform")
+    }
     def checksum(df: DataFrame): Double =
       df.agg(coalesce(sum(col("c")), lit(0.0))).head().getDouble(0)
     // one call of op `name` on a graph of about `m` edges, at budget t
@@ -171,6 +217,9 @@ object GraphCrossover {
           t, if (t == Int.MaxValue) Long.MaxValue else Graph.coOccurrencePairThreshold)
           .select(pmod(xxhash64(col("x"), col("y"), col("pair_count"),
             col("lift")), lit(1000003L)).cast("double").as("c"))))
+      } else if (name == "triples") {
+        val rows = tripleRows(spark, m)
+        (rows, tripleChecksum(rows, kind, _))
       } else if (name == "canon") {
         val (edges, kb) = aliasGraph(spark, m)
         (edges, canonChecksum(edges, kb, _))
@@ -180,19 +229,10 @@ object GraphCrossover {
       }
     try {
       // untimed warm-up of both paths of every op (JIT, codegen)
-      for (name <- names; t <- Seq(Int.MaxValue, -1))
-        call(name, if (name == "cooccurrence") "uniform-c32" else "uniform",
-          1000)._2(t)
+      for (name <- names; kind <- kinds(name); t <- Seq(Int.MaxValue, -1))
+        call(name, kind, 1000)._2(t)
       Graph.releaseAllRanks(spark, blocking = true)
-      for (name <- names;
-           kind <- name match {
-             case "triangles" | "twoHop" => Seq("uniform", "hub")
-             case "canon" => Seq("alias")
-             case "cooccurrence" =>
-               for (g <- Seq("uniform", "hub"); c <- Seq(32, 64)) yield s"$g-c$c"
-             case _ => Seq("uniform")
-           };
-           m <- sizes) {
+      for (name <- names; kind <- kinds(name); m <- sizes) {
         val (edges, run) = call(name, kind, m)
         val actual = edges.count()
         val pairs = if (name == "cooccurrence")

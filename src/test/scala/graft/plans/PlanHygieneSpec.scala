@@ -409,9 +409,17 @@ class PlanHygieneSpec extends AnyFunSuite {
     assume(available)
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.types.StringType
-    val df = graft.queries.RelationalQueries.q80_triangles(spark, dir)
+    // q80's edges through the distributed path: at this size the
+    // default budget counts them on the driver, whose local relation has
+    // no join to gate
+    val df = graft.pipeline.Graph.triangles(
+      RelationalQueries.syntheticGraph(spark, dir, planted = true)
+        .select(org.apache.spark.sql.functions.col("u").as("src"),
+          org.apache.spark.sql.functions.col("v").as("dst")), -1)
     df.collect() // gate the FINAL adaptive plan
     val nodes = PlanInspector.allNodes(df.queryExecution.executedPlan)
+    assert(nodes.exists(_.getClass.getSimpleName.endsWith("JoinExec")),
+      s"q80: the gated plan has no join:\n${df.queryExecution.executedPlan}")
     // the wedge join is the O(m^1.5) step — it must stay an equi-join
     // on node ids; a cartesian here is the all-pairs scale-killer
     val cartesian = nodes.filter(
