@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over the materialized knowledge graph.
@@ -15,25 +16,17 @@ import org.apache.spark.sql.functions._
   * they run over KG triples (`subj`/`obj` keyed by dictionary-encoded
   * ids) and over any relational edge derivation alike.
   *
-  * Two paths per op, one decision. [[degrees]], [[triangles]],
-  * [[twoHopCounts]], [[components]] and [[pageRank]] each have an edge
-  * budget, measured per op (e.g. [[trianglesCollectThreshold]]);
-  * [[coOccurrence]] has a row budget and a pair budget. One action,
-  * `limit(budget + 1)` over the non-NULL edges or rows
-  * ([[KgPipeline.collectAtMost]]), both decides and collects:
-  *   - at or below the threshold the op runs on the driver over one
-  *     [[LocalGraph]] (dense ids, CSR adjacency, primitive arrays), or
-  *     for [[coOccurrence]] one [[LocalSets]], and returns a local
-  *     relation with the distributed path's schema. At benchmark size
-  *     (tens to thousands of rows) this replaces every shuffle and
-  *     per-iteration job with one collect: "To Partition, or Not to
-  *     Partition" (skip the distributed machinery when the build side
-  *     fits);
-  *   - above it the distributed path runs unchanged, after that action
-  *     has evaluated the input once more. Specs and `GraphCrossover`
-  *     pass their own budget through a package-private overload (a
-  *     negative one forces the distributed path); [[pageRank]] keeps its
-  *     `collectThreshold` argument.
+  * Two paths per op, picked by [[LocalPath.decide]] over the non-NULL
+  * edges or rows. [[degrees]], [[triangles]], [[twoHopCounts]],
+  * [[components]] and [[pageRank]] each have an edge budget, measured
+  * per op (e.g. [[trianglesCollectThreshold]]); [[coOccurrence]] has a
+  * row budget and a pair budget. Within budget the op runs on the
+  * driver over one [[LocalGraph]] (dense ids, CSR adjacency, primitive
+  * arrays), or for [[coOccurrence]] one [[LocalSets]]; above it the
+  * distributed path runs unchanged, after the collect has evaluated the
+  * input once more. Specs and `GraphCrossover` pass their own budget
+  * through a package-private overload; [[pageRank]] keeps its
+  * `collectThreshold` argument.
   * The driver path never does more work than the distributed one
   * shuffles (see each op), so an edge budget alone bounds its time;
   * its memory is the collected rows plus a few int arrays per edge.
@@ -75,49 +68,39 @@ object Graph {
       .select(col("src").cast("long").as("s"), col("dst").cast("long").as("t"))
       .where(col("s").isNotNull && col("t").isNotNull)
 
-  /** A per-node count on whichever path fits: one
-    * [[KgPipeline.collectAtMost]] of [[longPairs]] decides. At most
-    * `collectThreshold` edges: `count` runs on the collected
-    * [[LocalGraph]] and its nonzero entries become a local relation
-    * with exactly `distributed`'s schema (names, types, nullability;
-    * ids convert back to an `int` node column). Above it, or for a node
-    * column that is neither `bigint` nor `int`, `distributed` runs as
-    * it is; it is only analyzed before that.
+  /** A per-node count on whichever path fits ([[LocalPath.decide]] over
+    * [[longPairs]]): on the driver, `count` runs on the collected
+    * [[LocalGraph]] and its nonzero entries come back with exactly
+    * `distributed`'s schema (ids convert back to an `int` node column).
+    * For a node column that is neither `bigint` nor `int`,
+    * `distributed` runs as it is; it is only analyzed before that.
     */
   private def perNode(edges: DataFrame, collectThreshold: Int,
                       distributed: DataFrame)(count: LocalGraph => Array[Long])
       : DataFrame = {
     import org.apache.spark.sql.types._
-    val schema = distributed.schema
-    val toNode: Option[Long => Any] = schema.head.dataType match {
-      case LongType => Some(identity)
-      case IntegerType => Some(_.toInt)
-      case _ => None
-    }
-    toNode.flatMap(conv =>
-      KgPipeline.collectAtMost(longPairs(edges), collectThreshold).map { rows =>
-        val g = LocalGraph.fromRows(rows)
-        val c = count(g)
-        val out = new java.util.ArrayList[Row]()
-        for (i <- 0 until g.n if c(i) > 0) out.add(Row(conv(g.ids(i)), c(i)))
-        edges.sparkSession.createDataFrame(out, schema)
-      }).getOrElse(distributed)
+    val dt = distributed.schema.head.dataType
+    val toNode: Long => Any = if (dt == IntegerType) _.toInt else identity
+    if (dt != LongType && dt != IntegerType) distributed
+    else LocalPath.decide(longPairs(edges), collectThreshold,
+        distributed.schema) { rows =>
+      val g = LocalGraph.fromRows(rows)
+      val c = count(g)
+      Some(for (i <- 0 until g.n if c(i) > 0) yield Row(toNode(g.ids(i)), c(i)))
+    }(distributed)
   }
 
   /** Undirected degree per node: distinct-neighbor count over the
     * de-duplicated, self-loop-free undirected closure of `edges`.
     *
-    * Two paths, decided as [[pageRank]] decides: at most
-    * [[degreesCollectThreshold]] edges count on the driver
-    * ([[LocalGraph.degrees]]) into a local relation; above it, two
-    * shuffles (edge distinct, count), both keyed on longs.
+    * Within [[degreesCollectThreshold]] edges [[LocalGraph.degrees]]
+    * counts on the driver; above it, two shuffles (edge distinct,
+    * count), both keyed on longs.
     */
   def degrees(edges: DataFrame): DataFrame =
     degrees(edges, degreesCollectThreshold)
 
-  /** [[degrees]] with its budget given; a negative one forces the
-    * distributed path.
-    */
+  /** [[degrees]] with its budget given ([[LocalPath.decide]]). */
   private[pipeline] def degrees(edges: DataFrame,
                                 collectThreshold: Int): DataFrame =
     perNode(edges, collectThreshold, degreesDistributed(edges))(_.degrees)
@@ -144,9 +127,7 @@ object Graph {
   def triangles(edges: DataFrame): DataFrame =
     triangles(edges, trianglesCollectThreshold)
 
-  /** [[triangles]] with its budget given; a negative one forces the
-    * distributed path.
-    */
+  /** [[triangles]] with its budget given ([[LocalPath.decide]]). */
   private[graft] def triangles(edges: DataFrame,
                                collectThreshold: Int): DataFrame =
     perNode(edges, collectThreshold, trianglesDistributed(edges))(_.triangles)
@@ -198,9 +179,7 @@ object Graph {
   def twoHopCounts(edges: DataFrame): DataFrame =
     twoHopCounts(edges, twoHopCollectThreshold)
 
-  /** [[twoHopCounts]] with its budget given; a negative one forces the
-    * distributed path.
-    */
+  /** [[twoHopCounts]] with its budget given ([[LocalPath.decide]]). */
   private[pipeline] def twoHopCounts(edges: DataFrame,
                                      collectThreshold: Int): DataFrame =
     perNode(edges, collectThreshold, twoHopDistributed(edges))(_.twoHop)
@@ -225,13 +204,11 @@ object Graph {
   /** Min-label connected components `(node, comp)` of an undirected
     * edge set `(src, dst)`: comp is the least node of the component
     * (byte order for strings, as Spark's `min`). Edges with a NULL end
-    * are dropped first, on both paths. At most
-    * [[componentsCollectThreshold]] edges whose ends are both `bigint`
-    * or both `string` are labelled on the driver
-    * ([[LocalGraph.components]]; strings through
-    * [[LocalGraph.ofNames]]) into a local relation of non-null longs,
-    * or of strings. Anything else runs
-    * [[KgPipeline.connectedComponents]], the checkpointed fixpoint.
+    * are dropped first, on both paths. Within
+    * [[componentsCollectThreshold]] edges ([[LocalPath.decide]]), ends
+    * that are both `bigint` or both `string` are labelled on the driver
+    * ([[LocalGraph.ofNames]], [[LocalGraph.components]]). Anything else
+    * runs [[KgPipeline.connectedComponents]], the checkpointed fixpoint.
     * Above the budget the input is evaluated up to three times (the
     * limit-collect, then both sides of the fixpoint's undirected
     * union); a caller with a costly derivation persists it first, as
@@ -242,33 +219,23 @@ object Graph {
   def components(edges: DataFrame): DataFrame =
     components(edges, componentsCollectThreshold)
 
-  /** [[components]] with its budget given; a negative one forces the
-    * fixpoint.
-    */
+  /** [[components]] with its budget given ([[LocalPath.decide]]). */
   private[pipeline] def components(edges: DataFrame,
                                    collectThreshold: Int): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType}
-    val spark = edges.sparkSession
-    import spark.implicits._
+    import org.apache.spark.sql.types._
     val pairs = edges.select("src", "dst")
       .where(col("src").isNotNull && col("dst").isNotNull)
-    val local = pairs.schema.map(_.dataType) match {
-      case Seq(StringType, StringType) =>
-        KgPipeline.collectAtMost(pairs, collectThreshold).map { rows =>
-          val (g, names) = LocalGraph.ofNames(rows.map(_.getString(0)),
-            rows.map(_.getString(1)))
-          val c = g.components
-          names.indices.map(i => (names(i), names(c(i)))).toDF("node", "comp")
-        }
-      case Seq(LongType, LongType) =>
-        KgPipeline.collectAtMost(pairs, collectThreshold).map { rows =>
-          val g = LocalGraph.fromRows(rows)
-          val c = g.components
-          g.ids.indices.map(i => (g.ids(i), g.ids(c(i)))).toDF("node", "comp")
-        }
-      case _ => None
-    }
-    local.getOrElse(KgPipeline.connectedComponents(pairs))
+    val dt = pairs.schema.head.dataType
+    if (pairs.schema(1).dataType != dt || (dt != StringType && dt != LongType))
+      KgPipeline.connectedComponents(pairs)
+    else LocalPath.decide(pairs, collectThreshold, StructType(Seq(
+        StructField("node", dt, dt == StringType),
+        StructField("comp", dt, dt == StringType)))) { rows =>
+      val (g, names) =
+        LocalGraph.ofNames(rows.map(_.get(0)), rows.map(_.get(1)), dt)
+      val c = g.components
+      Some(names.indices.map(i => Row(names(i), names(c(i)))))
+    }(KgPipeline.connectedComponents(pairs))
   }
 
   /** PageRank over a DIRECTED multigraph (callers dedupe if they mean a
@@ -278,16 +245,13 @@ object Graph {
     * no out-edges) is redistributed uniformly — dropping it instead
     * deflates every rank and the fixpoint stops meaning anything.
     *
-    * Two paths, chosen the way [[KgPipeline.canonFromEdges]] chooses:
-    * one action, `limit(collectThreshold + 1)` over the non-null
-    * `(src, dst)` pairs cast to long, both decides the path and
-    * collects the edges. At or below `collectThreshold` edges the
-    * iterations run on the driver ([[LocalGraph.pageRank]]) and the result
-    * is a local relation; above it the distributed loop runs
-    * ([[pageRankDistributed]]), after that action has evaluated the
-    * input once. The threshold is [[pageRankCollectThreshold]]. At
-    * benchmark size (tens to hundreds of nodes) the distributed loop's
-    * per-iteration jobs cost seconds the arithmetic never needed.
+    * Two paths over the non-null `(src, dst)` pairs cast to long
+    * ([[LocalPath.decide]]): within `collectThreshold` edges
+    * ([[pageRankCollectThreshold]]) the iterations run on the driver
+    * ([[LocalGraph.pageRank]]); above it the distributed loop runs
+    * ([[pageRankDistributed]]). At benchmark size (tens to hundreds of
+    * nodes) the distributed loop's per-iteration jobs cost seconds the
+    * arithmetic never needed.
     *
     * Both paths return `(node: bigint, pr: double)`. The driver path
     * sums each node's in-contributions in ascending source-id order, so
@@ -303,23 +267,22 @@ object Graph {
                damping: Double = 0.85): DataFrame =
     pageRank(edges, iters, damping, pageRankCollectThreshold)
 
-  /** [[pageRank]] at a given edge budget (< 0: distributed). */
+  /** [[pageRank]] at a given edge budget ([[LocalPath.decide]]). */
   private[pipeline] def pageRank(edges: DataFrame, iters: Int,
                                  damping: Double,
                                  collectThreshold: Int): DataFrame = {
     require(iters >= 1 && iters <= 200, s"iters out of range: $iters")
     require(damping >= 0.0 && damping <= 1.0, s"damping out of range: $damping")
+    import org.apache.spark.sql.types._
     val pairs = longPairs(edges)
-    KgPipeline.collectAtMost(pairs, collectThreshold) match {
-      case Some(rows) =>
-        val g = LocalGraph.fromRows(rows)
-        require(g.n > 0, "pageRank on an empty graph")
-        val pr = g.pageRank(iters, damping)
-        val spark = edges.sparkSession
-        import spark.implicits._
-        g.ids.indices.map(i => (g.ids(i), pr(i))).toDF("node", "pr")
-      case None => pageRankDistributed(pairs, iters, damping)
-    }
+    val schema = StructType(Seq(StructField("node", LongType, nullable = false),
+      StructField("pr", DoubleType, nullable = false)))
+    LocalPath.decide(pairs, collectThreshold, schema) { rows =>
+      val g = LocalGraph.fromRows(rows)
+      require(g.n > 0, "pageRank on an empty graph")
+      val pr = g.pageRank(iters, damping)
+      Some(g.ids.indices.map(i => Row(g.ids(i), pr(i))))
+    }(pageRankDistributed(pairs, iters, damping))
   }
 
   /** The largest edge count [[pageRank]] collects and iterates on the
@@ -495,18 +458,17 @@ object Graph {
     * consistent under the cap. `minPairCount` prunes the long noise
     * tail BEFORE the join that attaches marginals.
     *
-    * Two paths, one decision, as the graph ops decide: one
-    * [[KgPipeline.collectAtMost]] of the non-NULL `(ctx, item)` rows
-    * against [[coOccurrenceCollectThreshold]].
-    *   - At or below it, when both columns are `string`, `int` or
+    * Two paths over the non-NULL `(ctx, item)` rows
+    * ([[LocalPath.decide]]) against [[coOccurrenceCollectThreshold]].
+    *   - Within it, when both columns are `string`, `int` or
     *     `bigint`, the operator runs on the driver ([[LocalSets]]):
     *     rows deduplicated, each context's items sorted in Spark's
     *     order (UTF-8 bytes for strings) and capped, the half-matrix
     *     pairs counted, marginals taken from the same capped view. If
     *     the capped pair volume, known before any pair is built,
-    *     exceeds [[coOccurrencePairThreshold]], the distributed path
-    *     runs instead. The result is a local relation with the
-    *     distributed path's schema and bit-equal values: lift is
+    *     exceeds [[coOccurrencePairThreshold]], the kernel declines and
+    *     the distributed path runs. The rows have the distributed
+    *     path's schema and bit-equal values: lift is
     *     computed in the same operation order, and PMI is
     *     `StrictMath.log`, what Spark's `log` evaluates.
     *   - Above it the distributed path runs unchanged: one distinct +
@@ -529,8 +491,8 @@ object Graph {
     coOccurrence(rows, ctxCol, itemCol, maxPerCtx, minPairCount,
       coOccurrenceCollectThreshold, coOccurrencePairThreshold)
 
-  /** [[coOccurrence]] with its row and pair budgets given; a negative
-    * row budget forces the distributed path.
+  /** [[coOccurrence]] with its row and pair budgets given
+    * ([[LocalPath.decide]]).
     */
   private[graft] def coOccurrence(rows: DataFrame, ctxCol: String,
                                   itemCol: String, maxPerCtx: Int,
@@ -543,29 +505,28 @@ object Graph {
     val pairs = rows.select(col(ctxCol).as("ctx"), col(itemCol).as("item"))
       .where(col("ctx").isNotNull && col("item").isNotNull)
     val Seq(ctxType, itemType) = pairs.schema.map(_.dataType)
-    val local =
-      if (!LocalSets.orders(ctxType) || !LocalSets.orders(itemType)) None
-      else KgPipeline.collectAtMost(pairs, collectThreshold).flatMap { got =>
-        val (ctx, ctxs) = LocalSets.rank(got.map(_.get(0)), ctxType)
-        val (item, items) = LocalSets.rank(got.map(_.get(1)), itemType)
-        val sets = LocalSets(ctx, item, ctxs.length, items.length, maxPerCtx)
-        if (sets.pairVolume > pairThreshold) None
-        else {
-          val (keys, counts) = sets.pairCounts
-          val marg = sets.marginals
-          val n = sets.nContexts.toDouble
-          val out = new java.util.ArrayList[Row]()
-          for (i <- keys.indices if counts(i) >= minPairCount) {
-            val (x, y) = ((keys(i) >>> 32).toInt, keys(i).toInt)
-            val lift = counts(i).toDouble * n /
-              (marg(x).toDouble * marg(y).toDouble)
-            out.add(Row(items(x), items(y), counts(i).toLong, lift,
-              StrictMath.log(lift)))
-          }
-          Some(rows.sparkSession.createDataFrame(out, distributed.schema))
-        }
+    if (!LocalSets.orders(ctxType) || !LocalSets.orders(itemType)) distributed
+    else LocalPath.decide(pairs, collectThreshold, distributed.schema) { got =>
+      val (ctx, ctxs) = LocalSets.rank(got.map(_.get(0)), ctxType)
+      val (item, items) = LocalSets.rank(got.map(_.get(1)), itemType)
+      val sets = LocalSets(ctx, item, ctxs.length, items.length, maxPerCtx)
+      if (sets.pairVolume > pairThreshold) None
+      else {
+        val (keys, counts) = sets.pairCounts
+        val marg = sets.marginals
+        val n = sets.nContexts.toDouble
+        // each item in Spark's internal form once, not once per pair
+        val toItem = CatalystTypeConverters.createToCatalystConverter(itemType)
+        val itemVals = items.map(toItem)
+        Some(for (i <- keys.indices if counts(i) >= minPairCount) yield {
+          val (x, y) = ((keys(i) >>> 32).toInt, keys(i).toInt)
+          val lift = counts(i).toDouble * n /
+            (marg(x).toDouble * marg(y).toDouble)
+          Row(itemVals(x), itemVals(y), counts(i).toLong, lift,
+            StrictMath.log(lift))
+        })
       }
-    local.getOrElse(distributed)
+    }(distributed)
   }
 
   private def coOccurrenceDistributed(rows: DataFrame, ctxCol: String,
@@ -616,8 +577,8 @@ object Graph {
   // above the cap; caps 32 and 64, minPairCount 1; `local[4]`, 4
   // shuffle partitions, 4-core host. The driver path's cost follows
   // its output: every pair becomes a local-relation row, and the
-  // calling thread allocates 1.5-1.7 KB per capped pair from 50k rows
-  // up (608 MB at 400k pairs, 5.9 GB at 4M).
+  // calling thread allocated 1.5-1.7 KB per capped pair from 50k rows
+  // up (608 MB at 400k pairs, 5.9 GB at 4M); 0.9 KB at 30k via LocalPath.
 
   /** The largest number of non-NULL `(ctx, item)` rows [[coOccurrence]]
     * (and q83's co-mention graph) collects and counts on the driver.

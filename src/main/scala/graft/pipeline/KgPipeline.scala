@@ -5,7 +5,7 @@ import graft.NerfModel
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The flagship knowledge-graph construction pipeline (BASELINE.json
@@ -358,55 +358,77 @@ object KgPipeline {
     * [[canonicalize]] for the ambiguity-guard semantics.
     *
     * The edge set is bounded by the alias vocabulary (KB-scale), not by
-    * the corpus. One action, `limit(collectThreshold + 1)`, both decides
-    * the path and collects the edges: at or below the threshold the
-    * whole map is computed on the driver and returned as a local
-    * relation; above it, the distributed fixpoint runs. A negative
-    * threshold forces the distributed path.
+    * the corpus: [[LocalPath.decide]] picks [[canonOnDriver]] or
+    * [[canonDistributed]] against `collectThreshold`.
     */
   private[pipeline] def canonFromEdges(spark: SparkSession,
                                        allEdges0: DataFrame,
                                        kbAliases: DataFrame,
-                                       collectThreshold: Int): DataFrame = {
-    collectAtMost(allEdges0.select("src", "dst"), collectThreshold) match {
-      case Some(rows) => canonOnDriver(spark,
-        rows.map(r => (r.getString(0), r.getString(1))).distinct, kbAliases)
-      case None => canonDistributed(spark, allEdges0, kbAliases)
-    }
-  }
+                                       collectThreshold: Int): DataFrame =
+    LocalPath.decide(allEdges0.select("src", "dst"), collectThreshold,
+      StructType(Seq(StructField("entity_id", StringType),
+        StructField("canon_id", StringType))))(rows =>
+      Some(canonOnDriver(rows, kbAliases)))(
+      canonDistributed(spark, allEdges0, kbAliases))
 
-  /** [[canonFromEdges]] on the driver: the same bridgeability counts as
-    * the distributed left join on distinct `(entity_id, canonical)`,
-    * then [[LocalGraph.components]] over the bridging edges, with the
-    * names encoded to dense ids once in UTF-8 byte order (Spark's `min`
-    * on strings). Names ascend with their ids, so the first entity met
-    * in a component is its min entity id. Edges with a NULL end never
-    * bridge.
+  /** [[canonFromEdges]] on the driver: the bridgeability counts of
+    * [[canonDistributed]], then [[LocalGraph.components]] over the
+    * bridging edges. Names get dense ids in UTF-8 byte order
+    * ([[LocalSets.rank]], Spark's `min` on strings), so the first entity
+    * met in a component is its min entity id; the counts run over the
+    * edges packed `dst << 32 | src`, sorted and deduplicated.
     */
-  private def canonOnDriver(spark: SparkSession, edges: Array[(String, String)],
-                            kbAliases: DataFrame): DataFrame = {
+  private def canonOnDriver(rows: Array[Row], kbAliases: DataFrame)
+      : Seq[Row] = {
     // a projection of the KB's local relation: no job
-    val canonOf = kbAliases.select("entity_id", "canonical").collect()
-      .groupMap(_.getString(0))(_.getString(1))
-    def bridges(srcs: Array[String]): Boolean = {
-      // a source with no KB row (nil:*) joins one NULL canonical
-      val canons = srcs.flatMap(s => canonOf.getOrElse(s, Array[String](null)))
-      val n = srcs.count(_ != null)
-      n == 1 || (n == 2 && !canons.contains(null) && canons.distinct.length == 1)
+    val kb = kbAliases.select("entity_id", "canonical").collect()
+      .filter(!_.isNullAt(0))
+    val edges = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+    // aliases a NULL source names too: it counts as a source with no KB row
+    val nilNamed = rows.filter(r => r.isNullAt(0) && !r.isNullAt(1))
+      .map(_.get(1)).toSet
+    val e = edges.length
+    val (id, byId) = LocalSets.rank(
+      edges.map(_.get(0)) ++ edges.map(_.get(1)) ++ kb.map(_.get(0)), StringType)
+    val n = byId.length
+    // per name: its one canonical, `mixed` for a NULL one or several,
+    // null without a KB row
+    val (canon, mixed) = (new Array[Any](n), new AnyRef)
+    for (i <- kb.indices) {
+      val (v, c) = (id(2 * e + i), kb(i).getString(1))
+      canon(v) = if (c == null || canon(v) != null && canon(v) != c) mixed else c
     }
-    val bridgeable = edges.groupBy(_._2).collect {
-      case (dst, group) if dst != null && bridges(group.map(_._1)) => dst
-    }.toSet
-    val kept = edges.filter { case (s, d) => s != null && bridgeable(d) }
-    val (g, names) = LocalGraph.ofNames(kept.map(_._1), kept.map(_._2))
-    val comp = g.components
-    val canonOfComp = new Array[String](names.length)
-    val out = names.indices.filterNot(names(_).startsWith("alias:")).map { i =>
-      if (canonOfComp(comp(i)) == null) canonOfComp(comp(i)) = names(i)
-      (names(i), canonOfComp(comp(i)))
+    val keys = new Array[Long](e)
+    for (i <- 0 until e) keys(i) = id(e + i).toLong << 32 | id(i)
+    java.util.Arrays.sort(keys)
+    var m = 0
+    for (i <- 0 until e if m == 0 || keys(i) != keys(m - 1)) {
+      keys(m) = keys(i); m += 1
     }
-    import spark.implicits._
-    out.toDF("entity_id", "canon_id")
+    def dst(k: Long) = (k >>> 32).toInt
+    def src(k: Long) = k.toInt
+    // an alias bridges when one entity names it, or two KB entities with
+    // the same canonical and no NULL source
+    val bridges = new Array[Boolean](n)
+    var i = 0
+    while (i < m) {
+      var j = i + 1
+      while (j < m && dst(keys(j)) == dst(keys(i))) j += 1
+      val (a, b) = (canon(src(keys(i))), canon(src(keys(j - 1))))
+      bridges(dst(keys(i))) = j - i == 1 || (j - i == 2 && a != null &&
+        a != mixed && a == b && !nilNamed(byId(dst(keys(i)))))
+      i = j
+    }
+    val kept = keys.take(m).filter(k => bridges(dst(k)))
+    val comp = LocalGraph.dense(n, kept.map(src), kept.map(dst)).components
+    val used = new Array[Boolean](n)
+    kept.foreach { k => used(src(k)) = true; used(dst(k)) = true }
+    val canonOfComp = new Array[Any](n)
+    for (v <- 0 until n if used(v) &&
+           !byId(v).asInstanceOf[String].startsWith("alias:")) yield {
+      if (canonOfComp(comp(v)) == null) canonOfComp(comp(v)) = byId(v)
+      Row(byId(v), canonOfComp(comp(v)))
+    }
   }
 
   /** [[canonFromEdges]] above the collect threshold: a distributed
@@ -469,10 +491,9 @@ object KgPipeline {
     *   - The driver path was 3-12x faster at every size: median 0.43
     *     against 5.33 s at 22.7k edges, 3.13 against 13.95 s at 199k,
     *     4.18 against 16.79 s at 363k, 12.44 against 37.83 s at 907k.
-    *   - It allocates 2.0-2.2 KB per edge on the calling thread, three
-    *     times what [[Graph.components]] does on string ids (the
-    *     bridgeability counts and the name encoding run over Scala
-    *     collections): 420 MB at 199k edges, 709 MB at 363k.
+    *   - It allocated 2.0-2.2 KB per edge on the calling thread (420 MB
+    *     at 199k edges, 709 MB at 363k); 1.3 KB on dense ids (266 and
+    *     453 MB; `BENCH/local-path/`).
     *   - Above the budget the limit-collect pass (then at 100,000) cost
     *     +12% at 199k edges (15.62 against 13.95 s), none at 363k and
     *     +7% at 907k (40.47 against 37.83 s).
@@ -481,17 +502,6 @@ object KgPipeline {
     * 200,000.
     */
   val ccCollectThreshold: Int = 200000
-
-  /** `df`'s rows if it has at most `threshold`, else None: one action,
-    * `limit(threshold + 1)`, both decides and collects. A negative
-    * threshold answers None without a job (it forces the distributed
-    * path of [[canonFromEdges]], of every [[Graph]] op and of q83).
-    */
-  private[graft] def collectAtMost(df: DataFrame,
-                                   threshold: Int): Option[Array[Row]] =
-    if (threshold < 0) None
-    else Some(df.limit(math.min(threshold, Int.MaxValue - 1) + 1).collect())
-      .filter(_.length <= threshold)
 
   // ------------------------------------------------------------------
   // Stage 4: triple materialization (O5)
@@ -566,14 +576,12 @@ object KgPipeline {
     *     anti-join keeps them).
     *
     * EAGER: metrics are computed here and returned as a 10-row local
-    * frame. Two paths, one decision, as the [[Graph]] ops decide: one
-    * [[collectAtMost]] of the whole frame against
-    * [[tripleCollectThreshold]].
-    *   - At or below it, when `subj`, `pred` and `obj` are strings and
-    *     every column's type groups in Spark as `Row` equality compares
+    * frame. Two paths over the whole frame ([[LocalPath.decide]])
+    * against [[tripleCollectThreshold]].
+    *   - Within it, when `subj`, `pred` and `obj` are strings and every
+    *     column's type groups in Spark as `Row` equality compares
     *     ([[LocalTriples.groupsLikeRow]]), [[LocalTriples.audit]]
     *     computes all ten metrics in one pass over the collected rows.
-    *     A frame that is already a local relation costs no job.
     *   - Otherwise two scans of the table (guide §1.2 "don't compute
     *     things you throw away", §2.3 "aggregate before you shuffle"):
     *     1. one full-row `groupBy(*).count` pass — the exchange carries
@@ -591,25 +599,27 @@ object KgPipeline {
   def kgAudit(spark: SparkSession, triples: DataFrame): DataFrame =
     kgAudit(spark, triples, tripleCollectThreshold)
 
-  /** [[kgAudit]] with its row budget given; a negative one forces the
-    * distributed path.
-    */
+  /** [[kgAudit]] with its row budget given ([[LocalPath.decide]]). */
   private[graft] def kgAudit(spark: SparkSession, triples: DataFrame,
                              collectThreshold: Int): DataFrame = {
     val fields = triples.schema
-    val local =
-      if (!LocalTriples.hasStringKeys(triples) ||
-          !fields.forall(f => LocalTriples.groupsLikeRow(f.dataType))) None
-      else collectAtMost(triples, collectThreshold).map(rows =>
-        LocalTriples.audit(rows, fields.fieldIndex("subj"),
-          fields.fieldIndex("pred"), fields.fieldIndex("obj")))
-    val values = local.getOrElse(auditDistributed(triples))
-    import spark.implicits._
-    Seq("triples_total", "mention_triples", "type_triples",
-      "entities_referenced", "entities_typed", "dangling_entities",
-      "orphan_typed_entities", "multi_typed_entities", "duplicate_triples",
-      "null_key_triples").zip(values).toDF("metric", "value")
+    def metrics(v: Array[Long]) = AuditMetrics.zip(v).map(Row.fromTuple)
+    def distributed = LocalPath.emit(spark, AuditSchema,
+      metrics(auditDistributed(triples)))
+    if (!LocalTriples.hasStringKeys(triples) ||
+        !fields.forall(f => LocalTriples.groupsLikeRow(f.dataType))) distributed
+    else LocalPath.decide(triples, collectThreshold, AuditSchema)(rows =>
+      Some(metrics(LocalTriples.audit(rows, fields.fieldIndex("subj"),
+        fields.fieldIndex("pred"), fields.fieldIndex("obj")))))(distributed)
   }
+
+  private val AuditMetrics = Seq("triples_total", "mention_triples",
+    "type_triples", "entities_referenced", "entities_typed",
+    "dangling_entities", "orphan_typed_entities", "multi_typed_entities",
+    "duplicate_triples", "null_key_triples")
+
+  private val AuditSchema = StructType(Seq(StructField("metric", StringType),
+    StructField("value", LongType, nullable = false)))
 
   /** [[kgAudit]]'s ten metric values, in its order, from two Spark scans. */
   private def auditDistributed(triples: DataFrame): Array[Long] = {
@@ -747,14 +757,13 @@ object KgPipeline {
     * to the round-6 caller-order evaluation ([[orderPatterns]] is
     * unit-pinned; q91 is oracle-pinned).
     *
-    * Two paths, one decision, as the [[Graph]] ops decide: one
-    * [[collectAtMost]] of the `(subj, pred, obj)` rows against
-    * [[tripleCollectThreshold]].
-    *   - At or below it, for string columns, [[LocalTriples.bindings]]
-    *     evaluates the patterns on the driver in the same join order and
-    *     returns a local relation with the distributed plan's schema. If
-    *     a join's bindings would pass the same budget (a cross product
-    *     can), it stops and the distributed plan runs instead.
+    * Two paths over the `(subj, pred, obj)` rows ([[LocalPath.decide]])
+    * against [[tripleCollectThreshold]].
+    *   - Within it, for string columns, [[LocalTriples.bindings]]
+    *     evaluates the patterns on the driver in the same join order,
+    *     with the distributed plan's schema. If a join's bindings would
+    *     pass the same budget (a cross product can), it declines and the
+    *     distributed plan runs.
     *   - Otherwise each pattern is a column-pruned, filter-pushed scan
     *     of the same table (bound positions reach the parquet reader),
     *     and the joins hash-partition on the shared variable columns
@@ -764,9 +773,7 @@ object KgPipeline {
                    patterns: Seq[(String, String, String)]): DataFrame =
     matchPattern(triples, patterns, tripleCollectThreshold)
 
-  /** [[matchPattern]] with its row budget given; a negative one forces
-    * the distributed path.
-    */
+  /** [[matchPattern]] with its row budget given ([[LocalPath.decide]]). */
   private[graft] def matchPattern(triples: DataFrame,
                                   patterns: Seq[(String, String, String)],
                                   collectThreshold: Int): DataFrame = {
@@ -811,13 +818,10 @@ object KgPipeline {
       if (shared.nonEmpty) acc.join(next, shared)
       else acc.crossJoin(next)
     }.select(columns.map(col): _*).distinct()
-    val spo = triples.select(col("subj"), col("pred"), col("obj"))
-    val local =
-      if (!LocalTriples.hasStringKeys(triples)) None
-      else collectAtMost(spo, collectThreshold).flatMap(rows =>
-        LocalTriples.bindings(rows, ordered, columns, collectThreshold))
-    local.fold(distributed)(out => triples.sparkSession.createDataFrame(
-      java.util.Arrays.asList(out: _*), distributed.schema))
+    if (!LocalTriples.hasStringKeys(triples)) distributed
+    else LocalPath.decide(triples.select(col("subj"), col("pred"), col("obj")),
+      collectThreshold, distributed.schema)(
+      LocalTriples.bindings(_, ordered, columns, collectThreshold))(distributed)
   }
 
   /** Percent-encode the characters an IRI cannot carry (RFC 3987 via
@@ -882,28 +886,23 @@ object KgPipeline {
     * case (ids over ordinary repo/path/commit values) escapes to
     * itself.
     *
-    * The dedup has two paths, one decision, as [[kgAudit]]'s: at most
-    * [[tripleCollectThreshold]] string `(subj, pred, obj)` rows are
-    * collected and deduplicated on the driver into a local relation;
-    * otherwise Spark's `distinct()` runs. The same escaping projection
-    * follows either path.
+    * The dedup has two paths ([[LocalPath.decide]]): within
+    * [[tripleCollectThreshold]] string `(subj, pred, obj)` rows it runs
+    * on the driver, otherwise Spark's `distinct()` runs. The same
+    * escaping projection follows either path.
     */
   def ntriples(triples: DataFrame): DataFrame =
     ntriples(triples, tripleCollectThreshold)
 
-  /** [[ntriples]] with its row budget given; a negative one forces the
-    * distributed dedup.
-    */
+  /** [[ntriples]] with its row budget given ([[LocalPath.decide]]). */
   private[graft] def ntriples(triples: DataFrame,
                               collectThreshold: Int): DataFrame = {
     val spo = triples.select(col("subj"), col("pred"), col("obj"))
-    val local =
-      if (!LocalTriples.hasStringKeys(triples)) None
-      else collectAtMost(spo, collectThreshold).map(rows =>
-        triples.sparkSession.createDataFrame(LocalTriples.distinct(rows),
-          spo.schema))
-    local.getOrElse(spo.distinct())
-      .select(concat(
+    val set =
+      if (!LocalTriples.hasStringKeys(triples)) spo.distinct()
+      else LocalPath.decide(spo, collectThreshold, spo.schema)(rows =>
+        Some(rows.distinct))(spo.distinct())
+    set.select(concat(
         lit("<urn:graft:"), ntIriEscaped(col("subj")), lit("> "),
         lit("<urn:graft:pred:"), ntIriEscaped(col("pred")), lit("> "),
         when(col("pred") === "hasType",
@@ -914,8 +913,9 @@ object KgPipeline {
   }
 
   /** The most rows [[kgAudit]], [[ntriples]] and [[matchPattern]] collect
-    * and evaluate on the driver (and the most bindings a driver-side
-    * [[matchPattern]] join may build); q87, q89 and q91 build their
+    * and evaluate on the driver ([[LocalPath.decide]]; and the most
+    * bindings a driver-side [[matchPattern]] join may build); q87, q89
+    * and q91 build their
     * triple set on the driver within the same budget. Set from
     * `GraphCrossover triples` (test sources; records in
     * `BENCH/triple-set/crossover/`, three runs): seeded string triples
@@ -936,8 +936,7 @@ object KgPipeline {
     *     shipping the lines to its tasks (not profiled apart).
     * PageRank's rule (the largest measured size at which every op's
     * driver path is not slower and allocates under half a gigabyte)
-    * gives 10,000. Above the budget the limit-collect fetches at most
-    * 10,001 rows before the distributed path runs.
+    * gives 10,000.
     */
   val tripleCollectThreshold: Int = 10000
 

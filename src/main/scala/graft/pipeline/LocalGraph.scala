@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.Row
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.DataType
 
 /** A small graph held on the driver: the one kernel behind every "fits
   * on the driver" graph path of [[Graph]] and [[KgPipeline.canonFromEdges]]
@@ -206,16 +206,18 @@ private[graft] object LocalGraph {
   def fromRows(rows: Array[Row]): LocalGraph =
     apply(rows.map(_.getLong(0)), rows.map(_.getLong(1)))
 
-  /** A graph over string-named nodes, with the names in dense-id order:
-    * ascending UTF-8 byte order, the order of Spark's `min` on strings
-    * (not `String.compareTo`, which orders UTF-16 units). So a
-    * component's min-label names its byte-order-least member.
+  /** A graph over the dense nodes `0 until n`, each its own id. */
+  def dense(n: Int, src: Array[Int], dst: Array[Int]): LocalGraph =
+    new LocalGraph(Array.tabulate(n)(_.toLong), src, dst)
+
+  /** A graph over nodes named by values of type `dt` ([[LocalSets.rank]]),
+    * with the names in dense-id order: Spark's order, UTF-8 bytes for
+    * strings (the order of Spark's `min`). So a component's min-label
+    * names its least member.
     */
-  def ofNames(src: Array[String], dst: Array[String])
-      : (LocalGraph, Array[String]) = {
-    val names = (src ++ dst).distinct.map(UTF8String.fromString)
-      .sortWith(_.binaryCompare(_) < 0).map(_.toString)
-    val index = names.zipWithIndex.toMap
-    (apply(src.map(index(_).toLong), dst.map(index(_).toLong)), names)
+  def ofNames(src: Array[Any], dst: Array[Any], dt: DataType)
+      : (LocalGraph, Array[Any]) = {
+    val (id, names) = LocalSets.rank(src ++ dst, dt)
+    (dense(names.length, id.take(src.length), id.drop(src.length)), names)
   }
 }

@@ -8,14 +8,13 @@ import org.apache.spark.sql.types._
   * [[KgPipeline.matchPattern]], as [[LocalGraph]] is behind the graph
   * ops and [[LocalSets]] behind co-occurrence.
   *
-  * The rows come from one [[KgPipeline.collectAtMost]] and keep Spark's
+  * The rows come from one [[LocalPath.decide]] and keep Spark's
   * grouping semantics because every caller collects only columns whose
   * values `Row` equality compares as Spark groups them ([[groupsLikeRow]];
   * the `subj`, `pred` and `obj` columns are always strings): NULL equals
   * NULL, strings compare by value (equal exactly when their UTF-8 bytes
-  * are), numbers numerically. Each method returns plain values; the
-  * callers turn them into local relations with the distributed plan's
-  * schema.
+  * are), numbers numerically. Each method returns plain values or
+  * rows; [[LocalPath]] turns rows into a local relation.
   */
 private[graft] object LocalTriples {
 
@@ -85,11 +84,6 @@ private[graft] object LocalTriples {
       orphan, multi, rows.length.toLong - distinct.size, nullKeys)
   }
 
-  /** The distinct rows, in first-seen order. */
-  def distinct(rows: Array[Row]): java.util.List[Row] =
-    new java.util.ArrayList[Row](
-      new java.util.LinkedHashSet[Row](java.util.Arrays.asList(rows: _*)))
-
   /** The distinct bindings of `patterns` (already in join order) over
     * collected `(subj, pred, obj)` string rows, one row per binding with
     * the variables in `columns` order (names without the `?`), or None
@@ -102,7 +96,8 @@ private[graft] object LocalTriples {
     * stay distinct, so the result needs no final dedup.
     */
   def bindings(rows: Array[Row], patterns: Seq[(String, String, String)],
-               columns: Seq[String], budget: Int): Option[Array[Row]] = {
+               columns: Seq[String], budget: Int)
+      : Option[collection.Seq[Row]] = {
     def scan(pat: (String, String, String)): (Array[String], Array[Array[String]]) = {
       val terms = Array(pat._1, pat._2, pat._3)
       val isVar = terms.map(_.startsWith("?"))
@@ -159,7 +154,7 @@ private[graft] object LocalTriples {
       acc = if (out.size > budget) null else out.toArray(Array.empty[Array[String]])
       cols = cols ++ nextRest.map(nCols(_))
     }
-    Option(acc).map { bs =>
+    Option(acc).map[collection.Seq[Row]] { bs =>
       val pick = columns.map(cols.indexOf(_)).toArray
       bs.map(b => Row.fromSeq(pick.map(b(_)).toSeq))
     }

@@ -315,12 +315,11 @@ object PipelineQueries {
     * Ranks are PageRank's (8 iterations, damping 0.85), rounded to 6
     * places; the top 50 by salience, then entity.
     *
-    * Two paths, decided as [[graft.pipeline.Graph.coOccurrence]]
-    * decides: one limit-collect of the (file, entity, hash) rows
-    * against [[graft.pipeline.Graph.coOccurrenceCollectThreshold]].
-    * Within it the whole query finishes on the driver
-    * ([[entityRankOnDriver]]) into a local relation; above it, or when
-    * the capped pair volume exceeds
+    * Two paths over the (file, entity, hash) rows
+    * ([[graft.pipeline.LocalPath.decide]]) against
+    * [[graft.pipeline.Graph.coOccurrenceCollectThreshold]]. Within it
+    * the whole query finishes on the driver ([[entityRankOnDriver]]);
+    * above it, or when the capped pair volume exceeds
     * [[graft.pipeline.Graph.coOccurrencePairThreshold]], the distributed
     * derivation runs ([[entityRankDistributed]]). Rows-only: FP ranks
     * aren't cross-engine-hashable, but the loop kernel has a bit-exact
@@ -334,17 +333,19 @@ object PipelineQueries {
       graft.pipeline.Graph.coOccurrencePairThreshold)
 
   /** [[q83_entity_rank]] over a pipeline result at given row and pair
-    * budgets; a negative row budget forces the distributed derivation.
+    * budgets.
     */
   private[graft] def entityRank(r: KgPipeline.Result, collectThreshold: Int,
                                 pairThreshold: Long): DataFrame = {
+    import org.apache.spark.sql.types._
     val ment = fileEntities(r)
-    KgPipeline.collectAtMost(
+    val schema = StructType(Seq(
+      StructField("entity", StringType, ment.schema("ent").nullable),
+      StructField("salience", DoubleType)))
+    graft.pipeline.LocalPath.decide(
         ment.select(col("file"), col("ent"), xxhash64(col("ent"))),
-        collectThreshold)
-      .flatMap(entityRankOnDriver(r.linked.sparkSession, _,
-        ment.schema("ent").nullable, pairThreshold))
-      .getOrElse(entityRankDistributed(ment))
+        collectThreshold, schema)(
+      entityRankOnDriver(_, pairThreshold))(entityRankDistributed(ment))
   }
 
   private val EntityCap = 32
@@ -358,10 +359,9 @@ object PipelineQueries {
     * distinct `ent` with its hash, Spark's own `round`, then the sort and
     * top 50. None when the capped pair volume is over its threshold.
     */
-  private def entityRankOnDriver(s: SparkSession,
-                                 rows: Array[org.apache.spark.sql.Row],
-                                 entNullable: Boolean,
-                                 pairThreshold: Long): Option[DataFrame] = {
+  private def entityRankOnDriver(rows: Array[org.apache.spark.sql.Row],
+                                 pairThreshold: Long)
+      : Option[Seq[org.apache.spark.sql.Row]] = {
     import graft.pipeline.{LocalGraph, LocalSets}
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.catalyst.expressions.{Literal, Round}
@@ -400,12 +400,8 @@ object PipelineQueries {
             UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b)) < 0
           case (a, b) => a.isEmpty && b.isDefined
         }
-      val out = new java.util.ArrayList[Row]()
-      ranked.sortWith(before).take(EntityTop)
-        .foreach { case (e, sal) => out.add(Row(e.orNull, sal)) }
-      Some(s.createDataFrame(out, StructType(Seq(
-        StructField("entity", StringType, entNullable),
-        StructField("salience", DoubleType, nullable = true)))))
+      Some(ranked.sortWith(before).take(EntityTop).toSeq
+        .map { case (e, sal) => Row(e.orNull, sal) })
     }
   }
 

@@ -1982,20 +1982,17 @@ object RelationalQueries {
     * for the planted-defect design); [[syntheticTripCte]] is its SQL
     * mirror, ending in a `trip` CTE.
     *
-    * Two paths, one decision: one [[graft.pipeline.KgPipeline.collectAtMost]]
-    * of the per-event values against
-    * [[graft.pipeline.KgPipeline.tripleCollectThreshold]]. Spark
+    * Two paths over the per-event values ([[graft.pipeline.LocalPath.decide]])
+    * against [[graft.pipeline.KgPipeline.tripleCollectThreshold]]. Spark
     * evaluates every `%`, `concat` and comparison in that collect, so
     * NULL and negative ids behave as in the composition; the driver only
-    * unions and deduplicates the rows, into a local relation with the
-    * composition's own schema. Above the budget the composition runs.
+    * unions and deduplicates the rows, with the composition's own
+    * schema. Above the budget the composition runs.
     */
   private def syntheticTriples(s: SparkSession, dir: String): DataFrame =
     syntheticTriples(s, dir, graft.pipeline.KgPipeline.tripleCollectThreshold)
 
-  /** [[syntheticTriples]] with its row budget given; a negative one
-    * forces the composition.
-    */
+  /** [[syntheticTriples]] with its row budget given. */
   private[graft] def syntheticTriples(s: SparkSession, dir: String,
                                       collectThreshold: Int): DataFrame = {
     val ev = t(s, dir, "events")
@@ -2018,22 +2015,19 @@ object RelationalQueries {
       .unionByName(typed).unionByName(typed2).unionByName(orphan)
     // a NULL comparison keeps no row, as `where` does
     val flag = (c: Column) => coalesce(c, lit(false))
-    graft.pipeline.KgPipeline.collectAtMost(ev.select(
+    graft.pipeline.LocalPath.decide(ev.select(
         concat(lit("m:"), col("event_id")), concat(lit("e:"), col("uid")),
         concat(lit("x:"), col("uid")), flag(col("event_id") % 500 === 0),
         flag(col("uid") < 10), flag(col("uid") < 3), flag(col("uid") < 5)),
-        collectThreshold)
-      .fold(composed) { rows =>
-        val ment = rows.map(r =>
-          Row(r.getString(0), "hasEntity", r.getString(1)))
-        def typeRows(keep: Int, id: Int, tp: String) =
-          rows.filter(_.getBoolean(keep)).map(_.getString(id)).distinct
-            .map(Row(_, "hasType", tp))
-        val out = ment ++ ment.indices.filter(rows(_).getBoolean(3)).map(ment) ++
-          typeRows(4, 1, "person") ++ typeRows(5, 1, "org") ++
-          typeRows(6, 2, "person")
-        s.createDataFrame(java.util.Arrays.asList(out: _*), composed.schema)
-      }
+        collectThreshold, composed.schema) { rows =>
+      val ment = rows.map(r => Row(r.getString(0), "hasEntity", r.getString(1)))
+      def typeRows(keep: Int, id: Int, tp: String) =
+        rows.filter(_.getBoolean(keep)).map(_.getString(id)).distinct
+          .map(Row(_, "hasType", tp))
+      Some(ment ++ ment.indices.filter(rows(_).getBoolean(3)).map(ment) ++
+        typeRows(4, 1, "person") ++ typeRows(5, 1, "org") ++
+        typeRows(6, 2, "person"))
+    }(composed)
   }
 
   private val syntheticTripCte: String =

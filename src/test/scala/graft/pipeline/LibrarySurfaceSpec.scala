@@ -41,6 +41,43 @@ class LibrarySurfaceSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
+  test("two-path ops decide through LocalPath: no createDataFrame or budgeted collect elsewhere in src/main") {
+    import scala.jdk.CollectionConverters._
+    // kg-query's display cap: it prints at most 10,000 bindings and says
+    // when there were more; it picks no path
+    val exempt = Set("Cli.scala" -> "10001")
+    val limit = """\.limit\(""".r
+    val thenCollect = """\s*\.collect\(\)""".r
+    val hits = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "LocalPath.scala")
+      .flatMap { p =>
+        val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        def at(offset: Int) = s"$p:${text.take(offset).count(_ == '\n') + 1}"
+        val emits = """createDataFrame\(""".r.findAllMatchIn(text)
+          .map(m => s"${at(m.start)}: createDataFrame")
+        // a `.limit(n).collect()` is a budgeted collect unless n is a
+        // one-digit literal (a probe for the first rows)
+        val collects = limit.findAllMatchIn(text).flatMap { m =>
+          var (depth, i) = (1, m.end)
+          while (depth > 0 && i < text.length) {
+            if (text(i) == '(') depth += 1 else if (text(i) == ')') depth -= 1
+            i += 1
+          }
+          val arg = text.substring(m.end, i - 1).trim
+          val collected =
+            thenCollect.findPrefixOf(text.subSequence(i, text.length)).isDefined
+          if (!collected || arg.matches("\\d") ||
+              exempt(p.getFileName.toString -> arg)) None
+          else Some(s"${at(m.start)}: limit($arg).collect()")
+        }
+        emits ++ collects
+      }
+      .toList
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   test("TextDedup.minhashPairs finds planted near-duplicates, custom columns") {
     import spark.implicits._
     val base = "the quick brown fox jumps over the lazy dog again and again today"

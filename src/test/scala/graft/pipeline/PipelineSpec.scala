@@ -16,9 +16,35 @@ object SparkTestSession {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** `body`'s result and the number of Spark jobs it launched. */
+  def jobsOf[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    // job events reach listeners asynchronously
+    def drain(): Unit = {
+      val bus = classOf[org.apache.spark.SparkContext]
+        .getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
+        .invoke(bus, java.lang.Long.valueOf(60000L))
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    drain()
+    sc.addSparkListener(listener)
+    try {
+      val a = body
+      drain()
+      (a, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
+  import SparkTestSession.jobsOf
   lazy val spark = SparkTestSession.spark
   lazy val model = KgMain.model
 
@@ -658,31 +684,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(TableIO.verifyCommits(spark, s"$dir/t", 16).isEmpty)
     assert(jobs <= budget,
       s"one build launched $jobs Spark jobs, budget $budget")
-  }
-
-  /** `body`'s result and the number of Spark jobs it launched. */
-  private def jobsOf[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    // job events reach listeners asynchronously
-    def drain(): Unit = {
-      val bus = classOf[org.apache.spark.SparkContext]
-        .getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-        .invoke(bus, java.lang.Long.valueOf(60000L))
-    }
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    drain()
-    sc.addSparkListener(listener)
-    try {
-      val a = body
-      drain()
-      (a, jobs.get)
-    } finally sc.removeSparkListener(listener)
   }
 
   test("fileEntities broadcasts a driver-built canon map without running a job") {
